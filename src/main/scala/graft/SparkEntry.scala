@@ -30,7 +30,8 @@ object SparkEntry {
     * cluster before per-row heavy kernels: the testdata tables are ONE
     * parquet file ⇒ one input split ⇒ one task (guide §2.5, input skew:
     * "one huge unsplittable file — repartition immediately after the
-    * read"). Measured per query (MicroBench4, warm interleaved minima):
+    * read"). Measured per query (warm interleaved minima; the one-off
+    * harness is gone, results in OPTIMIZATION_r06.md §3):
     * pays ONLY where per-row compute dominates the added exchange — q22's
     * per-word MD5 (2.17→1.93 s). For q21/q24/q25/q38 the kernel work is
     * too cheap at sf0.1 and the exchange was pure overhead (q25 0.43→0.84,

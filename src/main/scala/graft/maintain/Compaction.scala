@@ -266,8 +266,12 @@ object Compaction {
       // included: the masked rows were already deleted, and recorded, by
       // the commit that attached the DV) — mark it so change-feed readers
       // skip it instead of erroring on an unrecorded Remove+Add
-      table.swapSegments(sorted, inputs, maxRetries,
-        extraActions = Seq(graft.log.LogAction.DataNeutral))
+      val done = table.transact(maxRetries) { tx =>
+        tx.remove(inputs)
+        tx.markDataNeutral()
+        tx.stage(sorted)
+      }
+      (done.value, done.version)
     }
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.coverage.Bitmap
 import graft.meta.{PathNorm, SegmentMeta}
 import graft.scan.StatsPruning
-import graft.table.{BucketDomainOverflowException, DeletionVectors, TsTable}
+import graft.table.{BucketDomainOverflowException, DeletionVectors, TsTable, Txn}
 
 /** DELETE WHERE — predicate delete, the training-data governance operator
   * (redact contaminated documents, strip a source, drop a time range). Not
@@ -129,7 +129,6 @@ object DeleteWhere {
     val rowsDeleted = matchedPerFile.values.sum
     if (rowsDeleted == 0L)
       return Report(candidates.size, live.size, 0, 0L, totalLive, table.version)
-    val removeIds = hit.map(_.segmentId)
 
     // per-file degenerate handling: a hit file whose match count equals
     // its LIVE row count has NO survivors — drop it metadata-only (one
@@ -138,52 +137,40 @@ object DeleteWhere {
     // fully-matches a few files and grazes the rest; rewriting only the
     // grazed ones is the difference between touching the deleted range
     // and rewriting the table (round-2 finding). Fully-matched and
-    // partially-matched files still swap in ONE atomic commit (removeIds
-    // covers both).
+    // partially-matched files still swap in ONE atomic commit.
     val (fullyMatched, partial) = hit.partition(seg =>
       // getOrElse: on the fallback path `hit` includes unattributed files
       // with no recorded matches — those must be rewritten, not dropped
       matchedPerFile.getOrElse(
         PathNorm.canonical(PathNorm.resolve(table.root, seg.path)), 0L) == seg.liveRowCount)
 
-    // change feed: the deleted rows, staged pre-commit and carried in the
-    // SAME commit (one extra matched-rows read of the hit files — cost
-    // proportional to the delete, paid only when the feed is on). Row
-    // tracking: records carry the deleted row's `_row_id`.
-    val cdc: Seq[graft.log.LogAction.AddCdcFile] =
+    // one Txn: the removal of every hit file (its conflict set — the
+    // commit aborts if ANY of them was concurrently rewritten or re-DV'd),
+    // the partials' rewrite, the change feed and, on time-series tables,
+    // the coverage recommit all land in ONE commit
+    val done = table.transact() { tx =>
+      // change feed: the deleted rows (one extra matched-rows read of the
+      // hit files, paid only when the feed is on). Row tracking: records
+      // carry the deleted row's `_row_id`.
       if (table.cdfEnabled)
-        table.stageCdc(liveRows(table.toLogical(cdcScanOf(spark, table, hit)), hit)
+        tx.stageCdc(liveRows(table.toLogical(cdcScanOf(spark, table, hit)), hit)
           .where(matchesCond).withColumn("_change_type", lit("delete")))
-      else Nil
+      tx.remove(hit)
+      if (partial.isEmpty) Nil
+      else {
+        // row tracking: survivors keep their ids — the partial rewrite
+        // reads ids attached and materializes them into the new files
+        // (`_row_commit` keeps its old value too: surviving rows were
+        // NOT modified by this delete)
+        val partialScan =
+          if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, partial)
+          else table.segmentScan(spark, partial)
+        tx.stage(liveRows(table.toLogical(partialScan), partial).where(keep))
+      }
+    }
 
-    // the coverage recommit (time-series tables) is part of the SAME
-    // commit as the Remove/Add actions — no crash window can leave a
-    // stale snapshot rejecting appends into the vacated range
-    val repairCov = table.timeSpec.isDefined
-    val (newSegs, committedV) =
-      try {
-        if (partial.isEmpty)
-          (Nil, table.commitRemovals(removeIds, recomputeCoverage = repairCov,
-            extraActions = cdc))
-        else {
-          // row tracking: survivors keep their ids — the partial rewrite
-          // reads ids attached and materializes them into the new files
-          // (`_row_commit` keeps its old value too: surviving rows were
-          // NOT modified by this delete)
-          val partialScan =
-            if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, partial)
-            else table.segmentScan(spark, partial)
-          // `hit` (not just the rewritten partials): the swap must abort if
-          // ANY removed file was concurrently re-DV'd or rewritten
-          table.swapSegments(
-            liveRows(table.toLogical(partialScan), partial)
-              .where(keep), hit,
-            recomputeCoverage = repairCov, extraActions = cdc)
-        }
-      } catch { case e: Throwable => table.deleteCdcStaged(cdc); throw e }
-
-    Report(candidates.size, untouched.size + cleanCandidates.size, newSegs.size,
-      rowsDeleted, totalLive - rowsDeleted, committedV, fullyMatched.size)
+    Report(candidates.size, untouched.size + cleanCandidates.size, done.value.size,
+      rowsDeleted, totalLive - rowsDeleted, done.version, fullyMatched.size)
   }
 
   /** Merge-on-read DELETE (see object doc): ONE column-pruned pass over
@@ -256,14 +243,11 @@ object DeleteWhere {
       .map(base0.where).getOrElse(base0)
   }
 
-  /** The driver-side outcome of a MOR matched-row pass, sidecars already
-    * written (caller owns `written` cleanup on abort): the DV upserts,
-    * the fully-matched removals, the OCC base expectation, and the
-    * matched-row count. */
+  /** The driver-side outcome of a MOR matched-row pass, already declared
+    * on its [[graft.table.Txn]]: the DV upserts, the fully-matched
+    * removals, and the matched-row count. */
   private[maintain] final case class MorPlan(
-      upserts: Seq[SegmentMeta], removeIds: Seq[String],
-      expectedDv: Map[String, Option[String]], rowsMatched: Long,
-      written: Seq[String])
+      upserts: Seq[SegmentMeta], removeIds: Seq[String], rowsMatched: Long)
 
   /** Shared MOR tail (predicate and keyed deletes): aggregate `base`
     * — columns (__f file, __i position, __m matched, __b survivor bucket),
@@ -274,39 +258,36 @@ object DeleteWhere {
                                   candidates: Seq[SegmentMeta], untouchedCount: Int,
                                   totalLive: Long, base: DataFrame,
                                   changeRows: Option[() => DataFrame] = None): Report = {
-    val plan = morCompute(spark, table, candidates, base).getOrElse(
-      return Report(candidates.size, untouchedCount + candidates.size, 0, 0L,
-        totalLive, table.version))
-    // change feed: the caller's deleted-rows thunk (one extra matched-rows
-    // read of the candidates), staged only when the feed is on and
-    // something actually matched, committed atomically with the DV attach
-    val cdc: Seq[graft.log.LogAction.AddCdcFile] =
-      if (table.cdfEnabled) changeRows.map(rows => table.stageCdc(
-        rows().withColumn("_change_type", lit("delete")))).getOrElse(Nil)
-      else Nil
-    try table.commitDvAttach(plan.upserts, plan.removeIds, plan.expectedDv,
-      recomputeCoverage = table.timeSpec.isDefined, extraActions = cdc)
-    catch {
-      case e: Throwable =>
-        table.deleteCdcStaged(cdc)
-        plan.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel"))))
-        throw e
+    val done = table.transact() { tx =>
+      morCompute(spark, table, tx, candidates, base).map { plan =>
+        // change feed: the caller's deleted-rows thunk (one extra
+        // matched-rows read of the candidates), staged only when the feed
+        // is on and something actually matched
+        if (table.cdfEnabled)
+          changeRows.foreach(rows => tx.stageCdc(rows().withColumn("_change_type", lit("delete"))))
+        plan
+      }
     }
-    val grazedCount = plan.upserts.size + plan.removeIds.size
-    Report(candidates.size, untouchedCount + (candidates.size - grazedCount), 0,
-      plan.rowsMatched, totalLive - plan.rowsMatched, table.version,
-      filesDroppedMetaOnly = plan.removeIds.size, dvAttached = plan.upserts.size)
+    done.value match {
+      case None =>
+        Report(candidates.size, untouchedCount + candidates.size, 0, 0L, totalLive, done.version)
+      case Some(plan) =>
+        val grazedCount = plan.upserts.size + plan.removeIds.size
+        Report(candidates.size, untouchedCount + (candidates.size - grazedCount), 0,
+          plan.rowsMatched, totalLive - plan.rowsMatched, done.version,
+          filesDroppedMetaOnly = plan.removeIds.size, dvAttached = plan.upserts.size)
+    }
   }
 
   /** The distributed half of a MOR pass: aggregate `base` into per-file
-    * bitmaps, write DV (and survivor-coverage) sidecars, and return the
-    * commit plan WITHOUT committing — [[morAttach]] commits it alone,
-    * [[MergeInto.mergeMor]] commits it atomically with the appended
-    * replacement segments. None = no row matched. Sidecar writes that
-    * fail mid-loop are cleaned up here; after a Some return the CALLER
-    * owns `written` until its commit succeeds. */
-  private[maintain] def morCompute(spark: SparkSession, table: TsTable,
+    * bitmaps, write DV (and survivor-coverage) sidecars through `tx`, and
+    * declare the DV upserts and fully-matched removals on it WITHOUT
+    * committing — [[morAttach]] commits them alone, [[MergeInto.mergeMor]]
+    * atomically with the appended replacement segments. None = no row
+    * matched. Each grazed file joins `tx`'s conflict set under the DV it
+    * was read with, so the commit aborts if a concurrent writer rewrote or
+    * re-DV'd it (its bitmap was unioned against that DV). */
+  private[maintain] def morCompute(spark: SparkSession, table: TsTable, tx: Txn,
                                    candidates: Seq[SegmentMeta],
                                    base: DataFrame): Option[MorPlan] = {
     import spark.implicits._
@@ -354,47 +335,36 @@ object DeleteWhere {
       .map(s => PathNorm.canonical(PathNorm.resolve(table.root, s.path)) -> s).toMap
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val repairCov = table.timeSpec.isDefined
-    val written = scala.collection.mutable.ArrayBuffer.empty[String] // abort cleanup
     val removeIds = scala.collection.mutable.ArrayBuffer.empty[String]
     val upserts = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
     var rowsMatched = 0L
-    try {
-      grazed.foreach { case (f, dvBytes, covBytes, m) =>
-        val seg = segByCanon.getOrElse(PathNorm.canonical(f),
-          throw new IllegalStateException(
-            s"cannot attribute $f to a candidate segment (exotic path scheme?); " +
-              "use the copy-on-write path for this table"))
-        rowsMatched += m
-        val newDv = Bitmap.deserialize(dvBytes)
-        val union = seg.dvPath
-          .map(p => DeletionVectors.readDv(PathNorm.resolve(table.root, p)).union(newDv))
-          .getOrElse(newDv)
-        if (union.cardinality == seg.rowCount) removeIds += seg.segmentId
-        else {
-          val dvRel = s"_dv/dv-${seg.segmentId}-$commitId.dv"
-          table.writeBytes(s"${table.root}/$dvRel", union.serialize())
-          written += dvRel
-          val covRel =
-            if (repairCov) {
-              val rel = s"_coverage/segments/segcov-${seg.segmentId}-$commitId.cov"
-              table.writeBytes(s"${table.root}/$rel", covBytes)
-              written += rel
-              Some(rel)
-            } else seg.coveragePath
-          upserts += seg.copy(dvPath = Some(dvRel), dvCardinality = union.cardinality,
-            coveragePath = covRel)
-        }
+    grazed.foreach { case (f, dvBytes, covBytes, m) =>
+      val seg = segByCanon.getOrElse(PathNorm.canonical(f),
+        throw new IllegalStateException(
+          s"cannot attribute $f to a candidate segment (exotic path scheme?); " +
+            "use the copy-on-write path for this table"))
+      rowsMatched += m
+      val newDv = Bitmap.deserialize(dvBytes)
+      val union = seg.dvPath
+        .map(p => DeletionVectors.readDv(PathNorm.resolve(table.root, p)).union(newDv))
+        .getOrElse(newDv)
+      tx.remove(Seq(seg))
+      if (union.cardinality == seg.rowCount) removeIds += seg.segmentId
+      else {
+        val dvRel = s"_dv/dv-${seg.segmentId}-$commitId.dv"
+        tx.writeSidecar(dvRel, union.serialize())
+        val covRel =
+          if (repairCov) {
+            val rel = s"_coverage/segments/segcov-${seg.segmentId}-$commitId.cov"
+            tx.writeSidecar(rel, covBytes)
+            Some(rel)
+          } else seg.coveragePath
+        upserts += seg.copy(dvPath = Some(dvRel), dvCardinality = union.cardinality,
+          coveragePath = covRel)
       }
-    } catch {
-      case e: Throwable =>
-        written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel"))))
-        throw e
     }
-    val expectedDv = grazed.map { case (f, _, _, _) =>
-      val seg = segByCanon(PathNorm.canonical(f)); seg.segmentId -> seg.dvPath
-    }.toMap
-    Some(MorPlan(upserts.toSeq, removeIds.toSeq, expectedDv, rowsMatched, written.toSeq))
+    tx.add(upserts.toSeq)
+    Some(MorPlan(upserts.toSeq, removeIds.toSeq, rowsMatched))
   }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {

@@ -165,9 +165,13 @@ object Expire {
       // manifest entries (and its own sidecars), never the source's bytes
       val resolved = graft.meta.PathNorm.resolve(table.root, seg.path)
       if (graft.meta.PathNorm.ownedBy(table.root, resolved)) {
+        // a file another sweep (or a crashed writer's cleanup) removes
+        // mid-pass is skipped, not fatal; bytes count only for deletes
+        // this pass made itself
         val p = Paths.get(strip(resolved))
-        if (Files.exists(p)) {
-          bytesA.addAndGet(Files.size(p)); Files.delete(p); filesA.incrementAndGet()
+        val size = try Files.size(p) catch { case _: java.nio.file.NoSuchFileException => -1L }
+        if (size >= 0 && Files.deleteIfExists(p)) {
+          bytesA.addAndGet(size); filesA.incrementAndGet()
         }
       }
       seg.coveragePath.foreach { cp =>

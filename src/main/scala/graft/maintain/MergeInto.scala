@@ -138,9 +138,7 @@ object MergeInto {
       // BEFORE candidate selection: zero keys can match nothing, and
       // stat-less segments (always candidates, soundly) must not be
       // rewritten by a heartbeat batch
-      val v = txn.map { case (app, batch) => table.commitTxnOnly(app, batch) }
-        .getOrElse(table.version)
-      return Report(0, 0, 0, 0, 0, v)
+      return Report(0, 0, 0, 0, 0, table.transact()(tx => txn.foreach(tx.watermark)).version)
     }
 
     val candidates = selectCandidates(spark, table, upd, updCount, key, live)
@@ -172,76 +170,77 @@ object MergeInto {
     // and nothing is cached. The 1-in-100 keys the anti-join removes and
     // the update rows it adds shift the sampled distribution marginally —
     // range bounds affect file balance only, never results.
-    val (added, mergedV) = try Compaction.withSizedReadSplits(spark, candBytes, candidates.size) { scoped =>
-      // the candidate read is created on the scoped session: split sizing
-      // binds to the relation's session, so the tuned maxPartitionBytes
-      // applies here and ONLY here (upd keeps the caller's session/conf)
-      val tracked = table.rowTrackingEnabled
-      val merged =
-        if (candidates.isEmpty) upd // fresh keys: commit-time bases mint their ids
-        else {
-          // merge-on-read deletes: candidates are read live-rows-only, so
-          // the rewrite materializes any DV away (outputs carry none) and
-          // deleted rows can never resurrect through a MERGE
-          val raw = table.toLogical(
-            if (tracked) table.segmentScanWithRowIds(scoped, candidates)
-            else table.segmentScan(scoped, candidates))
-          val liveRows = graft.table.DeletionVectors.liveRowFilter(table.root, candidates)
-            .map(raw.where).getOrElse(raw)
-          val survivors = liveRows.join(upd.select(col(key)), Seq(key), "left_anti")
-          if (!tracked) survivors.unionByName(upd)
+    val done = table.transact() { tx =>
+      txn.foreach(tx.watermark)
+      Compaction.withSizedReadSplits(spark, candBytes, candidates.size) { scoped =>
+        // the candidate read is created on the scoped session: split sizing
+        // binds to the relation's session, so the tuned maxPartitionBytes
+        // applies here and ONLY here (upd keeps the caller's session/conf)
+        val tracked = table.rowTrackingEnabled
+        val merged =
+          if (candidates.isEmpty) upd // fresh keys: commit-time bases mint their ids
           else {
-            // row tracking: a matched update KEEPS the old row's id (min id
-            // when the key was duplicated — all its rows collapse into the
-            // one update row); an unmatched insert carries NULL and mints a
-            // fresh id from the new file's commit-assigned base. Both are
-            // MODIFIED by this commit: `_row_commit` = NULL resolves to the
-            // new segment's rowVersion at read time.
-            val oldIds = liveRows.groupBy(col(key))
-              .agg(min(col(graft.table.RowTracking.RowIdCol))
-                .as(graft.table.RowTracking.RowIdCol))
-            survivors.unionByName(
-              upd.join(oldIds, Seq(key), "left")
-                .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long")))
-          }
-        }
-      val fit = ClusterKey.fitFor(table)
-      // stock clusterSorted still embeds a range-sampling double execution
-      // for the lexico layout — only that path keeps the old persist
-      val needsCache = curve == "lexico" && outFiles > 1
-      val toCluster =
-        if (needsCache) merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else merged
-      try {
-        val clustered =
-          if ((curve == "zorder" || curve == "hilbert") && outFiles > 1 && candidates.nonEmpty)
-            Compaction.sampledBoundsFor(
-              table.toLogical(table.segmentScan(scoped, candidates)), curve, fit,
-              math.max(targetRows, 1L), outFiles) match {
-              case Some((bk, bs, labels)) =>
-                Compaction.clusterSortedByBounds(toCluster, curve, outFiles, fit, bk, bs, labels)
-              case None => Compaction.clusterSorted(toCluster, curve, outFiles, fit)
+            // merge-on-read deletes: candidates are read live-rows-only, so
+            // the rewrite materializes any DV away (outputs carry none) and
+            // deleted rows can never resurrect through a MERGE
+            val raw = table.toLogical(
+              if (tracked) table.segmentScanWithRowIds(scoped, candidates)
+              else table.segmentScan(scoped, candidates))
+            val liveRows = graft.table.DeletionVectors.liveRowFilter(table.root, candidates)
+              .map(raw.where).getOrElse(raw)
+            val survivors = liveRows.join(upd.select(col(key)), Seq(key), "left_anti")
+            if (!tracked) survivors.unionByName(upd)
+            else {
+              // row tracking: a matched update KEEPS the old row's id (min id
+              // when the key was duplicated — all its rows collapse into the
+              // one update row); an unmatched insert carries NULL and mints a
+              // fresh id from the new file's commit-assigned base. Both are
+              // MODIFIED by this commit: `_row_commit` = NULL resolves to the
+              // new segment's rowVersion at read time.
+              val oldIds = liveRows.groupBy(col(key))
+                .agg(min(col(graft.table.RowTracking.RowIdCol))
+                  .as(graft.table.RowTracking.RowIdCol))
+              survivors.unionByName(
+                upd.join(oldIds, Seq(key), "left")
+                  .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long")))
             }
-          else Compaction.clusterSorted(toCluster, curve, outFiles, fit)
-        val cdc: Seq[graft.log.LogAction.AddCdcFile] =
+          }
+        val fit = ClusterKey.fitFor(table)
+        // stock clusterSorted still embeds a range-sampling double execution
+        // for the lexico layout — only that path keeps the old persist
+        val needsCache = curve == "lexico" && outFiles > 1
+        val toCluster =
+          if (needsCache) merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else merged
+        try {
+          val clustered =
+            if ((curve == "zorder" || curve == "hilbert") && outFiles > 1 && candidates.nonEmpty)
+              Compaction.sampledBoundsFor(
+                table.toLogical(table.segmentScan(scoped, candidates)), curve, fit,
+                math.max(targetRows, 1L), outFiles) match {
+                case Some((bk, bs, labels)) =>
+                  Compaction.clusterSortedByBounds(toCluster, curve, outFiles, fit, bk, bs, labels)
+                case None => Compaction.clusterSorted(toCluster, curve, outFiles, fit)
+              }
+            else Compaction.clusterSorted(toCluster, curve, outFiles, fit)
           if (table.cdfEnabled)
-            table.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
-          else Nil
-        try table.swapSegments(clustered, candidates, txn = txn, extraActions = cdc)
-        catch { case e: Throwable => table.deleteCdcStaged(cdc); throw e }
-      } finally if (needsCache) toCluster.unpersist(false)
-    } catch {
-      // replayed streaming batch: the swap already deleted its staged
-      // files; report the batch as applied at the watermark's version
-      case TsTable.TxnReplayed(v) => return Report(0, 0, 0, 0, 0, v)
+            tx.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
+          tx.remove(candidates)
+          tx.stage(clustered)
+        } finally if (needsCache) toCluster.unpersist(false)
+      }
     }
+    // replayed streaming batch: the Txn deleted its staged files; report
+    // the batch as applied at the watermark's version
+    if (done.replayed) return Report(0, 0, 0, 0, 0, done.version)
 
     // report math from metadata only: out = survivors + updCount
+    val added = done.value
     val outRows = added.map(_.rowCount).sum
     val survivors = outRows - updCount
     val updated = targetRows - survivors
     val inserted = updCount - updated
-    Report(candidates.size, added.size, updated, inserted, survivors, mergedV)
+    Report(candidates.size, added.size, updated, inserted, survivors, done.version)
   }
 
   /** Merge-on-read MERGE (upsert): identical semantics to [[merge]] —
@@ -282,8 +281,7 @@ object MergeInto {
     val updCount = upd.count()
     if (updCount == 0) {
       // an empty streamed batch still advances the watermark (see merge)
-      val v = txn.map { case (app, batch) => table.commitTxnOnly(app, batch) }
-        .getOrElse(table.version)
+      val v = table.transact()(tx => txn.foreach(tx.watermark)).version
       return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, v)
     }
 
@@ -304,35 +302,25 @@ object MergeInto {
 
     val candidates = selectCandidates(spark, table, upd, updCount, key, live, refineExact = false)
 
-    // matched-position pass (only when something can match)
-    val plan: Option[DeleteWhere.MorPlan] =
-      if (candidates.isEmpty) None
-      else {
-        val keysDf = upd.select(col(key))
-        val base = DeleteWhere.morBase(spark, table, candidates) { raw =>
-          raw.select(
-              col("_metadata.file_path").as("__f"),
-              col("_metadata.row_index").as("__i"),
-              col(key),
-              DeleteWhere.bucketExpr(table).as("__b"))
-            .join(keysDf.withColumn("__hit", lit(true)), Seq(key), "left")
-            .select(col("__f"), col("__i"),
-              coalesce(col("__hit"), lit(false)).as("__m"), col("__b"))
+    val done = table.transact() { tx =>
+      txn.foreach(tx.watermark)
+      // matched-position pass (only when something can match)
+      val plan: Option[DeleteWhere.MorPlan] =
+        if (candidates.isEmpty) None
+        else {
+          val keysDf = upd.select(col(key))
+          val base = DeleteWhere.morBase(spark, table, candidates) { raw =>
+            raw.select(
+                col("_metadata.file_path").as("__f"),
+                col("_metadata.row_index").as("__i"),
+                col(key),
+                DeleteWhere.bucketExpr(table).as("__b"))
+              .join(keysDf.withColumn("__hit", lit(true)), Seq(key), "left")
+              .select(col("__f"), col("__i"),
+                coalesce(col("__hit"), lit(false)).as("__m"), col("__b"))
+          }
+          DeleteWhere.morCompute(spark, table, tx, candidates, base)
         }
-        DeleteWhere.morCompute(spark, table, candidates, base)
-      }
-
-    // everything after morCompute owns the plan's sidecars: ANY failure
-    // from here to the commit must delete them (and any staged segments)
-    var cdc: Seq[graft.log.LogAction.AddCdcFile] = Nil
-    def cleanup(staged: Seq[graft.meta.SegmentMeta]): Unit = {
-      table.deleteStaged(staged)
-      table.deleteCdcStaged(cdc)
-      plan.foreach(_.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(graft.meta.PathNorm.canonical(s"${table.root}/$rel")))))
-    }
-    var newSegs: Seq[graft.meta.SegmentMeta] = Nil
-    try {
       // the update set as new clustered segments; sized like a small
       // append (compaction bin-packs later) — never fewer files than
       // cores would leave the cluster idle, never so many that tiny
@@ -357,34 +345,21 @@ object MergeInto {
           pinned.join(oldIds, Seq(key), "left")
             .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long"))
         }
-      newSegs = table.stageSegments(
+      val newSegs = tx.stage(
         Compaction.clusterSorted(toWrite, curve, outFiles, ClusterKey.fitFor(table)))
       if (table.cdfEnabled)
-        cdc = table.stageCdc(mergeCdc(spark, table, candidates, pinned, key))
-      plan match {
-        case Some(p) =>
-          table.commitDvAttach(p.upserts, p.removeIds, p.expectedDv,
-            recomputeCoverage = table.timeSpec.isDefined, adds = newSegs,
-            sparkForChecks = Some(spark), txn = txn, extraActions = cdc)
-        case None =>
-          // pure insert: no matched rows anywhere — commit just the adds
-          table.commitDvAttach(Nil, Nil, Map.empty,
-            recomputeCoverage = table.timeSpec.isDefined, adds = newSegs,
-            sparkForChecks = Some(spark), txn = txn, extraActions = cdc)
-      }
-    } catch {
-      // replayed streaming batch: delete this attempt's unreferenced
-      // segments + sidecars and report the batch as already-applied
-      case TsTable.TxnReplayed(v) =>
-        cleanup(newSegs)
-        return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, v)
-      case e: Throwable => cleanup(newSegs); throw e
+        tx.stageCdc(mergeCdc(spark, table, candidates, pinned, key))
+      (plan, newSegs)
     }
+    // replayed streaming batch: the Txn deleted this attempt's segments
+    // and sidecars; report the batch as already-applied
+    if (done.replayed) return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, done.version)
 
+    val (plan, newSegs) = done.value
     val matched = plan.map(_.rowsMatched).getOrElse(0L)
     val survivors = live.map(_.liveRowCount).sum - matched
     Report(candidates.size, newSegs.size, matched, updCount - matched,
-      survivors, table.version)
+      survivors, done.version)
     } finally upd.unpersist(false)
   }
 

@@ -1,7 +1,7 @@
 package graft.maintain
 
 import java.nio.file.{Files, Paths}
-import graft.log.TableState
+import graft.log.{LogAction, TableState}
 import graft.meta.PathNorm
 import graft.table.TsTable
 
@@ -67,8 +67,21 @@ object Restore {
     val removed = before.count(s => !targetIds.get(s.segmentId).contains(s))
     val rowsBefore = before.map(_.liveRowCount).sum
 
-    val v = table.commitRestore(targetSegs,
-      recomputeCoverage = table.timeSpec.isDefined)
+    require(targetIds.size == targetSegs.size,
+      "target snapshot has duplicate segment ids — corrupt manifest?")
+    // the diff is recomputed against the snapshot the Txn commits over, so
+    // a rebase retry reconciles against the state it actually replaces:
+    // live segments absent from the target (or differing, e.g. a DV
+    // attached since) are removed, target segments absent from live (or
+    // differing) are re-added with their original metas, sidecar pointers
+    // included; identical ones stay untouched
+    val v = table.transact()(_.onCommit { st =>
+      val live = st.liveSegments
+      val liveById = live.map(s => s.segmentId -> s).toMap
+      live.filterNot(s => targetIds.get(s.segmentId).contains(s))
+        .map(s => LogAction.RemoveSegment(s.segmentId)) ++
+        targetSegs.filterNot(s => liveById.get(s.segmentId).contains(s)).map(LogAction.AddSegment)
+    }).version
     Report(toVersion, added, removed, rowsBefore,
       targetSegs.map(_.liveRowCount).sum, v)
   }

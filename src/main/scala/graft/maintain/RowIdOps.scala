@@ -165,23 +165,15 @@ object RowIdOps {
       val del = pinned.where(col(RowId).isNotNull).select(col(RowId))
       val (candidates, filteredOpt) =
         if (live.isEmpty) (Nil, None) else idMatchBase(spark, table, del, live)
-      val plan = filteredOpt.flatMap(f => DeleteWhere.morCompute(spark, table, candidates, f))
-
-      var cdc: Seq[graft.log.LogAction.AddCdcFile] = Nil
-      var newSegs: Seq[graft.meta.SegmentMeta] = Nil
-      def cleanup(): Unit = {
-        table.deleteStaged(newSegs); table.deleteCdcStaged(cdc)
-        plan.foreach(_.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel")))))
-      }
-      try {
+      val done = table.transact() { tx =>
+        val plan = filteredOpt.flatMap(f => DeleteWhere.morCompute(spark, table, tx, candidates, f))
         // images land as new clustered segments: revised rows KEEP their
         // materialized id; inserts (NULL) mint from the commit's base
         val images = pinned.withColumn(
           RowTracking.RowCommitCol, lit(null).cast("long"))
         val outFiles = math.max(1, math.min(spark.sparkContext.defaultParallelism,
           math.ceil((cnt * 4096L).toDouble / targetFileSize).toInt * 4))
-        newSegs = table.stageSegments(
+        val newSegs = tx.stage(
           Compaction.clusterSorted(images, curve, outFiles, ClusterKey.fitFor(table)))
         if (table.cdfEnabled) {
           val pre =
@@ -197,24 +189,16 @@ object RowIdOps {
             .withColumn("_change_type", lit("update_post"))
           val ins = pinned.where(col(RowId).isNull)
             .withColumn("_change_type", lit("insert"))
-          cdc = table.stageCdc(pre.fold(post.unionByName(ins))(
+          tx.stageCdc(pre.fold(post.unionByName(ins))(
             _.unionByName(post).unionByName(ins)))
         }
-        plan match {
-          case Some(p) =>
-            table.commitDvAttach(p.upserts, p.removeIds, p.expectedDv,
-              recomputeCoverage = false, adds = newSegs,
-              sparkForChecks = Some(spark), extraActions = cdc)
-          case None =>
-            table.commitDvAttach(Nil, Nil, Map.empty,
-              recomputeCoverage = false, adds = newSegs,
-              sparkForChecks = Some(spark), extraActions = cdc)
-        }
-      } catch { case e: Throwable => cleanup(); throw e }
+        (plan, newSegs)
+      }
 
+      val (plan, newSegs) = done.value
       val matched = plan.map(_.rowsMatched).getOrElse(0L)
       MergeInto.Report(candidates.size, newSegs.size, matched, cnt - matched,
-        live.map(_.liveRowCount).sum - matched, table.version)
+        live.map(_.liveRowCount).sum - matched, done.version)
     } finally pinned.unpersist(false)
   }
 }

@@ -2,7 +2,7 @@ package graft.maintain
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.meta.{PathNorm, SegmentMeta}
+import graft.meta.SegmentMeta
 import graft.table.{DeletionVectors, TsTable}
 
 /** UPDATE WHERE — copy-on-write predicate update, the in-place revision
@@ -72,16 +72,6 @@ object UpdateWhere {
       }
     }
 
-    // change feed: pre/post images of the matched rows, one extra
-    // matched-rows read (paid only when the feed is on), same commit;
-    // row tracking: both images carry the row's `_row_id`
-    val cdc: Seq[graft.log.LogAction.AddCdcFile] =
-      if (table.cdfEnabled)
-        table.stageCdc(changeImages(table, spark, schema, set,
-          liveRows(table.toLogical(DeleteWhere.cdcScanOf(spark, table, hit)), hit)
-            .where(matchesCond)))
-      else Nil
-
     // row tracking: every rewritten row keeps its id; rows the SET touched
     // get a NULL materialized `_row_commit`, which the read side resolves
     // to the new file's rowVersion — i.e. THIS commit — while untouched
@@ -96,16 +86,21 @@ object UpdateWhere {
     def hitScan = if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, hit)
                   else table.segmentScan(spark, hit)
 
-    val repairCov = table.timeSpec.isDefined
-    val (newSegs, committedV) =
-      try table.swapSegments(
-        liveRows(table.toLogical(hitScan), hit)
-          .select(projected.toIndexedSeq ++ trackCols: _*),
-        hit, recomputeCoverage = repairCov, extraActions = cdc)
-      catch { case e: Throwable => table.deleteCdcStaged(cdc); throw e }
+    val done = table.transact() { tx =>
+      // change feed: pre/post images of the matched rows, one extra
+      // matched-rows read (paid only when the feed is on), same commit;
+      // row tracking: both images carry the row's `_row_id`
+      if (table.cdfEnabled)
+        tx.stageCdc(changeImages(table, spark, schema, set,
+          liveRows(table.toLogical(DeleteWhere.cdcScanOf(spark, table, hit)), hit)
+            .where(matchesCond)))
+      tx.remove(hit)
+      tx.stage(liveRows(table.toLogical(hitScan), hit)
+        .select(projected.toIndexedSeq ++ trackCols: _*))
+    }
 
-    Report(candidates.size, untouched.size + clean.size, newSegs.size,
-      rowsUpdated, committedV)
+    Report(candidates.size, untouched.size + clean.size, done.value.size,
+      rowsUpdated, done.version)
   }
 
   /** UPDATE's change-feed record: each matched row exploded into its pre
@@ -164,66 +159,58 @@ object UpdateWhere {
         col("_metadata.row_index").as("__i"),
         matchesCond.as("__m"),
         DeleteWhere.bucketExpr(table).as("__b")))
-    val plan = DeleteWhere.morCompute(spark, table, candidates, base).getOrElse(
-      return Report(candidates.size, live.size, 0, 0L, table.version))
-
-    // pass 2 (full rows, matched only): the updated images, appended as
-    // new clustered segments — the only data write, sized by the matched
-    // rows (manifest bytes/row estimate; never below core count so the
-    // sort keeps the cluster busy — see MergeInto's outFiles rationale)
-    val projected = schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(v) => v.cast(f.dataType).as(f.name)
-        case None => col(f.name)
+    val done = table.transact() { tx =>
+      DeleteWhere.morCompute(spark, table, tx, candidates, base).map { plan =>
+        // pass 2 (full rows, matched only): the updated images, appended as
+        // new clustered segments — the only data write, sized by the matched
+        // rows (manifest bytes/row estimate; never below core count so the
+        // sort keeps the cluster busy — see MergeInto's outFiles rationale)
+        val projected = schema.fields.map { f =>
+          set.get(f.name) match {
+            case Some(v) => v.cast(f.dataType).as(f.name)
+            case None => col(f.name)
+          }
+        }
+        val candBytes = candidates.flatMap(_.fileSize).sum
+        val candRows = math.max(1L, candidates.map(_.liveRowCount).sum)
+        val bytesPerRow = if (candBytes > 0) candBytes.toDouble / candRows else 4096.0
+        val targetFileSize = 512L * 1024 * 1024
+        val outFiles = math.max(
+          math.max(1, math.ceil(plan.rowsMatched * bytesPerRow / targetFileSize).toInt),
+          math.min(spark.sparkContext.defaultParallelism,
+            math.max(1, (plan.rowsMatched / 10000L).toInt)))
+        val curve = table.clusterSpec.map(_.curve).getOrElse("none")
+        // row tracking: a MOR update's re-appended images KEEP their row ids
+        // (materialized from the masked source rows) and carry a NULL
+        // `_row_commit` — the new segment's rowVersion (this commit) becomes
+        // their last-modified version at read time
+        val candScan =
+          if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, candidates)
+          else table.segmentScan(spark, candidates)
+        val trackCols: Seq[Column] =
+          if (table.rowTrackingEnabled) Seq(
+            col(graft.table.RowTracking.RowIdCol),
+            lit(null).cast("long").as(graft.table.RowTracking.RowCommitCol))
+          else Nil
+        val raw = table.toLogical(candScan)
+        val matchedRaw = DeletionVectors.liveRowFilter(table.root, candidates)
+          .map(raw.where).getOrElse(raw)
+          .where(matchesCond)
+        val matchedRows = matchedRaw.select(projected.toIndexedSeq ++ trackCols: _*)
+        val newSegs = tx.stage(
+          Compaction.clusterSorted(matchedRows, curve, outFiles, ClusterKey.fitFor(table)))
+        // change feed: pre/post images of the matched rows, same commit
+        if (table.cdfEnabled)
+          tx.stageCdc(changeImages(table, spark, schema, set, matchedRaw))
+        (plan, newSegs)
       }
     }
-    val candBytes = candidates.flatMap(_.fileSize).sum
-    val candRows = math.max(1L, candidates.map(_.liveRowCount).sum)
-    val bytesPerRow = if (candBytes > 0) candBytes.toDouble / candRows else 4096.0
-    val targetFileSize = 512L * 1024 * 1024
-    val outFiles = math.max(
-      math.max(1, math.ceil(plan.rowsMatched * bytesPerRow / targetFileSize).toInt),
-      math.min(spark.sparkContext.defaultParallelism,
-        math.max(1, (plan.rowsMatched / 10000L).toInt)))
-    val curve = table.clusterSpec.map(_.curve).getOrElse("none")
-    var newSegs: Seq[SegmentMeta] = Nil
-    var cdc: Seq[graft.log.LogAction.AddCdcFile] = Nil
-    try {
-      // row tracking: a MOR update's re-appended images KEEP their row ids
-      // (materialized from the masked source rows) and carry a NULL
-      // `_row_commit` — the new segment's rowVersion (this commit) becomes
-      // their last-modified version at read time
-      val candScan =
-        if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, candidates)
-        else table.segmentScan(spark, candidates)
-      val trackCols: Seq[Column] =
-        if (table.rowTrackingEnabled) Seq(
-          col(graft.table.RowTracking.RowIdCol),
-          lit(null).cast("long").as(graft.table.RowTracking.RowCommitCol))
-        else Nil
-      val raw = table.toLogical(candScan)
-      val matchedRaw = DeletionVectors.liveRowFilter(table.root, candidates)
-        .map(raw.where).getOrElse(raw)
-        .where(matchesCond)
-      val matchedRows = matchedRaw.select(projected.toIndexedSeq ++ trackCols: _*)
-      newSegs = table.stageSegments(
-        Compaction.clusterSorted(matchedRows, curve, outFiles, ClusterKey.fitFor(table)))
-      // change feed: pre/post images of the matched rows, same commit
-      if (table.cdfEnabled)
-        cdc = table.stageCdc(changeImages(table, spark, schema, set, matchedRaw))
-      table.commitDvAttach(plan.upserts, plan.removeIds, plan.expectedDv,
-        recomputeCoverage = table.timeSpec.isDefined, adds = newSegs,
-        sparkForChecks = Some(spark), extraActions = cdc)
-    } catch {
-      case e: Throwable =>
-        table.deleteStaged(newSegs)
-        table.deleteCdcStaged(cdc)
-        plan.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel"))))
-        throw e
+    done.value match {
+      case None => Report(candidates.size, live.size, 0, 0L, done.version)
+      case Some((plan, newSegs)) =>
+        Report(candidates.size,
+          untouched.size + candidates.size - plan.upserts.size - plan.removeIds.size,
+          newSegs.size, plan.rowsMatched, done.version)
     }
-    Report(candidates.size,
-      untouched.size + candidates.size - plan.upserts.size - plan.removeIds.size,
-      newSegs.size, plan.rowsMatched, table.version)
   }
 }

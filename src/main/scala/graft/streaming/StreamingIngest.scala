@@ -65,7 +65,7 @@ object StreamingIngest {
       val batch = txns(legacy)
       System.err.println(s"[graft-streaming] migrating legacy txn watermark " +
         s"'$legacy' (batch $batch) to '$app'")
-      table.commitTxnOnly(app, batch)
+      table.transact()(_.watermark((app, batch)))
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 import graft.maintain.MergeInto
-import graft.table.TsTable
+import graft.table.{ConcurrentSegmentChangeException, TsTable}
 
 /** Structured Streaming UPSERT into a graft table — the CDC-apply shape of
   * the north rule's "upsert of revised sequences": a stream of revised
@@ -32,8 +32,9 @@ import graft.table.TsTable
   */
 object StreamingUpsert {
 
-  /** A merge aborts (commits NOTHING) when a concurrent maintenance job
-    * rewrote or re-DV'd its candidates mid-flight; retrying recomputes
+  /** A merge aborts (commits NOTHING, throwing
+    * [[ConcurrentSegmentChangeException]]) when a concurrent maintenance
+    * job rewrote or re-DV'd its candidates mid-flight; retrying recomputes
     * from a fresh snapshot, so bounded in-sink retries keep a transient
     * compaction race from failing the whole streaming query. Anything
     * else (or exhaustion) propagates — Spark's own query restart replays
@@ -43,8 +44,7 @@ object StreamingUpsert {
     for (i <- 1 to attempts) {
       try return op
       catch {
-        case e: IllegalStateException if Option(e.getMessage).exists(_.contains("aborted")) =>
-          last = e; Thread.sleep(50L * i)
+        case e: ConcurrentSegmentChangeException => last = e; Thread.sleep(50L * i)
       }
     }
     throw last
@@ -61,7 +61,7 @@ object StreamingUpsert {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // empty batches still advance the watermark inside mergeMor/merge
-        // (commitTxnOnly), mirroring the append sink — no pre-flight job
+        // (a watermark-only Txn), mirroring the append sink — no pre-flight job
         val txn = Some((app, batchId))
         retryingAborts(5) {
           if (mor) MergeInto.mergeMor(batch.sparkSession, table, batch, key, txn = txn)

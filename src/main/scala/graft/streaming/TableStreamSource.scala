@@ -39,7 +39,7 @@ import graft.table.TsTable
   *    checkpointed offset.
   *  - **Rewrite commits are skipped.** Compaction / clustering / MERGE
   *    swap segments with RemoveSegment+AddSegment in one commit
-  *    (TsTable.swapSegments); replaying their adds would re-emit rows the
+  *    (one graft.table.Txn); replaying their adds would re-emit rows the
   *    stream already delivered. Any commit containing a RemoveSegment is
   *    treated as a data-change commit and skipped (`skipChangeCommits`,
   *    default true — flip to false to fail the query instead, when

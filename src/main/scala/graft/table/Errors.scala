@@ -19,3 +19,9 @@ final case class BucketDomainOverflowException(value: Long)
 final case class CheckViolationException(check: String, predicate: String, violations: Long)
   extends RuntimeException(
     s"CHECK constraint '$check' ($predicate) violated by $violations row(s); write rejected")
+
+/** A transaction's conflict set was invalidated: a segment it removes or
+  * upserts was rewritten, dropped or re-DV'd by a concurrent commit since
+  * it was read. Nothing was committed and the transaction's staged files
+  * are gone, so the verb can be retried from a fresh snapshot. */
+final class ConcurrentSegmentChangeException(msg: String) extends IllegalStateException(msg)

@@ -34,17 +34,17 @@ final class TsTable private (val root: String, val store: LogStore) {
   def state: TableState = cachedState
   def version: Long = cachedState.version
 
-  /** The shared OCC commit loop EVERY writer verb goes through. `body`
-    * validates against the refreshed snapshot, assembles actions, and
-    * commits via [[commitAndAdvance]] (throw to abort; retryable commit
-    * races surface as Conflict/CommitFileExists). The whole
-    * validate+commit section runs under [[commitLock]], so in-JVM writers
-    * (e.g. 4 concurrent compaction bins + an append + a MOR delete on one
-    * table instance) serialize instead of burning each other's OCC retry
-    * budgets on pure self-races. Cross-process losers rebase-retry with
-    * jittered backoff OUTSIDE the lock. Slow abort cleanup (staged-file
-    * deletion) belongs in the CALLER's catch, outside the lock. */
-  private def occLoop(maxRetries: Int)(body: TableState => Long): Long = {
+  /** The OCC commit loop under every [[Txn]]. `body` validates against
+    * the refreshed snapshot, assembles actions, and commits via
+    * [[commitAndAdvance]] (throw to abort; retryable commit races surface
+    * as Conflict/CommitFileExists). The whole validate+commit section runs
+    * under [[commitLock]], so in-JVM writers (e.g. 4 concurrent compaction
+    * bins + an append + a MOR delete on one table instance) serialize
+    * instead of burning each other's OCC retry budgets on pure
+    * self-races. Cross-process losers rebase-retry with jittered backoff
+    * OUTSIDE the lock, and the Txn deletes an aborted commit's staged
+    * files outside it too. */
+  private[table] def occLoop(maxRetries: Int)(body: TableState => Long): Long = {
     var attempt = 0
     while (true) {
       val res: Option[Long] = commitLock.synchronized {
@@ -68,7 +68,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * caller commits outside [[commitLock]]: a slow writer's post-commit
     * assignment can never regress a newer snapshot already visible to
     * readers. Returns the committed version. */
-  private def commitAndAdvance(st: TableState, actions0: Seq[LogAction]): Long = {
+  private[table] def commitAndAdvance(st: TableState, actions0: Seq[LogAction]): Long = {
     val actions = assignRowTracking(st, actions0)
     val v = store.commitWithExpectedVersion(st.version, actions)
     val ns = actions.foldLeft(st)(_ apply _).copy(version = v)
@@ -127,6 +127,19 @@ final class TsTable private (val root: String, val store: LogStore) {
   def clusterSpec: Option[ClusterSpec] = meta.kind match {
     case TableKind.Clustered(s) => Some(s)
     case _ => None
+  }
+
+  /** Run one [[Txn]]: `build` stages files and declares the commit, then
+    * the Txn commits through [[occLoop]]. Any failure in `build` or the
+    * commit, and a replayed watermark, deletes every file the Txn staged. */
+  private[graft] def transact[A](maxRetries: Int = 3)(build: Txn => A): Txn.Done[A] = {
+    val tx = new Txn(this)
+    try {
+      val value = build(tx)
+      val v = tx.commit(maxRetries)
+      if (tx.replayed) tx.discard()
+      Txn.Done(value, v, tx.replayed)
+    } catch { case e: Throwable => tx.discard(); throw e }
   }
 
   // ---------------------------------------------------------------- scan
@@ -356,13 +369,11 @@ final class TsTable private (val root: String, val store: LogStore) {
     *    Scale-independent: intra-file parallelism at ANY cluster size
     *    (a 512 MB production file gets 64 independently scannable groups);
     *    cost measured +1 % file bytes. Override via
-    *    SPARK_GRAFT_ROWGROUP_BYTES. */
+    *    SPARK_GRAFT_ROWGROUP_BYTES ([[TsTable.rowGroupBytes]]). */
   private[graft] def segmentWriteOptions: Map[String, String] = {
-    val rowGroupBytes = sys.env.getOrElse("SPARK_GRAFT_ROWGROUP_BYTES",
-      (8L * 1024 * 1024).toString)
     Map(
       "compression" -> "zstd",
-      "parquet.block.size" -> rowGroupBytes) ++
+      "parquet.block.size" -> TsTable.rowGroupBytes.toString) ++
     (clusterSpec.map(_.columns.last) match {
       case Some(key) => Map(
         s"parquet.bloom.filter.enabled#$key" -> "true",
@@ -387,7 +398,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * the AddSegments (LogAction.SetTxn), and an append whose batchId is ≤
     * the table's watermark for that appId is skipped — including on the
     * OCC rebase path, so a crashed-and-replayed streaming batch can never
-    * double-land even if the first attempt's commit won a race. */
+    * double-land even if the first attempt's commit won a race. The data
+    * is staged by the same routine as every rewrite ([[stageSegments]])
+    * inside one [[Txn]], which deletes the staged files on any rejection
+    * (schema, identity, coverage overlap, CHECK) or replay. */
   def append(df: DataFrame, maxRetries: Int = 3,
              txn: Option[(String, Long)] = None): Long = {
     // cheap pre-check: skip the data write entirely when the batch is
@@ -396,24 +410,11 @@ final class TsTable private (val root: String, val store: LogStore) {
       refresh()
       if (cachedState.txns.get(app).exists(_ >= batch)) return cachedState.version
     }
-    val spark = df.sparkSession
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingRel = s".staging-$commitId"
-    val stagingAbs = s"$root/$stagingRel"
-
-    // liveness beacon: keeps the staging tree's mtime fresh for the whole
-    // write-stats-coverage-commit span, so Expire's crashed-writer
-    // reclamation can never race a live append whose upstream stages
-    // outlast the grace period
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-
-    // (1) write data files once; all retries below are metadata-only.
-    // toPhysical: appended data arrives under LOGICAL names; files are
-    // written under the frozen physical names (identity unless renamed).
-    // The rename is by-name, so a stale writer still using a PHYSICAL
-    // (pre-rename) column name would pass through it unchanged and land —
-    // gate the logical view by name FIRST (types/order enforce at commit)
+    // Appended data arrives under LOGICAL names and is staged under the
+    // frozen physical names (identity unless renamed). The rename is
+    // by-name, so a stale writer still using a PHYSICAL (pre-rename)
+    // column name would pass through it unchanged and land — gate the
+    // logical view by name FIRST (types/order enforce at commit)
     if (colMap.nonEmpty) {
       val logicalNames = cachedState.tableMeta.flatMap(_.schema)
         .map(_.fieldNames.toSet).getOrElse(Set.empty)
@@ -423,142 +424,35 @@ final class TsTable private (val root: String, val store: LogStore) {
           s"append columns ${off.mkString(", ")} are not in the table's logical schema " +
             s"(renamed columns must use their CURRENT names: ${colMap.keys.mkString(", ")})")
     }
-    toPhysical(df).write.options(segmentWriteOptions).mode("overwrite").parquet(stagingAbs)
-    val written0 = listParquet(stagingAbs)
-
-    // (2) per-file stats from footers only — no data scan. Empty input is
-    // a successful NO-OP (zero-row part files are discarded, never
-    // committed as segments); a streaming txn batch still advances its
-    // watermark so replays of the empty batch stay idempotent — this is
-    // what lets the streaming sinks hand every batch straight to append
-    // without a pre-flight isEmpty job.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statsAll = FooterStats.readAll(conf, written0)
-    val (liveStats, emptyStats) = statsAll.partition(_._2.rowCount > 0)
-    emptyStats.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-    if (liveStats.isEmpty) {
-      // stop (join) the beacon BEFORE deleting its tree: a touch racing
-      // the recursive delete could recreate .heartbeat mid-walk and make
-      // the final dir delete throw (stop() is idempotent; the finally
-      // re-stop is a no-op)
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      return txn match {
-        case Some((app, batch)) => commitTxnOnly(app, batch)
-        case None => refresh(); cachedState.version
+    val spark = df.sparkSession
+    transact(maxRetries) { tx =>
+      // an empty input stages nothing and commits nothing — except a
+      // streaming batch's watermark, so replays of the empty batch stay
+      // idempotent and the sinks need no pre-flight isEmpty job
+      txn.foreach(tx.watermark)
+      val staged = tx.stageWithSchemas(df)
+      if (staged.nonEmpty) {
+        val segs = staged.map(_._1)
+        // canonical on-disk schema (reference adopts from the Parquet
+        // footer, append.rs:130-151): Spark embeds the writer's StructType
+        // in every file's footer, already read for stats — no schema job
+        // unless the staged files disagree or carry none (foreign files)
+        val diskSchema = TsTable.footerSchema(staged.map(_._2))
+          .getOrElse(spark.read.parquet(segs.map(abs): _*).schema)
+        val identity = timeSpec.flatMap(extractEntityIdentity(spark, segs, _))
+        val appendCov = timeSpec.map(_ => segs.flatMap(_.coveragePath)
+          .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel))))
+        tx.onCommit(st => appendActions(st, segs, diskSchema, identity, appendCov))
       }
-    }
-    val written = liveStats.map(_._1)
-    val fileStats = liveStats
-
-    // CHECK constraints gate the append while the files are still in
-    // staging — a rejected batch deletes its scratch tree and commits
-    // nothing (stats fast path; see enforceChecks)
-    try enforceChecks(spark, fileStats.map { case (p, fs) => (p, fs.stats, fs.rowCount) })
-    catch { case e: Throwable =>
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      throw e
-    }
-
-    // canonical on-disk schema (reference adopts from the Parquet footer,
-    // append.rs:130-151). Round 6: Spark embeds the exact StructType JSON
-    // in the footer metadata of every file it writes, and the footers were
-    // just read for stats — reuse that instead of paying a listing + a
-    // schema-inference Spark job per append (driver-tail cost on EVERY
-    // append; the fallback read covers foreign files staged without the
-    // key, and any malformed JSON falls through to inference too)
-    // asNullable: file sources report every field nullable, so the
-    // embedded writer schema must be normalized identically or the
-    // adopt-then-enforce comparison would reject a second append whose
-    // builder pipeline produced non-null columns (e.g. generator kernels)
-    val diskSchema = liveStats.head._2.sparkSchemaJson
-      .flatMap(j => scala.util.Try(org.apache.spark.sql.graft.Bridge.asNullable(
-        org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])).toOption)
-      .getOrElse(spark.read.parquet(stagingAbs).schema)
-
-    // (3) time-series extras: coverage bitmaps + entity identity
-    val tsExtras = timeSpec.map { spec =>
-      val tsCol = spec.timestampColumn
-      if (!diskSchema.fieldNames.contains(tsCol))
-        throw SchemaMismatchException(s"time column '$tsCol' missing from appended data")
-      val identity = extractEntityIdentity(spark, stagingAbs, spec, fileStats)
-      val perFileCov = computeCoverage(spark, Seq(stagingAbs), spec)
-      (identity, perFileCov)
-    }
-
-    // move staged files into data/ under deterministic names
-    val moved: Seq[(String, String)] = written.zipWithIndex.map { case (src, i) =>
-      val rel = f"data/$commitId-$i%05d.parquet"
-      val dst = s"$root/$rel"
-      Files.createDirectories(Paths.get(s"$root/data"))
-      Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(dst)))
-      src -> rel
-    }
-    // stop (join) the beacon before deleting its tree — a touch racing the
-    // recursive delete could recreate .heartbeat mid-walk, fail the dir
-    // delete, and abort an append whose data files are already in data/
-    heartbeat.stop()
-    deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-
-    val segs = moved.zip(fileStats).map { case ((src, rel), (_, fs)) =>
-      val segId = SegmentMeta.segmentIdV1(rel, Paths.get(stripScheme(s"$root/$rel")))
-      val cov = tsExtras.flatMap(_._2.get(graft.meta.PathNorm.canonical(src))).map { bm =>
-        val covRel = s"_coverage/segments/segcov-$segId.cov"
-        writeBytes(s"$root/$covRel", bm.serialize())
-        covRel
-      }
-      SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats, cov)
-    }
-
-    // checks were enforced against THIS snapshot's constraint set while
-    // the files sat in staging; a rebase below may land on a snapshot
-    // with a check added since, and must re-gate the (now-moved) files
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-
-    def deleteSegFiles(): Unit = segs.foreach { seg =>
-      Files.deleteIfExists(Paths.get(stripScheme(s"$root/${seg.path}")))
-      seg.coveragePath.foreach(cp =>
-        Files.deleteIfExists(Paths.get(stripScheme(s"$root/$cp"))))
-    }
-    try {
-      occLoop(maxRetries) { st =>
-        if (st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-          enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-        // authoritative idempotency check against the snapshot we commit
-        // on; the sentinel unwinds to the cleanup below, OUTSIDE the lock
-        txn.foreach { case (app, batch) =>
-          if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-        }
-        commitAppend(spark, st, segs, diskSchema, tsExtras, txn)
-      }
-    } catch {
-      case TsTable.TxnReplayed(v) =>
-        // A replay (e.g. two drivers raced the same batch and this one
-        // lost the OCC commit) must delete the data files it already
-        // moved into data/ — no commit references them, and Expire only
-        // reclaims segments the log has seen, so they would leak forever.
-        deleteSegFiles()
-        v
-      case e: Throwable =>
-        // Non-retryable rejection (CoverageOverlap / SchemaMismatch /
-        // EntityIdentity / uncovered-segments precondition) or retry
-        // budget exhausted: same leak rule as above (round-2 finding).
-        deleteSegFiles()
-        throw e
-    }
-
-    } finally heartbeat.stop()
+    }.version
   }
 
-  private def commitAppend(
-      spark: SparkSession,
-      st: TableState,
-      segs: Seq[SegmentMeta],
-      diskSchema: StructType,
-      tsExtras: Option[(Option[Map[String, String]], Map[String, Bitmap])],
-      txn: Option[(String, Long)] = None): Long = {
-
+  /** The append's snapshot-dependent actions, re-derived on every OCC
+    * rebase: schema adopt-or-enforce, entity identity pin-or-enforce and
+    * the coverage overlap check + new coverage snapshot. */
+  private def appendActions(st: TableState, segs: Seq[SegmentMeta], diskSchema: StructType,
+                            identity: Option[Map[String, String]],
+                            appendCov: Option[Bitmap]): Seq[LogAction] = {
     var m = st.tableMeta.getOrElse(meta)
     var metaChanged = false
 
@@ -577,19 +471,18 @@ final class TsTable private (val root: String, val store: LogStore) {
     }
 
     // entity identity pin-or-enforce (reference append.rs:166-196)
-    tsExtras.flatMap(_._1).foreach { identity =>
+    identity.foreach { id =>
       m.entityIdentity match {
         case None =>
-          m = m.copy(entityIdentity = Some(identity)); metaChanged = true
+          m = m.copy(entityIdentity = Some(id)); metaChanged = true
         case Some(pinned) =>
-          if (pinned != identity)
-            throw EntityIdentityException(s"entity identity mismatch: table pinned $pinned, append has $identity")
+          if (pinned != id)
+            throw EntityIdentityException(s"entity identity mismatch: table pinned $pinned, append has $id")
       }
     }
 
     // coverage overlap check + new table snapshot (reference append.rs:200-290)
-    val coverageAction = tsExtras.map { case (_, perFile) =>
-      val spec = timeSpec.get
+    val coverageAction = appendCov.map { cov =>
       // precondition: every existing segment must carry a coverage sidecar,
       // else the overlap check would be unsound (reference append.rs:50-61)
       val uncovered = st.liveSegments.filter(_.coveragePath.isEmpty)
@@ -597,25 +490,13 @@ final class TsTable private (val root: String, val store: LogStore) {
         throw new IllegalStateException(
           s"cannot append: ${uncovered.size} existing segments lack coverage sidecars")
       val tableCov = loadTableCoverage(st, heal = false)
-      val appendCov = perFile.values.foldLeft(Bitmap.empty)(_ union _)
-      val overlap = appendCov.intersect(tableCov)
+      val overlap = cov.intersect(tableCov)
       if (!overlap.isEmpty)
         throw CoverageOverlapException(segs.head.path, overlap.cardinality, overlap.runList.head._1)
-      val newCov = tableCov.union(appendCov)
-      val newVersion = st.version + 1
-      val covRel = s"_coverage/table/$newVersion-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
-      writeBytes(s"$root/$covRel", newCov.serialize())
-      LogAction.UpdateTableCoverage(spec.bucket.spec, covRel)
+      writeTableCoverage(st, tableCov.union(cov))
     }
 
-    val actions: Seq[LogAction] =
-      (if (metaChanged) Seq(LogAction.UpdateTableMeta(m)) else Nil) ++
-      segs.map(LogAction.AddSegment) ++ coverageAction.toSeq ++
-      txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq
-
-    // through commitAndAdvance so the row-tracking hook stamps the new
-    // segments' id ranges in the same commit
-    commitAndAdvance(st, actions)
+    (if (metaChanged) Seq(LogAction.UpdateTableMeta(m)) else Nil) ++ coverageAction.toSeq
   }
 
   /** Append an existing Parquet file by path (reference CLI `append
@@ -665,149 +546,94 @@ final class TsTable private (val root: String, val store: LogStore) {
     // caller's files and are left alone)
   }
 
-  /** Copy-on-write swap: write `df` as new segments and atomically commit
-    * RemoveSegment(removeIds) + AddSegment(new) in ONE commit — the
-    * maintenance primitive behind compaction, clustering and MERGE.
-    * Concurrent readers pinned at the old version keep seeing the old
-    * files (nothing is deleted here; snapshot expiration deletes later).
-    * OCC: on conflict, rebase and re-verify every removed id is still
-    * live — if another job already swapped one, this swap aborts. */
-  /** When `recomputeCoverage` (DELETE on a time-series table): the new
-    * table-coverage snapshot (union of surviving + new segment sidecars)
-    * commits ATOMICALLY with the Remove+Add actions, so no crash window
-    * can leave a stale snapshot that falsely rejects later appends into
-    * the vacated range. Orphan .cov files from lost OCC races are benign
-    * (same policy as append's pre-commit sidecar writes). */
-  private[graft] def swapSegments(df: DataFrame, removed: Seq[SegmentMeta],
-                                  maxRetries: Int = 3,
-                                  recomputeCoverage: Boolean = false,
-                                  txn: Option[(String, Long)] = None,
-                                  extraActions: Seq[LogAction] = Nil): (Seq[SegmentMeta], Long) = {
+  /** The one staging routine behind every data write (append, rewrites,
+    * MOR re-appends): write `df` under the frozen physical names, enforce
+    * CHECK constraints and, on time-series tables, build coverage while the
+    * files still sit in the heartbeat-guarded staging tree, then move the
+    * non-empty ones under data/ as segments with footer stats and coverage
+    * sidecars. Every file is registered with `tx` before it lands, so the
+    * Txn deletes them on any abort. Returns each segment with the Spark
+    * schema embedded in its footer (None when absent or malformed).
+    *
+    * Zero-row part files (a rewrite partition whose every row was filtered
+    * away) are discarded: committing one would create a rowCount=0 segment
+    * with no coverage sidecar, which wedges the time-series append
+    * precondition forever. An all-empty input stages nothing. */
+  private[table] def stageSegments(tx: Txn, df: DataFrame)
+      : Seq[(SegmentMeta, Option[StructType])] = {
     val spark = df.sparkSession
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-    val removeIds = removed.map(_.segmentId)
-    val expectedDv = removed.map(s => s.segmentId -> s.dvPath).toMap
-    val segs = stageSegments(df)
-    // same orphan rule as append: the rewritten files were moved into
-    // data/ above, so every abort path (lost race on a removed segment,
-    // retry budget exhausted, rejected re-gate) must delete them + their
-    // sidecars before propagating — no commit references them and
-    // Expire's orphan scan only reclaims log-seen segments. The cleanup
-    // runs in the catch below, OUTSIDE the commit lock, so a large
-    // aborting swap never stalls other writers' sub-ms commits.
-    try {
-      // The expensive rewrite job already ran OUTSIDE the lock; the rare
-      // re-gate of a concurrently-added CHECK is the only data-touching
-      // work that can run under it.
-      val v = occLoop(maxRetries) { st =>
-        // streaming-upsert idempotency (mirrors append): a replayed batch
-        // unwinds to the cleanup catch below, outside the commit lock
-        txn.foreach { case (app, batch) =>
-          if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-        }
-        val missing = removeIds.filterNot(st.segments.contains)
-        if (missing.nonEmpty)
-          throw new IllegalStateException(
-            s"swap aborted: segments already rewritten by a concurrent job: $missing")
-        // a concurrent MOR delete keeps the segment ID but changes its
-        // deletion vector — committing this rewrite (whose bytes were read
-        // under the OLD DV) would silently resurrect the just-deleted rows,
-        // so the swap verifies the DV pointer it read under, not mere id
-        // presence (the mirror of commitDvAttach's expectedDv guard)
-        val dvRaced = removeIds.filter(id => st.segments(id).dvPath != expectedDv(id))
-        if (dvRaced.nonEmpty)
-          throw new IllegalStateException(
-            s"swap aborted: segments re-DV'd by a concurrent DELETE/MERGE: $dvRaced")
-        // a CHECK added since this rewrite validated must re-gate it (the
-        // staged rows could predate the constraint); unchanged checks skip
-        if (st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-          enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-        val actions: Seq[LogAction] =
-          removeIds.map(LogAction.RemoveSegment) ++ segs.map(LogAction.AddSegment) ++
-            (if (recomputeCoverage) coverageActionFor(st, removeIds, segs).toSeq else Nil) ++
-            txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq ++
-            extraActions // change-feed records / DataNeutral marker ride the same commit
-        commitAndAdvance(st, actions)
+    // toPhysical: logical frames (appends, maintenance ops that applied
+    // user expressions) land under the files' frozen physical names; a
+    // physical frame (segmentScan) passes through untouched
+    val phys = toPhysical(df)
+    val (written, cov) = writeStaged(tx, phys, segmentWriteOptions, n => s"data/$n") { live =>
+      // CHECK constraints gate appends and rewrites alike: the stats fast
+      // path clears pass-through rewrites (existing rows were validated
+      // at their own write), and it is the only net that can catch an
+      // UPDATE whose SET drives rows out of bounds
+      enforceChecks(spark, live.map { case (p, fs) => (p, fs.stats, fs.rowCount) })
+      timeSpec match {
+        case Some(spec) if live.nonEmpty =>
+          if (!phys.schema.fieldNames.contains(spec.timestampColumn))
+            throw SchemaMismatchException(s"time column '${spec.timestampColumn}' missing from appended data")
+          computeCoverage(spark, live.map(_._1), spec)
+        case _ => Map.empty[String, Bitmap]
       }
-      (segs, v)
-    } catch { case e: Throwable => deleteStaged(segs); throw e }
+    }
+    written.map { case (src, rel, fs) =>
+      val segId = SegmentMeta.segmentIdV1(rel, localPath(rel))
+      val covRel = cov.get(graft.meta.PathNorm.canonical(src)).map { bm =>
+        val r = s"_coverage/segments/segcov-$segId.cov"
+        tx.writeSidecar(r, bm.serialize())
+        r
+      }
+      // asNullable: file sources report every field nullable, so the
+      // embedded writer schema is normalized identically or adopt-then-
+      // enforce would reject a second append whose pipeline produced
+      // non-null columns (e.g. generator kernels)
+      val schema = fs.sparkSchemaJson.flatMap(j => scala.util.Try(
+        org.apache.spark.sql.graft.Bridge.asNullable(
+          DataType.fromJson(j).asInstanceOf[StructType])).toOption)
+      SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats, covRel) -> schema
+    }
   }
 
-  /** Write `df` as new committed-ready segments under data/ (staging dir,
-    * zero-row parts discarded, footer stats, coverage sidecars for
-    * time-series tables) and return their metas. NO log commit happens
-    * here: the caller commits the AddSegments (swapSegments, mergeMor) and
-    * owns [[deleteStaged]] cleanup on every abort path — until the commit
-    * lands these files are unreferenced orphans invisible to readers. */
-  private[graft] def stageSegments(df: DataFrame): Seq[SegmentMeta] = {
-    val spark = df.sparkSession
+  /** Write `df` under a fresh `.staging-*` tree, run `inStaging` over its
+    * non-empty part files (absolute staged paths + footer stats), then move
+    * them to `dest(<commitId>-<i>.parquet)` (root-relative), registering
+    * each with `tx` first. Returns (staged path, relative path, stats) per
+    * file and `inStaging`'s result. The liveness beacon keeps the staging
+    * tree's mtime fresh until the move, so Expire's crashed-writer
+    * reclamation never races a live writer. */
+  private def writeStaged[T](tx: Txn, df: DataFrame, options: Map[String, String],
+                             dest: String => String)
+                            (inStaging: Seq[(String, FooterStats.FileStats)] => T)
+      : (Seq[(String, String, FooterStats.FileStats)], T) = {
     val commitId = UUID.randomUUID().toString.take(8)
     val stagingAbs = s"$root/.staging-$commitId"
-    // same liveness beacon as append: a long rewrite must not lose its
-    // staging tree to a concurrent Expire's crashed-writer reclamation
     val heartbeat = StagingHeartbeat.start(stagingAbs)
     try {
-      // toPhysical: rewrite inputs arrive physical (segmentScan) or
-      // logical (a maintenance op that applied user expressions); the
-      // rename is by-name, so a physical frame passes through untouched
-      // and a logical one lands under the files' frozen physical names
-      toPhysical(df).write.options(segmentWriteOptions).mode("overwrite").parquet(stagingAbs)
-      val written0 = listParquet(stagingAbs)
-      val conf = spark.sparkContext.hadoopConfiguration
-      // zero-row part files (a rewrite partition whose every row was
-      // filtered away) are DISCARDED like the append path does — committing
-      // one would create a rowCount=0 segment with no coverage sidecar,
-      // which wedges the time-series append precondition forever. An
-      // all-empty rewrite degenerates to a pure-Remove commit.
-      val statsAll = FooterStats.readAll(conf, written0)
-      val (liveOut, emptyOut) = statsAll.partition(_._2.rowCount > 0)
-      emptyOut.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-      val written = liveOut.map(_._1)
-      val fileStats = liveOut
-      val moved = written.zipWithIndex.map { case (src, i) =>
-        val rel = f"data/$commitId-$i%05d.parquet"
-        Files.createDirectories(Paths.get(s"$root/data"))
-        Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(s"$root/$rel")))
-        rel
+      df.write.options(options).mode("overwrite").parquet(stagingAbs)
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val live = FooterStats.readAll(conf, listParquet(stagingAbs)).filter(_._2.rowCount > 0)
+      val result = inStaging(live)
+      val moved = live.zipWithIndex.map { case ((src, fs), i) =>
+        val rel = dest(f"$commitId-$i%05d.parquet")
+        tx.register(rel)
+        Files.createDirectories(localPath(rel).getParent)
+        Files.move(Paths.get(stripScheme(src)), localPath(rel))
+        (src, rel, fs)
       }
-      // same beacon-before-delete ordering as append (see there)
+      (moved, result)
+    } finally {
+      // stop (join) the beacon before deleting its tree: a touch racing
+      // the recursive delete could recreate .heartbeat mid-walk. A tree
+      // that will not delete (failed write) is left to Expire
       heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      // time-series tables: rewritten segments need coverage sidecars so the
-      // append overlap-check precondition keeps holding after compaction
-      val covByPath: Map[String, String] = timeSpec match {
-        case Some(spec) if moved.nonEmpty =>
-          computeCoverage(spark, moved.map(rel => s"$root/$rel"), spec).map { case (p, bm) =>
-            val rel = p.stripPrefix(graft.meta.PathNorm.canonical(root) + "/")
-            val segId = SegmentMeta.segmentIdV1(rel, Paths.get(p))
-            val covRel = s"_coverage/segments/segcov-$segId.cov"
-            writeBytes(s"$root/$covRel", bm.serialize())
-            rel -> covRel
-          }
-        case _ => Map.empty
-      }
-      val segs = moved.zip(fileStats).map { case (rel, (_, fs)) =>
-        val segId = SegmentMeta.segmentIdV1(rel, Paths.get(stripScheme(s"$root/$rel")))
-        SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats,
-          covByPath.get(rel))
-      }
-      // CHECK constraints also gate rewrites/merge-adds staged here: the
-      // stats fast path clears pass-through rewrites (existing rows were
-      // validated at their own write), and it is the only net that can
-      // catch an UPDATE whose SET drives rows out of bounds
-      try enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-      catch { case e: Throwable => deleteStaged(segs); throw e }
-      segs
-    } finally heartbeat.stop()
-  }
-
-  /** Delete staged-but-uncommitted segments (+ sidecars) after an abort. */
-  private[graft] def deleteStaged(segs: Seq[SegmentMeta]): Unit =
-    segs.foreach { seg =>
-      Files.deleteIfExists(Paths.get(stripScheme(s"$root/${seg.path}")))
-      seg.coveragePath.foreach(cp =>
-        Files.deleteIfExists(Paths.get(stripScheme(s"$root/$cp"))))
+      try deleteRecursively(Paths.get(stripScheme(stagingAbs)))
+      catch { case _: java.io.IOException => () }
     }
+  }
 
   // ------------------------------------------------------ change data feed
 
@@ -819,10 +645,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * before it have no record and [[graft.maintain.ChangeFeed]] refuses
     * ranges that cross them (Delta delta.enableChangeDataFeed analog). */
   def enableCdf(maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       if (m.cdfEnabled) None else Some(m.copy(cdfEnabled = true)) }
   def disableCdf(maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       if (!m.cdfEnabled) None else Some(m.copy(cdfEnabled = false)) }
 
   // ---------------------------------------------------------- row tracking
@@ -841,9 +667,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     * column names. */
   def enableRowTracking(maxRetries: Int = 3): Long = {
     requireMainHandle("enable row tracking")
-    occLoop(maxRetries) { st =>
+    transact(maxRetries)(_.onCommit { st =>
       val m = st.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
-      if (m.rowTracking) st.version
+      if (m.rowTracking) Nil
       else {
         m.schema.foreach { s =>
           val clash = s.fieldNames.toSet
@@ -851,18 +677,16 @@ final class TsTable private (val root: String, val store: LogStore) {
           if (clash.nonEmpty) throw SchemaMismatchException(
             s"row tracking reserves column names ${clash.mkString(", ")}")
         }
-        val backfill: Seq[LogAction] =
-          st.liveSegments.filter(_.baseRowId.isEmpty).map(LogAction.AddSegment)
-        commitAndAdvance(st,
-          backfill :+ LogAction.UpdateTableMeta(m.copy(rowTracking = true)))
+        st.liveSegments.filter(_.baseRowId.isEmpty).map(LogAction.AddSegment) :+
+          LogAction.UpdateTableMeta(m.copy(rowTracking = true))
       }
-    }
+    }).version
   }
 
   /** Turn row tracking off (the high-water mark and assigned ranges are
     * kept, so a later re-enable resumes without id reuse). */
   def disableRowTracking(maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       if (!m.rowTracking) None else Some(m.copy(rowTracking = false)) }
 
   /** Scan the current snapshot with `_row_id` / `_row_commit` appended —
@@ -957,7 +781,7 @@ final class TsTable private (val root: String, val store: LogStore) {
   /** Maintenance read of `segs` with tracking columns attached and
     * MATERIALIZED (physical names; rows physical — callers layer DV
     * filters as with [[segmentScan]]). Row-preserving rewrites feed this
-    * straight to [[stageSegments]], freezing each surviving row's id and
+    * straight to [[Txn.stage]], freezing each surviving row's id and
     * last-modified version into the new files. */
   private[graft] def segmentScanWithRowIds(spark: SparkSession,
                                            segs: Seq[SegmentMeta]): DataFrame = {
@@ -966,41 +790,16 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   /** Stage a change-record DataFrame (logical table columns +
-    * `_change_type`) as parquet under `_cdc/` and return the AddCdcFile
-    * actions the caller must carry in the SAME commit as the change —
-    * exactly the staged-then-committed discipline of [[stageSegments]],
-    * without footer-stats/coverage/check machinery (the feed is not
-    * scannable table state). Until that commit lands the files are
-    * unreferenced; the caller owns [[deleteCdcStaged]] on every abort path
-    * (Expire's unreferenced-sweep is the crashed-writer backstop). */
-  private[graft] def stageCdc(df: DataFrame): Seq[LogAction.AddCdcFile] = {
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingAbs = s"$root/.staging-cdc-$commitId"
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-      // physical column names on disk, like the data files — the feed
-      // reader maps back through the read-time column mapping, so a CDC
-      // file written before a RENAME still reads under the new name
-      toPhysical(df).write.mode("overwrite").parquet(stagingAbs)
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val stats = FooterStats.readAll(conf, listParquet(stagingAbs))
-      val (live, empty) = stats.partition(_._2.rowCount > 0)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-      Files.createDirectories(Paths.get(stripScheme(s"$root/_cdc")))
-      val actions = live.zipWithIndex.map { case ((src, fs), i) =>
-        val rel = f"_cdc/cdc-$commitId-$i%05d.parquet"
-        Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(s"$root/$rel")))
-        LogAction.AddCdcFile(rel, fs.rowCount)
-      }
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      actions
-    } finally heartbeat.stop()
-  }
-
-  /** Abort cleanup for [[stageCdc]] output whose commit never landed. */
-  private[graft] def deleteCdcStaged(actions: Seq[LogAction.AddCdcFile]): Unit =
-    actions.foreach(a => Files.deleteIfExists(Paths.get(stripScheme(s"$root/${a.path}"))))
+    * `_change_type`) as parquet under `_cdc/` for [[Txn.stageCdc]] and
+    * return its AddCdcFile actions — plain files, without the footer-stats/
+    * coverage/check machinery of [[stageSegments]] (the feed is not
+    * scannable table state). Physical column names on disk, like the data
+    * files: the feed reader maps back through the read-time column
+    * mapping, so a CDC file written before a RENAME reads under the new
+    * name. */
+  private[table] def stageCdc(tx: Txn, df: DataFrame): Seq[LogAction.AddCdcFile] =
+    writeStaged(tx, toPhysical(df), Map.empty, n => s"_cdc/cdc-$n")(_ => ())._1
+      .map { case (_, rel, fs) => LogAction.AddCdcFile(rel, fs.rowCount) }
 
   /** CHECK constraint: add an ingest-quality gate (name → SQL predicate)
     * as a metadata-only commit. SQL CHECK semantics: a row passes when
@@ -1013,7 +812,7 @@ final class TsTable private (val root: String, val store: LogStore) {
                maxRetries: Int = 3): Long = {
     import org.apache.spark.sql.functions.{expr, lit, not}
     val cond = expr(predicateSql)
-    commitMetaUpdate(maxRetries) { (st, m) =>
+    alterMeta(maxRetries) { (st, m) =>
       require(!m.checks.exists(_._1 == name), s"check '$name' already exists")
       // validate INSIDE the OCC loop, so a write racing this commit gets
       // re-validated on the rebase (a write that lands after our commit
@@ -1239,7 +1038,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     val head = bl.currentVersion()
     val headState = TableState.rebuildAt(bl, head)
     val baseState = TableState.rebuildAt(store, bl.base)
-    val committed = occLoop(maxRetries) { st =>
+    val committed = transact(maxRetries)(_.onCommit { st =>
       if (st.version != bl.base)
         throw new IllegalStateException(
           s"non-fast-forward publish: branch '$name' forked at v${bl.base} but main " +
@@ -1261,9 +1060,8 @@ final class TsTable private (val root: String, val store: LogStore) {
       headState.txns.toSeq.sortBy(_._1).foreach { case (app, batch) =>
         if (baseState.txns.get(app).forall(_ < batch)) b += LogAction.SetTxn(app, batch)
       }
-      val actions = b.result()
-      if (actions.isEmpty) st.version else commitAndAdvance(st, actions)
-    }
+      b.result()
+    }).version
     if (dropAfter) dropBranch(name)
     committed
   }
@@ -1276,7 +1074,7 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   private def updateTags(name: String, f: Long => Option[Long], maxRetries: Int,
                          mustExist: Boolean = false): Long =
-    commitMetaUpdate(maxRetries) { (st, m) =>
+    alterMeta(maxRetries) { (st, m) =>
       if (mustExist) require(m.tags.contains(name), s"no such tag: '$name'")
       val newTags = f(st.version) match {
         case Some(v) => m.tags + (name -> v)
@@ -1285,25 +1083,21 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (newTags == m.tags) None else Some(m.copy(tags = newTags))
     }
 
-  /** Shared OCC loop for metadata-only commits (schema evolution, checks,
-    * tags): refresh, validate+transform the CURRENT meta via `f` inside
-    * the loop (so a rebase re-validates against what it actually commits
-    * over; throw to abort, None for a no-op), commit one UpdateTableMeta,
-    * rebase-retry on conflicts. */
-  private def commitMetaUpdate(maxRetries: Int = 3)
-                              (f: (TableState, TableMeta) => Option[TableMeta]): Long =
-    occLoop(maxRetries) { st =>
+  /** Metadata-only commits (schema evolution, checks, tags, flags): a
+    * [[Txn]] whose one UpdateTableMeta is `f` applied to the CURRENT meta
+    * of the snapshot committed over, so a rebase re-validates against what
+    * it actually commits over (throw to abort, None for a no-op). */
+  private def alterMeta(maxRetries: Int)
+                       (f: (TableState, TableMeta) => Option[TableMeta]): Long =
+    transact(maxRetries)(_.onCommit { st =>
       val m = st.tableMeta.getOrElse(throw new IllegalStateException(
         "no table metadata yet — create the table first"))
-      f(st, m) match {
-        case None     => st.version
-        case Some(nm) => commitAndAdvance(st, Seq(LogAction.UpdateTableMeta(nm)))
-      }
-    }
+      f(st, m).map(LogAction.UpdateTableMeta).toSeq
+    }).version
 
   /** Drop a CHECK constraint (metadata-only). */
   def dropCheck(name: String, maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       require(m.checks.exists(_._1 == name), s"no such check: '$name'")
       Some(m.copy(checks = m.checks.filterNot(_._1 == name)))
     }
@@ -1315,8 +1109,8 @@ final class TsTable private (val root: String, val store: LogStore) {
     * CHECK), so the file skips the row-level scan — on appends of clean
     * data with tight stats this costs driver arithmetic only. Files the
     * stats can't clear get ONE filtered count over just those files. */
-  private def enforceChecks(spark: SparkSession,
-                            files: Seq[(String, Map[String, graft.meta.ColStats], Long)]): Unit = {
+  private[table] def enforceChecks(spark: SparkSession,
+                                   files: Seq[(String, Map[String, graft.meta.ColStats], Long)]): Unit = {
     val checks = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
     if (checks.isEmpty || files.isEmpty) return
     import org.apache.spark.sql.functions.{expr, lit, not}
@@ -1412,7 +1206,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * column. OCC rebase-retry like every other metadata commit. */
   def addColumn(name: String, dataType: org.apache.spark.sql.types.DataType,
                 maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       val sch = m.schema.getOrElse(throw new IllegalStateException(
         "no schema adopted yet — append once before evolving the schema"))
       require(!sch.fieldNames.contains(name), s"column '$name' already exists")
@@ -1440,7 +1234,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * meta). The DSv1 `format("graft-table")` batch relation has no
     * projection hook and refuses renamed tables loudly, like DV'd ones. */
   def renameColumn(oldName: String, newName: String, maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       val sch = m.schema.getOrElse(throw new IllegalStateException(
         "no schema adopted yet — append once before evolving the schema"))
       require(sch.fieldNames.contains(oldName), s"no such column: '$oldName'")
@@ -1484,7 +1278,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * cluster columns) and for columns a CHECK constraint still
     * references (drop the check first). */
   def dropColumn(name: String, maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       val sch = m.schema.getOrElse(throw new IllegalStateException(
         "no schema adopted yet — append once before evolving the schema"))
       require(sch.fieldNames.contains(name), s"no such column: '$name'")
@@ -1532,7 +1326,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * space whatever the declared width. */
   def alterColumnType(name: String, newType: org.apache.spark.sql.types.DataType,
                       maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       import org.apache.spark.sql.types._
       val sch = m.schema.getOrElse(throw new IllegalStateException(
         "no schema adopted yet — append once before evolving the schema"))
@@ -1582,7 +1376,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * migrate hot slices first). Refused for time-series tables, whose
     * layout identity IS the time index. */
   def alterClusterBy(columns: Seq[String], curve: String, maxRetries: Int = 3): Long =
-    commitMetaUpdate(maxRetries) { (_, m) =>
+    alterMeta(maxRetries) { (_, m) =>
       m.kind match {
         case TableKind.TimeSeries(_) =>
           throw new IllegalStateException(
@@ -1603,130 +1397,29 @@ final class TsTable private (val root: String, val store: LogStore) {
       }
     }
 
-  /** Watermark-only commit for an empty streaming batch: the (app, batch)
-    * txn advances with no segments, so a replay of the empty batch is
-    * still recognized as already-applied. */
-  private[graft] def commitTxnOnly(app: String, batch: Long, maxRetries: Int = 3): Long =
-    occLoop(maxRetries) { st =>
-      if (st.txns.get(app).exists(_ >= batch)) st.version
-      else commitAndAdvance(st, Seq(LogAction.SetTxn(app, batch)))
-    }
-
-  /** Metadata-only removal commit (DELETE WHERE whose candidates all
-    * matched): RemoveSegment actions (plus an atomic coverage recommit for
-    * time-series tables), OCC with rebase-retry; aborts if a concurrent
-    * job already rewrote one of the segments. */
-  private[graft] def commitRemovals(removeIds: Seq[String], maxRetries: Int = 3,
-                                    recomputeCoverage: Boolean = false,
-                                    extraActions: Seq[LogAction] = Nil): Long =
-    occLoop(maxRetries) { st =>
-      val missing = removeIds.filterNot(st.segments.contains)
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"remove aborted: segments already rewritten by a concurrent job: $missing")
-      commitAndAdvance(st, removeIds.map(LogAction.RemoveSegment) ++
-        (if (recomputeCoverage) coverageActionFor(st, removeIds, Nil).toSeq else Nil) ++
-        extraActions)
-    }
-
-  /** Merge-on-read DELETE commit: upsert `upserts` (same segment ids, new
-    * dvPath/dvCardinality/coveragePath) and drop `removeIds` (files whose
-    * every live row matched), atomically. Each upsert is emitted as
-    * RemoveSegment + AddSegment — state-wise a plain upsert, but the
-    * Remove makes the commit a data-change commit, which the streaming
-    * source already skips (TableStreamSource skipChangeCommits): a DV
-    * attach must never re-emit rows a stream has delivered.
-    *
-    * OCC: rebase-retry on version conflicts, but ABORT if any affected
-    * segment was concurrently rewritten or re-DV'd — the caller's bitmaps
-    * were unioned against `expectedDv` and would silently drop that
-    * writer's deletes if applied over a different base. */
-  private[graft] def commitDvAttach(upserts: Seq[SegmentMeta], removeIds: Seq[String],
-                                    expectedDv: Map[String, Option[String]],
-                                    maxRetries: Int = 3,
-                                    recomputeCoverage: Boolean = false,
-                                    adds: Seq[SegmentMeta] = Nil,
-                                    sparkForChecks: Option[SparkSession] = None,
-                                    txn: Option[(String, Long)] = None,
-                                    extraActions: Seq[LogAction] = Nil): Long = {
-    val affected = upserts.map(_.segmentId) ++ removeIds
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-    occLoop(maxRetries) { st =>
-      // streaming-upsert idempotency (mirrors append): a replayed batch
-      // unwinds to the CALLER's cleanup catch, outside the commit lock
-      txn.foreach { case (app, batch) =>
-        if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-      }
-      // re-gate appended segments if a CHECK landed since they were staged
-      // (upserts/removes reference rows that were already committed-valid)
-      if (adds.nonEmpty && sparkForChecks.isDefined &&
-          st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-        enforceChecks(sparkForChecks.get,
-          adds.map(a => (s"$root/${a.path}", a.stats, a.rowCount)))
-      val missing = affected.filterNot(st.segments.contains)
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"DV attach aborted: segments already rewritten by a concurrent job: $missing")
-      val rebased = affected.filter(id => st.segments(id).dvPath != expectedDv(id))
-      if (rebased.nonEmpty)
-        throw new IllegalStateException(
-          s"DV attach aborted: segments re-DV'd by a concurrent DELETE: $rebased")
-      commitAndAdvance(st,
-        (removeIds ++ upserts.map(_.segmentId)).map(LogAction.RemoveSegment) ++
-          (upserts ++ adds).map(LogAction.AddSegment) ++
-          (if (recomputeCoverage)
-            coverageActionFor(st, affected, upserts ++ adds).toSeq else Nil) ++
-          txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq ++
-          extraActions)
-    }
-  }
-
-  /** RESTORE commit: make the live set equal `targetSegs` (an earlier
-    * version's snapshot) as a NEW data-change commit — history is never
-    * rewritten, so concurrent readers keep snapshot isolation and the
-    * restore itself is time-travelable / restorable-away. The diff against
-    * the current state is recomputed INSIDE the OCC loop, so a rebase
-    * retry reconciles against the state it actually commits over:
-    *  - live id absent from target (or present with different meta, e.g. a
-    *    deletion vector attached since) → RemoveSegment;
-    *  - target segment absent from live (or differing) → AddSegment
-    *    (re-add of the original SegmentMeta, sidecar pointers included);
-    *  - identical id+meta → untouched.
-    * Time-series tables get coverage recomputed in the same commit. */
-  private[graft] def commitRestore(targetSegs: Seq[SegmentMeta], maxRetries: Int = 3,
-                                   recomputeCoverage: Boolean = false): Long = {
-    val targetById = targetSegs.map(s => s.segmentId -> s).toMap
-    require(targetById.size == targetSegs.size,
-      "target snapshot has duplicate segment ids — corrupt manifest?")
-    occLoop(maxRetries) { st =>
-      val live = st.liveSegments
-      val liveById = live.map(s => s.segmentId -> s).toMap
-      val removes = live.filterNot(s => targetById.get(s.segmentId).contains(s))
-        .map(_.segmentId)
-      val adds = targetSegs.filterNot(s => liveById.get(s.segmentId).contains(s))
-      if (removes.isEmpty && adds.isEmpty) st.version // already there
-      else commitAndAdvance(st,
-        removes.map(LogAction.RemoveSegment) ++ adds.map(LogAction.AddSegment) ++
-          (if (recomputeCoverage) coverageActionFor(st, removes, adds).toSeq else Nil))
-    }
-  }
-
   /** Coverage snapshot for the state AFTER removing `removeIds` and adding
     * `added`: union of the surviving + new segments' sidecars, written as
     * a fresh sidecar whose pointer action commits WITH the swap. None for
     * non-time-series tables. */
-  private def coverageActionFor(st: TableState, removeIds: Seq[String],
-                                added: Seq[SegmentMeta]): Option[LogAction] = {
-    val spec = timeSpec.getOrElse(return None)
+  private[table] def coverageActionFor(st: TableState, removeIds: Seq[String],
+                                       added: Seq[SegmentMeta]): Option[LogAction] = {
+    if (timeSpec.isEmpty) return None
     val removed = removeIds.toSet
     val survivors = st.liveSegments.filterNot(s => removed(s.segmentId))
-    val cov = (survivors ++ added).flatMap(_.coveragePath).foldLeft(Bitmap.empty) { (acc, rel) =>
-      acc.union(Bitmap.deserialize(Files.readAllBytes(Paths.get(stripScheme(s"$root/$rel")))))
-    }
+    Some(writeTableCoverage(st, (survivors ++ added).flatMap(_.coveragePath)
+      .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel)))))
+  }
+
+  /** Write `cov` as the coverage snapshot of the commit after `st` and
+    * return its pointer action. Orphans from lost OCC races are benign. */
+  private def writeTableCoverage(st: TableState, cov: Bitmap): LogAction = {
     val covRel = s"_coverage/table/${st.version + 1}-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
     writeBytes(s"$root/$covRel", cov.serialize())
-    Some(LogAction.UpdateTableCoverage(spec.bucket.spec, covRel))
+    LogAction.UpdateTableCoverage(timeSpec.get.bucket.spec, covRel)
   }
+
+  private def readBitmap(rel: String): Bitmap =
+    Bitmap.deserialize(Files.readAllBytes(localPath(rel)))
 
   /** Per-file coverage bitmaps — ONE distributed job that never ships raw
     * (file, bucket) rows to the driver: each partition folds its rows into
@@ -1794,12 +1487,11 @@ final class TsTable private (val root: String, val store: LogStore) {
   /** Entity identity via footer-stats fast path (min==max per column ⇒
     * constant), falling back to a distinct().limit(2) scan — the same
     * two-tier scheme as the reference (formats/parquet/entity_identity.rs). */
-  private def extractEntityIdentity(
-      spark: SparkSession, stagingAbs: String, spec: TimeIndexSpec,
-      fileStats: Seq[(String, FooterStats.FileStats)]): Option[Map[String, String]] = {
+  private def extractEntityIdentity(spark: SparkSession, segs: Seq[SegmentMeta],
+                                    spec: TimeIndexSpec): Option[Map[String, String]] = {
     if (spec.entityColumns.isEmpty) return None
     val identity = spec.entityColumns.map { c =>
-      val perFile = fileStats.map(_._2.stats.get(c))
+      val perFile = segs.map(_.stats.get(c))
       val fast = perFile.forall {
         case Some(ColStats(Some(StatVal.S(mn)), Some(StatVal.S(mx)), nulls)) => mn == mx && nulls == 0
         case _ => false
@@ -1808,7 +1500,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (fast && perFile.flatMap(_.flatMap(_.min)).distinct.size == 1) {
         c -> headVal.get.asInstanceOf[StatVal.S].v
       } else {
-        val d = spark.read.parquet(stagingAbs).select(col(c)).distinct().limit(2).collect()
+        val d = spark.read.parquet(segs.map(abs): _*).select(col(c)).distinct().limit(2).collect()
         if (d.length != 1) throw EntityIdentityException(
           s"entity column '$c' must have exactly one value across the appended segment, found ${d.length}")
         if (d(0).isNullAt(0)) throw EntityIdentityException(s"entity column '$c' is null")
@@ -1839,9 +1531,8 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   private def recoverCoverage(st: TableState, heal: Boolean): Bitmap = {
-    val cov = st.liveSegments.flatMap(_.coveragePath).foldLeft(Bitmap.empty) { (acc, rel) =>
-      acc.union(Bitmap.deserialize(Files.readAllBytes(Paths.get(stripScheme(s"$root/$rel")))))
-    }
+    val cov = st.liveSegments.flatMap(_.coveragePath)
+      .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel)))
     if (heal) {
       val covRel = s"_coverage/table/${st.version}-tblcov-healed.cov"
       writeBytes(s"$root/$covRel", cov.serialize()) // best-effort, no commit
@@ -1890,6 +1581,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     Files.write(p, bytes)
   }
 
+  /** A root-relative table file as a local path. */
+  private[table] def localPath(rel: String): java.nio.file.Path =
+    Paths.get(stripScheme(s"$root/$rel"))
+
   private def stripScheme(p: String): String =
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
 
@@ -1912,12 +1607,27 @@ final class TsTable private (val root: String, val store: LogStore) {
 }
 
 object TsTable {
-  /** Unwinds a writer verb's txn-idempotency early exit out of
-    * [[TsTable.occLoop]] so staged-file cleanup runs outside the commit
-    * lock. Carries the version the watermark was already at — the verb
-    * (append, MERGE) catches this, deletes its unreferenced files, and
-    * reports the batch as already-applied. */
-  private[graft] final case class TxnReplayed(version: Long) extends RuntimeException
+  /** Parquet row-group size for data segments: SPARK_GRAFT_ROWGROUP_BYTES
+    * (a positive byte count), 8 MiB when unset. Parsed once; a bad value
+    * fails the first segment write and names the knob. */
+  private[graft] lazy val rowGroupBytes: Long =
+    parseRowGroupBytes(sys.env.get("SPARK_GRAFT_ROWGROUP_BYTES"))
+
+  private[graft] def parseRowGroupBytes(v: Option[String]): Long = v match {
+    case None => 8L * 1024 * 1024
+    case Some(s) => s.trim.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_ROWGROUP_BYTES must be a positive byte count, got '$s'"))
+  }
+
+  /** The schema an append adopts from its staged files' footers: the
+    * embedded Spark schema when every file carries the same one, else None
+    * (the caller infers it from the files). */
+  private[graft] def footerSchema(perFile: Seq[Option[StructType]]): Option[StructType] =
+    perFile.distinct match {
+      case Seq(one) => one
+      case _ => None
+    }
 
   /** Bootstrap: verify version==0, commit v1 = UpdateTableMeta
     * (reference table.rs:156-202). */

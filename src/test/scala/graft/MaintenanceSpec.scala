@@ -461,6 +461,28 @@ class MaintenanceSpec extends SparkFunSuite {
     assert(t.scan(spark).count() == 120)
   }
 
+  test("merge on a time-series table repairs coverage in both modes: merged range not re-appendable") {
+    import spark.implicits._
+    import graft.table.CoverageOverlapException
+    def hourDf(h: Int) =
+      (0 until 60).map(m => (s"2024-03-01 %02d:%02d:00".format(h, m), h * 100.0 + m))
+        .toDF("tss", "price")
+        .select(to_timestamp(col("tss")).as("ts"), col("price"))
+    for (mor <- Seq(false, true)) {
+      val root = tmpDir(s"merge-ts-$mor")
+      val t = TsTable.create(root, TableMeta("prices",
+        TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1m"), None)), None, None))
+      t.append(hourDf(10).coalesce(1))
+      if (mor) MergeInto.mergeMor(spark, t, hourDf(12), key = "price")
+      else MergeInto.merge(spark, t, hourDf(12), key = "price")
+      assert(t.scan(spark).count() == 120, s"mor=$mor")
+      // the merged hour is covered now: re-appending it must be rejected
+      // exactly like re-appending an appended hour, in either mode
+      intercept[CoverageOverlapException](t.append(hourDf(12).coalesce(1)))
+      assert(t.scan(spark).count() == 120, s"mor=$mor: overlapping re-append landed")
+    }
+  }
+
   test("bloom candidate filter keeps files whose footer read fails (conservative)") {
     import graft.table.KeyBloom
     val conf = spark.sparkContext.hadoopConfiguration

@@ -53,9 +53,10 @@ class RobustnessSpec extends SparkFunSuite {
     val bins = Compaction.plan(t.state.liveSegments, targetFileSize = 4L * 1024 * 1024, groupFactor = 1)
     assert(bins.size >= 2, s"fixture needs >=2 bins, got ${bins.size}")
     val b0 = bins.head
-    t.swapSegments(
-      spark.read.parquet(b0.segments.map(s => s"$root/${s.path}"): _*),
-      b0.segments)
+    t.transact() { tx =>
+      tx.remove(b0.segments)
+      tx.stage(spark.read.parquet(b0.segments.map(s => s"$root/${s.path}"): _*))
+    }
     val journal = new LineageJournal(root, "job-crash2")
     journal.record(BinRecord(b0.id, b0.segments.map(_.segmentId), Some(t.version), None))
     val rep = Compaction.run(spark, t, targetFileSize = 4L * 1024 * 1024,

@@ -6,7 +6,7 @@ import graft.data.TokenGen
 import graft.meta._
 import graft.maintain.MergeInto
 import graft.streaming.{StreamingIngest, StreamingUpsert}
-import graft.table.TsTable
+import graft.table.{ConcurrentSegmentChangeException, TsTable}
 
 /** Streaming CDC upsert: micro-batches land as transactional merges,
   * exactly-once under batch replay (same watermark discipline as
@@ -111,14 +111,14 @@ class StreamingUpsertSpec extends SparkFunSuite {
     var calls = 0
     val got = StreamingUpsert.retryingAborts(5) {
       calls += 1
-      if (calls < 3) throw new IllegalStateException(
+      if (calls < 3) throw new ConcurrentSegmentChangeException(
         "swap aborted: segments already rewritten by a concurrent job: seg-x")
       42
     }
     assert(got == 42 && calls == 3)
     // exhaustion rethrows the LAST abort
     val e = intercept[IllegalStateException](StreamingUpsert.retryingAborts(2) {
-      throw new IllegalStateException("DV attach aborted: segments re-DV'd by a concurrent DELETE: s")
+      throw new ConcurrentSegmentChangeException("swap aborted: segments re-DV'd by a concurrent DELETE/MERGE: s")
     })
     assert(e.getMessage.contains("aborted"))
     // non-abort failures are never swallowed or retried
@@ -134,26 +134,24 @@ class StreamingUpsertSpec extends SparkFunSuite {
     val root = tmpDir("upsert-replay")
     val t = TsTable.create(root, tokenMeta)
     t.append(TokenGen.generate(spark, 100, numFiles = 2))
-    t.commitTxnOnly("stream:x", 5L)
+    t.transact()(_.watermark(("stream:x", 5L)))
     val v = t.version
     val before = dataFiles(root)
 
-    // copy-on-write swap: staged files must be GONE after the unwind
+    // copy-on-write swap: staged files must be GONE after the replay
     val seg = t.state.liveSegments.head
-    val e1 = intercept[TsTable.TxnReplayed] {
-      t.swapSegments(t.scan(spark).where(col("doc_id") < id(50)), Seq(seg),
-        txn = Some(("stream:x", 5L)))
+    val r1 = t.transact() { tx =>
+      tx.watermark(("stream:x", 5L))
+      tx.remove(Seq(seg))
+      tx.stage(t.scan(spark).where(col("doc_id") < id(50)))
     }
-    assert(e1.version == v)
+    assert(r1.replayed && r1.version == v)
     assert(dataFiles(root) == before, "aborted swap leaked staged segments")
 
-    // DV attach: the sentinel reaches the caller (mergeMor's catch owns
-    // the sidecar + staged-adds cleanup)
-    val e2 = intercept[TsTable.TxnReplayed] {
-      t.commitDvAttach(Nil, Nil, Map.empty,
-        adds = Nil, sparkForChecks = Some(spark), txn = Some(("stream:x", 3L)))
-    }
-    assert(e2.version == v)
+    // watermark-only (the shape of a DV attach with nothing staged): the
+    // replay reports the watermark's version and commits nothing
+    val r2 = t.transact()(_.watermark(("stream:x", 3L)))
+    assert(r2.replayed && r2.version == v)
     assert(t.version == v, "replayed commits must not advance the log")
   }
 }

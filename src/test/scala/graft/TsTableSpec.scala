@@ -227,16 +227,37 @@ class TsTableSpec extends SparkFunSuite {
     val seg = t1.state.liveSegments.head
     val t2 = TsTable.open(root) // second writer, same snapshot
     // writer 1 rewrites the segment first
-    t1.swapSegments(t1.scan(spark), Seq(seg))
+    t1.transact() { tx => tx.remove(Seq(seg)); tx.stage(t1.scan(spark)) }
     val filesAfterT1 = count(s"$root/data")
     // writer 2 still believes seg is live; its swap must abort AND clean up
-    val e = intercept[IllegalStateException](
-      t2.swapSegments(spark.read.parquet(s"$root/${seg.path}"), Seq(seg)))
+    val e = intercept[IllegalStateException](t2.transact() { tx =>
+      tx.remove(Seq(seg)); tx.stage(spark.read.parquet(s"$root/${seg.path}"))
+    })
     assert(e.getMessage.contains("swap aborted"), e.getMessage)
     assert(count(s"$root/data") == filesAfterT1,
       "aborted swap leaked its rewritten files into data/")
     // table unharmed
     assert(TsTable.open(root).scan(spark).count() == 100)
+  }
+
+  test("append adopts the footer schema only when every staged file agrees") {
+    import org.apache.spark.sql.types._
+    val a = StructType(Seq(StructField("x", LongType)))
+    val b = StructType(Seq(StructField("y", StringType)))
+    assert(TsTable.footerSchema(Seq(Some(a), Some(a))) == Some(a))
+    // disagreeing or missing footer schemas fall back to inference
+    assert(TsTable.footerSchema(Seq(Some(a), Some(b))).isEmpty)
+    assert(TsTable.footerSchema(Seq(Some(a), None)).isEmpty)
+    assert(TsTable.footerSchema(Seq(None, None)).isEmpty)
+  }
+
+  test("SPARK_GRAFT_ROWGROUP_BYTES: a positive byte count; bad values fail naming the knob") {
+    assert(TsTable.parseRowGroupBytes(None) == 8L * 1024 * 1024)
+    assert(TsTable.parseRowGroupBytes(Some("1048576")) == 1048576L)
+    for (bad <- Seq("", "8MB", "0", "-1")) {
+      val e = intercept[IllegalArgumentException](TsTable.parseRowGroupBytes(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_ROWGROUP_BYTES"), e.getMessage)
+    }
   }
 
   test("foreign parquet with INT96 timestamps is rejected by name, file never copied") {

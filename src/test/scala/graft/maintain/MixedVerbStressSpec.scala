@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
 import graft.data.TokenGen
 import graft.meta._
-import graft.table.TsTable
+import graft.table.{ConcurrentSegmentChangeException, TsTable}
 
 /** Whole-engine concurrency stress: five writers run the full verb family
   * (append, copy-on-write DELETE/UPDATE, merge-on-read DELETE/UPDATE via
   * mergeMor/updateMor, compaction) against ONE table from real threads,
   * with no injected sequencing. Each mutator owns a disjoint doc_id class,
   * so the verbs are LOGICALLY independent — but the classes share physical
-  * files, so every OCC guard (swap abort on rewritten/re-DV'd inputs,
-  * expectedDv on attach) fires under genuine interleavings and the verb
+  * files, so every OCC guard (the Txn conflict set: rewritten or re-DV'd
+  * inputs abort the commit) fires under genuine interleavings and the verb
   * retries from a fresh snapshot. Because an abort is a clean no-commit,
   * bounded retry keeps every intended op exactly-once, and the final table
   * must equal an independently computed model — any lost update, resurrected
@@ -40,8 +40,7 @@ class MixedVerbStressSpec extends SparkFunSuite {
     for (_ <- 1 to attempts) {
       try return op
       catch {
-        case e: IllegalStateException if Option(e.getMessage).exists(_.contains("aborted")) =>
-          last = e; Thread.sleep(50)
+        case e: ConcurrentSegmentChangeException => last = e; Thread.sleep(50)
       }
     }
     throw new IllegalStateException(s"$label: still aborting after $attempts attempts", last)
@@ -103,8 +102,7 @@ class MixedVerbStressSpec extends SparkFunSuite {
       submit("compactor") { t =>
         for (_ <- 1 to 2) {
           try Compaction.run(sparkRef, t, targetFileSize = 4L * 1024 * 1024)
-          catch { case e: IllegalStateException
-            if Option(e.getMessage).exists(_.contains("aborted")) => () }
+          catch { case _: ConcurrentSegmentChangeException => () }
           Thread.sleep(100)
         }
       })

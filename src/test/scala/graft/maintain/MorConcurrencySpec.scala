@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
 import graft.data.TokenGen
 import graft.meta._
-import graft.table.TsTable
+import graft.table.{ConcurrentSegmentChangeException, TsTable}
 
 /** OCC abort paths of the merge-on-read commit: a DV attach prepared
   * against one snapshot must REFUSE to land over a concurrently rewritten
@@ -31,25 +31,19 @@ class MorConcurrencySpec extends SparkFunSuite {
     t.append(TokenGen.generate(spark, 400, numFiles = 4))
     val candidates = t.state.liveSegments
 
-    // prepare the MOR plan against the current snapshot (sidecars written)
     val base = DeleteWhere.morBase(spark, t, candidates)(raw =>
       raw.select(
         col("_metadata.file_path").as("__f"),
         col("_metadata.row_index").as("__i"),
         (col("n_tok") < 900).as("__m"),
         DeleteWhere.bucketExpr(t).as("__b")))
-    val plan = DeleteWhere.morCompute(spark, t, candidates, base).get
-    assert(dvFiles(root).nonEmpty, "plan sidecars staged")
-
-    // concurrent writer swaps the candidate files away
-    Compaction.run(spark, t, targetFileSize = 8L * 1024 * 1024)
-
-    val e = intercept[IllegalStateException] {
-      try t.commitDvAttach(plan.upserts, plan.removeIds, plan.expectedDv)
-      catch { case ex: Throwable => // caller-owned cleanup, as morAttach does
-        plan.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"$root/$rel"))))
-        throw ex
+    val e = intercept[ConcurrentSegmentChangeException] {
+      t.transact() { tx =>
+        // prepare the MOR plan against the current snapshot (sidecars written)
+        DeleteWhere.morCompute(spark, t, tx, candidates, base).get
+        assert(dvFiles(root).nonEmpty, "plan sidecars staged")
+        // concurrent writer swaps the candidate files away
+        Compaction.run(spark, t, targetFileSize = 8L * 1024 * 1024)
       }
     }
     assert(e.getMessage.contains("already rewritten"))
@@ -75,8 +69,8 @@ class MorConcurrencySpec extends SparkFunSuite {
     assert(del.rowsDeleted > 0)
     val liveAfterDelete = t.scan(spark).count()
 
-    val e = intercept[IllegalStateException] {
-      t.swapSegments(rewriteDf, inputs)
+    val e = intercept[ConcurrentSegmentChangeException] {
+      t.transact() { tx => tx.remove(inputs); tx.stage(rewriteDf) }
     }
     assert(e.getMessage.contains("re-DV'd"))
     // nothing resurrected, no orphan output committed
@@ -133,25 +127,18 @@ class MorConcurrencySpec extends SparkFunSuite {
     t.append(TokenGen.generate(spark, 400, numFiles = 2))
     val candidates = t.state.liveSegments
 
-    val mk = () => DeleteWhere.morCompute(spark, t, candidates,
-      DeleteWhere.morBase(spark, t, candidates)(raw =>
-        raw.select(
-          col("_metadata.file_path").as("__f"),
-          col("_metadata.row_index").as("__i"),
-          (col("source") === "src00").as("__m"),
-          DeleteWhere.bucketExpr(t).as("__b")))).get
-    val plan = mk()
-
-    // concurrent MOR delete re-DVs the same files (same ids survive)
-    DeleteWhere.deleteMor(spark, t, col("source") === "src01")
-    assert(t.state.liveSegments.exists(_.dvPath.isDefined))
-
-    val e = intercept[IllegalStateException] {
-      try t.commitDvAttach(plan.upserts, plan.removeIds, plan.expectedDv)
-      catch { case ex: Throwable =>
-        plan.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"$root/$rel"))))
-        throw ex
+    val e = intercept[ConcurrentSegmentChangeException] {
+      t.transact() { tx =>
+        DeleteWhere.morCompute(spark, t, tx, candidates,
+          DeleteWhere.morBase(spark, t, candidates)(raw =>
+            raw.select(
+              col("_metadata.file_path").as("__f"),
+              col("_metadata.row_index").as("__i"),
+              (col("source") === "src00").as("__m"),
+              DeleteWhere.bucketExpr(t).as("__b")))).get
+        // concurrent MOR delete re-DVs the same files (same ids survive)
+        DeleteWhere.deleteMor(spark, t, col("source") === "src01")
+        assert(t.state.liveSegments.exists(_.dvPath.isDefined))
       }
     }
     assert(e.getMessage.contains("re-DV'd"))
