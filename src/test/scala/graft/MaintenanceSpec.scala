@@ -577,6 +577,36 @@ class MaintenanceSpec extends SparkFunSuite {
     assert(t.scan(spark).count() == 102)
   }
 
+  test("copy-on-write merge pins the update set to the table schema") {
+    val root = tmpDir("merge-pin")
+    val t = TsTable.create(root, tokenMeta("zorder"))
+    t.append(TokenGen.generate(spark, 200, idStart = 0, numFiles = 2))
+    val tableSchema = t.meta.physicalSchema.get.fields.map(f => f.name -> f.dataType).toSeq
+    def footersMatch(): Unit = t.state.liveSegments.foreach { s =>
+      val footer = spark.read.parquet(s"$root/${s.path}").schema.fields.map(f => f.name -> f.dataType)
+      assert(footer.toSeq == tableSchema, s"${s.path}: footer schema ${footer.toSeq}")
+    }
+    // bigint n_tok into an int table, once insert-only, once overlapping
+    def revised(ids: Seq[String]) =
+      TokenGen.generateForIds(spark, ids, salt = "v2").withColumn("n_tok", col("n_tok").cast("long"))
+    val ins = MergeInto.merge(spark, t, revised(Seq("zzz-new-doc-1", "zzz-new-doc-2")))
+    assert(ins.candidates == 0 && ins.inserted == 2)
+    footersMatch()
+    val upd = MergeInto.merge(spark, t, revised((0 until 20).map(i => f"doc-${i * 7}%012d")))
+    assert(upd.updated == 20 && t.scan(spark).count() == 202)
+    footersMatch()
+
+    val extra = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, t, revised(Seq("zzz-new-doc-3")).withColumn("junk", lit(1)))
+    }
+    assert(extra.getMessage.contains("MERGE update set has unknown columns: junk"))
+    val missing = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, t, revised(Seq("doc-000000000001")).drop("source"))
+    }
+    assert(missing.getMessage.contains("MERGE update set lacks table columns: source"))
+    assert(t.scan(spark).count() == 202)
+  }
+
   test("bounds-based range routing: labels invert hash partitioning; search is exact") {
     import spark.implicits._
     // every label must land in exactly the shuffle partition whose range

@@ -31,16 +31,16 @@ class MorConcurrencySpec extends SparkFunSuite {
     t.append(TokenGen.generate(spark, 400, numFiles = 4))
     val candidates = t.state.liveSegments
 
-    val base = DeleteWhere.morBase(spark, t, candidates)(raw =>
+    val base = RowLevel.morBase(spark, t, candidates)(raw =>
       raw.select(
         col("_metadata.file_path").as("__f"),
         col("_metadata.row_index").as("__i"),
         (col("n_tok") < 900).as("__m"),
-        DeleteWhere.bucketExpr(t).as("__b")))
+        RowLevel.bucketExpr(t).as("__b")))
     val e = intercept[ConcurrentSegmentChangeException] {
       t.transact() { tx =>
         // prepare the MOR plan against the current snapshot (sidecars written)
-        DeleteWhere.morCompute(spark, t, tx, candidates, base).get
+        RowLevel.morCompute(spark, t, tx, candidates, base).get
         assert(dvFiles(root).nonEmpty, "plan sidecars staged")
         // concurrent writer swaps the candidate files away
         Compaction.run(spark, t, targetFileSize = 8L * 1024 * 1024)
@@ -129,13 +129,13 @@ class MorConcurrencySpec extends SparkFunSuite {
 
     val e = intercept[ConcurrentSegmentChangeException] {
       t.transact() { tx =>
-        DeleteWhere.morCompute(spark, t, tx, candidates,
-          DeleteWhere.morBase(spark, t, candidates)(raw =>
+        RowLevel.morCompute(spark, t, tx, candidates,
+          RowLevel.morBase(spark, t, candidates)(raw =>
             raw.select(
               col("_metadata.file_path").as("__f"),
               col("_metadata.row_index").as("__i"),
               (col("source") === "src00").as("__m"),
-              DeleteWhere.bucketExpr(t).as("__b")))).get
+              RowLevel.bucketExpr(t).as("__b")))).get
         // concurrent MOR delete re-DVs the same files (same ids survive)
         DeleteWhere.deleteMor(spark, t, col("source") === "src01")
         assert(t.state.liveSegments.exists(_.dvPath.isDefined))

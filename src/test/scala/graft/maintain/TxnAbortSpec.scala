@@ -57,13 +57,13 @@ class TxnAbortSpec extends SparkFunSuite {
     t.transact() { tx =>
       tx.stage(hourDf(12).coalesce(1))
       tx.stageCdc(hourDf(12).withColumn("_change_type", lit("insert")))
-      val base = DeleteWhere.morBase(spark, t, Seq(seg))(raw =>
+      val base = RowLevel.morBase(spark, t, Seq(seg))(raw =>
         raw.select(
           col("_metadata.file_path").as("__f"),
           col("_metadata.row_index").as("__i"),
           before(10, 30).as("__m"),
-          DeleteWhere.bucketExpr(t).as("__b")))
-      assert(DeleteWhere.morCompute(spark, t, tx, Seq(seg), base).isDefined)
+          RowLevel.bucketExpr(t).as("__b")))
+      assert(RowLevel.morCompute(spark, t, tx, Seq(seg), base).isDefined)
       assert(unreferenced(t.root).exists(_.startsWith("_dv/")), "DV sidecar staged")
       concurrent
     }
