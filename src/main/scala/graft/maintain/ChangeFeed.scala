@@ -2,9 +2,12 @@ package graft.maintain
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.log.LogAction
+import graft.meta.{SegmentMeta, TableMeta}
+import graft.streaming.TableStreamSource
 import graft.table.TsTable
+import graft.table.RowTracking.{RowCommitCol, RowIdCol}
 
 /** Change data feed — the WRITER-RECORDED row-level change stream (Delta
   * CDF / `table_changes` analog; the reference's log is append-only and has
@@ -67,51 +70,55 @@ object ChangeFeed {
     val meta = table.meta
     val logical = meta.schema.getOrElse(throw new IllegalStateException(
       "table has no adopted schema yet — nothing can have changed"))
-    val phys = meta.physicalize(logical)
-
-    val tracked = meta.rowTracking
     val perCommit: Seq[DataFrame] =
       (sinceVersion + 1 to toVersion).flatMap { v =>
         val c = table.store.readCommit(v)
-        commitChanges(spark, table, phys, logical, c.actions, v, tracked).map(
+        commitChanges(spark, table, meta, c.actions, v).map(
           _.withColumn(VersionCol, lit(v))
            .withColumn(TimestampCol,
              lit(new java.sql.Timestamp(c.timestampMillis))))
       }
-    if (perCommit.isEmpty) {
-      val outSchema = StructType(logical.fields ++
-        (if (tracked) Seq(StructField(graft.table.RowTracking.RowIdCol, LongType)) else Nil) ++
-        Seq(
-          StructField(ChangeTypeCol, StringType),
-          StructField(VersionCol, LongType, nullable = false),
-          StructField(TimestampCol, TimestampType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    } else perCommit.reduce(_.unionByName(_))
+    if (perCommit.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        TableStreamSource.cdfSchema(logical, meta.rowTracking))
+    else perCommit.reduce(_.unionByName(_))
+  }
+
+  /** The inserts of `segs` read under `meta` (logical names +
+    * `_change_type`): a pure append's change set, the initial snapshot of a
+    * change-feed stream and [[SnapshotDiff]]'s append-only range. When
+    * `tracked`, `_row_id` follows the logical columns: the standard
+    * coalesce(materialized, base + position) binding over the segments
+    * themselves — zero extra bytes, like the synthesis itself (the
+    * materialized arm matters for re-added rewritten files, e.g. a
+    * published branch compaction) — or NULL when a segment predates
+    * enablement. */
+  private[graft] def inserts(spark: SparkSession, table: TsTable, segs: Seq[SegmentMeta],
+                             meta: TableMeta, tracked: Boolean): DataFrame = {
+    val ids = tracked && segs.forall(_.baseRowId.isDefined)
+    val rows = table.read(spark, segs, Some(meta), ids)
+    (if (ids) rows.drop(RowCommitCol)
+     else if (tracked) rows.withColumn(RowIdCol, lit(null).cast(LongType))
+     else rows).withColumn(ChangeTypeCol, lit("insert"))
   }
 
   /** One commit's change rows (logical names + `_change_type`), or None
     * when the commit changed no rows (meta-only, coverage, txn,
     * DataNeutral rewrite, or an all-empty change set). */
-  private def commitChanges(spark: SparkSession, table: TsTable,
-                            phys: StructType, logical: StructType,
-                            actions: Seq[LogAction], v: Long,
-                            tracked: Boolean): Option[DataFrame] = {
-    val RowId = graft.table.RowTracking.RowIdCol
+  private def commitChanges(spark: SparkSession, table: TsTable, meta: TableMeta,
+                            actions: Seq[LogAction], v: Long): Option[DataFrame] = {
     val cdcPaths = actions.collect { case LogAction.AddCdcFile(p, _) =>
       graft.meta.PathNorm.resolve(table.root, p) }
-    def aliased(df: DataFrame, extra: Seq[org.apache.spark.sql.Column]): DataFrame =
-      df.select(logical.fieldNames.zip(phys.fieldNames)
-        .map { case (log, ph) => col(ph).as(log) } ++ extra: _*)
     if (cdcPaths.nonEmpty) {
       // writer-recorded record = the COMPLETE change set for the commit
-      // (MERGE's inserts ride the same sidecar as its update images).
-      // Tracked reads declare `_row_id` in the record schema: records from
-      // tracked writers carry it, pre-enablement records null-fill.
-      val cdcSchema = StructType(phys.fields ++
-        (if (tracked) Seq(StructField(RowId, LongType)) else Nil) :+
+      // (MERGE's inserts ride the same sidecar as its update images), under
+      // physical names like the data files. Tracked reads declare `_row_id`
+      // in the record schema: records from tracked writers carry it,
+      // pre-enablement records null-fill.
+      val cdcSchema = StructType(meta.physicalSchema.get.fields ++
+        (if (meta.rowTracking) Seq(StructField(RowIdCol, LongType)) else Nil) :+
         StructField(ChangeTypeCol, StringType))
-      return Some(aliased(spark.read.schema(cdcSchema).parquet(cdcPaths: _*),
-        (if (tracked) Seq(col(RowId)) else Nil) :+ col(ChangeTypeCol)))
+      return Some(table.toLogical(spark.read.schema(cdcSchema).parquet(cdcPaths: _*)))
     }
     if (actions.contains(LogAction.DataNeutral)) return None // row-preserving rewrite
     val adds = actions.collect { case LogAction.AddSegment(s) => s }
@@ -125,28 +132,6 @@ object ChangeFeed {
           "(a mutation from before enableCdf, or a RESTORE). The feed cannot " +
           "replay it; start the read after it, or reconstruct the net change " +
           "with SnapshotDiff.diff")
-    if (adds.isEmpty) None // metadata-only commit
-    else {
-      val paths = adds.map(s => graft.meta.PathNorm.resolve(table.root, s.path))
-      // synthesized-insert ids: the standard coalesce(materialized,
-      // base + position) binding over the commit's own AddSegments — zero
-      // extra bytes, like the synthesis itself (the materialized arm
-      // matters for re-added rewritten files, e.g. a published branch
-      // compaction). A pre-enablement append (no bases in ITS commit)
-      // emits NULL.
-      if (!tracked)
-        Some(aliased(spark.read.schema(phys).parquet(paths: _*),
-          Seq(lit("insert").as(ChangeTypeCol))))
-      else if (adds.forall(_.baseRowId.isDefined)) {
-        val readSchema = StructType(phys.fields ++ Seq(
-          StructField(RowId, LongType),
-          StructField(graft.table.RowTracking.RowCommitCol, LongType)))
-        val withIds = graft.table.RowTracking.attach(
-          spark.read.schema(readSchema).parquet(paths: _*), table.root, adds)
-        Some(aliased(withIds, Seq(col(RowId), lit("insert").as(ChangeTypeCol))))
-      } else
-        Some(aliased(spark.read.schema(phys).parquet(paths: _*),
-          Seq(lit(null).cast(LongType).as(RowId), lit("insert").as(ChangeTypeCol))))
-    }
+    Option.when(adds.nonEmpty)(inserts(spark, table, adds, meta, meta.rowTracking))
   }
 }

@@ -221,20 +221,17 @@ object Compaction {
     val totalBytes = math.max(inputs.flatMap(_.fileSize).sum, 1L)
     withSizedReadSplits(spark, totalBytes, inputs.size) { scoped =>
       // merge-on-read deletes materialize here: inputs are read
-      // live-rows-only, outputs are fresh segments with no DV. (The
-      // boundary SAMPLE below stays physical — deleted rows skew the
-      // approximate range bounds marginally, never correctness.)
-      val raw = table.segmentScan(scoped, inputs)
-      // row tracking: a compaction is row-preserving, so the rewrite reads
-      // ids attached (coalesce of materialized column / base+position) and
+      // live-rows-only, outputs are fresh segments with no DV. Row
+      // tracking: a compaction is row-preserving, so the rewrite reads ids
+      // attached (coalesce of materialized column / base+position) and
       // MATERIALIZES them into the output files — the sort below reorders
       // rows, so position-based defaults could not survive it. The
-      // boundary sample keeps the plain (untracked) relation: it prunes to
-      // the cluster-key columns only.
-      val rawIds =
-        if (table.rowTrackingEnabled) table.segmentScanWithRowIds(scoped, inputs) else raw
-      val df = graft.table.DeletionVectors.liveRowFilter(table.root, inputs)
-        .map(rawIds.where).getOrElse(rawIds)
+      // boundary SAMPLE reads all rows without ids: deleted rows skew the
+      // approximate range bounds marginally, never correctness, and it
+      // prunes to the cluster-key columns only.
+      val meta = table.state.tableMeta
+      val raw = table.read(scoped, inputs, meta, live = false)
+      val df = table.read(scoped, inputs, meta, ids = meta.exists(_.rowTracking))
       val sorted = curve match {
         case ("zorder" | "hilbert") if outFiles > 1 =>
           // range boundaries from an EXPLICIT sample over the cluster-key
@@ -246,10 +243,9 @@ object Compaction {
           // deserialized token rows are ~3× the parquet bytes. MERGE
           // differs: its child embeds an anti join, so it caches and
           // keeps the stock range exchange).
-          // sample from the SAME manifest-backed relation as the rewrite:
-          // a second read.parquet here re-listed the whole bin (a second
-          // listing job per rewrite); column pruning still keeps the
-          // sample scan narrow
+          // the sample is a manifest-backed read too: a read.parquet here
+          // re-listed the whole bin (a second listing job per rewrite);
+          // column pruning keeps the sample scan narrow
           sampledBoundsFor(raw, curve, fit,
             math.max(inputs.map(_.rowCount).sum, 1L), outFiles) match {
             case None =>

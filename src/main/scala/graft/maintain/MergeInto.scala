@@ -2,6 +2,7 @@ package graft.maintain
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.meta.{PathNorm, SegmentMeta}
 import graft.table.TsTable
 
 /** MERGE INTO (upsert) for revised sequences, and delete-by-key — new vs
@@ -37,23 +38,23 @@ object MergeInto {
   val BloomKeyCap: Long = 256L
 
   /** Exact distributed candidate refinement for update sets too large for
-    * footer blooms: semi-join the candidates' key column (single-column
-    * projected scan, input_file_name-tagged) against the update keys and
-    * return the segment ids of files that actually contain ≥ 1 key.
-    * Update keys never collect to the driver; the only collect is the
-    * distinct hit FILE list, bounded by the candidate count. Sound by
+    * footer blooms: semi-join the live rows of `segs`' key column
+    * (single-column projected scan, input_file_name-tagged) against the
+    * update keys and return the segment ids of files that actually contain
+    * ≥ 1 key. Update keys never collect to the driver; the only collect is
+    * the distinct hit FILE list, bounded by the candidate count. Sound by
     * construction (zero false negatives — a file omitted here provably
     * holds no update key) and, unlike blooms, zero false positives at any
     * key-set size. */
-  private[graft] def refineCandidatesExact(spark: SparkSession, updKeys: DataFrame,
-      key: String, files: Seq[(String, String)],
-      physKey: Option[String] = None): Set[String] = {
-    val byPath = files.map { case (p, id) => graft.meta.PathNorm.canonical(p) -> id }.toMap
-    spark.read.parquet(files.map(_._1): _*)
-      .select(col(physKey.getOrElse(key)).as(key), input_file_name().as("__file"))
+  private[graft] def refineCandidatesExact(spark: SparkSession, table: TsTable,
+      updKeys: DataFrame, key: String, segs: Seq[SegmentMeta]): Set[String] = {
+    val byPath = segs.map(s =>
+      PathNorm.canonical(PathNorm.resolve(table.root, s.path)) -> s.segmentId).toMap
+    table.read(spark, segs, table.state.tableMeta)
+      .select(col(key), input_file_name().as("__file"))
       .join(updKeys, Seq(key), "left_semi")
       .select("__file").distinct().collect()
-      .iterator.flatMap(r => byPath.get(graft.meta.PathNorm.canonical(r.getString(0))))
+      .iterator.flatMap(r => byPath.get(PathNorm.canonical(r.getString(0))))
       .toSet
   }
 

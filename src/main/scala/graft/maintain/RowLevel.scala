@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.coverage.Bitmap
 import graft.meta.{ColStats, PathNorm, SegmentMeta, StatVal}
 import graft.scan.StatsPruning
-import graft.table.{BucketDomainOverflowException, DeletionVectors, KeyBloom, TsTable, Txn}
+import graft.table.{BucketDomainOverflowException, DeletionVectors, KeyBloom, RowTracking, TsTable, Txn}
 import graft.table.RowTracking.{RowCommitCol, RowIdCol, commitOfThisWrite}
 
 /** The row-level rewrite core behind DELETE, UPDATE, MERGE and the row-id
@@ -65,7 +65,8 @@ private[maintain] object RowLevel {
 
   private final class Run(spark: SparkSession, table: TsTable, outcome: Outcome, mor: Boolean,
                           txn: Option[(String, Long)], targetFileSize: Long) {
-    private val live = { table.refresh(); table.state.liveSegments }
+    private val snapshot = { table.refresh(); table.state }
+    private val live = snapshot.liveSegments
     private val totalLive = live.map(_.liveRowCount).sum
     private val tracking = table.rowTrackingEnabled
     private var m: Match = _      // the match, its input set prepared by [[prepare]]
@@ -154,13 +155,11 @@ private[maintain] object RowLevel {
       case RowIds(in) => df.join(in.select(RowIdCol), Seq(RowIdCol), "left_semi")
     }
 
-    /** THE live-row read of `segs`: logical names, DV-masked rows dropped,
-      * and the row-tracking columns attached when the table tracks rows. */
-    private def read(session: SparkSession, segs: Seq[SegmentMeta], ids: Boolean = tracking) = {
-      val raw = table.toLogical(
-        if (ids) table.segmentScanWithRowIds(session, segs) else table.segmentScan(session, segs))
-      DeletionVectors.liveRowFilter(table.root, segs).map(raw.where).getOrElse(raw)
-    }
+    /** The live rows of `segs` under this run's snapshot, with the
+      * row-tracking columns when the table tracks rows. */
+    private def read(session: SparkSession, segs: Seq[SegmentMeta], ids: Boolean = tracking,
+                     live: Boolean = true) =
+      table.read(session, segs, snapshot.tableMeta, ids, live)
 
     /** Copy-on-write by predicate: per-file match counts pick the files to
       * touch; zero-match candidates keep their bytes and segment ids. */
@@ -217,7 +216,7 @@ private[maintain] object RowLevel {
             val old = read(scoped, cands)
             stageClustered(tx,
               old.join(in.select(key), Seq(key), "left_anti").unionByName(withIds(in, Some(old))),
-              files, Some((table.toLogical(table.segmentScan(scoped, cands)), candRows)))
+              files, Some((read(scoped, cands, ids = false, live = false), candRows)))
           }
         }
       }
@@ -365,18 +364,12 @@ private[maintain] object RowLevel {
       }
     }
 
-    /** Row-id candidates from the manifest alone: never-rewritten files by
-      * their [base, base + rows) id interval, rewritten files by their
-      * materialized `_row_id` footer stats, against the id set's [min, max]. */
+    /** Row-id candidates from the manifest alone
+      * ([[graft.table.RowTracking.mayHoldIds]]) against the id set's [min, max]. */
     private def pruneIds(): Seq[SegmentMeta] = {
       val bounds = in.agg(min(col(RowIdCol)), max(col(RowIdCol))).head()
       if (bounds.isNullAt(0)) return Nil // no non-null id
-      val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
-      live.filter(s => s.stats.get(RowIdCol) match {
-        case None => s.baseRowId.exists(b => b <= mx && b + s.rowCount - 1 >= mn)
-        case Some(ColStats(Some(StatVal.L(a)), Some(StatVal.L(b)), _)) => a <= mx && b >= mn
-        case _ => true // stat shape unknown -> sound
-      })
+      live.filter(RowTracking.mayHoldIds(_, bounds.getLong(0), bounds.getLong(1)))
     }
 
     /** Matched positions of an id set: the positional arm is a broadcast
@@ -394,7 +387,7 @@ private[maintain] object RowLevel {
           .select(col("__f"), (col(RowIdCol) - col("__lo")).as("__i"))
       }
       val matBase = Option.when(materialized.nonEmpty) {
-        table.segmentScanWithRowIds(spark, materialized)
+        read(spark, materialized, ids = true, live = false)
           .select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
             col(RowIdCol))
           .join(ids, Seq(RowIdCol), "left_semi").select(col("__f"), col("__i"))
@@ -511,13 +504,13 @@ private[maintain] object RowLevel {
       val rangeHits = live.filter(s => hitIds.contains(s.segmentId))
       val refined: Set[String] = table.bloomKeyColumn match {
         case Some(bloomCol) if bloomCol == physKey && rangeHits.nonEmpty =>
-          val files = rangeHits.map(s => (PathNorm.resolve(table.root, s.path), s.segmentId))
           if (inputRows <= MergeInto.BloomKeyCap) {
             val keys: Array[Any] = in.select(col(key)).collect().map(_.get(0))
             KeyBloom.filterMayContain(spark.sparkContext.hadoopConfiguration,
-              files, bloomCol, keys).toSet
+              rangeHits.map(s => (PathNorm.resolve(table.root, s.path), s.segmentId)),
+              bloomCol, keys).toSet
           } else if (!mor)
-            MergeInto.refineCandidatesExact(spark, in.select(col(key)), key, files, Some(physKey))
+            MergeInto.refineCandidatesExact(spark, table, in.select(col(key)), key, rangeHits)
           else hitIds
         case _ => hitIds
       }
@@ -544,10 +537,8 @@ private[maintain] object RowLevel {
   private[maintain] def morBase(spark: SparkSession, table: TsTable,
                                 candidates: Seq[SegmentMeta])
                                (project: DataFrame => DataFrame): DataFrame = {
-    // toLogical: `project` carries user predicates / merge keys under
-    // logical names (identity unless a column was renamed); _metadata
-    // still resolves through the alias projection
-    val base0 = project(table.toLogical(table.segmentScan(spark, candidates)))
+    // logical names: `project` carries user predicates / merge keys
+    val base0 = project(table.read(spark, candidates, table.state.tableMeta, live = false))
     DeletionVectors.predicate(table.root, candidates, col("__f"), col("__i"))
       .map(base0.where).getOrElse(base0)
   }

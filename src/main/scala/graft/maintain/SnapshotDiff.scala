@@ -44,40 +44,27 @@ object SnapshotDiff {
     require(toVersion <= table.version,
       s"cannot diff to v$toVersion: table is at v${table.version}")
 
-    val post = table.scanAt(spark, toVersion)
+    val postState = graft.log.TableState.rebuildAt(table.store, toVersion)
+    val post = table.read(spark, postState)
     val cols = post.schema.fieldNames.toSeq
     require(cols.contains(key), s"diff key '$key' is not a table column: $cols")
-    if (fromVersion == toVersion)
-      return post.withColumn("_change_type", lit("insert")).where(lit(false))
 
     // ---- append-only fast path (log metadata decides; no data read) ----
     // remove-free AND no added segment carries a deletion vector: a
     // RESTORE whose diff happens to be adds-only can re-add DV'd segments
     // in a remove-free commit, and reading those raw would report masked
-    // (deleted) rows as inserts — such ranges take the general join path
+    // (deleted) rows as inserts — such ranges take the general join path.
+    // An empty range is append-only with nothing added.
     val commits = ((fromVersion + 1) to toVersion).map(table.store.readCommit)
     val appendOnly = commits.forall(_.actions.forall {
       case _: LogAction.RemoveSegment => false
       case LogAction.AddSegment(s) => s.dvPath.isEmpty
       case _ => true
     })
-    if (appendOnly) {
-      val addedPaths = commits.flatMap(_.actions.collect {
-        case LogAction.AddSegment(s) => graft.meta.PathNorm.resolve(table.root, s.path)
-      })
-      if (addedPaths.isEmpty)
-        return post.where(lit(false)).withColumn("_change_type", lit("insert"))
-      // appended segments never carry deletion vectors, and with zero
-      // removes in the range none can have been attached since. Files are
-      // written under frozen PHYSICAL names (RENAME COLUMN mapping) —
-      // read physical, alias back to the logical view positionally
-      val postMeta = graft.log.TableState.rebuildAt(table.store, toVersion).tableMeta
-      val physSchema = postMeta.map(_.physicalize(post.schema)).getOrElse(post.schema)
-      return spark.read.schema(physSchema).parquet(addedPaths: _*)
-        .select(cols.zip(physSchema.fieldNames)
-          .map { case (log, phys) => col(phys).as(log) }.toIndexedSeq: _*)
-        .withColumn("_change_type", lit("insert"))
-    }
+    if (appendOnly)
+      return ChangeFeed.inserts(spark, table,
+        commits.flatMap(_.actions.collect { case LogAction.AddSegment(s) => s }),
+        postState.tableMeta.get, tracked = false)
 
     // ---- general path: one keyed full-outer join of the two states -----
     val pre = table.scanAt(spark, fromVersion)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.Sink
@@ -12,6 +12,8 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import graft.log.{LogAction, TableState}
+import graft.maintain.ChangeFeed
+import graft.meta.SegmentMeta
 import graft.table.TsTable
 
 /** Structured Streaming SOURCE over a graft table: tail the transaction
@@ -70,8 +72,10 @@ import graft.table.TsTable
   * drains to a fixed point even while writers keep committing.
   *
   * Scale: getOffset/getBatch are driver-side metadata (CURRENT read + a
-  * few KB of commit JSON); the data plane is `spark.read.parquet` over the
-  * batch's files — vectorized scan, whole-stage codegen, AQE all apply.
+  * few KB of commit JSON); the data plane is the table's own segment
+  * reader (`TsTable.read`) over the batch's segments, under the schema
+  * pinned at source init — manifest-planned (no listing, no footer
+  * inference), vectorized scan, whole-stage codegen, AQE all apply.
   */
 final class TableStreamSource(
     sqlContext: SQLContext,
@@ -129,7 +133,11 @@ final class TableStreamSource(
   private val readChangeFeed: Boolean =
     opt("readChangeFeed").exists(_.toBoolean)
 
-  private val tableSchema: StructType = table.meta.schema.getOrElse(
+  /** The table meta every batch reads under: the source schema is pinned
+    * at init, and physical names never change, so its column mapping stays
+    * valid for every later batch. */
+  private val meta = table.meta
+  private val tableSchema: StructType = meta.schema.getOrElse(
     throw new IllegalStateException(
       s"table at $rootPath has no adopted schema yet (append once before streaming from it)"))
 
@@ -137,16 +145,11 @@ final class TableStreamSource(
     * row-tracked table carries `_row_id` (enable mid-stream = restart the
     * query to pick it up, the standard schema-evolution discipline). */
   private val cdfTracked: Boolean =
-    readChangeFeed && table.meta.rowTracking
+    readChangeFeed && meta.rowTracking
 
   override val schema: StructType =
     if (readChangeFeed) TableStreamSource.cdfSchema(tableSchema, cdfTracked)
     else tableSchema
-
-  /** The files' frozen physical names for the declared (logical) schema.
-    * Physical names never change, so the init-time mapping stays valid
-    * for every later batch (identity for never-renamed tables). */
-  private val physSchema: StructType = table.meta.physicalize(tableSchema)
 
   private val skipChangeCommits: Boolean =
     opt("skipChangeCommits").forall(_.toBoolean)
@@ -223,58 +226,37 @@ final class TableStreamSource(
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val endV = version(end)
     if (readChangeFeed) return cdfBatch(start.map(version), endV)
-    // tail batches replay AddSegments from append-only commits, which
-    // never carry deletion vectors (a DV attach is a Remove+Add change
-    // commit, skipped above); only the initial snapshot can see DVs
-    var dvFilter: Option[org.apache.spark.sql.Column] = None
-    val paths: Seq[String] = start match {
-      case Some(s) => addedIn(version(s) + 1, endV)
-      case None => startingVersion match {
-        case Some(sv) => addedIn(sv, endV)
-        case None => // initial snapshot, pinned at the first batch's version
-          // on restart the engine re-issues getBatch(None, v) for the
-          // already-committed snapshot batch; if a manifest rewrite has
-          // since expired the commits below v the replay cannot be
-          // reconstructed — name the cause instead of a raw missing-file
-          try {
-            val segs = TableState.rebuildAt(table.store, endV).liveSegments
-            dvFilter = graft.table.DeletionVectors.liveRowFilter(rootPath, segs)
-            segs.map(s => graft.meta.PathNorm.resolve(rootPath, s.path))
-          }
-          catch { case e: Exception
-              if e.getMessage != null && e.getMessage.contains("missing commit file") =>
-            throw new IllegalStateException(
-              s"initial-snapshot version $endV of $rootPath has been expired by " +
-                "snapshot retention (a manifest rewrite dropped its commits); " +
-                "restart from a fresh checkpoint or pin a startingVersion that " +
-                "still exists", e)
-          }
-      }
+    val segs = start.map(version(_) + 1).orElse(startingVersion) match {
+      case Some(from) => addedIn(from, endV)
+      case None => snapshotAt(endV)
     }
-    val batch =
-      if (paths.isEmpty)
-        Bridge.emptyStreamingBatch(sqlContext.sparkSession, schema)
-      else {
-        // explicit PHYSICAL schema (no footer merge job; renamed columns
-        // live under frozen physical names in the files) + positional
-        // alias re-select so the batch's attribute names and order always
-        // match the declared LOGICAL source schema
-        val raw = sqlContext.sparkSession.read.schema(physSchema).parquet(paths: _*)
-        val df = dvFilter.map(raw.where).getOrElse(raw)
-          .select(tableSchema.fieldNames.zip(physSchema.fieldNames)
-            .map { case (log, phys) => col(phys).as(log) }.toIndexedSeq: _*)
-        Bridge.streamingBatch(df, schema)
-      }
-    batch
+    val spark = sqlContext.sparkSession
+    if (segs.isEmpty) Bridge.emptyStreamingBatch(spark, schema)
+    else Bridge.streamingBatch(table.read(spark, segs, Some(meta)), schema)
   }
+
+  /** The initial snapshot: the live segments at the first batch's version.
+    * On restart the engine re-issues getBatch(None, v) for the
+    * already-committed snapshot batch; if a manifest rewrite has since
+    * expired the commits below v the replay cannot be reconstructed — name
+    * the cause instead of a raw missing-file error. */
+  private def snapshotAt(endV: Long): Seq[SegmentMeta] =
+    try TableState.rebuildAt(table.store, endV).liveSegments
+    catch { case e: Exception
+        if e.getMessage != null && e.getMessage.contains("missing commit file") =>
+      throw new IllegalStateException(
+        s"initial-snapshot version $endV of $rootPath has been expired by " +
+          "snapshot retention (a manifest rewrite dropped its commits); " +
+          "restart from a fresh checkpoint or pin a startingVersion that " +
+          "still exists", e)
+    }
 
   /** Change-feed batch: tail batches replay the writer-recorded changes of
     * (startV, endV]; the initial snapshot (no checkpointed offset, no
     * startingVersion) arrives as `insert` rows pinned at endV. */
   private def cdfBatch(startV: Option[Long], endV: Long): DataFrame = {
     val spark = sqlContext.sparkSession
-    val since = startV.orElse(startingVersion.map(_ - 1))
-    val df = since match {
+    startV.orElse(startingVersion.map(_ - 1)) match {
       case Some(s) =>
         if (s >= endV) Bridge.emptyStreamingBatch(spark, schema)
         else {
@@ -282,67 +264,29 @@ final class TableStreamSource(
           // iff the CURRENT meta tracks rows, which can drift from the
           // init-time pin across a mid-stream enable/disable — missing
           // columns null-fill, extra ones drop
-          val feed = graft.maintain.ChangeFeed.read(spark, table, s, endV)
+          val feed = ChangeFeed.read(spark, table, s, endV)
           val aligned = schema.fields.toIndexedSeq.map { f =>
             if (feed.columns.contains(f.name)) col(f.name)
-            else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
+            else lit(null).cast(f.dataType).as(f.name)
           }
           Bridge.streamingBatch(feed.select(aligned: _*), schema)
         }
       case None =>
-        // initial snapshot as inserts, same pinned-version discipline (and
-        // the same expired-snapshot failure mode) as the plain source
-        val segs =
-          try TableState.rebuildAt(table.store, endV).liveSegments
-          catch { case e: Exception
-              if e.getMessage != null && e.getMessage.contains("missing commit file") =>
-            throw new IllegalStateException(
-              s"initial-snapshot version $endV of $rootPath has been expired by " +
-                "snapshot retention; restart from a fresh checkpoint", e)
-          }
-        if (segs.isEmpty) return Bridge.emptyStreamingBatch(spark, schema)
-        val tsMillis = table.store.readCommit(endV).timestampMillis
-        // snapshot-as-inserts ids: the standard coalesce(materialized,
-        // base + position) binding over the pinned state's manifests —
-        // rewritten (compacted) files in the snapshot carry materialized
-        // ids that position arithmetic alone would get wrong. NULL for
-        // pre-enablement snapshots. The binding happens on `raw`
-        // (pre-DV-filter: positions are physical), and the id travels
-        // through `live` by column.
-        val trackable = cdfTracked && segs.forall(_.baseRowId.isDefined)
-        val segPaths = segs.map(s => graft.meta.PathNorm.resolve(rootPath, s.path))
-        val raw =
-          if (trackable) {
-            import org.apache.spark.sql.types.{LongType, StructField}
-            val readSchema = StructType(physSchema.fields ++ Seq(
-              StructField(graft.table.RowTracking.RowIdCol, LongType),
-              StructField(graft.table.RowTracking.RowCommitCol, LongType)))
-            graft.table.RowTracking.attach(
-              spark.read.schema(readSchema).parquet(segPaths: _*), rootPath, segs)
-          } else spark.read.schema(physSchema).parquet(segPaths: _*)
-        val live = graft.table.DeletionVectors.liveRowFilter(rootPath, segs)
-          .map(raw.where).getOrElse(raw)
-        val idCols: Seq[org.apache.spark.sql.Column] =
-          if (!cdfTracked) Nil
-          else if (trackable) Seq(col(graft.table.RowTracking.RowIdCol))
-          else Seq(org.apache.spark.sql.functions.lit(null).cast("long")
-            .as(graft.table.RowTracking.RowIdCol))
-        val df0 = live.select(tableSchema.fieldNames.zip(physSchema.fieldNames)
-            .map { case (log, phys) => col(phys).as(log) }.toIndexedSeq ++ idCols: _*)
-          .withColumn(graft.maintain.ChangeFeed.ChangeTypeCol,
-            org.apache.spark.sql.functions.lit("insert"))
-          .withColumn(graft.maintain.ChangeFeed.VersionCol,
-            org.apache.spark.sql.functions.lit(endV))
-          .withColumn(graft.maintain.ChangeFeed.TimestampCol,
-            org.apache.spark.sql.functions.lit(new java.sql.Timestamp(tsMillis)))
-        Bridge.streamingBatch(df0, schema)
+        val segs = snapshotAt(endV)
+        if (segs.isEmpty) Bridge.emptyStreamingBatch(spark, schema)
+        else {
+          val ts = new java.sql.Timestamp(table.store.readCommit(endV).timestampMillis)
+          Bridge.streamingBatch(ChangeFeed.inserts(spark, table, segs, meta, cdfTracked)
+            .withColumn(ChangeFeed.VersionCol, lit(endV))
+            .withColumn(ChangeFeed.TimestampCol, lit(ts)), schema)
+        }
     }
-    df
   }
 
-  /** Segment paths appended by commits fromV..toV, skipping (or refusing)
-    * data-change commits — any commit that removes a segment. */
-  private def addedIn(fromV: Long, toV: Long): Seq[String] = {
+  /** Segments appended by commits fromV..toV, skipping (or refusing)
+    * data-change commits — any commit that removes a segment. They never
+    * carry deletion vectors (a DV attach is such a change commit). */
+  private def addedIn(fromV: Long, toV: Long): Seq[SegmentMeta] = {
     // snapshot expiration may have dropped commits in the range while the
     // stream was down; fail with the expired range spelled out instead of
     // a raw missing-file error (mirrors the history() guard)
@@ -369,7 +313,7 @@ final class TableStreamSource(
             "streaming from it would re-emit or lose rows. Set skipChangeCommits=true " +
             "to stream appends only.")
         Nil
-      } else c.actions.collect { case LogAction.AddSegment(seg) => graft.meta.PathNorm.resolve(rootPath, seg.path) }
+      } else c.actions.collect { case LogAction.AddSegment(seg) => seg }
     }
   }
 

@@ -40,15 +40,17 @@ object DeletionVectors {
     * so this is a guard, not a limit anyone meets. */
   val MaxRowsPerFile: Long = Int.MaxValue.toLong
 
-  /** NOT-deleted filter for a snapshot's live segments, or None when the
-    * snapshot carries no DVs (the common, zero-cost case). */
-  def liveRowFilter(tableRoot: String, segs: Seq[SegmentMeta]): Option[Column] = {
+  /** NOT-deleted filter over `_metadata` for `segs`, or None when they
+    * carry no DVs (the common, zero-cost case). [[TsTable.read]] is the
+    * one caller. */
+  private[table] def liveRowFilter(tableRoot: String, segs: Seq[SegmentMeta]): Option[Column] = {
     predicate(tableRoot, segs,
       col("_metadata.file_path"), col("_metadata.row_index"))
   }
 
-  /** Same filter over explicit path/index columns (used by maintenance
-    * jobs that read candidate files with their own metadata projection). */
+  /** Same filter over explicit path/index columns, for the maintenance
+    * passes that read positions raw (`TsTable.read(live = false)`) and
+    * mask their own (file, position) columns. */
   def predicate(tableRoot: String, segs: Seq[SegmentMeta],
                 filePath: Column, rowIndex: Column): Option[Column] = {
     val withDv = segs.filter(_.dvPath.isDefined)

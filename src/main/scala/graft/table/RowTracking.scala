@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.meta.{PathNorm, SegmentMeta}
+import graft.meta.{ColStats, PathNorm, SegmentMeta, StatVal}
 
 /** Row tracking (Delta row-tracking / Iceberg row-lineage analog; the
   * reference has no row identity at all — its log is append-only and rows
@@ -37,10 +37,10 @@ object RowTracking {
 
   /** Attach `_row_id`/`_row_commit` to a PHYSICAL read of `segs` whose
     * projection includes `_metadata` plus (possibly null) materialized
-    * tracking columns. Positions are physical, so callers must apply DV
-    * filters AFTER this projection (filters only remove rows; the
-    * arithmetic has already bound each row to its id). */
-  def attach(df: DataFrame, tableRoot: String, segs: Seq[SegmentMeta]): DataFrame = {
+    * tracking columns. Positions are physical, so DV filters apply AFTER
+    * this projection (filters only remove rows; the arithmetic has already
+    * bound each row to its id) — [[TsTable.read]] is the one caller. */
+  private[table] def attach(df: DataFrame, tableRoot: String, segs: Seq[SegmentMeta]): DataFrame = {
     val unassigned = segs.filter(s => s.baseRowId.isEmpty || s.rowVersion.isEmpty)
     if (unassigned.nonEmpty)
       throw new IllegalStateException(
@@ -60,6 +60,25 @@ object RowTracking {
     df.withColumn(RowIdCol,
         coalesce(col(RowIdCol), look(0) + col("_metadata.row_index")))
       .withColumn(RowCommitCol, coalesce(col(RowCommitCol), look(1)))
+  }
+
+  /** Whether `s` can hold a row id in `[lo, hi]`, from the manifest alone —
+    * the one file-pruning rule of the row-id reads. A never-rewritten file
+    * holds exactly its positional interval `[base, base + rows)`. A
+    * rewritten file holds its materialized ids, bounded by the `_row_id`
+    * footer stats, plus one positional id (`base + position`) per row
+    * written with a NULL id (a MERGE mixes carried ids with rows whose ids
+    * its commit mints) — so the positional interval joins the stats one
+    * when the stats count nulls or carry no min/max. A stat of unknown
+    * shape keeps the file. */
+  private[graft] def mayHoldIds(s: SegmentMeta, lo: Long, hi: Long): Boolean = {
+    def positional = s.baseRowId.exists(b => b <= hi && b + s.rowCount - 1 >= lo)
+    s.stats.get(RowIdCol) match {
+      case None | Some(ColStats(None, None, _)) => positional
+      case Some(ColStats(Some(StatVal.L(mn)), Some(StatVal.L(mx)), nulls)) =>
+        (mn <= hi && mx >= lo) || (nulls > 0 && positional)
+      case _ => true
+    }
   }
 
   /** `when(cond, null)` helper for UPDATE-style verbs: a rewritten row

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import graft.coverage.{Bitmap, BucketMath}
 import graft.log._
 import graft.meta._
@@ -147,11 +147,11 @@ final class TsTable private (val root: String, val store: LogStore) {
   /** DataFrame over the current snapshot via our manifest-backed FileIndex:
     * file pruning from per-file stats + Spark's native vectorized Parquet
     * scan (reference R1, ts_table_provider.rs:240-295). */
-  def scan(spark: SparkSession): DataFrame = scanState(spark, cachedState)
+  def scan(spark: SparkSession): DataFrame = read(spark, cachedState)
 
   /** Time travel: scan the table as of a pinned version. */
   def scanAt(spark: SparkSession, version: Long): DataFrame =
-    scanState(spark, TableState.rebuildAt(store, version))
+    read(spark, TableState.rebuildAt(store, version))
 
   /** Structured Streaming tail of this table: initial snapshot, then each
     * append commit as a micro-batch (graft.streaming.TableStreamSource —
@@ -250,61 +250,73 @@ final class TsTable private (val root: String, val store: LogStore) {
     (tagRows ++ brRows).toDF("name", "type", "base_version", "head_version")
   }
 
-  private[graft] def scanState(spark: SparkSession, st: TableState): DataFrame = {
-    val live = st.liveSegments
-    val logSchema = st.tableMeta.flatMap(_.schema).getOrElse {
-      if (live.isEmpty)
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], new StructType())
-      spark.read.parquet(abs(live.head)).schema
+  /** THE segment reader: how a set of committed segments becomes rows.
+    * Every scan, maintenance read, change feed and stream batch goes
+    * through it (the single integration point of the reference,
+    * ts_table_provider.rs:240-295), so it alone decides:
+    *
+    *  - schema: pinned to `meta`'s manifest schema, never footer-inferred.
+    *    After an ADD COLUMN the live set mixes old- and new-footer files,
+    *    and a footer-inferred read can adopt an OLD file's schema (silently
+    *    dropping the evolved column from a rewrite); pinning NULL-fills it
+    *    on old files instead. The footer is read only when no schema has
+    *    been adopted yet.
+    *  - planning: a manifest-backed [[TsFileIndex]] relation, so stats
+    *    pruning applies and no listing or schema-inference job runs.
+    *  - row ids (`ids`): `_row_id`/`_row_commit` bound from `_metadata`
+    *    before any deletion-vector mask, since positions are physical.
+    *  - deletion vectors (`live`): the snapshot splits into two relations
+    *    so only the DV'd files pay the per-row filter — the clean ones scan
+    *    exactly as a DV-free table (no `_metadata` columns, no lookup call,
+    *    full whole-stage codegen), and Catalyst pushes query filters and
+    *    column pruning through the union into both branches. A union is
+    *    planned only when both kinds exist. `live = false` returns one
+    *    unfiltered relation with `_metadata` reachable, for the passes that
+    *    mask positions themselves.
+    *  - names: LOGICAL out. Files keep their frozen physical names (RENAME
+    *    COLUMN); one alias projection on top restores the logical view, and
+    *    filters and column pruning push through it (identity for
+    *    never-renamed tables). Writes map back in [[Txn.stage]].
+    *  - empty sets: a relation over zero files, of the declared schema. */
+  private[graft] def read(spark: SparkSession, segs: Seq[SegmentMeta], meta: Option[TableMeta],
+                          ids: Boolean = false, live: Boolean = true): DataFrame = {
+    val logical = meta.flatMap(_.schema).getOrElse(
+      segs.headOption.fold(new StructType())(s => spark.read.parquet(abs(s)).schema))
+    val idCols = if (ids) Seq(RowTracking.RowIdCol, RowTracking.RowCommitCol) else Nil
+    val schema = StructType(meta.fold(logical)(_.physicalize(logical)).fields ++
+      idCols.map(StructField(_, LongType)))
+    def bound(ss: Seq[SegmentMeta]) = {
+      val rel = spark.baseRelationToDataFrame(relationFor(spark, ss, schema))
+      if (ids) RowTracking.attach(rel, root, ss) else rel
     }
-    if (live.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
-    // RENAME COLUMN mapping: the relation reads the files' frozen PHYSICAL
-    // names; one alias projection on top restores the logical view. Filters
-    // and column pruning push through the aliases (Catalyst substitutes
-    // them), so TsFileIndex still prunes on physical stats keys and the
-    // parquet scan still sees pushed filters. Identity (zero-cost) for
-    // never-renamed tables.
-    val cmap = st.tableMeta.map(_.colMap).getOrElse(Map.empty)
-    val schema = st.tableMeta.map(_.physicalize(logSchema)).getOrElse(logSchema)
-    // merge-on-read deletes: the snapshot splits into two relations so
-    // only the DV'd files pay the per-row filter — the clean majority
-    // scans exactly as a DV-free table (no _metadata columns, no lookup
-    // call, full whole-stage codegen), and Catalyst pushes query filters
-    // and column pruning through the union into both branches. A snapshot
-    // without DVs plans the single-relation path, zero overhead.
-    val (dvSegs, cleanSegs) = live.partition(_.dvPath.isDefined)
-    val phys =
-      if (dvSegs.isEmpty)
-        spark.baseRelationToDataFrame(relationFor(spark, live, schema))
+    val (dvSegs, clean) = segs.partition(_.dvPath.isDefined)
+    val rows =
+      if (!live || dvSegs.isEmpty) bound(segs)
       else {
-        val dvScan = spark.baseRelationToDataFrame(relationFor(spark, dvSegs, schema))
-          .where(DeletionVectors.liveRowFilter(root, dvSegs).get)
-        if (cleanSegs.isEmpty) dvScan
-        else spark.baseRelationToDataFrame(relationFor(spark, cleanSegs, schema))
-          .unionByName(dvScan)
+        val masked = bound(dvSegs).where(DeletionVectors.liveRowFilter(root, dvSegs).get)
+        if (clean.isEmpty) masked else bound(clean).unionByName(masked)
       }
-    if (cmap.isEmpty) phys
-    else phys.select(logSchema.fieldNames.toIndexedSeq
-      .map(n => col(cmap.getOrElse(n, n)).as(n)): _*)
+    val cmap = meta.fold(Map.empty[String, String])(_.colMap)
+    if (cmap.isEmpty) rows
+    else rows.select((logical.fieldNames.toSeq.map(n => col(cmap.getOrElse(n, n)).as(n)) ++
+      idCols.map(col)): _*)
   }
 
-  /** The manifest-backed BaseRelation for a snapshot (None when empty) —
-    * also the batch half of the "graft-table" data source, so
+  /** [[read]] of a snapshot's live rows. */
+  private[graft] def read(spark: SparkSession, st: TableState): DataFrame =
+    read(spark, st.liveSegments, st.tableMeta)
+
+  /** The manifest-backed BaseRelation for a snapshot (None before a schema
+    * is adopted) — the batch half of the "graft-table" data source, so
     * `spark.read.format("graft-table").load(root)` and SQL
     * `CREATE TEMPORARY VIEW t USING graft-table OPTIONS (path '…')` scan
-    * through the same pruned FileIndex as `TsTable.scan`. */
-  private[graft] def relationAt(spark: SparkSession, st: TableState): Option[HadoopFsRelation] = {
-    // physical schema: a bare BaseRelation has no projection hook, so the
-    // DSv1 provider REFUSES renamed tables (same contract gap as DVs) —
-    // pinning physical here keeps the relation self-consistent regardless
-    val schema = st.tableMeta.flatMap(_.physicalSchema).getOrElse {
-      if (st.liveSegments.isEmpty) return None // schema not yet adopted
-      else spark.read.parquet(st.liveSegments.map(abs).head).schema
+    * through the same pruned FileIndex as `TsTable.scan`. A bare
+    * BaseRelation has no projection hook, so the provider refuses DV'd and
+    * renamed snapshots, whose [[read]] is not a single relation. */
+  private[graft] def relationAt(spark: SparkSession, st: TableState): Option[HadoopFsRelation] =
+    read(spark, st).queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.schema.nonEmpty => l.relation.asInstanceOf[HadoopFsRelation]
     }
-    Some(relationFor(spark, st.liveSegments, schema))
-  }
 
   private def relationFor(spark: SparkSession, segs: Seq[SegmentMeta],
                           schema: StructType): HadoopFsRelation = {
@@ -562,9 +574,9 @@ final class TsTable private (val root: String, val store: LogStore) {
   private[table] def stageSegments(tx: Txn, df: DataFrame)
       : Seq[(SegmentMeta, Option[StructType])] = {
     val spark = df.sparkSession
-    // toPhysical: logical frames (appends, maintenance ops that applied
-    // user expressions) land under the files' frozen physical names; a
-    // physical frame (segmentScan) passes through untouched
+    // toPhysical: frames arrive under logical names (appends, and every
+    // maintenance read through [[read]]) and land under the files' frozen
+    // physical names
     val phys = toPhysical(df)
     val (written, cov) = writeStaged(tx, phys, segmentWriteOptions, n => s"data/$n") { live =>
       // CHECK constraints gate appends and rewrites alike: the stats fast
@@ -691,102 +703,30 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   /** Scan the current snapshot with `_row_id` / `_row_commit` appended —
     * the row-tracking read surface. Ids resolve as
-    * coalesce(materialized column, baseRowId + row position); the DV
-    * filter applies AFTER the binding (positions are physical), and the
-    * logical (rename-aware) projection applies last. */
-  def scanWithRowIds(spark: SparkSession): DataFrame =
-    scanStateWithRowIds(spark, cachedState)
-
-  private[graft] def scanStateWithRowIds(spark: SparkSession, st: TableState): DataFrame = {
-    val m = st.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
-    require(m.rowTracking, "row tracking is not enabled on this table")
-    val logSchema = m.schema.getOrElse(
-      throw new IllegalStateException("table has no schema yet"))
-    val outSchema = StructType(logSchema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(RowTracking.RowIdCol, org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(RowTracking.RowCommitCol, org.apache.spark.sql.types.LongType)))
-    val live = st.liveSegments
-    if (live.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val withIds = RowTracking.attach(segmentScanTracked(spark, live, m), root, live)
-    val filtered = DeletionVectors.liveRowFilter(root, live)
-      .map(withIds.where).getOrElse(withIds)
-    val cmap = m.colMap
-    filtered.select(logSchema.fieldNames.toIndexedSeq
-      .map(n => col(cmap.getOrElse(n, n)).as(n))
-      ++ Seq(col(RowTracking.RowIdCol), col(RowTracking.RowCommitCol)): _*)
+    * coalesce(materialized column, baseRowId + row position), bound before
+    * the DV filter ([[read]]). */
+  def scanWithRowIds(spark: SparkSession): DataFrame = {
+    val st = cachedState
+    read(spark, st.liveSegments, trackedMeta(st), ids = true)
   }
 
   /** Row-id range scan `[lo, hi]` — the point-lookup/incremental-fetch
-    * surface of row tracking. File pruning is EXACT and metadata-only:
-    * a positional (never-rewritten) file's id range is
-    * [baseRowId, baseRowId + rowCount) straight from the manifest, and a
-    * rewritten file carries `_row_id` min/max in its footer stats — so a
-    * consumer fetching the rows behind a batch of change-feed ids reads
-    * only the files that can hold them, at any table size. The residual
-    * range filter applies post-attach (ids bind before the DV conjunct). */
+    * surface of row tracking. File pruning is metadata-only
+    * ([[RowTracking.mayHoldIds]]: manifest id intervals and `_row_id`
+    * footer stats), so a consumer fetching the rows behind a batch of
+    * change-feed ids reads only the files that can hold them, at any table
+    * size; the range filter applies to the bound ids. */
   def scanRowIdRange(spark: SparkSession, lo: Long, hi: Long): DataFrame = {
     require(lo <= hi, s"empty row-id range [$lo, $hi]")
     val st = cachedState
+    read(spark, st.liveSegments.filter(RowTracking.mayHoldIds(_, lo, hi)), trackedMeta(st),
+      ids = true).where(col(RowTracking.RowIdCol).between(lo, hi))
+  }
+
+  private def trackedMeta(st: TableState): Option[TableMeta] = {
     val m = st.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
     require(m.rowTracking, "row tracking is not enabled on this table")
-    val hit = st.liveSegments.filter { s =>
-      val posOverlap = s.baseRowId.exists(b => b <= hi && b + s.rowCount - 1 >= lo)
-      val statOverlap = s.stats.get(RowTracking.RowIdCol).exists {
-        case graft.meta.ColStats(Some(StatVal.L(mn)), Some(StatVal.L(mx)), _) =>
-          mn <= hi && mx >= lo
-        case _ => false
-      }
-      // a rewritten file's positional range is meaningless (ids are
-      // materialized; the base was minted but unused) — stats decide when
-      // present, the manifest range otherwise
-      if (s.stats.contains(RowTracking.RowIdCol)) statOverlap else posOverlap
-    }
-    val empty = {
-      val logSchema = m.schema.getOrElse(new StructType())
-      StructType(logSchema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(RowTracking.RowIdCol, org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(RowTracking.RowCommitCol, org.apache.spark.sql.types.LongType)))
-    }
-    if (hit.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
-    val withIds = RowTracking.attach(segmentScanTracked(spark, hit, m), root, hit)
-    val filtered = DeletionVectors.liveRowFilter(root, hit)
-      .map(withIds.where).getOrElse(withIds)
-      .where(col(RowTracking.RowIdCol) >= lo && col(RowTracking.RowIdCol) <= hi)
-    val logSchema = m.schema.get
-    val cmap = m.colMap
-    filtered.select(logSchema.fieldNames.toIndexedSeq
-      .map(n => col(cmap.getOrElse(n, n)).as(n))
-      ++ Seq(col(RowTracking.RowIdCol), col(RowTracking.RowCommitCol)): _*)
-  }
-
-  /** Physical relation over `segs` whose dataSchema includes the two
-    * (nullable, usually file-absent) materialized tracking columns —
-    * Spark's parquet missing-column handling fills NULL for fresh files,
-    * and rewritten files supply their frozen values. */
-  private def segmentScanTracked(spark: SparkSession, segs: Seq[SegmentMeta],
-                                 m: TableMeta): DataFrame = {
-    val phys = m.physicalSchema.getOrElse(
-      throw new IllegalStateException("table has no schema yet"))
-    val readSchema = StructType(
-      phys.fields.filterNot(f =>
-        f.name == RowTracking.RowIdCol || f.name == RowTracking.RowCommitCol) ++ Seq(
-        org.apache.spark.sql.types.StructField(RowTracking.RowIdCol, org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(RowTracking.RowCommitCol, org.apache.spark.sql.types.LongType)))
-    spark.baseRelationToDataFrame(relationFor(spark, segs, readSchema))
-  }
-
-  /** Maintenance read of `segs` with tracking columns attached and
-    * MATERIALIZED (physical names; rows physical — callers layer DV
-    * filters as with [[segmentScan]]). Row-preserving rewrites feed this
-    * straight to [[Txn.stage]], freezing each surviving row's id and
-    * last-modified version into the new files. */
-  private[graft] def segmentScanWithRowIds(spark: SparkSession,
-                                           segs: Seq[SegmentMeta]): DataFrame = {
-    val m = cachedState.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
-    RowTracking.attach(segmentScanTracked(spark, segs, m), root, segs)
+    Some(m)
   }
 
   /** Stage a change-record DataFrame (logical table columns +
@@ -818,10 +758,10 @@ final class TsTable private (val root: String, val store: LogStore) {
       // re-validated on the rebase (a write that lands after our commit
       // is gated by enforceChecks instead — no unvalidated window)
       if (st.liveSegments.nonEmpty) {
-        val bad = scanState(spark, st).where(not(cond) === lit(true)).count()
+        val bad = read(spark, st).where(not(cond) === lit(true)).count()
         if (bad > 0) throw CheckViolationException(name, predicateSql, bad)
       } else if (m.schema.isDefined) {
-        scanState(spark, st).where(cond).queryExecution.analyzed // fail fast on bad columns
+        read(spark, st).where(cond).queryExecution.analyzed // fail fast on bad columns
       }
       Some(m.copy(checks = m.checks :+ (name -> predicateSql)))
     }
@@ -1141,32 +1081,6 @@ final class TsTable private (val root: String, val store: LogStore) {
         if (bad > 0) throw CheckViolationException(name, sql, bad)
       }
     }
-  }
-
-  /** Manifest-backed PHYSICAL scan over an explicit segment subset — the
-    * read every maintenance job (compaction bin, MERGE/DELETE/UPDATE
-    * candidates) must use instead of a bare `spark.read.parquet(paths)`:
-    * the manifest already knows each file's path and size, so the scan
-    * plans with ZERO filesystem listing (a bare parquet read of a 161-file
-    * bin was paying two ~1 s distributed listing jobs per rewrite — pure
-    * scheduler overhead at any scale, and a real object-store LIST storm
-    * at 100 TB). Schema is pinned to the MANIFEST, never footer-inferred:
-    * after an ADD COLUMN the live set mixes old- and new-footer files, and
-    * a footer-inferred read can adopt an OLD file's schema — silently
-    * DROPPING the evolved column from a rewrite; pinning also NULL-fills
-    * it on old files and skips the footer-sample job. Rows are physical
-    * (no DV filter) — callers layer
-    * [[DeletionVectors.liveRowFilter]] exactly as before. */
-  private[graft] def segmentScan(spark: SparkSession, segs: Seq[SegmentMeta]): DataFrame = {
-    require(segs.nonEmpty, "segmentScan over an empty segment set")
-    // PHYSICAL names throughout: maintenance reads feed maintenance
-    // writes, and files are physical end-to-end — a rewrite never has to
-    // know a rename happened. Callers that apply USER expressions
-    // (predicates, SET clauses, merge keys — logical names) sandwich with
-    // toLogical/toPhysical.
-    val schema = cachedState.tableMeta.flatMap(_.physicalSchema)
-      .getOrElse(spark.read.parquet(abs(segs.head)).schema)
-    spark.baseRelationToDataFrame(relationFor(spark, segs, schema))
   }
 
   // ------------------------------------------------- column mapping view

@@ -102,14 +102,15 @@ class MetadataScaleSpec extends AnyFunSuite {
       w
     }
     assert(hw == N.toLong * 3000L)
-    // scanRowIdRange's prune: interval intersection per file over a ~1%
-    // id band (positional arm — stats arm is the same per-file O(1))
+    // the row-id reads' prune (RowTracking.mayHoldIds): interval
+    // intersection per file over a ~1% id band (positional arm — the
+    // stats arm is the same per-file O(1))
     val tracked = segs.zipWithIndex.map { case (s, i) =>
       s.copy(baseRowId = Some(i.toLong * 3000L), rowVersion = Some(7L)) }
     val lo = 1000L * 3000L
     val hi = 3000L * 3000L - 1L
     val (kept, pruneSec) = timed {
-      tracked.count(s => s.baseRowId.exists(b => b <= hi && b + s.rowCount - 1 >= lo))
+      tracked.count(graft.table.RowTracking.mayHoldIds(_, lo, hi))
     }
     info(f"alloc walk: $allocSec%.3f s, id-range prune: $pruneSec%.3f s, kept $kept of $N")
     assert(kept == 2000)

@@ -239,4 +239,53 @@ class PlanAuditSpec extends SparkFunSuite {
     assert(!genPlan.contains("BroadcastNestedLoopJoin") && !genPlan.contains("CartesianProduct"),
       s"diff join must stay keyed:\n$genPlan")
   }
+
+  /** The physical plans of the SQL executions `f` runs, and the number of
+    * jobs it runs outside any SQL execution (listing or footer-inference
+    * jobs of a `spark.read.parquet(paths)`). */
+  private def audited(f: => Unit): (Seq[String], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val bare = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          bare.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.graft.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (plans.asScala.toSeq, bare.get)
+  }
+
+  test("change feed, snapshot diff and exact refinement read segments through TsFileIndex") {
+    val root = tmpDir("plan-reader")
+    val t = TsTable.create(root, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    t.append(TokenGen.generate(spark, 400, numFiles = 2))
+    val v1 = t.version
+    t.append(TokenGen.generate(spark, 100, idStart = 90000L, numFiles = 2))
+    val keys = spark.range(300).select(format_string("doc-%012d", col("id")).as("doc_id"))
+    val reads: Seq[(String, () => Unit)] = Seq(
+      "ChangeFeed.read" -> (() => graft.maintain.ChangeFeed.read(spark, t, 0L, t.version).collect()),
+      "SnapshotDiff fast path" ->
+        (() => graft.maintain.SnapshotDiff.diff(spark, t, v1, t.version, "doc_id").collect()),
+      "refineCandidatesExact" -> (() => graft.maintain.MergeInto.refineCandidatesExact(
+        spark, t, keys, "doc_id", t.state.liveSegments)))
+    reads.foreach { case (name, run) =>
+      val (plans, bareJobs) = audited(run())
+      val scans = plans.flatMap(_.linesIterator.filter(_.startsWith("Location:")))
+      assert(scans.nonEmpty, s"$name planned no file scan:\n${plans.mkString("\n")}")
+      assert(scans.forall(_.startsWith("Location: TsFileIndex")),
+        s"$name must plan over the manifest-backed TsFileIndex:\n${scans.mkString("\n")}")
+      assert(bareJobs == 0, s"$name ran $bareJobs listing/footer-inference job(s)")
+    }
+  }
 }

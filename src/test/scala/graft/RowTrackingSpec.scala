@@ -150,6 +150,22 @@ class RowTrackingSpec extends SparkFunSuite {
       }
       // global uniqueness after the merge
       assert(after.values.map(_._1).toSeq.distinct.size == 110)
+
+      // minted ids sit in merge outputs that also carry materialized ids:
+      // the `_row_id` footer stats cover only the carried ones, so both
+      // row-id reads must also consult the files' positional intervals
+      val minted = insertKeys.toSeq.map(k => after(k)._1).sorted
+      val window = after.collect {
+        case (k, (id, _)) if id >= minted.head && id <= minted.last => k -> id }
+      val got = t.scanRowIdRange(spark, minted.head, minted.last)
+        .select("doc_id", "_row_id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == window, s"[$mor] scanRowIdRange lost minted ids")
+      import spark.implicits._
+      val rep = graft.maintain.RowIdOps.deleteByRowIds(spark, t, minted.toDF("_row_id"))
+      assert(rep.rowsDeleted == 10, s"[$mor] deleteByRowIds of minted ids: $rep")
+      val left = idMap(t)
+      assert(left.keySet == after.keySet -- insertKeys, s"[$mor] minted rows survived")
+      left.foreach { case (k, v) => assert(v == after(k), s"[$mor] $k drifted") }
     }
     run(mor = false)
     run(mor = true)
