@@ -90,6 +90,24 @@ object LogAction {
   * (reference: transaction_log/actions.rs:46-60). */
 final case class Commit(version: Long, baseVersion: Long, timestampMillis: Long,
                         actions: Seq[LogAction]) {
+  def adds: Seq[SegmentMeta] = actions.collect { case LogAction.AddSegment(s) => s }
+
+  /** Whether this commit changes rows already in the table: it removes a
+    * segment, or adds one carrying a deletion vector (a RESTORE whose delta
+    * is adds-only re-adds DV'd segments in a remove-free commit; reading
+    * those files raw would show the masked rows). A commit that does not is
+    * a pure append: its change set is exactly the rows of its adds. */
+  def changesRows: Boolean = actions.exists {
+    case _: LogAction.RemoveSegment => true
+    case LogAction.AddSegment(s) => s.dvPath.isDefined
+    case _ => false
+  }
+
+  /** Every file this commit's adds reference: data, coverage and DV
+    * sidecars, and `_cdc/` change records. */
+  def files: Seq[String] =
+    adds.flatMap(_.files) ++ actions.collect { case LogAction.AddCdcFile(p, _) => p }
+
   def toJson: JsonNode = {
     val n = Json.obj()
     n.put("version", version)

@@ -1,6 +1,6 @@
 package graft.log
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
 import graft.meta.Json
 
 /** Typed errors mirroring the reference's taxonomy
@@ -10,6 +10,13 @@ final case class ConflictException(expected: Long, found: Long)
 final case class CommitFileExistsException(version: Long)
   extends RuntimeException(s"commit file for version $version already exists (lost race)")
 final case class CorruptLogException(msg: String) extends RuntimeException(msg)
+
+/** `version` cannot be read: commit `missing`, which it needs, was dropped
+  * by snapshot expiration; `earliest` is the oldest commit the log holds. */
+final case class VersionExpiredException(version: Long, missing: Long, earliest: Long)
+  extends IllegalArgumentException(
+    s"v$version is no longer readable: its history was reclaimed (expired by snapshot " +
+      s"retention: missing commit file for version $missing; earliest retained commit is v$earliest)")
 
 /** Append-only transaction log with optimistic concurrency.
   *
@@ -59,16 +66,45 @@ class LogStore(val tableRoot: Path) {
       throw CorruptLogException(s"CURRENT is not a number: '$s'") }
   }
 
-  def readCommit(version: Long): Commit = {
-    val p = commitPath(version)
-    if (!Files.exists(p))
-      throw CorruptLogException(s"missing commit file for version $version")
-    val c = try Commit.fromJson(Json.parse(Files.readString(p)))
+  def readCommit(version: Long): Commit = readFor(version, version)
+
+  /** Commit `v`, read on the way to `target`. A commit missing below the
+    * newest checkpoint was dropped by snapshot expiration, so `target` is
+    * refused as expired; any other gap is corruption. */
+  private[log] def readFor(target: Long, v: Long): Commit = {
+    val text = try Files.readString(commitPath(v)) catch { case _: NoSuchFileException =>
+      if (latestCheckpointVersion(currentVersion()).exists(v < _))
+        throw VersionExpiredException(target, v, earliestRetained())
+      throw CorruptLogException(s"missing commit file for version $v")
+    }
+    val c = try Commit.fromJson(Json.parse(text))
     catch { case e: Exception if !e.isInstanceOf[CorruptLogException] =>
-      throw CorruptLogException(s"unreadable commit $version: ${e.getMessage}") }
-    if (c.version != version)
-      throw CorruptLogException(s"commit file $version declares version ${c.version}")
+      throw CorruptLogException(s"unreadable commit $v: ${e.getMessage}") }
+    if (c.version != v)
+      throw CorruptLogException(s"commit file $v declares version ${c.version}")
     c
+  }
+
+  /** Commits `from..to` in order — the one walk over the log. `to` past
+    * CURRENT is refused (a commit file above it is a crashed writer's
+    * orphan that no committed state names); a `from` below the retained
+    * window throws [[VersionExpiredException]]. */
+  def commits(from: Long, to: Long): IndexedSeq[Commit] = {
+    val current = currentVersion()
+    require(from >= 1 && to <= current, s"commit range v$from..v$to outside [1, $current]")
+    (from to to).map(readFor(from, _))
+  }
+
+  /** The oldest commit of the retained window (commits from here to
+    * CURRENT are all on disk). Expiration drops the commits below the
+    * checkpoint it writes, so the window reaches down from the newest
+    * checkpoint; with none, nothing was dropped and it starts at 1. */
+  def earliestRetained(): Long = latestCheckpointVersion(currentVersion()) match {
+    case None => 1L
+    case Some(c) =>
+      var v = c + 1
+      while (v > 1 && Files.exists(commitPath(v - 1))) v -= 1
+      v
   }
 
   /** OCC commit; returns the new version. */

@@ -28,6 +28,18 @@ final case class TableState(
   def liveSegments: Seq[SegmentMeta] =
     segments.values.toSeq.sortBy(s => (s.path, s.segmentId))
 
+  /** The actions that turn this state's segments into `to`'s: a remove for
+    * every segment absent from or different in `to`, then an add for every
+    * segment of `to` absent from or different here (a changed segment, e.g.
+    * one with a DV attached since, is Remove+Add like every data-change
+    * commit). Added metas are copied whole, sidecar pointers and row-id
+    * ranges included. */
+  def segmentDelta(to: TableState): Seq[LogAction] =
+    liveSegments.filterNot(s => to.segments.get(s.segmentId).contains(s))
+      .map(s => LogAction.RemoveSegment(s.segmentId)) ++
+      to.liveSegments.filterNot(s => segments.get(s.segmentId).contains(s))
+        .map(LogAction.AddSegment)
+
   def apply(action: LogAction): TableState = action match {
     case LogAction.AddSegment(seg)      => copy(segments = segments + (seg.segmentId -> seg))
     case LogAction.RemoveSegment(id)    => copy(segments = segments - id)
@@ -83,14 +95,20 @@ object TableState {
     * CURRENT when one exists (our manifest-rewrite output) so replay cost is
     * bounded regardless of table age — the log never has to be re-read from
     * version 1 on a table with millions of commits. */
-  def rebuild(store: LogStore): TableState = {
+  def rebuild(store: LogStore): TableState = replay(store, store.currentVersion())
+
+  /** Replay to a pinned version — the one way to pin a version (time
+    * travel, tags, branches, clones, restore, stream snapshots). Refuses a
+    * version outside [0, CURRENT] (a commit file above CURRENT is a crashed
+    * writer's orphan), and one whose history expiration reclaimed with
+    * [[VersionExpiredException]]. */
+  def rebuildAt(store: LogStore, version: Long): TableState = {
     val current = store.currentVersion()
-    rebuildAt(store, current)
+    require(version >= 0 && version <= current, s"version v$version out of range [0, $current]")
+    replay(store, version)
   }
 
-  /** Replay to a pinned version (time-travel / snapshot-isolation reads). */
-  def rebuildAt(store: LogStore, version: Long): TableState = {
-    if (version == 0L) return empty
+  private def replay(store: LogStore, version: Long): TableState = {
     val (start, base) = store.latestCheckpointVersion(version) match {
       case Some(ckptV) =>
         val st = fromJson(Json.parse(Files.readString(store.checkpointPath(ckptV))))
@@ -99,13 +117,7 @@ object TableState {
         (ckptV + 1, st)
       case None => (1L, empty)
     }
-    var state = base
-    var v = start
-    while (v <= version) {
-      val commit = store.readCommit(v)
-      state = commit.actions.foldLeft(state)(_.apply(_))
-      v += 1
-    }
-    state.copy(version = version)
+    (start to version).foldLeft(base)((st, v) =>
+      store.readFor(version, v).actions.foldLeft(st)(_.apply(_))).copy(version = version)
   }
 }

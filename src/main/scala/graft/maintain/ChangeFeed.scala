@@ -3,7 +3,7 @@ package graft.maintain
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.log.LogAction
+import graft.log.{Commit, LogAction}
 import graft.meta.{SegmentMeta, TableMeta}
 import graft.streaming.TableStreamSource
 import graft.table.TsTable
@@ -65,18 +65,14 @@ object ChangeFeed {
     require(sinceVersion <= toVersion,
       s"change-feed range is backwards: v$sinceVersion > v$toVersion")
     table.refresh()
-    require(toVersion <= table.version,
-      s"cannot read changes to v$toVersion: table is at v${table.version}")
     val meta = table.meta
     val logical = meta.schema.getOrElse(throw new IllegalStateException(
       "table has no adopted schema yet — nothing can have changed"))
     val perCommit: Seq[DataFrame] =
-      (sinceVersion + 1 to toVersion).flatMap { v =>
-        val c = table.store.readCommit(v)
-        commitChanges(spark, table, meta, c.actions, v).map(
-          _.withColumn(VersionCol, lit(v))
-           .withColumn(TimestampCol,
-             lit(new java.sql.Timestamp(c.timestampMillis))))
+      table.store.commits(sinceVersion + 1, toVersion).flatMap { c =>
+        commitChanges(spark, table, meta, c).map(
+          _.withColumn(VersionCol, lit(c.version))
+           .withColumn(TimestampCol, lit(new java.sql.Timestamp(c.timestampMillis))))
       }
     if (perCommit.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -106,8 +102,8 @@ object ChangeFeed {
     * when the commit changed no rows (meta-only, coverage, txn,
     * DataNeutral rewrite, or an all-empty change set). */
   private def commitChanges(spark: SparkSession, table: TsTable, meta: TableMeta,
-                            actions: Seq[LogAction], v: Long): Option[DataFrame] = {
-    val cdcPaths = actions.collect { case LogAction.AddCdcFile(p, _) =>
+                            c: Commit): Option[DataFrame] = {
+    val cdcPaths = c.actions.collect { case LogAction.AddCdcFile(p, _) =>
       graft.meta.PathNorm.resolve(table.root, p) }
     if (cdcPaths.nonEmpty) {
       // writer-recorded record = the COMPLETE change set for the commit
@@ -120,18 +116,13 @@ object ChangeFeed {
         StructField(ChangeTypeCol, StringType))
       return Some(table.toLogical(spark.read.schema(cdcSchema).parquet(cdcPaths: _*)))
     }
-    if (actions.contains(LogAction.DataNeutral)) return None // row-preserving rewrite
-    val adds = actions.collect { case LogAction.AddSegment(s) => s }
-    val removes = actions.collect { case LogAction.RemoveSegment(id) => id }
-    // same soundness guard as SnapshotDiff's fast path: a remove-free
-    // commit whose adds carry deletion vectors (RESTORE re-adding DV'd
-    // segments) masks rows and has no record either
-    if (removes.nonEmpty || adds.exists(_.dvPath.isDefined))
+    if (c.actions.contains(LogAction.DataNeutral)) return None // row-preserving rewrite
+    if (c.changesRows)
       throw new IllegalStateException(
-        s"commit v$v of ${table.root} changed rows without a change record " +
+        s"commit v${c.version} of ${table.root} changed rows without a change record " +
           "(a mutation from before enableCdf, or a RESTORE). The feed cannot " +
           "replay it; start the read after it, or reconstruct the net change " +
           "with SnapshotDiff.diff")
-    Option.when(adds.nonEmpty)(inserts(spark, table, adds, meta, meta.rowTracking))
+    Option.when(c.adds.nonEmpty)(inserts(spark, table, c.adds, meta, meta.rowTracking))
   }
 }

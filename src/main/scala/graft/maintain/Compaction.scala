@@ -132,22 +132,7 @@ object Compaction {
     val curveName = curve.orElse(table.clusterSpec.map(_.curve)).getOrElse("none")
     val inScope = where match {
       case None => table.state.liveSegments
-      case Some(cond) =>
-        import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-          case other => Seq(other)
-        }
-        // resolve against the table schema so stats see real attributes
-        val analyzed = table.scan(spark).where(cond).queryExecution.analyzed
-        val resolved = analyzed
-          .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-          .map(conjuncts)
-          .getOrElse(Seq(org.apache.spark.sql.graft.Bridge.toExpr(cond)))
-        table.state.liveSegments.filter { seg =>
-          !resolved.exists(c =>
-            graft.scan.StatsPruning.eval(c, table.logicalStats(seg), seg.rowCount) == graft.scan.StatsPruning.AlwaysFalse)
-        }
+      case Some(cond) => table.statsCandidates(spark, table.state.liveSegments, cond)._1
     }
     val bins = plan(inScope, targetFileSize, groupFactor = groupFactor,
       dvDebtThreshold = dvDebtThreshold)

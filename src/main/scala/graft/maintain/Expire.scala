@@ -1,7 +1,7 @@
 package graft.maintain
 
 import java.nio.file.{Files, Paths}
-import graft.log.TableState
+import graft.log.{TableState, VersionExpiredException}
 import graft.meta.Json
 import graft.table.TsTable
 
@@ -75,8 +75,15 @@ object Expire {
       }
     }
 
-    // 1) checkpoint the watermark state (manifest rewrite) — before deletes
+    // 1) checkpoint the watermark state (manifest rewrite) — before deletes.
+    //    Every file a retained commit (watermark..CURRENT) references is
+    //    read first: from the watermark itself, since its commit file is
+    //    retained and so must be its change-feed sidecars. A watermark below
+    //    the retained window is refused here (VersionExpiredException):
+    //    the sweep below could not see the missing commits' adds and would
+    //    reclaim files still live.
     val wmState = TableState.rebuildAt(store, keepFromVersion)
+    val retainedFiles = store.commits(keepFromVersion, current).flatMap(_.files)
     writeCheckpoint(wmState, keepFromVersion)
 
     // 2) orphans: every segment ever added at v ≤ watermark that is not
@@ -94,57 +101,39 @@ object Expire {
         ckptV + 1 // earlier history already compacted away (its orphans were reclaimed then)
       case None => 1L
     }
-    var v = startV
-    while (v <= keepFromVersion) {
-      if (Files.exists(store.commitPath(v))) {
-        store.readCommit(v).actions.foreach {
-          case graft.log.LogAction.AddSegment(s) => seen(s.segmentId) = s
-          case _ => ()
-        }
-      }
-      v += 1
-    }
+    // (a re-expire at the same watermark starts at the retained window:
+    // the gap below it was reclaimed by the expire that made it)
+    store.commits(math.max(startV, store.earliestRetained()), keepFromVersion)
+      .foreach(_.adds.foreach(s => seen(s.segmentId) = s))
     // tag states are rebuilt BEFORE any commit drops (their replay still
     // needs the raw commits) and AFTER the `seen` scan (the fresh tag
     // checkpoints must not shift the orphan-seed window of THIS pass);
     // a tag-live segment is never an orphan, whatever the watermark says
-    val tagStates: Seq[TableState] = taggedBelow.map { tv =>
-      try TableState.rebuildAt(store, tv)
-      catch { case e: Exception =>
-        val names = table.tags.collect { case (n, v) if v == tv => s"'$n'" }.mkString(", ")
-        throw new IllegalStateException(
-          s"tag(s) $names point at v$tv whose history is no longer replayable; " +
-            s"drop the tag(s) to unblock expire (${e.getMessage})", e)
+    // a tag or fork whose history is already gone blocks expire; name it
+    def pinFor(v: Long, who: String, fix: String): TableState =
+      try TableState.rebuildAt(store, v)
+      catch { case e: VersionExpiredException =>
+        throw new IllegalStateException(s"$who at v$v whose history is no longer " +
+          s"replayable; $fix to unblock expire (${e.getMessage})", e)
       }
+    val tagStates: Seq[TableState] = taggedBelow.map { tv =>
+      val names = table.tags.collect { case (n, v) if v == tv => s"'$n'" }.mkString(", ")
+      pinFor(tv, s"tag(s) $names point", "drop the tag(s)")
     }
     // branch fork states, rebuilt with the same before-drop discipline as
     // tags (a branch whose fork history is gone can never publish — the
     // caller must drop or publish it first)
     val branchBaseStates: Seq[TableState] = branchBasesBelow.map { bv =>
-      try TableState.rebuildAt(store, bv)
-      catch { case e: Exception =>
-        val names = branchLogs.collect { case bl if bl.base == bv => s"'${bl.branch}'" }.mkString(", ")
-        throw new IllegalStateException(
-          s"branch(es) $names forked at v$bv whose history is no longer replayable; " +
-            s"publish or drop the branch(es) to unblock expire (${e.getMessage})", e)
-      }
+      val names = branchLogs.collect { case bl if bl.base == bv => s"'${bl.branch}'" }.mkString(", ")
+      pinFor(bv, s"branch(es) $names forked", "publish or drop the branch(es)")
     }
     // branch HEAD states and every path a branch commit added — the
     // branch's own lineage must survive the sweep whole
     val branchHeadStates: Seq[TableState] = branchLogs.map { bl =>
       TableState.rebuildAt(bl, bl.currentVersion())
     }
-    val branchAddPaths: Set[String] = branchLogs.flatMap { bl =>
-      (bl.base + 1 to bl.currentVersion()).flatMap { bv =>
-        if (!Files.exists(bl.commitPath(bv))) Nil
-        else bl.readCommit(bv).actions.flatMap {
-          case graft.log.LogAction.AddSegment(s) =>
-            Seq(s.path) ++ s.coveragePath.toSeq ++ s.dvPath.toSeq
-          case graft.log.LogAction.AddCdcFile(p, _) => Seq(p)
-          case _ => Nil
-        }
-      }
-    }.toSet
+    val branchAddPaths: Set[String] =
+      branchLogs.flatMap(bl => bl.commits(bl.base + 1, bl.currentVersion()).flatMap(_.files)).toSet
 
     val tagLiveIds: Set[String] = tagStates.flatMap(_.segments.keySet).toSet ++
       branchBaseStates.flatMap(_.segments.keySet) ++
@@ -198,7 +187,7 @@ object Expire {
     branchBasesBelow.zip(branchBaseStates).foreach { case (bv, stV) => writeCheckpoint(stV, bv) }
     val keepCkpt = taggedBelow.toSet ++ branchBasesBelow
     var dropped = 0
-    v = startV
+    var v = startV
     while (v < keepFromVersion) {
       if (Files.deleteIfExists(store.commitPath(v))) dropped += 1
       if (!keepCkpt(v)) Files.deleteIfExists(store.checkpointPath(v))
@@ -227,13 +216,8 @@ object Expire {
       if (mtime < cutoff) {
         if (Files.deleteIfExists(p)) orphanCommits += 1
       } else {
-        try store.readCommit(ov).actions.foreach {
-          case graft.log.LogAction.AddSegment(s) =>
-            inGraceOrphanAdds += s.path; s.coveragePath.foreach(inGraceOrphanAdds += _)
-            s.dvPath.foreach(inGraceOrphanAdds += _)
-          case graft.log.LogAction.AddCdcFile(p, _) => inGraceOrphanAdds += p
-          case _ => ()
-        } catch { case _: Exception => () } // unreadable in-grace orphan: sweep age guard still protects its files
+        try inGraceOrphanAdds ++= store.readCommit(ov).files
+        catch { case _: Exception => () } // unreadable in-grace orphan: sweep age guard still protects its files
       }
       ov += 1
     }
@@ -243,8 +227,8 @@ object Expire {
     //    landed leaves files the commit-derived orphan set in (2) can never
     //    see. Sweep data/ and _coverage/segments/ against the full
     //    referenced set — everything live at ANY retained version: the
-    //    watermark state plus every AddSegment in commits (watermark,
-    //    CURRENT], plus in-grace orphan adds from (3b) — and delete
+    //    watermark state plus every file of commits [watermark, CURRENT]
+    //    (read in 1), plus in-grace orphan adds from (3b) — and delete
     //    unreferenced entries older than the grace. The age guard protects
     //    a live writer that has just moved its output and is about to
     //    commit; debris older than the grace has no owner. After this pass
@@ -253,26 +237,9 @@ object Expire {
     val referenced = scala.collection.mutable.Set.empty[String]
     (wmState.segments.values ++ tagStates.flatMap(_.segments.values) ++
       branchBaseStates.flatMap(_.segments.values) ++
-      branchHeadStates.flatMap(_.segments.values)).foreach { s =>
-      referenced += s.path; s.coveragePath.foreach(referenced += _)
-      s.dvPath.foreach(referenced += _)
-    }
+      branchHeadStates.flatMap(_.segments.values)).foreach(referenced ++= _.files)
     referenced ++= branchAddPaths
-    // from the watermark itself (not +1): its commit file is retained, so
-    // its change-feed sidecars must survive the _cdc sweep with it
-    v = keepFromVersion
-    while (v <= current) {
-      if (Files.exists(store.commitPath(v))) {
-        store.readCommit(v).actions.foreach {
-          case graft.log.LogAction.AddSegment(s) =>
-            referenced += s.path; s.coveragePath.foreach(referenced += _)
-            s.dvPath.foreach(referenced += _)
-          case graft.log.LogAction.AddCdcFile(p, _) => referenced += p
-          case _ => ()
-        }
-      }
-      v += 1
-    }
+    referenced ++= retainedFiles
     referenced ++= inGraceOrphanAdds
 
     var unreferenced = 0; var orphanSidecars = 0

@@ -3,15 +3,13 @@ package graft.maintain
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.coverage.Bitmap
 import graft.meta.{ColStats, PathNorm, SegmentMeta, StatVal}
-import graft.scan.StatsPruning
 import graft.table.{BucketDomainOverflowException, DeletionVectors, KeyBloom, RowTracking, TsTable, Txn}
 import graft.table.RowTracking.{RowCommitCol, RowIdCol, commitOfThisWrite}
 
@@ -401,25 +399,13 @@ private[maintain] object RowLevel {
     private def canonical(s: SegmentMeta): String =
       PathNorm.canonical(PathNorm.resolve(table.root, s.path))
 
-    /** Predicate candidates: resolve the user predicate against the table
-      * schema (stats evaluation needs real AttributeReferences; an
-      * unresolved Column evaluates Unknown everywhere — sound, but
-      * pruning-free), reject nondeterminism, and keep every live segment
-      * unless some conjunct is provably false for all its rows. AlwaysTrue
-      * is deliberately NOT used to drop whole files unread: the Tri algebra
-      * is necessary-condition-oriented under padded rewrites, so "all rows
+    /** Predicate candidates ([[TsTable.statsCandidates]]), after
+      * rejecting nondeterminism. AlwaysTrue is deliberately NOT used to
+      * drop whole files unread: the Tri algebra is
+      * necessary-condition-oriented under padded rewrites, so "all rows
       * must match" cannot be concluded from it. */
     private def prunePredicate(condition: Column): Seq[SegmentMeta] = {
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
-      val resolved: Seq[Expression] = {
-        import org.apache.spark.sql.graft.Bridge
-        table.scan(spark).where(condition).queryExecution.analyzed
-          .collectFirst { case f: LFilter => f.condition }
-          .map(conjuncts).getOrElse(Seq(Bridge.toExpr(condition)))
-      }
+      val (kept, resolved) = table.statsCandidates(spark, live, condition)
       // the predicate is evaluated in independent jobs and whole files drop
       // on the first evaluation's word — a nondeterministic condition
       // (rand(), now()-derived exprs via the CLI's --where) could change a
@@ -428,10 +414,7 @@ private[maintain] object RowLevel {
       require(resolved.forall(_.deterministic),
         "DELETE WHERE requires a deterministic predicate; " +
           s"got: ${resolved.filterNot(_.deterministic).mkString(", ")}")
-      // logicalStats: the predicate names are logical, the sidecar keys
-      // physical (identity unless a column was renamed)
-      live.filterNot(seg => resolved.exists(c =>
-        StatsPruning.eval(c, table.logicalStats(seg), seg.rowCount) == StatsPruning.AlwaysFalse))
+      kept
     }
 
     /** Per-file MATCH counts over the live rows of `candidates`, and the

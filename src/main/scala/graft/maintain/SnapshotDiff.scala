@@ -2,7 +2,6 @@ package graft.maintain
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.log.LogAction
 import graft.table.TsTable
 
 /** Snapshot diff — row-level changes between two table versions, keyed by
@@ -40,30 +39,18 @@ object SnapshotDiff {
            key: String): DataFrame = {
     require(fromVersion <= toVersion,
       s"diff range is backwards: v$fromVersion > v$toVersion")
-    table.refresh()
-    require(toVersion <= table.version,
-      s"cannot diff to v$toVersion: table is at v${table.version}")
-
     val postState = graft.log.TableState.rebuildAt(table.store, toVersion)
     val post = table.read(spark, postState)
     val cols = post.schema.fieldNames.toSeq
     require(cols.contains(key), s"diff key '$key' is not a table column: $cols")
 
     // ---- append-only fast path (log metadata decides; no data read) ----
-    // remove-free AND no added segment carries a deletion vector: a
-    // RESTORE whose diff happens to be adds-only can re-add DV'd segments
-    // in a remove-free commit, and reading those raw would report masked
-    // (deleted) rows as inserts — such ranges take the general join path.
-    // An empty range is append-only with nothing added.
-    val commits = ((fromVersion + 1) to toVersion).map(table.store.readCommit)
-    val appendOnly = commits.forall(_.actions.forall {
-      case _: LogAction.RemoveSegment => false
-      case LogAction.AddSegment(s) => s.dvPath.isEmpty
-      case _ => true
-    })
-    if (appendOnly)
-      return ChangeFeed.inserts(spark, table,
-        commits.flatMap(_.actions.collect { case LogAction.AddSegment(s) => s }),
+    // no commit in the range changes existing rows (Commit.changesRows),
+    // so the change set is the rows the range added. An empty range is
+    // append-only with nothing added.
+    val commits = table.store.commits(fromVersion + 1, toVersion)
+    if (!commits.exists(_.changesRows))
+      return ChangeFeed.inserts(spark, table, commits.flatMap(_.adds),
         postState.tableMeta.get, tracked = false)
 
     // ---- general path: one keyed full-outer join of the two states -----

@@ -114,6 +114,9 @@ final case class SegmentMeta(
   /** Rows a scan of this segment returns (physical minus DV'd). */
   def liveRowCount: Long = rowCount - dvCardinality
 
+  /** The files this segment references: data, coverage and DV sidecars. */
+  def files: Seq[String] = path +: (coveragePath.toSeq ++ dvPath.toSeq)
+
   def toJson: JsonNode = {
     val n = Json.obj()
     n.put("segment_id", segmentId)

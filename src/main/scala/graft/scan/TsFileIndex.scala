@@ -49,12 +49,6 @@ final class TsFileIndex(
     Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }
 
-  /** Files surviving pruning, for plan assertions in tests. */
-  def prunedFileCount(dataFilters: Seq[Expression]): Int =
-    files.count { case (seg, _) =>
-      dataFilters.forall(f => StatsPruning.eval(f, seg.stats, seg.rowCount) != StatsPruning.AlwaysFalse)
-    }
-
   override def inputFiles: Array[String] = files.map(_._2.getPath.toString).toArray
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = files.map(_._2.getLen).sum

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
-import graft.log.{LogAction, TableState}
+import graft.log.TableState
 import graft.maintain.ChangeFeed
 import graft.meta.SegmentMeta
 import graft.table.TsTable
@@ -163,13 +163,9 @@ final class TableStreamSource(
     * stamp. No commit qualifies (the instant is after every stamp) →
     * `latest` semantics: tail only commits after query start. */
   private def firstVersionAtOrAfter(tsMillis: Long): Long = {
-    var v = table.store.currentVersion()
-    var first = -1L
-    while (v >= 1 && java.nio.file.Files.exists(table.store.commitPath(v))) {
-      if (table.store.readCommit(v).timestampMillis >= tsMillis) first = v
-      v -= 1
-    }
-    if (first >= 0) first else table.store.currentVersion() + 1
+    val cur = table.store.currentVersion()
+    table.store.commits(table.store.earliestRetained(), cur)
+      .find(_.timestampMillis >= tsMillis).fold(cur + 1)(_.version)
   }
 
   /** None = initial-snapshot mode; Some(v) = tail commits >= v. */
@@ -238,18 +234,10 @@ final class TableStreamSource(
   /** The initial snapshot: the live segments at the first batch's version.
     * On restart the engine re-issues getBatch(None, v) for the
     * already-committed snapshot batch; if a manifest rewrite has since
-    * expired the commits below v the replay cannot be reconstructed — name
-    * the cause instead of a raw missing-file error. */
+    * expired the commits below v, the pin fails as expired (restart from a
+    * fresh checkpoint or a startingVersion that still exists). */
   private def snapshotAt(endV: Long): Seq[SegmentMeta] =
-    try TableState.rebuildAt(table.store, endV).liveSegments
-    catch { case e: Exception
-        if e.getMessage != null && e.getMessage.contains("missing commit file") =>
-      throw new IllegalStateException(
-        s"initial-snapshot version $endV of $rootPath has been expired by " +
-          "snapshot retention (a manifest rewrite dropped its commits); " +
-          "restart from a fresh checkpoint or pin a startingVersion that " +
-          "still exists", e)
-    }
+    TableState.rebuildAt(table.store, endV).liveSegments
 
   /** Change-feed batch: tail batches replay the writer-recorded changes of
     * (startV, endV]; the initial snapshot (no checkpointed offset, no
@@ -275,7 +263,7 @@ final class TableStreamSource(
         val segs = snapshotAt(endV)
         if (segs.isEmpty) Bridge.emptyStreamingBatch(spark, schema)
         else {
-          val ts = new java.sql.Timestamp(table.store.readCommit(endV).timestampMillis)
+          val ts = new java.sql.Timestamp(table.store.commits(endV, endV).head.timestampMillis)
           Bridge.streamingBatch(ChangeFeed.inserts(spark, table, segs, meta, cdfTracked)
             .withColumn(ChangeFeed.VersionCol, lit(endV))
             .withColumn(ChangeFeed.TimestampCol, lit(ts)), schema)
@@ -284,38 +272,19 @@ final class TableStreamSource(
   }
 
   /** Segments appended by commits fromV..toV, skipping (or refusing)
-    * data-change commits — any commit that removes a segment. They never
-    * carry deletion vectors (a DV attach is such a change commit). */
-  private def addedIn(fromV: Long, toV: Long): Seq[SegmentMeta] = {
-    // snapshot expiration may have dropped commits in the range while the
-    // stream was down; fail with the expired range spelled out instead of
-    // a raw missing-file error (mirrors the history() guard)
-    val expired = (fromV to toV).filterNot(v =>
-      java.nio.file.Files.exists(table.store.commitPath(v)))
-    if (expired.nonEmpty) throw new IllegalStateException(
-      s"offset versions ${expired.min}..${expired.max} of $rootPath have been " +
-        "expired by snapshot retention while the stream was down; restart from a " +
-        "fresh checkpoint (or a startingVersion that still exists) to resume")
-    (fromV to toV).flatMap { v =>
-      val c = table.store.readCommit(v)
-      // a data-change commit is one with removes OR one whose adds carry a
-      // deletion vector: a RESTORE whose diff is adds-only can re-add DV'd
-      // segments in a remove-free commit, and replaying those files raw
-      // would emit the masked (deleted) rows
-      val isChange = c.actions.exists {
-        case _: LogAction.RemoveSegment => true
-        case LogAction.AddSegment(s) => s.dvPath.isDefined
-        case _ => false
-      }
-      if (isChange) {
-        if (!skipChangeCommits) throw new IllegalStateException(
-          s"commit $v of $rootPath rewrites, deletes, or re-masks data; " +
-            "streaming from it would re-emit or lose rows. Set skipChangeCommits=true " +
-            "to stream appends only.")
-        Nil
-      } else c.actions.collect { case LogAction.AddSegment(seg) => seg }
+    * data-change commits ([[graft.log.Commit.changesRows]]). Offsets that
+    * snapshot expiration dropped while the stream was down fail as expired
+    * (restart from a fresh checkpoint or a startingVersion that still
+    * exists). */
+  private def addedIn(fromV: Long, toV: Long): Seq[SegmentMeta] =
+    table.store.commits(fromV, toV).flatMap { c =>
+      if (!c.changesRows) c.adds
+      else if (skipChangeCommits) Nil
+      else throw new IllegalStateException(
+        s"commit ${c.version} of $rootPath rewrites, deletes, or re-masks data; " +
+          "streaming from it would re-emit or lose rows. Set skipChangeCommits=true " +
+          "to stream appends only.")
     }
-  }
 
   // v1 Offset extends the v2 interface, so one decoder serves both paths
   private def version(o: OffsetV2): Long = o match {
@@ -446,10 +415,8 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
     val table = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("branch") => v }
       .map(main.branch).getOrElse(main)
     val pinned = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("versionAsOf") => v.toLong }
-      .orElse(parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("tag") =>
-        table.tags.getOrElse(v, throw new IllegalArgumentException(
-          s"no such tag: '$v' (have: ${table.tags.keys.toSeq.sorted.mkString(", ")})"))
-      })
+      .orElse(parameters.collectFirst {
+        case (k, v) if k.equalsIgnoreCase("tag") => table.tagVersion(v) })
       .orElse(parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("timestampAsOf") =>
         table.versionAsOf(v.toLongOption.getOrElse(java.time.Instant.parse(v).toEpochMilli))
       })

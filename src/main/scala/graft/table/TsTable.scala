@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.UUID
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -11,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import graft.coverage.{Bitmap, BucketMath}
 import graft.log._
 import graft.meta._
-import graft.scan.TsFileIndex
+import graft.scan.{StatsPruning, TsFileIndex}
 
 /** The table handle: transaction-log + replayed state + scan/append/
   * maintenance entry points. Spark-native rebuild of the reference's
@@ -166,36 +168,30 @@ final class TsTable private (val root: String, val store: LogStore) {
   def history(spark: SparkSession, limit: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     val cur = store.currentVersion()
-    val lo = math.max(1L, cur - limit + 1)
-    // snapshot expiration drops commit files at or below its checkpoint;
+    // snapshot expiration drops commit files below its checkpoint;
     // history covers what the log still holds
-    val rows = (lo to cur).reverseIterator
-      .filter(v => Files.exists(store.commitPath(v)))
-      .map { v =>
-      val c = store.readCommit(v)
-      val adds = c.actions.count(_.isInstanceOf[LogAction.AddSegment])
+    val rows = store.commits(math.max(store.earliestRetained(), cur - limit + 1), cur)
+      .reverseIterator.map { c =>
+      val adds = c.adds.size
       val removes = c.actions.count(_.isInstanceOf[LogAction.RemoveSegment])
       // a DV attach re-adds the SAME segment ids it removes (upsert); a
       // compaction/merge swap always adds fresh ids
       val removedIds = c.actions.collect { case LogAction.RemoveSegment(id) => id }.toSet
-      val dvUpsert = adds > 0 && removes > 0 && c.actions.forall {
-        case LogAction.AddSegment(s) => removedIds.contains(s.segmentId)
-        case _ => true
-      }
+      val dvUpsert = adds > 0 && removes > 0 && c.adds.forall(s => removedIds.contains(s.segmentId))
       val meta = c.actions.exists(_.isInstanceOf[LogAction.UpdateTableMeta])
       val cov = c.actions.exists(_.isInstanceOf[LogAction.UpdateTableCoverage])
       val txn = c.actions.collectFirst { case LogAction.SetTxn(app, b) => s"$app#$b" }
-      val rowsAdded = c.actions.collect { case LogAction.AddSegment(s) => s.rowCount }.sum
+      val rowsAdded = c.adds.map(_.rowCount).sum
       val op =
         if (dvUpsert) "DELETE (DV)"                       // merge-on-read delete
         else if (adds > 0 && removes > 0) "REWRITE"       // compaction/merge/delete swap
         else if (removes > 0) "DELETE"                    // metadata-only removal
         else if (adds > 0 && txn.isDefined) "STREAMING APPEND"
         else if (adds > 0) "APPEND"
-        else if (meta && v == 1L) "CREATE"
+        else if (meta && c.version == 1L) "CREATE"
         else if (cov) "COVERAGE"
         else "METADATA"
-      (v, new java.sql.Timestamp(c.timestampMillis), op, adds, removes, rowsAdded,
+      (c.version, new java.sql.Timestamp(c.timestampMillis), op, adds, removes, rowsAdded,
         meta, cov, txn.orNull)
     }.toSeq
     rows.toDF("version", "timestamp", "operation", "files_added", "files_removed",
@@ -776,24 +772,26 @@ final class TsTable private (val root: String, val store: LogStore) {
       val v = version.getOrElse(current)
       require(v >= 1 && v <= current, s"tag target v$v out of range [1, $current]")
       // the target must still be REPLAYABLE — commits/checkpoint AND data
-      // files: tagging a version expiration already reclaimed (even
-      // partially — a surviving checkpoint can outlive swept files) would
-      // wedge every later expire and fail scanAtTag far from the cause
-      val target =
-        try TableState.rebuildAt(store, v)
-        catch { case e: Exception =>
-          throw new IllegalArgumentException(
-            s"cannot tag v$v: its history was already reclaimed by snapshot " +
-              s"expiration (${e.getMessage})", e)
-        }
-      val missing = target.liveSegments
-        .flatMap(s => (Seq(s.path) ++ s.coveragePath.toSeq ++ s.dvPath.toSeq))
-        .filterNot(rel => Files.exists(Paths.get(stripScheme(s"$root/$rel"))))
-      require(missing.isEmpty,
-        s"cannot tag v$v: ${missing.size} referenced file(s) already reclaimed by " +
-          s"snapshot expiration, e.g. ${missing.take(3).mkString(", ")}")
+      // files: tagging a version expiration already reclaimed would wedge
+      // every later expire and fail scanAtTag far from the cause
+      pinWithFiles(v, s"tag v$v")
       Some(v)
     }, maxRetries)
+
+  /** The snapshot at `v`, refused unless every file it references is still
+    * on disk: a surviving checkpoint can outlive files the expire sweep
+    * reclaimed, and a tag or restore naming such a snapshot would fail far
+    * from the cause. Paths resolve like the reader's, so a shallow clone's
+    * external references are checked in the source's root. */
+  private[graft] def pinWithFiles(v: Long, what: String): TableState = {
+    val st = TableState.rebuildAt(store, v)
+    val missing = st.liveSegments.flatMap(_.files).filterNot(rel =>
+      Files.exists(Paths.get(stripScheme(PathNorm.resolve(root, rel)))))
+    require(missing.isEmpty,
+      s"cannot $what: ${missing.size} referenced file(s) already reclaimed by " +
+        s"snapshot expiration, e.g. ${missing.take(3).mkString(", ")}")
+    st
+  }
 
   /** Remove a tag (metadata-only commit). */
   def dropTag(name: String, maxRetries: Int = 3): Long =
@@ -801,13 +799,16 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   def tags: Map[String, Long] = cachedState.tableMeta.map(_.tags).getOrElse(Map.empty)
 
-  /** Time-travel scan by tag name. */
-  def scanAtTag(spark: SparkSession, name: String): DataFrame = {
+  /** The version tag `name` points at. */
+  private[graft] def tagVersion(name: String): Long = {
     refresh()
-    val v = tags.getOrElse(name,
-      throw new IllegalArgumentException(s"no such tag: '$name' (have: ${tags.keys.toSeq.sorted.mkString(", ")})"))
-    scanAt(spark, v)
+    tags.getOrElse(name, throw new IllegalArgumentException(
+      s"no such tag: '$name' (have: ${tags.keys.toSeq.sorted.mkString(", ")})"))
   }
+
+  /** Time-travel scan by tag name. */
+  def scanAtTag(spark: SparkSession, name: String): DataFrame =
+    scanAt(spark, tagVersion(name))
 
   /** Time travel by wall clock (`AS OF TIMESTAMP` — Delta/Iceberg analog):
     * the snapshot a reader at `tsMillis` would have seen, i.e. the LAST
@@ -823,22 +824,15 @@ final class TsTable private (val root: String, val store: LogStore) {
     refresh()
     val cur = store.currentVersion()
     require(cur >= 1, "table has no commits yet")
-    var best = -1L
-    var earliest = Long.MaxValue
-    var earliestV = -1L
-    var v = cur
-    while (v >= 1 && Files.exists(store.commitPath(v))) {
-      val ts = store.readCommit(v).timestampMillis
-      if (ts < earliest) { earliest = ts; earliestV = v }
-      if (ts <= tsMillis && v > best) best = v
-      v -= 1
+    val retained = store.commits(store.earliestRetained(), cur)
+    retained.filter(_.timestampMillis <= tsMillis).map(_.version).maxOption.getOrElse {
+      val earliest = retained.minBy(_.timestampMillis)
+      throw new IllegalArgumentException(
+        s"no snapshot at or before timestamp $tsMillis " +
+          s"(${java.time.Instant.ofEpochMilli(tsMillis)}): earliest retained commit is " +
+          s"v${earliest.version} at ${java.time.Instant.ofEpochMilli(earliest.timestampMillis)} " +
+          "— older history was reclaimed by snapshot expiration")
     }
-    if (best >= 0) best
-    else throw new IllegalArgumentException(
-      s"no snapshot at or before timestamp $tsMillis " +
-        s"(${java.time.Instant.ofEpochMilli(tsMillis)}): earliest retained commit is " +
-        s"v$earliestV at ${java.time.Instant.ofEpochMilli(earliest)} — older history was " +
-        "reclaimed by snapshot expiration")
   }
 
   /** Time-travel scan as of a wall-clock instant (epoch millis). */
@@ -874,13 +868,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     require(v >= 1 && v <= version, s"clone source version v$v out of range [1, $version]")
     require(graft.meta.PathNorm.canonical(destRoot) != graft.meta.PathNorm.canonical(root),
       "clone target must differ from the source root")
-    val st =
-      try TableState.rebuildAt(store, v)
-      catch { case e: Exception =>
-        throw new IllegalArgumentException(
-          s"cannot clone at v$v: its history was already reclaimed by snapshot " +
-            s"expiration (${e.getMessage})", e)
-      }
+    val st = TableState.rebuildAt(store, v)
     val destStore = LogStore(destRoot)
     if (destStore.currentVersion() != 0L)
       throw ConflictException(0L, destStore.currentVersion())
@@ -927,14 +915,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     refresh()
     val v = at.getOrElse(version)
     require(v >= 1 && v <= version, s"branch fork point v$v out of range [1, $version]")
-    // same replayability guard as tags: forking at a version expiration
-    // already reclaimed would wedge every later expire
-    try TableState.rebuildAt(store, v)
-    catch { case e: Exception =>
-      throw new IllegalArgumentException(
-        s"cannot branch at v$v: its history was already reclaimed by snapshot " +
-          s"expiration (${e.getMessage})", e)
-    }
+    // forking at a version expiration already reclaimed would wedge every
+    // later expire
+    TableState.rebuildAt(store, v)
     BranchLog.create(store.tableRoot, name, v)
     branch(name)
   }
@@ -975,32 +958,20 @@ final class TsTable private (val root: String, val store: LogStore) {
   def publishBranch(name: String, maxRetries: Int = 5, dropAfter: Boolean = true): Long = {
     requireMainHandle("publishBranch")
     val bl = BranchLog.open(store.tableRoot, name)
-    val head = bl.currentVersion()
-    val headState = TableState.rebuildAt(bl, head)
-    val baseState = TableState.rebuildAt(store, bl.base)
+    val head = TableState.rebuildAt(bl, bl.currentVersion())
     val committed = transact(maxRetries)(_.onCommit { st =>
+      // fast-forward only, so the snapshot committed over IS the fork state
       if (st.version != bl.base)
         throw new IllegalStateException(
           s"non-fast-forward publish: branch '$name' forked at v${bl.base} but main " +
             s"is at v${st.version}; re-branch from the new head and replay")
-      val b = Seq.newBuilder[LogAction]
-      baseState.segments.keysIterator.filterNot(headState.segments.contains)
-        .toSeq.sorted.foreach(id => b += LogAction.RemoveSegment(id))
-      headState.liveSegments.foreach { s =>
-        baseState.segments.get(s.segmentId) match {
-          case Some(old) if old == s => () // untouched on the branch
-          case Some(_) => b += LogAction.RemoveSegment(s.segmentId); b += LogAction.AddSegment(s)
-          case None => b += LogAction.AddSegment(s)
+      st.segmentDelta(head) ++
+        head.tableMeta.filterNot(st.tableMeta.contains).map(LogAction.UpdateTableMeta) ++
+        head.tableCoverage.filterNot(st.tableCoverage.contains)
+          .map(c => LogAction.UpdateTableCoverage(c.bucketSpec, c.coveragePath)) ++
+        head.txns.toSeq.sortBy(_._1).collect {
+          case (app, batch) if st.txns.get(app).forall(_ < batch) => LogAction.SetTxn(app, batch)
         }
-      }
-      headState.tableMeta.filterNot(baseState.tableMeta.contains)
-        .foreach(m => b += LogAction.UpdateTableMeta(m))
-      headState.tableCoverage.filterNot(baseState.tableCoverage.contains)
-        .foreach(c => b += LogAction.UpdateTableCoverage(c.bucketSpec, c.coveragePath))
-      headState.txns.toSeq.sortBy(_._1).foreach { case (app, batch) =>
-        if (baseState.txns.get(app).forall(_ < batch)) b += LogAction.SetTxn(app, batch)
-      }
-      b.result()
     }).version
     if (dropAfter) dropBranch(name)
     committed
@@ -1100,12 +1071,28 @@ final class TsTable private (val root: String, val store: LogStore) {
     else m.foldLeft(df) { case (d, (from, to)) =>
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
-  /** A segment's footer stats re-keyed to LOGICAL names, for evaluating
-    * user predicates (stats sidecars are keyed physical, like the files). */
-  private[graft] def logicalStats(seg: SegmentMeta): Map[String, graft.meta.ColStats] = {
+  /** The segments of `segs` a user predicate may match, by footer stats,
+    * with the predicate's conjuncts. The predicate is resolved against the
+    * table schema first (stats evaluation needs real attributes; an
+    * unresolved Column evaluates Unknown everywhere — sound, but
+    * pruning-free), and a segment drops only when some conjunct is
+    * provably false for all its rows, under its stats re-keyed to LOGICAL
+    * names (sidecars are keyed physical, like the files). */
+  private[graft] def statsCandidates(spark: SparkSession, segs: Seq[SegmentMeta],
+                                     cond: Column): (Seq[SegmentMeta], Seq[Expression]) = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val resolved = scan(spark).where(cond).queryExecution.analyzed
+      .collectFirst { case f: Filter => f.condition }
+      .map(conjuncts).getOrElse(Seq(org.apache.spark.sql.graft.Bridge.toExpr(cond)))
     val inv = colMap.map(_.swap)
-    if (inv.isEmpty) seg.stats
-    else seg.stats.map { case (k, v) => inv.getOrElse(k, k) -> v }
+    val kept = segs.filterNot { seg =>
+      val stats = seg.stats.map { case (k, v) => inv.getOrElse(k, k) -> v }
+      resolved.exists(StatsPruning.eval(_, stats, seg.rowCount) == StatsPruning.AlwaysFalse)
+    }
+    (kept, resolved)
   }
 
   /** Schema evolution: ADD COLUMN as a metadata-only commit (one

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.data.TokenGen
-import graft.maintain.{Compaction, DeleteWhere, Expire, MergeInto}
+import graft.maintain.{Compaction, DeleteWhere, Expire, MergeInto, Restore}
 import graft.meta._
 import graft.table.TsTable
 
@@ -110,5 +110,25 @@ class CloneSpec extends SparkFunSuite {
     Compaction.run(spark, t, targetFileSize = 64L * 1024 * 1024)
     Expire.expire(t, t.version, stagingGraceMs = 0L)
     intercept[IllegalArgumentException] { t.cloneTo(tmpDir("clone-x") + "/t", at = Some(2L)) }
+  }
+
+  test("tag, scanAtTag and restore on a clone see the cloned snapshot") {
+    val srcRoot = tmpDir("clone-tag-src"); val dstRoot = tmpDir("clone-tag-dst") + "/t"
+    val t = TsTable.create(srcRoot, tokenMeta)
+    t.append(TokenGen.generate(spark, 200, numFiles = 2))
+    // a DV sidecar, so the clone's v1 mixes its own (copied) sidecars with
+    // the source's data files referenced in place
+    DeleteWhere.deleteMor(spark, t, col("doc_id") < "doc-000000000020")
+    val want = t.scan(spark).orderBy("doc_id").collect().toSeq
+    assert(want.size == 180)
+
+    val c = t.cloneTo(dstRoot)
+    c.append(TokenGen.generate(spark, 30, idStart = 5000, numFiles = 1))
+    c.setTag("first", Some(1L))
+    assert(c.scanAtTag(spark, "first").orderBy("doc_id").collect().toSeq == want)
+    val r = Restore.restore(c, 1L)
+    assert(r.filesRemoved == 1 && r.filesAdded == 0 && r.rowsAfter == 180)
+    assert(c.scan(spark).orderBy("doc_id").collect().toSeq == want)
+    assert(t.scan(spark).orderBy("doc_id").collect().toSeq == want)
   }
 }

@@ -210,6 +210,23 @@ class MaintenanceSpec extends SparkFunSuite {
     assertNoLeak("cycle 3")
   }
 
+  test("expire below an earlier expire's retained window is refused before anything is swept") {
+    val root = tmpDir("expire-below")
+    val t = TsTable.create(root, tokenMeta("zorder"))
+    t.append(TokenGen.generate(spark, 100, numFiles = 1))
+    val w1 = t.version
+    Expire.expire(t, w1, stagingGraceMs = 0L)
+    t.append(TokenGen.generate(spark, 50, idStart = 1000, numFiles = 1))
+    t.append(TokenGen.generate(spark, 25, idStart = 2000, numFiles = 1))
+    // drops the commit between w1 and the new watermark; w1's own commit
+    // and checkpoint stay, so w1 still pins, but the log no longer holds
+    // the commit that added the 50 rows
+    Expire.expire(t, t.version, stagingGraceMs = 0L)
+    assert(t.scanAt(spark, w1).count() == 100)
+    intercept[graft.log.VersionExpiredException](Expire.expire(t, w1, stagingGraceMs = 0L))
+    assert(TsTable.open(root).scan(spark).count() == 175)
+  }
+
   test("merge into: updates applied, inserts added, untouched rows byte-identical, files pruned") {
     val root = tmpDir("merge")
     val t = TsTable.create(root, tokenMeta("zorder"))

@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import graft.data.TokenGen
-import graft.maintain.{Compaction, Expire}
+import graft.log.{Commit, VersionExpiredException}
+import graft.maintain.{ChangeFeed, Compaction, Expire, Restore, SnapshotDiff}
 import graft.meta._
 import graft.table.TsTable
 
@@ -89,5 +91,69 @@ class TimeTravelSpec extends SparkFunSuite {
     // the retained window still resolves (and scans)
     assert(t.versionAsOf(tsNew) == keepFrom)
     assert(t.scanAsOf(spark, System.currentTimeMillis()).count() == 250)
+  }
+
+  test("every pin and commit walk fails the same typed way on expired or out-of-range versions") {
+    val root = tmpDir("tt-expired")
+    val t = TsTable.create(root, tokenMeta)                                  // v1
+    t.append(TokenGen.generate(spark, 100, numFiles = 2))                     // v2
+    t.append(TokenGen.generate(spark, 50, idStart = 1000L, numFiles = 1))     // v3
+    t.setTag("old", Some(2L))                                                // v4
+    Compaction.run(spark, t, targetFileSize = 8L * 1024 * 1024)               // v5
+    t.append(TokenGen.generate(spark, 25, idStart = 2000L, numFiles = 1))     // v6
+    val cur = t.version
+    Expire.expire(t, cur, stagingGraceMs = 0L)
+    // the tag kept v2 readable through its checkpoint; losing that
+    // checkpoint leaves the tag pointing into reclaimed history
+    assert(t.scanAtTag(spark, "old").count() == 100)
+    Files.delete(t.store.checkpointPath(2L))
+
+    val e = intercept[VersionExpiredException](t.scanAt(spark, 2L))
+    assert((e.version, e.missing, e.earliest) == (2L, 1L, cur))
+    Seq("reclaimed", "expired by snapshot retention", "missing commit", "earliest retained commit")
+      .foreach(m => assert(e.getMessage.contains(m), e.getMessage))
+    def causes(x: Throwable): Seq[Throwable] = Option(x).toSeq.flatMap(c => c +: causes(c.getCause))
+    val entryPoints: Seq[(String, () => Any)] = Seq(
+      "scanAt" -> (() => t.scanAt(spark, 3L)),
+      "scanAtTag" -> (() => t.scanAtTag(spark, "old")),
+      "setTag" -> (() => t.setTag("late", Some(3L))),
+      "createBranch" -> (() => t.createBranch("late", Some(3L))),
+      "cloneTo" -> (() => t.cloneTo(tmpDir("tt-expired-clone") + "/c", Some(3L))),
+      "Restore.restore" -> (() => Restore.restore(t, 3L)),
+      "SnapshotDiff.diff" -> (() => SnapshotDiff.diff(spark, t, 2L, cur, "doc_id")),
+      "ChangeFeed.read" -> (() => ChangeFeed.read(spark, t, 2L, cur)),
+      "DSv1 versionAsOf" -> (() =>
+        spark.read.format("graft-table").option("versionAsOf", 3L).load(root)),
+      "stream tail" -> (() =>
+        spark.readStream.format("graft-table").option("startingVersion", 3L).load(root)
+          .writeStream.format("parquet").option("path", tmpDir("tt-expired-out"))
+          .option("checkpointLocation", tmpDir("tt-expired-ckpt"))
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()))
+    entryPoints.foreach { case (name, call) =>
+      val thrown = intercept[Exception](call())
+      assert(causes(thrown).exists(_.isInstanceOf[VersionExpiredException]),
+        s"$name: ${causes(thrown).map(_.toString)}")
+      if (name != "stream tail") assert(thrown.isInstanceOf[VersionExpiredException], name)
+      else assert(thrown.isInstanceOf[StreamingQueryException], name)
+    }
+    // a tag into reclaimed history blocks expire, which names it
+    val blocked = intercept[IllegalStateException](Expire.expire(t, cur))
+    assert(blocked.getMessage.contains("'old'") &&
+      blocked.getCause.isInstanceOf[VersionExpiredException])
+    assert(t.version == cur && t.scan(spark).count() == 175)
+
+    // out of range: neither below 0 nor above CURRENT, even when a crashed
+    // writer left an orphan commit file there
+    def outOfRange(v: Long): Unit = {
+      val r = intercept[IllegalArgumentException](t.scanAt(spark, v))
+      assert(!r.isInstanceOf[VersionExpiredException] && r.getMessage.contains("out of range"))
+    }
+    outOfRange(-1L)
+    outOfRange(cur + 1)
+    val orphan = t.store.commitPath(cur + 1)
+    Files.writeString(orphan, graft.meta.Json.write(Commit(cur + 1, cur, 0L, Nil).toJson))
+    outOfRange(cur + 1)
+    intercept[IllegalArgumentException](t.store.commits(cur, cur + 1))
+    Files.delete(orphan)
   }
 }

@@ -1,0 +1,57 @@
+#!/usr/bin/env bash
+# Single-path check over src/main: three engine concerns each have one owner.
+#  1. History: commit files are named and read only inside graft.log
+#     (`readCommit` / `commitPath` outside src/main/scala/graft/log/), apart
+#     from the allow-list below: Expire's two commit-file deletion passes
+#     (commits below the watermark, crashed writers' orphans above CURRENT)
+#     and SparkEntry's q69 stamp read. Everything else pins a version with
+#     `TableState.rebuildAt` and walks commits with `LogStore.commits`.
+#  2. Errors: no code branches on an exception's message (`getMessage` and
+#     `contains` on one line); failures are typed.
+#  3. Reads: committed segments become rows only in `TsTable.read`
+#     (`RowTracking.attach`, `liveRowFilter`, `baseRelationToDataFrame`).
+# Comment lines are ignored.
+# Usage: tools/single_path_check.sh [repo root]   (default: current directory)
+# Prints every offender as file:line:text; exits 1 if there is any, else 0.
+set -euo pipefail
+cd "${1:-.}"
+src=src/main/scala
+
+# grep -n over the sources, minus comment lines
+code() {
+  grep -rnE --include='*.scala' "$1" "$src" |
+    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*\*)' || true
+}
+
+allow_log=(
+  "^$src/graft/maintain/Expire\.scala:[0-9]+:.*deleteIfExists\(store\.commitPath\(v\)\)"
+  "^$src/graft/maintain/Expire\.scala:[0-9]+:.*store\.(commitPath|readCommit)\(ov\)"
+  "^$src/graft/SparkEntry\.scala:[0-9]+:.*store\.readCommit\(t\.store\.currentVersion\(\)\)"
+)
+allow_re=$(IFS='|'; echo "${allow_log[*]}")
+history=$(code '\b(readCommit|commitPath)\b' | grep -v "^$src/graft/log/" | grep -vE "$allow_re" || true)
+
+messages=$(code 'getMessage.*\.contains\(')
+
+tstable=$src/graft/table/TsTable.scala
+span=$(awk '/private\[graft\] def read\(spark: SparkSession, segs/ { s = NR }
+            s && !e && NR > s && /^  }$/ { e = NR }
+            END { print s + 0, e + 0 }' "$tstable")
+reads=$(code '(RowTracking\.attach|liveRowFilter|baseRelationToDataFrame)\(' |
+  grep -vE ':[0-9]+:.*def (attach|liveRowFilter)\(' |
+  awk -F: -v f="$tstable" -v s="${span% *}" -v e="${span#* }" \
+    '!($1 == f && $2 >= s && $2 <= e)' || true)
+
+status=0
+report() {
+  if [ -n "$2" ]; then
+    echo "$1:"
+    echo "$2" | sed 's/^/  /'
+    status=1
+  fi
+}
+report "commit files read or named outside graft.log" "$history"
+report "exception-message matching" "$messages"
+report "segment reads outside TsTable.read" "$reads"
+[ "$status" -eq 0 ] && echo "single-path check: ok"
+exit "$status"
