@@ -217,7 +217,7 @@ object Bench {
       record("expire", time(Expire.expire(t, t.version))._2)
       // the trial's table root is never read again — reclaim it NOW so
       // peak /tmp usage stays one-table-sized regardless of trial count
-      try deleteRecursively(java.nio.file.Paths.get(root))
+      try graft.meta.PathNorm.deleteTree(java.nio.file.Paths.get(root))
       catch { case _: Exception => () }
 
       // ---------- headline queries over the shared testdata -------------
@@ -261,17 +261,8 @@ object Bench {
     // reclaim the dataset-sized staged inputs so repeated runs don't fill
     // /tmp (trial table roots were deleted as each trial finished)
     Seq(stage, updStage, updMorStage).foreach { d =>
-      try deleteRecursively(java.nio.file.Paths.get(d))
+      try graft.meta.PathNorm.deleteTree(java.nio.file.Paths.get(d))
       catch { case _: Exception => () }
     }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.foreach(deleteRecursively) }
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -103,10 +103,13 @@ final case class Commit(version: Long, baseVersion: Long, timestampMillis: Long,
     case _ => false
   }
 
-  /** Every file this commit's adds reference: data, coverage and DV
-    * sidecars, and `_cdc/` change records. */
+  /** Every file this commit references: its adds' data, coverage and DV
+    * files, its `_cdc/` change records and its table coverage snapshot. */
   def files: Seq[String] =
-    adds.flatMap(_.files) ++ actions.collect { case LogAction.AddCdcFile(p, _) => p }
+    adds.flatMap(_.files) ++ actions.collect {
+      case LogAction.AddCdcFile(p, _) => p
+      case LogAction.UpdateTableCoverage(_, p) => p
+    }
 
   def toJson: JsonNode = {
     val n = Json.obj()

@@ -56,19 +56,9 @@ final class BranchLog private (tableRoot: Path, val branch: String)
     * branch's own (rare — expire is not run on branches) take over. */
   override def latestCheckpointVersion(maxVersion: Long): Option[Long] = {
     val fromMain = super.latestCheckpointVersion(math.min(maxVersion, base))
-    val fromBranch =
-      if (!Files.exists(branchDir)) None
-      else {
-        val it = Files.list(branchDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          it.iterator().asScala
-            .map(_.getFileName.toString)
-            .collect { case n if n.endsWith(".ckpt.json") => n.stripSuffix(".ckpt.json").toLong }
-            .filter(v => v > base && v <= maxVersion)
-            .maxOption
-        } finally it.close()
-      }
+    val fromBranch = logFiles(branchDir)
+      .collect { case f if f.checkpoint && f.version > base && f.version <= maxVersion => f.version }
+      .maxOption
     (fromMain.toSeq ++ fromBranch.toSeq).maxOption
   }
 }
@@ -125,12 +115,7 @@ object BranchLog {
   def drop(tableRoot: Path, name: String): Boolean = {
     val dir = dirFor(tableRoot, name)
     if (!Files.exists(dir)) return false
-    val s = Files.walk(dir)
-    val all = try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-    } finally s.close()
-    all.foreach(Files.deleteIfExists)
+    graft.meta.PathNorm.deleteTree(dir)
     true
   }
 }

@@ -34,7 +34,8 @@ final case class VersionExpiredException(version: Long, missing: Long, earliest:
   *      Conflict so a Delta-style rebase-retry loop can tell them apart;
   *   3. CURRENT updated via temp-file + atomic rename. Crash between 2 and 3
   *      leaves an orphan commit > CURRENT which readers ignore (same
-  *      documented recovery gap as log_store.rs:130-146).
+  *      documented recovery gap as log_store.rs:130-146); `dropOrphans`
+  *      reclaims it once it is older than expiration's grace period.
   *
   * All of this is DRIVER-side metadata IO — tiny JSON files. Data-plane work
   * is Spark jobs; at 1000 executors the log is never a shuffle participant.
@@ -155,20 +156,62 @@ class LogStore(val tableRoot: Path) {
   }
 
   /** Latest checkpoint at version ≤ maxVersion, if any. */
-  def latestCheckpointVersion(maxVersion: Long): Option[Long] = {
-    if (!Files.exists(logDir)) return None
-    val it = Files.list(logDir)
+  def latestCheckpointVersion(maxVersion: Long): Option[Long] =
+    logFiles(logDir).collect { case f if f.checkpoint && f.version <= maxVersion => f.version }.maxOption
+
+  /** Write `state` as the checkpoint of its version: atomic (temp file +
+    * rename, so replay never sees half a checkpoint) and idempotent (an
+    * existing checkpoint is kept). */
+  def checkpoint(state: TableState): Unit = {
+    val p = checkpointPath(state.version)
+    if (!Files.exists(p)) {
+      val tmp = Files.createTempFile(logDir, ".ckpt", ".tmp")
+      Files.writeString(tmp, Json.write(state.toJson))
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** Snapshot expiration's log half: drop every commit file below `below`
+    * and every checkpoint below it but those of `keepCheckpoints` (tags,
+    * branch forks). Lists the log, so nothing an earlier expire left is
+    * missed. Returns the commits dropped. */
+  def truncate(below: Long, keepCheckpoints: Set[Long]): Int =
+    logFiles(logDir).count { f =>
+      f.version < below && !(f.checkpoint && keepCheckpoints(f.version)) &&
+        Files.deleteIfExists(f.path) && !f.checkpoint
+    }
+
+  /** Commit files above CURRENT are crashed writers' orphans (step 2 done,
+    * step 3 never), and each one wedges every later commit of its version
+    * on CREATE_NEW. Drops those last modified before `cutoff` and returns
+    * how many, with the younger ones that parse: their writer may still be
+    * about to rename CURRENT. */
+  def dropOrphans(cutoff: Long): (Int, Seq[Commit]) = {
+    val current = currentVersion()
+    def mtime(p: Path) = scala.util.Try(Files.getLastModifiedTime(p).toMillis).getOrElse(Long.MaxValue)
+    val (old, young) = logFiles(logDir).filter(f => !f.checkpoint && f.version > current)
+      .partition(f => mtime(f.path) < cutoff)
+    (old.count(f => Files.deleteIfExists(f.path)),
+      young.flatMap(f => scala.util.Try(readCommit(f.version)).toOption))
+  }
+
+  /** Every commit and checkpoint file in `dir`. */
+  private[log] def logFiles(dir: Path): Seq[LogStore.LogFile] = {
+    if (!Files.isDirectory(dir)) return Nil
+    val it = Files.list(dir)
     try {
       import scala.jdk.CollectionConverters._
-      it.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.endsWith(".ckpt.json") => n.stripSuffix(".ckpt.json").toLong }
-        .filter(_ <= maxVersion)
-        .maxOption
+      it.iterator().asScala.toList.flatMap { p =>
+        LogStore.FileName.unapplySeq(p.getFileName.toString)
+          .map(g => LogStore.LogFile(g.head.toLong, g(1) != null, p))
+      }
     } finally it.close()
   }
 }
 
 object LogStore {
+  /** A commit (`NNNNNNNNNN.json`) or checkpoint (`NNNNNNNNNN.ckpt.json`) file. */
+  private[log] final case class LogFile(version: Long, checkpoint: Boolean, path: Path)
+  private val FileName = """(\d{10,})(\.ckpt)?\.json""".r
   def apply(root: String): LogStore = new LogStore(Paths.get(root))
 }

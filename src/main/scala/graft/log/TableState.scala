@@ -28,6 +28,11 @@ final case class TableState(
   def liveSegments: Seq[SegmentMeta] =
     segments.values.toSeq.sortBy(s => (s.path, s.segmentId))
 
+  /** Every file a reader of this snapshot may open: the segments' data,
+    * coverage and DV files, and the table coverage snapshot. */
+  def files: Seq[String] =
+    segments.values.toSeq.flatMap(_.files) ++ tableCoverage.map(_.coveragePath)
+
   /** The actions that turn this state's segments into `to`'s: a remove for
     * every segment absent from or different in `to`, then an add for every
     * segment of `to` absent from or different here (a changed segment, e.g.

@@ -1,9 +1,10 @@
 package graft.meta
 
 /** One canonical local-path normalization for the whole engine — the
-  * previous three near-copies (table staging, streaming appId, DELETE's
-  * per-file attribution) had already started to diverge on opaque URIs
-  * and URI-hostile characters. */
+  * previous near-copies (table staging, streaming appId, DELETE's
+  * per-file attribution, expiration, the staging heartbeat) had already
+  * started to diverge on opaque URIs and URI-hostile characters — and the
+  * one recursive local delete. */
 object PathNorm {
 
   /** Strip a file: scheme down to the local path; non-file URIs and
@@ -43,5 +44,16 @@ object PathNorm {
     else
       try java.nio.file.Paths.get(raw).toAbsolutePath.normalize.toString
       catch { case _: Exception => raw }
+  }
+
+  /** Delete a local file or directory tree, children first; a symbolic
+    * link is removed, never followed. */
+  def deleteTree(p: java.nio.file.Path): Unit = {
+    if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+      val s = java.nio.file.Files.list(p)
+      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.foreach(deleteTree) }
+      finally s.close()
+    }
+    java.nio.file.Files.deleteIfExists(p)
   }
 }

@@ -51,8 +51,7 @@ private[graft] final class StagingHeartbeat private (dir: Path, intervalMs: Long
 
 private[graft] object StagingHeartbeat {
   def start(stagingAbs: String, intervalMs: Long = 60000L): StagingHeartbeat = {
-    val dir = Paths.get(
-      if (stagingAbs.startsWith("file:")) new java.net.URI(stagingAbs).getPath else stagingAbs)
+    val dir = Paths.get(graft.meta.PathNorm.stripFileScheme(stagingAbs))
     // Do NOT pre-create the dir: before the committer creates it there is
     // nothing for Expire to reclaim, and pre-creating it (plus the first
     // .heartbeat touch) would force df.write mode("overwrite") to clear a

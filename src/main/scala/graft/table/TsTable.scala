@@ -514,7 +514,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * (storage/table_location.rs:51-130), then runs the standard append
     * pipeline on its rows. */
   def appendParquetFile(spark: SparkSession, path: String): Long = {
-    val src = Paths.get(stripScheme(path))
+    val src = Paths.get(PathNorm.stripFileScheme(path))
     val size = Files.size(src)
     if (size < 8L) throw SchemaMismatchException(s"'$path' too small to be parquet")
     val ch = java.nio.channels.FileChannel.open(src)
@@ -529,11 +529,11 @@ final class TsTable private (val root: String, val store: LogStore) {
     // decimals, nullable map keys) — BEFORE the copy, so a rejected file
     // never lands in data/
     LogicalSchema.validateFooterSchema(spark.sparkContext.hadoopConfiguration, src.toString)
-    val inRoot = src.toAbsolutePath.startsWith(Paths.get(stripScheme(root)).toAbsolutePath)
+    val inRoot = src.toAbsolutePath.startsWith(Paths.get(PathNorm.stripFileScheme(root)).toAbsolutePath)
     val local =
       if (inRoot) src
       else {
-        val dst = Paths.get(stripScheme(root), "data", src.getFileName.toString)
+        val dst = Paths.get(PathNorm.stripFileScheme(root), "data", src.getFileName.toString)
         Files.createDirectories(dst.getParent)
         try Files.copy(src, dst)
         catch { case _: java.nio.file.FileAlreadyExistsException =>
@@ -629,7 +629,7 @@ final class TsTable private (val root: String, val store: LogStore) {
         val rel = dest(f"$commitId-$i%05d.parquet")
         tx.register(rel)
         Files.createDirectories(localPath(rel).getParent)
-        Files.move(Paths.get(stripScheme(src)), localPath(rel))
+        Files.move(Paths.get(PathNorm.stripFileScheme(src)), localPath(rel))
         (src, rel, fs)
       }
       (moved, result)
@@ -638,7 +638,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       // the recursive delete could recreate .heartbeat mid-walk. A tree
       // that will not delete (failed write) is left to Expire
       heartbeat.stop()
-      try deleteRecursively(Paths.get(stripScheme(stagingAbs)))
+      try PathNorm.deleteTree(Paths.get(PathNorm.stripFileScheme(stagingAbs)))
       catch { case _: java.io.IOException => () }
     }
   }
@@ -786,7 +786,7 @@ final class TsTable private (val root: String, val store: LogStore) {
   private[graft] def pinWithFiles(v: Long, what: String): TableState = {
     val st = TableState.rebuildAt(store, v)
     val missing = st.liveSegments.flatMap(_.files).filterNot(rel =>
-      Files.exists(Paths.get(stripScheme(PathNorm.resolve(root, rel)))))
+      Files.exists(localPath(rel)))
     require(missing.isEmpty,
       s"cannot $what: ${missing.size} referenced file(s) already reclaimed by " +
         s"snapshot expiration, e.g. ${missing.take(3).mkString(", ")}")
@@ -877,8 +877,8 @@ final class TsTable private (val root: String, val store: LogStore) {
     // so the clone's MOR reads and coverage queries never reach back into
     // the source's mutable sidecar namespace
     def copySidecar(rel: String): Unit = {
-      val src = Paths.get(stripScheme(s"$root/$rel"))
-      val dst = Paths.get(stripScheme(s"$destRoot/$rel"))
+      val src = Paths.get(PathNorm.stripFileScheme(s"$root/$rel"))
+      val dst = Paths.get(PathNorm.stripFileScheme(s"$destRoot/$rel"))
       Files.createDirectories(dst.getParent)
       if (Files.exists(src))
         Files.copy(src, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -1025,29 +1025,14 @@ final class TsTable private (val root: String, val store: LogStore) {
     val checks = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
     if (checks.isEmpty || files.isEmpty) return
     import org.apache.spark.sql.functions.{expr, lit, not}
+    // the staged files as stats-only segments; a file is cleared when
+    // NOT check is provably false over its stats
+    val staged = files.map { case (p, stats, rc) => SegmentMeta(p, p, "parquet", rc, None, stats, None) }
     checks.foreach { case (name, sql) =>
       val cond = expr(sql)
-      val resolved: Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-        try scan(spark).where(cond).queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        } catch { case _: Exception => None } // schema not adopted yet → row-check all
-      // staged files (and their footer stats) carry PHYSICAL names; the
-      // check predicate is LOGICAL — re-key stats and alias the row scan
-      // (both identity for never-renamed tables)
-      val inv = colMap.map(_.swap)
-      def logStats(stats: Map[String, graft.meta.ColStats]) =
-        if (inv.isEmpty) stats else stats.map { case (k, v) => inv.getOrElse(k, k) -> v }
-      val suspects = files.filter { case (_, stats, rc) =>
-        resolved match {
-          case Some(c) =>
-            graft.scan.StatsPruning.eval(
-              org.apache.spark.sql.catalyst.expressions.Not(c), logStats(stats), rc) !=
-              graft.scan.StatsPruning.AlwaysFalse
-          case None => true
-        }
-      }
+      val suspects = statsCandidates(spark, staged, not(cond))._1
       if (suspects.nonEmpty) {
-        val bad = toLogical(spark.read.parquet(suspects.map(_._1): _*))
+        val bad = toLogical(spark.read.parquet(suspects.map(_.path): _*))
           .where(not(cond) === lit(true)).count()
         if (bad > 0) throw CheckViolationException(name, sql, bad)
       }
@@ -1084,8 +1069,9 @@ final class TsTable private (val root: String, val store: LogStore) {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
-    val resolved = scan(spark).where(cond).queryExecution.analyzed
-      .collectFirst { case f: Filter => f.condition }
+    val snapshot = scan(spark)
+    val resolved = (if (snapshot.columns.isEmpty) None // no schema adopted yet
+      else snapshot.where(cond).queryExecution.analyzed.collectFirst { case f: Filter => f.condition })
       .map(conjuncts).getOrElse(Seq(org.apache.spark.sql.graft.Bridge.toExpr(cond)))
     val inv = colMap.map(_.swap)
     val kept = segs.filterNot { seg =>
@@ -1312,7 +1298,8 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   /** Write `cov` as the coverage snapshot of the commit after `st` and
-    * return its pointer action. Orphans from lost OCC races are benign. */
+    * return its pointer action. Orphans from lost OCC races age out
+    * through expire's sweep. */
   private def writeTableCoverage(st: TableState, cov: Bitmap): LogAction = {
     val covRel = s"_coverage/table/${st.version + 1}-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
     writeBytes(s"$root/$covRel", cov.serialize())
@@ -1423,7 +1410,7 @@ final class TsTable private (val root: String, val store: LogStore) {
         if (ptr.bucketSpec != spec.bucket.spec)
           throw CorruptLogException(
             s"coverage pointer bucket '${ptr.bucketSpec}' != table bucket '${spec.bucket.spec}'")
-        val p = Paths.get(stripScheme(s"$root/${ptr.coveragePath}"))
+        val p = Paths.get(PathNorm.stripFileScheme(s"$root/${ptr.coveragePath}"))
         if (Files.exists(p)) Bitmap.deserialize(Files.readAllBytes(p))
         else recoverCoverage(st, heal)
       case None =>
@@ -1467,7 +1454,7 @@ final class TsTable private (val root: String, val store: LogStore) {
   // --------------------------------------------------------------- utils
 
   private def listParquet(dir: String): Seq[String] = {
-    val d = Paths.get(stripScheme(dir))
+    val d = Paths.get(PathNorm.stripFileScheme(dir))
     import scala.jdk.CollectionConverters._
     val s = Files.list(d)
     try s.iterator().asScala
@@ -1477,17 +1464,15 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   private[graft] def writeBytes(path: String, bytes: Array[Byte]): Unit = {
-    val p = Paths.get(stripScheme(path))
+    val p = Paths.get(PathNorm.stripFileScheme(path))
     Files.createDirectories(p.getParent)
     Files.write(p, bytes)
   }
 
-  /** A root-relative table file as a local path. */
-  private[table] def localPath(rel: String): java.nio.file.Path =
-    Paths.get(stripScheme(s"$root/$rel"))
-
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
+  /** A manifest path as a local path: root-relative, or absolute (a
+    * shallow clone's external reference) as is. */
+  private[graft] def localPath(rel: String): java.nio.file.Path =
+    Paths.get(PathNorm.stripFileScheme(PathNorm.resolve(root, rel)))
 
   /** Canonical local path for matching input_file_name() URIs against
     * staging paths: input_file_name yields "file:///abs/x" while staging
@@ -1496,15 +1481,6 @@ final class TsTable private (val root: String, val store: LogStore) {
     * without coverage sidecars and wedging later appends. PathNorm
     * absolutizes + normalizes both producers. */
   private def normalizeFileUri(p: String): String = graft.meta.PathNorm.canonical(p)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.foreach(deleteRecursively) }
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
 }
 
 object TsTable {

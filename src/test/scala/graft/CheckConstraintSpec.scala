@@ -36,6 +36,27 @@ class CheckConstraintSpec extends SparkFunSuite {
     assert(t.scan(spark).count() == 155)
   }
 
+  test("a check declared before any schema is adopted row-checks every staged file") {
+    val t = TsTable.create(tmpDir("chk-noschema"), tokenMeta)
+    t.addCheck(spark, "tok_bounds", "n_tok >= 64 AND n_tok <= 2048")
+    // stats that clear the check once it resolves against a schema
+    val clean = SegmentMeta("s", "data/s.parquet", "parquet", 10L, None,
+      Map("n_tok" -> ColStats(Some(StatVal.L(100L)), Some(StatVal.L(200L)), 0L)), None)
+    val violated = not(expr("n_tok >= 64 AND n_tok <= 2048"))
+    // nothing to resolve against yet: no file is cleared on stats
+    assert(t.statsCandidates(spark, Seq(clean), violated)._1 == Seq(clean))
+
+    val v0 = t.version
+    val e = intercept[CheckViolationException] {
+      t.append(TokenGen.generate(spark, 10, numFiles = 2).withColumn("n_tok", lit(999999)))
+    }
+    assert(e.violations == 10 && t.version == v0)
+    t.append(TokenGen.generate(spark, 50, numFiles = 2))
+    assert(t.scan(spark).count() == 50)
+    // with the schema adopted, the same stats clear the file
+    assert(t.statsCandidates(spark, Seq(clean), violated)._1.isEmpty)
+  }
+
   test("addCheck validates existing data; dropCheck re-opens the gate") {
     val t = TsTable.create(tmpDir("chk2"), tokenMeta)
     t.append(TokenGen.generate(spark, 100, numFiles = 1))

@@ -183,11 +183,18 @@ class MaintenanceSpec extends SparkFunSuite {
     assert(r1.dataFilesDeleted == 4)
 
     // no-leak invariant: after an expire at CURRENT, data/ holds exactly
-    // the live segments — anything extra leaked past the orphan scan
+    // the live segments — anything extra leaked past the sweep — and the
+    // log holds only CURRENT and the watermark's commit and checkpoint
     def assertNoLeak(tag: String): Unit = {
       val live = TsTable.open(root).state.liveSegments.size
       val onDisk = java.nio.file.Files.list(java.nio.file.Paths.get(root, "data")).count()
       assert(onDisk == live, s"$tag: $onDisk files on disk vs $live live segments (leak)")
+      val v = TsTable.open(root).version
+      val log = java.nio.file.Files.list(java.nio.file.Paths.get(root, "_timeseries_log"))
+      val names =
+        try { import scala.jdk.CollectionConverters._; log.iterator().asScala.map(_.getFileName.toString).toSet }
+        finally log.close()
+      assert(names == Set("CURRENT", f"$v%010d.json", f"$v%010d.ckpt.json"), s"$tag: log leaked $names")
     }
     assertNoLeak("cycle 1")
 
@@ -218,11 +225,10 @@ class MaintenanceSpec extends SparkFunSuite {
     Expire.expire(t, w1, stagingGraceMs = 0L)
     t.append(TokenGen.generate(spark, 50, idStart = 1000, numFiles = 1))
     t.append(TokenGen.generate(spark, 25, idStart = 2000, numFiles = 1))
-    // drops the commit between w1 and the new watermark; w1's own commit
-    // and checkpoint stay, so w1 still pins, but the log no longer holds
-    // the commit that added the 50 rows
+    // drops every commit and checkpoint below the new watermark, w1's
+    // included: w1 no longer pins, and an expire at it is refused
     Expire.expire(t, t.version, stagingGraceMs = 0L)
-    assert(t.scanAt(spark, w1).count() == 100)
+    intercept[graft.log.VersionExpiredException](t.scanAt(spark, w1))
     intercept[graft.log.VersionExpiredException](Expire.expire(t, w1, stagingGraceMs = 0L))
     assert(TsTable.open(root).scan(spark).count() == 175)
   }

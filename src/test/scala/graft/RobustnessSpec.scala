@@ -131,6 +131,34 @@ class RobustnessSpec extends SparkFunSuite {
     assert(t.coverageRatioForRange(0L, 240L * 1000000L) == 0.75)
   }
 
+  test("expire keeps only the table coverage snapshots retained versions reference") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = tmpDir("cov-expire")
+    val t = TsTable.create(root, TableMeta("p",
+      TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1m"), None)), None, None))
+    // every commit writes a fresh snapshot; four appends leave four
+    for (s <- Seq(1L, 61L, 180L, 300L))
+      t.append(Seq(s).toDF("s").select(col("s").cast("timestamp").as("ts")))
+    def snapshots: Set[String] = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(root, "_coverage", "table"))
+      try { import scala.jdk.CollectionConverters._; l.iterator().asScala.map(_.getFileName.toString).toSet }
+      finally l.close()
+    }
+    assert(snapshots.size == 4)
+    val ratio = t.coverageRatioForRange(0L, 360L * 1000000L)
+    def pointer(v: Long): Set[String] = TableState.rebuildAt(t.store, v).tableCoverage
+      .map(p => java.nio.file.Paths.get(p.coveragePath).getFileName.toString).toSet
+    val keep = t.version - 1
+    val referenced = pointer(keep) ++ pointer(t.version)
+    Expire.expire(t, keep, stagingGraceMs = 0L)
+    assert(snapshots == referenced, s"kept $snapshots, retained versions reference $referenced")
+    assert(TsTable.open(root).coverageRatioForRange(0L, 360L * 1000000L) == ratio)
+    Expire.expire(t, t.version, stagingGraceMs = 0L)
+    assert(snapshots == pointer(t.version) && snapshots.size == 1)
+    assert(TsTable.open(root).coverageRatioForRange(0L, 360L * 1000000L) == ratio)
+  }
+
   test("concurrent appenders: OCC rebase lands every append exactly once") {
     val root = tmpDir("occ-stress")
     TsTable.create(root, tokenMeta())
@@ -296,6 +324,11 @@ class RobustnessSpec extends SparkFunSuite {
           .map(_.stripPrefix("_coverage/segments/")).toSet
         assert(listNames("_coverage/segments") == liveCov ++ freshSidecars,
           s"seed=$seed round=$round: sidecar debris diverged")
+        // the log holds CURRENT and the watermark's commit and checkpoint:
+        // nothing below it, no orphan commit above it
+        assert(listNames("_timeseries_log") ==
+          Set("CURRENT", f"${t.version}%010d.json", f"${t.version}%010d.ckpt.json"),
+          s"seed=$seed round=$round: log debris ${listNames("_timeseries_log")}")
 
         // a previously-live writer dies eventually: age one fresh artifact
         if (rnd.nextBoolean()) {

@@ -220,6 +220,26 @@ class UpdateRestoreDiffSpec extends SparkFunSuite {
     assert(t.version == v0)
   }
 
+  test("restore re-adding compacted-away segments survives an expire below it") {
+    // append -> compact -> restore to the append: the current snapshot
+    // references the pre-compaction files again, which a commit at or
+    // below the watermark removed; liveness is decided per path over every
+    // retained snapshot, so none of them may be swept
+    val t = build(200, files = 2)
+    val appended = t.version
+    val want = docIds(t.scan(spark))
+    Compaction.run(spark, t, targetFileSize = 8L * 1024 * 1024)
+    val compacted = t.version
+    assert(compacted > appended, "compaction must have committed a rewrite")
+    Restore.restore(t, appended)
+    Thread.sleep(10) // grace-0 sweep uses strict mtime < now
+    Expire.expire(t, compacted, stagingGraceMs = 0L)
+    assert(docIds(TsTable.open(t.root).scan(spark)) == want)
+    assert(TsTable.open(t.root).scan(spark).count() == 200)
+    // the compacted snapshot is retained too
+    assert(t.scanAt(spark, compacted).count() == 200)
+  }
+
   test("restore: refuses an expired target (history compacted away, or files missing)") {
     // history reclaimed: expire drops the commits below its watermark
     // (8 MB target so the small files actually bin-pack into a rewrite)

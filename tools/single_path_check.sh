@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
 # Single-path check over src/main: three engine concerns each have one owner.
-#  1. History: commit files are named and read only inside graft.log
-#     (`readCommit` / `commitPath` outside src/main/scala/graft/log/), apart
-#     from the allow-list below: Expire's two commit-file deletion passes
-#     (commits below the watermark, crashed writers' orphans above CURRENT)
-#     and SparkEntry's q69 stamp read. Everything else pins a version with
-#     `TableState.rebuildAt` and walks commits with `LogStore.commits`.
+#  1. History: commit and checkpoint files are named and read only inside
+#     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
+#     src/main/scala/graft/log/), apart from the allow-list below:
+#     SparkEntry's q69 stamp read. Everything else pins a version with
+#     `TableState.rebuildAt`, walks commits with `LogStore.commits`, and
+#     writes or drops log files through `LogStore.checkpoint`, `truncate`
+#     and `dropOrphans`.
 #  2. Errors: no code branches on an exception's message (`getMessage` and
 #     `contains` on one line); failures are typed.
 #  3. Reads: committed segments become rows only in `TsTable.read`
@@ -24,12 +25,10 @@ code() {
 }
 
 allow_log=(
-  "^$src/graft/maintain/Expire\.scala:[0-9]+:.*deleteIfExists\(store\.commitPath\(v\)\)"
-  "^$src/graft/maintain/Expire\.scala:[0-9]+:.*store\.(commitPath|readCommit)\(ov\)"
   "^$src/graft/SparkEntry\.scala:[0-9]+:.*store\.readCommit\(t\.store\.currentVersion\(\)\)"
 )
 allow_re=$(IFS='|'; echo "${allow_log[*]}")
-history=$(code '\b(readCommit|commitPath)\b' | grep -v "^$src/graft/log/" | grep -vE "$allow_re" || true)
+history=$(code '\b(readCommit|commitPath|checkpointPath)\b' | grep -v "^$src/graft/log/" | grep -vE "$allow_re" || true)
 
 messages=$(code 'getMessage.*\.contains\(')
 
@@ -50,7 +49,7 @@ report() {
     status=1
   fi
 }
-report "commit files read or named outside graft.log" "$history"
+report "log files read or named outside graft.log" "$history"
 report "exception-message matching" "$messages"
 report "segment reads outside TsTable.read" "$reads"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
