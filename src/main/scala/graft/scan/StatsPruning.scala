@@ -284,6 +284,17 @@ object StatsPruning {
         bucketCmp(col, exact = true, aligned = true, lo, hi, 0L)
       } catch { case _: ArithmeticException => Unknown }
 
+    /** unix_timestamp / to_unix_timestamp of a TIMESTAMP divide micros by
+      * 10⁶ truncating toward zero (unlike the floorDiv unix_* triplet), so
+      * a pre-epoch k's bucket is (kU − U, kU] and k = 0 spans (−U, U). */
+    def truncEpochCmp(col: String, kv: Long, unit: Long): Tri =
+      try {
+        val kU = Math.multiplyExact(kv, unit)
+        val lo = if (kv > 0) kU else Math.addExact(kU, 1L - unit)
+        val hi = if (kv >= 0) Math.addExact(kU, unit) else Math.addExact(kU, 1L)
+        bucketCmp(col, exact = true, aligned = true, lo, hi, 0L)
+      } catch { case _: ArithmeticException => Unknown }
+
     /** (ts + s) OP k with s ∈ [sLo, sHi]: exact rewrite when the shift is
       * fixed, else the weakest sound ts-bound per op. */
     def shiftedCmp(col: String, kv: Long, sLo: Long, sHi: Long): Tri =
@@ -323,10 +334,6 @@ object StatsPruning {
       case UnixMicros(inner) => tsColumnOf(inner).map((_, 1L))
       case UnixMillis(inner) => tsColumnOf(inner).map((_, 1000L))
       case UnixSeconds(inner) => tsColumnOf(inner).map((_, 1000000L))
-      case UnixTimestamp(inner, _, tz, _) if epochZoneOk(inner, tz) =>
-        tsColumnOf(inner).map((_, 1000000L))
-      case ToUnixTimestamp(inner, _, tz, _) if epochZoneOk(inner, tz) =>
-        tsColumnOf(inner).map((_, 1000000L))
       case _ => None
     }
 
@@ -439,6 +446,10 @@ object StatsPruning {
         val hiD = (kv + 2.0) * sD * u
         if (!java.lang.Double.isFinite(loD) || !java.lang.Double.isFinite(hiD) ||
             loD < -4.6e18 || hiD > 4.6e18) Unknown
+        // f > k needs ts ≥ (k+1)·S: the widened bucket's end (k+2)·S would
+        // be stricter than that, so keep one bucket of slack below it
+        else if (opIsGt) necessaryOnly(
+          tsBound(col, GreaterThanOrEqual, math.floor(loD + sD * u).toLong))
         else bucketCmp(col, exact = false, aligned = false,
           math.floor(loD).toLong, math.ceil(hiD).toLong, 0L)
 
@@ -487,10 +498,10 @@ object StatsPruning {
         epochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
       case UnixTimestamp(inner, _, tz, _) if tsColumnOf(inner).isDefined &&
           epochZoneOk(inner, tz) && longK.isDefined =>
-        epochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
+        truncEpochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
       case ToUnixTimestamp(inner, _, tz, _) if tsColumnOf(inner).isDefined &&
           epochZoneOk(inner, tz) && longK.isDefined =>
-        epochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
+        truncEpochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
 
       // ts ± INTERVAL: (ts + s) OP k with the shift bounded s ∈ [sLo, sHi].
       // Fixed-duration intervals have sLo == sHi (exact rewrite); calendar
@@ -517,7 +528,10 @@ object StatsPruning {
             Some((mLo - monthPad + d - dayPad + ci.microseconds,
                   mHi + monthPad + d + dayPad + ci.microseconds))
           case l: java.lang.Long if ivType.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType] =>
-            Some((l.longValue(), l.longValue())) // exact duration, zone-free
+            // Spark adds a day-time interval's whole days as calendar days
+            // in the session zone; only the sub-day rest is a fixed duration
+            val dPad = if (l.longValue() / MicrosPerDay == 0L) 0L else zPad
+            Some((l.longValue() - dPad, l.longValue() + dPad))
           case _ => None
         }
         boundsOpt match {

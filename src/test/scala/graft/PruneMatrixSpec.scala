@@ -304,6 +304,111 @@ class PruneMatrixSpec extends SparkFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("transform pruning is sound against Catalyst's own eval (fixed seeds, four zones)") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.scan.StatsPruning
+    graft.functions.GraftFunctions.register(spark)
+    scan.count() // build the table under UTC
+    val transforms = Seq(
+      "date_trunc('hour', ts)", "date_trunc('day', ts)", "date_trunc('week', ts)",
+      "date_trunc('month', ts)", "date_trunc('quarter', ts)", "to_date(ts)",
+      "CAST(ts AS TIMESTAMP_NTZ)", "ts + INTERVAL 2 HOURS", "ts - INTERVAL 3 DAYS",
+      "ts + INTERVAL 1 MONTH", "ts + make_interval(0, 1, 0, 3)", "ts + make_interval(0, 0, 0, 1, 2)",
+      "unix_timestamp(ts)", "unix_seconds(ts)", "unix_millis(ts)", "unix_micros(ts)",
+      "unix_micros(ts) div 300000000", "floor(unix_micros(ts) / 300000000)",
+      "window(ts, '5 minutes').start", "window(ts, '1 hour', '1 hour', '7 minutes').start",
+      "window(ts, '5 minutes').end",
+      "date_bin(INTERVAL 5 MINUTES, ts, TIMESTAMP '1970-01-01 00:02:00')",
+      "date_bin(INTERVAL 1 DAY, ts, TIMESTAMP '2000-01-01 00:00:00')")
+    val ops: Seq[(Expression, Expression) => Expression] = Seq(EqualTo, LessThan,
+      LessThanOrEqual, GreaterThan, GreaterThanOrEqual, EqualNullSafe, (l, r) => Not(EqualTo(l, r)))
+    val zones = Seq("UTC", "+05:30", "America/New_York", "Pacific/Apia")
+
+    // one optimized `f(ts) = k` per (zone, transform): the conjuncts the
+    // file index sees, with the comparison split into its two sides. The
+    // optimizer would rewrite `to_date(ts) = k` into a plain ts range, so
+    // that rule is off while the predicates are built.
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val prevZone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.UnwrapCastInBinaryComparison")
+    val preds = try zones.flatMap { z =>
+      spark.conf.set("spark.sql.session.timeZone", z)
+      transforms.map { f =>
+        val k = scan.selectExpr(s"$f AS v").schema("v").dataType.sql match {
+          case "DATE" => "DATE '2000-01-01'"
+          case "TIMESTAMP" => "TIMESTAMP '2000-01-01 00:00:00'"
+          case "TIMESTAMP_NTZ" => "TIMESTAMP_NTZ '2000-01-01 00:00:00'"
+          case _ => "946684800"
+        }
+        val cond = scan.where(expr(s"$f = $k")).queryExecution.optimizedPlan
+          .collectFirst { case p: Filter => p.condition }.get
+        val (cmp, rest) = conjuncts(cond).partition(_.isInstanceOf[EqualTo])
+        cmp match {
+          case Seq(EqualTo(fe, lit: Literal)) => (z, f, fe, lit.dataType, rest)
+          case _ => fail(s"$f in $z optimized to ${cond.sql}")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", prevZone)
+      spark.conf.unset("spark.sql.optimizer.excludedRules")
+    }
+
+    val Hour = 3600L * 1000000L
+    val Day = 24 * Hour
+    val anchors = Seq("2024-03-10T07:00:00Z", "2024-11-03T06:00:00Z", "2011-12-30T10:00:00Z",
+      "1970-01-01T00:00:00Z", "2024-02-29T00:00:00Z", "2023-12-31T23:00:00Z")
+      .map(s => java.time.Instant.parse(s).getEpochSecond * 1000000L)
+    val minGen = Gen.oneOf(Gen.choose(-20L * 365 * Day, 60L * 365 * Day),
+      Gen.oneOf(anchors).flatMap(a => Gen.choose(a - 3 * Day, a + 3 * Day)))
+    val widthGen = Gen.choose(0, 11).flatMap(e => Gen.choose(0L, math.pow(10, e).toLong * 3))
+    val fileGen = for {
+      mn <- minGen; w <- widthGen
+      fracs <- Gen.listOfN(12, Gen.choose(0.0, 1.0))
+      kFrac <- Gen.choose(-0.5, 1.5); kShift <- Gen.oneOf(0L, 0L, Hour, -Hour, Day, -Day)
+      nudge <- Gen.oneOf(0, 0, 0, 1, -1)
+    } yield (mn, w, fracs, kFrac, kShift, nudge)
+
+    def at(e: Expression, v: Long): Any = e.transform {
+      case a: AttributeReference if a.name == "ts" => Literal(v, a.dataType)
+    }.eval()
+    val seeds = Seq(20261018L, 7L, 42L)
+    info(s"seeds: ${seeds.mkString(", ")}")
+    val params = Gen.Parameters.default
+    var verdicts = 0
+    for (seed <- seeds; ((z, f, fe, kType, rest), pi) <- preds.zipWithIndex) {
+      val files = Gen.listOfN(15, fileGen).pureApply(params, Seed(seed * 1000 + pi))
+      for ((mn, w, fracs, kFrac, kShift, nudge) <- files; op <- ops) {
+        val mx = mn + w
+        val kAt = mn + (kFrac * w).toLong + kShift
+        val k0 = try at(fe, kAt) catch { case _: ArithmeticException => null }
+        if (k0 != null) {
+          val kv: Any = k0 match { case l: Long => l + nudge; case i: Int => i + nudge }
+          val pred = (op(fe, Literal(kv, kType)) +: rest).reduce(And)
+          val tri = StatsPruning.eval(pred,
+            Map("ts" -> ColStats(Some(StatVal.L(mn)), Some(StatVal.L(mx)), 0L)), 1000L)
+          if (tri != StatsPruning.Unknown) {
+            verdicts += 1
+            for (v <- mn +: mx +: fracs.map(fr => mn + (fr * w).toLong)) {
+              val got = try at(pred, v) catch { case _: ArithmeticException => null }
+              val ok = if (tri == StatsPruning.AlwaysFalse) got != true else got == true
+              assert(ok, s"$tri unsound in zone $z: ${pred.sql} over [$mn, $mx] " +
+                s"(seed $seed) is $got at ts=$v")
+            }
+          }
+        }
+      }
+    }
+    info(s"${preds.size} predicates x ${ops.size} ops x ${seeds.size * 15} files: $verdicts verdicts checked")
+    assert(verdicts > 1000)
+  }
+
   test("NTZ column: date_trunc prunes zone-free") {
     import spark.implicits._
     val root = tmpDir("prune-ntz")
