@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.{DataType, DayTimeIntervalType, TimestampNTZTy
   * i.e. the start of the stride-aligned bin (anchored at `origin`)
   * containing `ts`. Exact floor semantics for every ts including
   * pre-origin values; pure micros arithmetic, so it is zone-free on both
-  * TIMESTAMP and TIMESTAMP_NTZ. StatsPruning recognizes the expression
-  * directly, so `date_bin(...) = TIMESTAMP '…'` predicates prune files
-  * exactly like the `window()`/floor-div forms.
+  * TIMESTAMP and TIMESTAMP_NTZ. The bin is non-decreasing in ts, so file
+  * pruning bounds `date_bin(...) OP TIMESTAMP '…'` by evaluating the
+  * `DateBin` node itself at a file's min/max, like the `window()` and
+  * floor-div forms.
   */
 object TimeKernels {
   /** All three in micros; stride must be positive. */

@@ -1,7 +1,9 @@
 package graft.scan
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
 import graft.meta.{ColStats, SegmentMeta, StatVal}
 
 /** Sound file-pruning by interval abstract interpretation of Catalyst
@@ -80,6 +82,10 @@ object StatsPruning {
       case _ => Unknown
     }
     case IsNotNull(c) => not(eval(IsNull(c), stats, rowCount))
+    // an analyzed BETWEEN keeps Spark's Between node (the optimizer
+    // replaces it)
+    case Between(v, lo, hi, _) =>
+      eval(And(GreaterThanOrEqual(v, lo), LessThanOrEqual(v, hi)), stats, rowCount)
 
     case b: BinaryComparison =>
       val (colE, litE, flipped) = (b.left, b.right) match {
@@ -133,429 +139,198 @@ object StatsPruning {
   }
 
   // ---------------------------------------------------------------------
-  // Transform-aware pruning: `f(ts) OP literal` rewritten into raw-ts
-  // bounds evaluated against file stats — the port of the reference's
-  // timestamp-transform compiler (time_predicate.rs:554-604, 876-1106:
-  // to_date / date_trunc / to_unixtime / ts ± interval). Olson zones are
-  // handled by computing the literal's bucket boundaries with zoned
-  // java.time arithmetic (the reference's DST widening,
-  // time_predicate.rs:623-758, 889-1015); non-fixed-offset zones get a
-  // ±1 h safety pad so engine-specific DST gap/overlap resolution can
-  // never make pruning unsound. Month-bearing intervals rewrite through
-  // sound [28-day, 31-day] shift bounds.
+  // Transform pruning: `f(c) OP k`, where f is built only from
+  // non-decreasing Catalyst nodes over one stats column c. Each node's
+  // bounds are Catalyst's own eval of that node at its input's bounds, so
+  // they are the values Spark computes at query time — the reference's
+  // transform compiler (time_predicate.rs:554-604, 876-1106: to_date /
+  // date_trunc / date_bin / to_unixtime / ts ± interval) without porting
+  // any function's calendar arithmetic. Under a fixed-offset zone or on
+  // NTZ values the bounds are exact; under an Olson zone a zoned node
+  // evaluates at its input's bounds widened by a pad, and the result only
+  // prunes one way (AlwaysTrue becomes Unknown).
   // ---------------------------------------------------------------------
 
-  private val MicrosPerDay  = 86400L * 1000000L
   private val MicrosPerHour = 3600L * 1000000L
-  /** Safety margin for non-fixed-offset (Olson) zones on BUCKET-BOUNDARY
-    * paths, where boundaries are computed with real zoned java.time
-    * arithmetic against the same TZDB Spark uses — the pad only has to
-    * absorb gap/overlap resolution differences (DST transitions are ≤ 2 h:
-    * most 1 h, Antarctica/Troll 2 h, Lord Howe 0.5 h), with margin. */
-  private val DstPadMicros  = 4L * MicrosPerHour
-
-  /** Safety margin for CALENDAR-INTERVAL SHIFTS (`ts + INTERVAL n
-    * DAYS/MONTHS`) under non-fixed zones, where no zoned arithmetic runs —
-    * the bound must absorb the largest possible offset change a zone can
-    * make between two instants. Dateline redefinitions skip or repeat a
-    * whole calendar day (Pacific/Apia 2011-12-30, Pacific/Kiritimati
-    * 1994-12-31: 24 h jumps); UTC offsets span [-12, +14], bounding any
-    * single-zone change at 26 h. */
+  private val MicrosPerDay  = 24L * MicrosPerHour
+  /** Pad for zoned bucketing (date_trunc, to_date, NTZ↔TIMESTAMP casts):
+    * local time steps back by at most a DST overlap (≤ 2 h: most 1 h,
+    * Antarctica/Troll 2 h, Lord Howe 0.5 h), so bucketing an input 4 h
+    * earlier or later bounds every value in between. */
+  private val DstPadMicros = 4L * MicrosPerHour
+  /** Pad for calendar shifts (`ts + INTERVAL n DAYS/MONTHS`): a shift can
+    * cross any offset change the zone makes, including dateline moves that
+    * skip or repeat a whole day (Pacific/Apia 2011-12-30, Pacific/Kiritimati
+    * 1994-12-31); UTC offsets span [-12, +14], bounding any change at 26 h. */
   private val ZoneShiftPadMicros = 26L * MicrosPerHour
 
-  private def utcOk(tz: Option[String]): Boolean =
-    tz.forall(z => z == "UTC" || z == "Etc/UTC" || z == "+00:00" || z == "Z")
+  /** One non-decreasing node over its column-dependent input, with the pad
+    * its session zone needs (0 = exact). A month shift is non-decreasing
+    * only across whole days: end-of-month clamping keeps the time of day,
+    * so `ts + INTERVAL 1 MONTH` maps Jan 28 23:00 past Jan 29 01:00 (both
+    * land on Feb 28); it evaluates at its input's bounds rounded out to
+    * whole days (`wholeDays`). */
+  private final case class Step(input: Expression, pad: Long, wholeDays: Boolean = false)
 
-  private def zoneOf(tz: Option[String]): Option[java.time.ZoneId] =
-    try Some(tz.map(java.time.ZoneId.of).getOrElse(java.time.ZoneOffset.UTC))
-    catch { case _: Exception => None }
+  /** A file's bounds for a transform, as Catalyst values of its type. */
+  private final case class Bounds(lo: Any, hi: Any, exact: Boolean, nulls: Long)
 
-  /** Resolve a timestamp-valued operand to its stats column: a raw
-    * attribute, or an NTZ attribute cast to TIMESTAMP under UTC — that cast
-    * is value-preserving against our epoch-micros footer stats (Catalyst
-    * inserts it whenever an NTZ column meets a TIMESTAMP function). */
-  private def tsColumnOf(e: Expression): Option[String] = e match {
-    case a: AttributeReference => Some(a.name)
-    case Alias(c, _)           => tsColumnOf(c)
-    case Cast(a: AttributeReference, org.apache.spark.sql.types.TimestampType, tz, _)
-        if a.dataType == org.apache.spark.sql.types.TimestampNTZType && utcOk(tz) => Some(a.name)
+  private def olson(tz: Option[String]): Boolean =
+    tz.forall(z => !DateTimeUtils.getZoneId(z).getRules.isFixedOffset)
+
+  private def positive(l: Literal): Boolean = l.value match {
+    case n: java.lang.Number => n.doubleValue > 0
+    case _                   => false
+  }
+
+  /** `window()`'s bin core `t − floorMod(t − start, slide)`, as
+    * TimeWindowing generates it (floorMod is a CASE WHEN over %): its
+    * input t. The only shape matched as a whole. */
+  private def windowCore(e: Expression): Option[Expression] = e match {
+    case Subtract(t, CaseWhen(Seq((LessThan(r, Literal(0L, LongType)),
+          Add(r2, Literal(s1: Long, LongType), _))), Some(r3)), _) =>
+      r match {
+        case Remainder(Subtract(t2, Literal(_: Long, LongType), _), Literal(slide: Long, LongType), _)
+            if slide > 0 && slide == s1 && t2.semanticEquals(t) &&
+               r2.semanticEquals(r) && r3.semanticEquals(r) => Some(t)
+        case _ => None
+      }
     case _ => None
   }
 
-  private def zdtMicros(zdt: java.time.ZonedDateTime): Option[Long] =
-    try {
-      val i = zdt.toInstant
-      Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L))
-    } catch { case _: ArithmeticException => None }
-
-  /** The bucket [lo, hi) that `date_trunc(unit, ts) == k` confines ts to,
-    * in `zone`, plus whether the bounds are exact (fixed-offset zone) and
-    * whether k is bucket-aligned. Exact for fixed-offset zones (UTC,
-    * +05:30, …); Olson zones compute real zoned boundaries (23/25-hour
-    * days, gap-shifted midnights) and the caller pads ±1 h. None for
-    * unrecognized units. */
-  private def truncBucket(unit: String, kMicros: Long, zid: java.time.ZoneId)
-      : Option[(Boolean, Boolean, Long, Long)] = {
-    import java.time.{DayOfWeek, Instant, LocalDate, ZonedDateTime}
-    import java.time.temporal.{ChronoUnit, TemporalAdjusters}
-    val inst = Instant.ofEpochSecond(Math.floorDiv(kMicros, 1000000L),
-      Math.floorMod(kMicros, 1000000L) * 1000L)
-    val zdt = inst.atZone(zid)
-    def day(d: LocalDate): ZonedDateTime = d.atStartOfDay(zid)
-    val bucket: Option[(ZonedDateTime, ZonedDateTime)] = unit.toLowerCase match {
-      case "microsecond" => Some((zdt, zdt.plusNanos(1000)))
-      case "millisecond" =>
-        val a = zdt.truncatedTo(ChronoUnit.MILLIS); Some((a, a.plusNanos(1000000)))
-      case "second" => val a = zdt.truncatedTo(ChronoUnit.SECONDS); Some((a, a.plusSeconds(1)))
-      case "minute" => val a = zdt.truncatedTo(ChronoUnit.MINUTES); Some((a, a.plusMinutes(1)))
-      case "hour"   => val a = zdt.truncatedTo(ChronoUnit.HOURS);   Some((a, a.plusHours(1)))
-      case "day" | "dd" =>
-        val d = zdt.toLocalDate; Some((day(d), day(d.plusDays(1))))
-      case "week" =>
-        val m = zdt.toLocalDate.`with`(TemporalAdjusters.previousOrSame(DayOfWeek.MONDAY))
-        Some((day(m), day(m.plusDays(7))))
-      case "month" | "mon" | "mm" =>
-        val f = zdt.toLocalDate.withDayOfMonth(1); Some((day(f), day(f.plusMonths(1))))
-      case "quarter" =>
-        val f0 = zdt.toLocalDate.withDayOfMonth(1)
-        val f = f0.withMonth((f0.getMonthValue - 1) / 3 * 3 + 1)
-        Some((day(f), day(f.plusMonths(3))))
-      case "year" | "yyyy" | "yy" =>
-        val f = zdt.toLocalDate.withDayOfYear(1); Some((day(f), day(f.plusYears(1))))
-      case _ => None
+  /** `e` as a non-decreasing node over one column-dependent input; None
+    * for any other node. */
+  private def step(e: Expression): Option[Step] = {
+    def exact(in: Expression) = Some(Step(in, 0L))
+    def zoned(in: Expression, tz: Option[String], pad: Long) =
+      Some(Step(in, if (olson(tz)) pad else 0L))
+    // TIMESTAMP → epoch is zone-free; NTZ → epoch reads local time
+    def epoch(in: Expression, tz: Option[String]) = in.dataType match {
+      case TimestampType    => exact(in)
+      case TimestampNTZType => zoned(in, tz, DstPadMicros)
+      case _                => None
     }
-    bucket.flatMap { case (a, n) =>
-      for (lo <- zdtMicros(a); hi <- zdtMicros(n)) yield {
-        val exact = zid.getRules.isFixedOffset
-        (exact, exact && lo == kMicros, lo, hi)
+    // Spark adds whole days and months as calendar units in the zone
+    // (zone-free on NTZ); only a sub-day shift is a fixed duration
+    def shift(in: Expression, tz: Option[String], months: Boolean) = Some(Step(in,
+      if (in.dataType == TimestampType && olson(tz)) ZoneShiftPadMicros else 0L, months))
+    e match {
+      case KnownNullable(c)                    => exact(c)
+      case PreciseTimestampConversion(c, _, _) => exact(c)
+      case Floor(c)                            => exact(c)
+      case UnixMicros(c)                       => exact(c)
+      case UnixMillis(c)                       => exact(c)
+      case UnixSeconds(c)                      => exact(c)
+      case UnixTimestamp(c, _, tz, _)          => epoch(c, tz)
+      case ToUnixTimestamp(c, _, tz, _)        => epoch(c, tz)
+      case Cast(c, to, tz, _) => (c.dataType, to) match {
+        case (ByteType | ShortType | IntegerType | LongType, LongType | DoubleType) |
+             (TimestampNTZType, DateType) => exact(c)
+        case (TimestampType, DateType | TimestampNTZType) | (TimestampNTZType, TimestampType) =>
+          zoned(c, tz, DstPadMicros)
+        case _ => None
       }
+      case IntegralDivide(c, l: Literal, _) if positive(l) => exact(c)
+      case Divide(c, l: Literal, _) if positive(l)         => exact(c)
+      case Add(c, _: Literal, _)                           => exact(c)
+      case Add(_: Literal, c, _)                           => exact(c)
+      case Subtract(c, _: Literal, _)                      => exact(c)
+      case TruncTimestamp(_: Literal, c, tz)               => zoned(c, tz, DstPadMicros)
+      case graft.functions.DateBin(l: Literal, c, _: Literal) if positive(l) => exact(c)
+      case TimestampAddInterval(c, Literal(iv, _), tz) => iv match {
+        case ci: CalendarInterval if ci.months == 0 && ci.days == 0 => exact(c)
+        case ci: CalendarInterval => shift(c, tz, ci.months != 0)
+        case d: java.lang.Long if d.longValue / MicrosPerDay == 0L  => exact(c)
+        case _: java.lang.Long => shift(c, tz, months = false)
+        case _ => None
+      }
+      case TimestampAddYMInterval(c, _: Literal, tz) => shift(c, tz, months = true)
+      case _ => windowCore(e).flatMap(exact)
     }
   }
 
-  /** Evaluate `colExpr OP k` where colExpr is a recognized transform of a
-    * stats column. Reduces to plain ts-micros bound predicates and
-    * re-enters eval(). */
-  private def transformCmp(b: BinaryComparison, flipped: Boolean, colE: Expression,
-                           k: Literal, stats: Map[String, ColStats], rows: Long): Tri = {
-    import org.apache.spark.sql.types._
-    def tsBound(col: String, mk: (Expression, Expression) => Expression, micros: Long): Tri = {
-      val attr = AttributeReference(col, TimestampType)()
-      eval(mk(attr, Literal(micros, TimestampType)), stats, rows)
-    }
-    def opIsLt = (if (flipped) b.isInstanceOf[GreaterThan] else b.isInstanceOf[LessThan])
-    def opIsLe = (if (flipped) b.isInstanceOf[GreaterThanOrEqual] else b.isInstanceOf[LessThanOrEqual])
-    def opIsGt = (if (flipped) b.isInstanceOf[LessThan] else b.isInstanceOf[GreaterThan])
-    def opIsGe = (if (flipped) b.isInstanceOf[LessThanOrEqual] else b.isInstanceOf[GreaterThanOrEqual])
+  /** A stats value as the Catalyst value of a column of type `dt`. */
+  private def catalystValue(v: StatVal, dt: DataType): Option[Any] = (v, dt) match {
+    case (StatVal.L(x), LongType | TimestampType | TimestampNTZType) => Some(x)
+    case (StatVal.L(x), IntegerType | DateType)                      => Some(x.toInt)
+    case (StatVal.D(x), DoubleType)                                  => Some(x)
+    case _                                                           => None
+  }
 
-    /** A padded/widened ts-bound is only a NECESSARY condition for
-      * `f OP k` (one-way implication): its AlwaysFalse soundly prunes, but
-      * its AlwaysTrue must NOT surface — Not()/!= would flip it into an
-      * unsound prune. Exact (two-way) rewrites keep AlwaysTrue. */
-    def necessaryOnly(t: Tri): Tri = if (t == AlwaysTrue) Unknown else t
+  /** Catalyst's eval of `e` with its input `in` bound to `v`; None when it
+    * throws (an ANSI overflow, an out-of-range timestamp) or is null. */
+  private def evalAt(e: Expression, in: Expression, v: Any): Option[Any] = {
+    val lit = Literal(v, in.dataType)
+    try Option(e.transformDown { case x if x.semanticEquals(in) => lit }.eval())
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
 
-    /** Map f OP k onto ts-range predicates given f's exact/padded bucket
-      * [lo, hi) for k. `aligned` is only meaningful when `exact`; padded
-      * (non-fixed-zone) bounds use the weakest sound form of each op. */
-    def bucketCmp(col: String, exact: Boolean, aligned: Boolean,
-                  lo: Long, hi: Long, pad: Long): Tri = {
-      val t =
-        if (b.isInstanceOf[EqualTo]) {
-          if (exact && !aligned) AlwaysFalse // Eq on a non-bucket-start literal is never true
-          else and(tsBound(col, GreaterThanOrEqual, lo - pad), tsBound(col, LessThan, hi + pad))
-        }
-        // f < k  ⇔ ts < (lo if k aligned else hi); unknown alignment → hi (weaker)
-        else if (opIsLt) tsBound(col, LessThan, (if (exact && aligned) lo else hi) + pad)
-        // f ≤ k  ⇔ ts < hi (alignment-independent)
-        else if (opIsLe) tsBound(col, LessThan, hi + pad)
-        // f > k  ⇔ ts ≥ hi (alignment-independent)
-        else if (opIsGt) tsBound(col, GreaterThanOrEqual, hi - pad)
-        // f ≥ k  ⇔ ts ≥ (lo if k aligned else hi); unknown alignment → lo (weaker)
-        else if (opIsGe) tsBound(col, GreaterThanOrEqual,
-          (if (exact) { if (aligned) lo else hi } else lo) - pad)
-        else Unknown
-      if (pad == 0L && exact) t else necessaryOnly(t)
+  private def ordered(lo: Any, hi: Any): Boolean =
+    (StatVal.fromAny(lo), StatVal.fromAny(hi)) match {
+      case (Some(a), Some(b)) => StatVal.cmp(a, b).exists(_ <= 0)
+      case _                  => false
     }
 
-    /** unix_*(ts) = floorDiv(tsMicros, unit) compared to k (in units). */
-    def epochCmp(col: String, kUnits: Long, unit: Long): Tri =
-      try {
-        val lo = Math.multiplyExact(kUnits, unit)
-        val hi = Math.addExact(lo, unit)
-        bucketCmp(col, exact = true, aligned = true, lo, hi, 0L)
-      } catch { case _: ArithmeticException => Unknown }
+  /** [f(min), f(max)] over one file's stats, node by node from the column
+    * up; a node whose bounds come out reversed (an overflow wrap) or null
+    * stops the rule. */
+  private def bounds(e: Expression, stats: Map[String, ColStats]): Option[Bounds] = e match {
+    case a: AttributeReference =>
+      for { cs <- stats.get(a.name)
+            lo <- cs.min.flatMap(catalystValue(_, a.dataType))
+            hi <- cs.max.flatMap(catalystValue(_, a.dataType)) } yield Bounds(lo, hi, exact = true, cs.nullCount)
+    case _ =>
+      for { s <- step(e)
+            b <- bounds(s.input, stats)
+            (loIn, hiIn) <- evalPoints(e, s, b)
+            lo <- evalAt(e, s.input, loIn)
+            hi <- evalAt(e, s.input, hiIn) if ordered(lo, hi)
+      } yield Bounds(lo, hi, b.exact && s.pad == 0L, b.nulls)
+  }
 
-    /** unix_timestamp / to_unix_timestamp of a TIMESTAMP divide micros by
-      * 10⁶ truncating toward zero (unlike the floorDiv unix_* triplet), so
-      * a pre-epoch k's bucket is (kU − U, kU] and k = 0 spans (−U, U). */
-    def truncEpochCmp(col: String, kv: Long, unit: Long): Tri =
-      try {
-        val kU = Math.multiplyExact(kv, unit)
-        val lo = if (kv > 0) kU else Math.addExact(kU, 1L - unit)
-        val hi = if (kv >= 0) Math.addExact(kU, unit) else Math.addExact(kU, 1L)
-        bucketCmp(col, exact = true, aligned = true, lo, hi, 0L)
-      } catch { case _: ArithmeticException => Unknown }
-
-    /** (ts + s) OP k with s ∈ [sLo, sHi]: exact rewrite when the shift is
-      * fixed, else the weakest sound ts-bound per op. */
-    def shiftedCmp(col: String, kv: Long, sLo: Long, sHi: Long): Tri =
-      if (sLo == sHi) { // exact: (ts + s) OP k ≡ ts OP (k − s)
-        val attr = AttributeReference(col, org.apache.spark.sql.types.TimestampType)()
-        val shifted = Literal(kv - sLo, org.apache.spark.sql.types.TimestampType)
-        val rewritten = if (flipped) b.withNewChildren(Seq(shifted, attr))
-                        else b.withNewChildren(Seq(attr, shifted))
-        eval(rewritten, stats, rows)
-      } else { // widened: f(ts) ∈ [ts + sLo, ts + sHi] — one-way, clamp AlwaysTrue
-        necessaryOnly(
-          if (b.isInstanceOf[EqualTo])
-            and(tsBound(col, GreaterThanOrEqual, kv - sHi),
-                tsBound(col, LessThanOrEqual, kv - sLo))
-          else if (opIsLt) tsBound(col, LessThan, kv - sLo)
-          else if (opIsLe) tsBound(col, LessThanOrEqual, kv - sLo)
-          else if (opIsGt) tsBound(col, GreaterThan, kv - sHi)
-          else if (opIsGe) tsBound(col, GreaterThanOrEqual, kv - sHi)
-          else Unknown)
+  /** Where step `s` of node `e` evaluates: its input's bounds widened by
+    * the zone pad, then rounded out to whole days in the node's zone for a
+    * month shift. */
+  private def evalPoints(e: Expression, s: Step, b: Bounds): Option[(Any, Any)] =
+    try {
+      val (lo, hi) =
+        if (s.pad == 0L) (b.lo, b.hi)
+        else (Math.subtractExact(b.lo.asInstanceOf[Long], s.pad), Math.addExact(b.hi.asInstanceOf[Long], s.pad))
+      if (!s.wholeDays) Some((lo, hi))
+      else {
+        val (dt, tz) = (s.input.dataType, e.asInstanceOf[TimeZoneAwareExpression].timeZoneId)
+        def dayStart(v: Any) = Cast(Cast(Literal(v, dt), DateType, tz), dt, tz).eval().asInstanceOf[Long]
+        Some((dayStart(lo), Math.addExact(dayStart(hi), MicrosPerDay - 1)))
       }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
-    // epoch conversions are zone-free on TIMESTAMP columns; on NTZ columns
-    // they go through the session zone, so require UTC there
-    def epochZoneOk(inner: Expression, tz: Option[String]): Boolean =
-      inner.dataType == TimestampType ||
-        (inner.dataType == TimestampNTZType && utcOk(tz))
-    def longK: Option[Long] = k.dataType match {
-      case LongType if k.value != null => Some(k.value.asInstanceOf[Long])
-      case IntegerType if k.value != null => Some(k.value.asInstanceOf[Int].toLong)
-      case _ => None
-    }
+  /** `f = k` can never hold: peeling identity wrappers and literal shifts
+    * off f (moving k with them) reaches an exact bin — date_trunc,
+    * date_bin or window()'s core — that moves k, i.e. bin(k) ≠ k. */
+  private def offGrid(f: Expression, k: Any): Boolean = f match {
+    case KnownNullable(c)                    => offGrid(c, k)
+    case PreciseTimestampConversion(c, _, _) => offGrid(c, k)
+    case Subtract(c, d: Literal, _) => evalAt(Add(c, d), c, k).exists(offGrid(c, _))
+    case Add(c, d: Literal, _)      => evalAt(Subtract(c, d), c, k).exists(offGrid(c, _))
+    case _: TruncTimestamp | _: graft.functions.DateBin => binMoves(f, k)
+    case _ => windowCore(f).isDefined && binMoves(f, k)
+  }
+  private def binMoves(bin: Expression, k: Any): Boolean =
+    step(bin).exists(s => s.pad == 0L && evalAt(bin, s.input, k).exists(_ != k))
 
-    /** A recognized epoch-number transform of a ts column: the column and
-      * its unit in micros (floorDiv semantics in all of Spark's unix_*
-      * family). Shared by the custom-binning patterns below. */
-    def epochUnitOf(e: Expression): Option[(String, Long)] = e match {
-      case UnixMicros(inner) => tsColumnOf(inner).map((_, 1L))
-      case UnixMillis(inner) => tsColumnOf(inner).map((_, 1000L))
-      case UnixSeconds(inner) => tsColumnOf(inner).map((_, 1000000L))
-      case _ => None
-    }
-
-    /** The TimeWindowing rewrite of `window(ts, w).start`:
-      * PTC(PTC(ts) − floorMod(PTC(ts) − startTime, slide) ± consts) where
-      * floorMod is the generated CASE WHEN over %, exact floor semantics
-      * for every ts including pre-epoch. Returns (column, startTime,
-      * slide, constOffset). This is the Spark analog of the reference's
-      * date_bin pruning (time_predicate.rs:513-551, 1017-1104). */
-    def windowBase(e: Expression): Option[(String, Long, Long, Long)] = {
-      def ptcCol(t: Expression): Option[String] = t match {
-        case PreciseTimestampConversion(inner, TimestampType, LongType) => tsColumnOf(inner)
-        case _ => None
-      }
-      def floorModArgs(cw: CaseWhen, t: Expression): Option[(Long, Long)] = cw match {
-        case CaseWhen(Seq((LessThan(r1, Literal(0L, LongType)), Add(r2, Literal(s1: Long, LongType), _))),
-                      Some(r3)) =>
-          r1 match {
-            case Remainder(Subtract(t2, Literal(start: Long, LongType), _),
-                           Literal(slide: Long, LongType), _)
-                if slide > 0 && slide == s1 && t2.semanticEquals(t) &&
-                   r2.semanticEquals(r1) && r3.semanticEquals(r1) => Some((start, slide))
-            case _ => None
-          }
-        case _ => None
-      }
-      e match {
-        case Subtract(inner, Literal(c: Long, LongType), _) =>
-          inner match {
-            case Subtract(t, cw: CaseWhen, _) => // the core, with trailing const
-              for { col <- ptcCol(t); (st, sl) <- floorModArgs(cw, t) } yield (col, st, sl, -c)
-            case _ => windowBase(inner).map { case (col, st, sl, acc) => (col, st, sl, acc - c) }
-          }
-        case Add(inner, Literal(c: Long, LongType), _) =>
-          windowBase(inner).map { case (col, st, sl, acc) => (col, st, sl, acc + c) }
-        case Add(Literal(c: Long, LongType), inner, _) =>
-          windowBase(inner).map { case (col, st, sl, acc) => (col, st, sl, acc + c) }
-        case Subtract(t, cw: CaseWhen, _) =>
-          for { col <- ptcCol(t); (st, sl) <- floorModArgs(cw, t) } yield (col, st, sl, 0L)
-        case _ => None
-      }
-    }
-
-    colE match {
-      // analysis wrapper around the TimeWindowing rewrite — transparent
-      case KnownNullable(c) => transformCmp(b, flipped, c, k, stats, rows)
-
-      // window(ts, w).start/.end OP k — exact stride bucketing: the value
-      // is start-grid-aligned with value ≤ ts < value + slide (+ const)
-      case PreciseTimestampConversion(x, LongType, TimestampType)
-          if (k.dataType == TimestampType || k.dataType == TimestampNTZType) && k.value != null =>
-        windowBase(x) match {
-          case Some((col, start, slide, c)) =>
-            try {
-              val kAdj = Math.subtractExact(k.value.asInstanceOf[Long], c)
-              val lo = Math.subtractExact(kAdj,
-                Math.floorMod(Math.subtractExact(kAdj, start), slide))
-              bucketCmp(col, exact = true, aligned = lo == kAdj,
-                lo, Math.addExact(lo, slide), 0L)
-            } catch { case _: ArithmeticException => Unknown }
-          case None => Unknown
+  /** Evaluate `f OP k` through f's bounds over the file's stats. */
+  private def transformCmp(b: BinaryComparison, flipped: Boolean, f: Expression,
+                           k: Literal, stats: Map[String, ColStats], rows: Long): Tri =
+    (litVal(k), bounds(f, stats)) match {
+      case (Some(kv), Some(fb)) =>
+        if (b.isInstanceOf[EqualTo] && offGrid(f, k.value)) AlwaysFalse
+        else {
+          val t = evalCmp(b, flipped,
+            ColStats(StatVal.fromAny(fb.lo), StatVal.fromAny(fb.hi), fb.nulls), rows, kv)
+          if (t == AlwaysTrue && !fb.exact) Unknown else t
         }
-
-      // date_bin(stride, ts, origin) OP k — the name-level analog of the
-      // reference's date_bin pruning (time_predicate.rs:513-551): the
-      // value is origin-anchored stride-grid-aligned with
-      // value ≤ ts < value + stride; pure micros arithmetic, zone-free on
-      // both timestamp flavors (the NTZ literal's micros share the
-      // column's NTZ domain)
-      case graft.functions.DateBin(
-            Literal(s: Long, org.apache.spark.sql.types.DayTimeIntervalType(_, _)), inner,
-            Literal(o: Long, ot))
-          if s > 0 && tsColumnOf(inner).isDefined &&
-             (ot == TimestampType || ot == TimestampNTZType) &&
-             (k.dataType == TimestampType || k.dataType == TimestampNTZType) && k.value != null =>
-        try {
-          val kv = k.value.asInstanceOf[Long]
-          // the SAME kernel the runtime expression evaluates — pruning
-          // bounds must stay bit-identical to what date_bin() computes
-          val lo = graft.functions.TimeKernels.dateBin(s, kv, o)
-          bucketCmp(tsColumnOf(inner).get, exact = true, aligned = lo == kv,
-            lo, Math.addExact(lo, s), 0L)
-        } catch { case _: ArithmeticException => Unknown }
-
-      // custom binning: unix_*(ts) div S — Spark div truncates toward
-      // zero, so bucket k spans [kS, kS+S) for k>0, (-S, S) for k=0,
-      // (kS-S, kS] for k<0; floorDiv epochs compose exactly with ×unit
-      case IntegralDivide(inner, Literal(s: Long, LongType), _)
-          if s > 0 && longK.isDefined && epochUnitOf(inner).isDefined =>
-        val (col, u) = epochUnitOf(inner).get
-        try {
-          val kv = longK.get
-          val kS = Math.multiplyExact(kv, s)
-          val loS = if (kv > 0) kS else Math.addExact(kS, 1L - s)
-          val hiS = if (kv >= 0) Math.addExact(kS, s) else Math.addExact(kS, 1L)
-          bucketCmp(col, exact = true, aligned = true,
-            Math.multiplyExact(loS, u), Math.multiplyExact(hiS, u), 0L)
-        } catch { case _: ArithmeticException => Unknown }
-
-      // custom binning through doubles: floor(unix_*(ts) / S). Double
-      // division rounds, so the computed floor can be off by one near
-      // bucket boundaries — widen one bucket each side and clamp to a
-      // necessary-only condition (exact=false)
-      case Floor(Divide(Cast(inner, DoubleType, _, _), Literal(sD: Double, DoubleType), _))
-          if sD > 0 && java.lang.Double.isFinite(sD) && longK.isDefined &&
-             epochUnitOf(inner).isDefined =>
-        val (col, u) = epochUnitOf(inner).get
-        val kv = longK.get.toDouble
-        val loD = (kv - 1.0) * sD * u
-        val hiD = (kv + 2.0) * sD * u
-        if (!java.lang.Double.isFinite(loD) || !java.lang.Double.isFinite(hiD) ||
-            loD < -4.6e18 || hiD > 4.6e18) Unknown
-        // f > k needs ts ≥ (k+1)·S: the widened bucket's end (k+2)·S would
-        // be stricter than that, so keep one bucket of slack below it
-        else if (opIsGt) necessaryOnly(
-          tsBound(col, GreaterThanOrEqual, math.floor(loD + sD * u).toLong))
-        else bucketCmp(col, exact = false, aligned = false,
-          math.floor(loD).toLong, math.ceil(hiD).toLong, 0L)
-
-      // to_date(ts) / CAST(ts AS DATE): k is a DateType literal (days).
-      // NTZ casts are zone-free; TIMESTAMP casts bucket by the zone's real
-      // local day with a ±DstPad pad for Olson zones.
-      case Cast(inner, DateType, tz, _) if tsColumnOf(inner).isDefined &&
-          k.dataType == DateType && k.value != null =>
-        val col = tsColumnOf(inner).get
-        val zone = if (inner.dataType == TimestampNTZType) Some(java.time.ZoneOffset.UTC: java.time.ZoneId)
-                   else zoneOf(tz)
-        zone match {
-          case None => Unknown
-          case Some(z) =>
-            val d = java.time.LocalDate.ofEpochDay(k.value.asInstanceOf[Int].toLong)
-            (zdtMicros(d.atStartOfDay(z)), zdtMicros(d.plusDays(1).atStartOfDay(z))) match {
-              case (Some(lo), Some(hi)) =>
-                val pad = if (z.getRules.isFixedOffset) 0L else DstPadMicros
-                // every date literal is bucket-aligned by construction
-                bucketCmp(col, exact = pad == 0L, aligned = true, lo, hi, pad)
-              case _ => Unknown
-            }
-        }
-
-      // date_trunc(unit, ts): k is a TIMESTAMP(_NTZ) literal (micros);
-      // bucket boundaries from zoned calendar arithmetic (week/month/
-      // quarter/year included), padded ±1 h for non-fixed-offset zones
-      case TruncTimestamp(Literal(fmt: UTF8String, _), inner, tz) if tsColumnOf(inner).isDefined &&
-          (k.dataType == TimestampType || k.dataType == TimestampNTZType) && k.value != null =>
-        val zone = if (k.dataType == TimestampNTZType || inner.dataType == TimestampNTZType)
-                     Some(java.time.ZoneOffset.UTC: java.time.ZoneId) // NTZ trunc is zone-free
-                   else zoneOf(tz)
-        zone.flatMap(z => truncBucket(fmt.toString, k.value.asInstanceOf[Long], z)
-          .map { case (exact, aligned, lo, hi) =>
-            bucketCmp(tsColumnOf(inner).get, exact, aligned, lo, hi,
-              if (exact) 0L else DstPadMicros)
-          }).getOrElse(Unknown)
-
-      // unix epoch family: to_unixtime/unix_timestamp (seconds) and the
-      // unix_seconds/millis/micros triplet — floor-division bucketing
-      case UnixMicros(inner) if tsColumnOf(inner).isDefined && longK.isDefined =>
-        epochCmp(tsColumnOf(inner).get, longK.get, 1L)
-      case UnixMillis(inner) if tsColumnOf(inner).isDefined && longK.isDefined =>
-        epochCmp(tsColumnOf(inner).get, longK.get, 1000L)
-      case UnixSeconds(inner) if tsColumnOf(inner).isDefined && longK.isDefined =>
-        epochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
-      case UnixTimestamp(inner, _, tz, _) if tsColumnOf(inner).isDefined &&
-          epochZoneOk(inner, tz) && longK.isDefined =>
-        truncEpochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
-      case ToUnixTimestamp(inner, _, tz, _) if tsColumnOf(inner).isDefined &&
-          epochZoneOk(inner, tz) && longK.isDefined =>
-        truncEpochCmp(tsColumnOf(inner).get, longK.get, 1000000L)
-
-      // ts ± INTERVAL: (ts + s) OP k with the shift bounded s ∈ [sLo, sHi].
-      // Fixed-duration intervals have sLo == sHi (exact rewrite); calendar
-      // components widen soundly — months to [28, 31] days, and ±DstPad on
-      // month/day components under non-fixed zones (DST changes the
-      // absolute length of calendar units); exact under UTC/NTZ.
-      case TimestampAddInterval(inner, Literal(ivVal, ivType), tz)
-          if tsColumnOf(inner).isDefined &&
-             (k.dataType == TimestampType || k.dataType == TimestampNTZType) &&
-             k.value != null =>
-        // calendar components are zone-sensitive: under a non-fixed zone a
-        // zone transition shifts the absolute duration of a calendar month
-        // or day by the transition size — up to a full skipped/repeated day
-        // (Pacific/Apia 2011), so the bounds carry ±ZoneShiftPad there
-        val zoneExact = utcOk(tz) || inner.dataType == TimestampNTZType
-        val zPad = if (zoneExact) 0L else ZoneShiftPadMicros
-        val boundsOpt: Option[(Long, Long)] = ivVal match {
-          case ci: org.apache.spark.unsafe.types.CalendarInterval =>
-            val mLo = math.min(ci.months.toLong * 28, ci.months.toLong * 31) * MicrosPerDay
-            val mHi = math.max(ci.months.toLong * 28, ci.months.toLong * 31) * MicrosPerDay
-            val monthPad = if (ci.months == 0) 0L else zPad
-            val dayPad = if (ci.days == 0) 0L else zPad
-            val d = ci.days.toLong * MicrosPerDay
-            Some((mLo - monthPad + d - dayPad + ci.microseconds,
-                  mHi + monthPad + d + dayPad + ci.microseconds))
-          case l: java.lang.Long if ivType.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType] =>
-            // Spark adds a day-time interval's whole days as calendar days
-            // in the session zone; only the sub-day rest is a fixed duration
-            val dPad = if (l.longValue() / MicrosPerDay == 0L) 0L else zPad
-            Some((l.longValue() - dPad, l.longValue() + dPad))
-          case _ => None
-        }
-        boundsOpt match {
-          case None => Unknown
-          case Some((sLo, sHi)) =>
-            shiftedCmp(tsColumnOf(inner).get, k.value.asInstanceOf[Long], sLo, sHi)
-        }
-
-      // ts ± year-month INTERVAL (ANSI): distinct Catalyst node; months
-      // widen to [28, 31] days each, ±DstPad under non-fixed zones (a DST
-      // transition inside the month shifts its absolute duration)
-      case TimestampAddYMInterval(inner, Literal(months: Int, _: YearMonthIntervalType), tz)
-          if tsColumnOf(inner).isDefined &&
-             (k.dataType == TimestampType || k.dataType == TimestampNTZType) &&
-             k.value != null =>
-        val m = months.toLong
-        val ymPad = if (utcOk(tz) || inner.dataType == TimestampNTZType) 0L else ZoneShiftPadMicros
-        val sLo = math.min(m * 28, m * 31) * MicrosPerDay - ymPad
-        val sHi = math.max(m * 28, m * 31) * MicrosPerDay + ymPad
-        shiftedCmp(tsColumnOf(inner).get, k.value.asInstanceOf[Long], sLo, sHi)
-
       case _ => Unknown
     }
-  }
 
   /** reference pruning.rs:6-71 table, generalized. cMin/cMax = cmp(stat, k). */
   private def evalCmp(b: BinaryComparison, flipped: Boolean, cs: ColStats,

@@ -497,7 +497,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (uncovered.nonEmpty)
         throw new IllegalStateException(
           s"cannot append: ${uncovered.size} existing segments lack coverage sidecars")
-      val tableCov = loadTableCoverage(st, heal = false)
+      val tableCov = loadTableCoverage(st)
       val overlap = cov.intersect(tableCov)
       if (!overlap.isEmpty)
         throw CoverageOverlapException(segs.head.path, overlap.cardinality, overlap.runList.head._1)
@@ -1400,10 +1400,11 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   // ------------------------------------------------------------ coverage
 
-  /** Load the table coverage snapshot with the reference's three-tier
-    * scheme (table/coverage.rs:29-180): snapshot pointer → recover by
-    * unioning per-segment sidecars → optional heal rewrite. */
-  def loadTableCoverage(st: TableState = cachedState, heal: Boolean = false): Bitmap = {
+  /** Load the table coverage snapshot the way the reference does
+    * (table/coverage.rs:29-180): the committed snapshot pointer, or, when
+    * that file is lost, the union of the per-segment sidecars. Recovery
+    * writes nothing: only a commit can make a snapshot readable. */
+  def loadTableCoverage(st: TableState = cachedState): Bitmap = {
     val spec = timeSpec.getOrElse(return Bitmap.empty)
     st.tableCoverage match {
       case Some(ptr) =>
@@ -1412,21 +1413,15 @@ final class TsTable private (val root: String, val store: LogStore) {
             s"coverage pointer bucket '${ptr.bucketSpec}' != table bucket '${spec.bucket.spec}'")
         val p = Paths.get(PathNorm.stripFileScheme(s"$root/${ptr.coveragePath}"))
         if (Files.exists(p)) Bitmap.deserialize(Files.readAllBytes(p))
-        else recoverCoverage(st, heal)
+        else recoverCoverage(st)
       case None =>
-        if (st.liveSegments.isEmpty) Bitmap.empty else recoverCoverage(st, heal)
+        if (st.liveSegments.isEmpty) Bitmap.empty else recoverCoverage(st)
     }
   }
 
-  private def recoverCoverage(st: TableState, heal: Boolean): Bitmap = {
-    val cov = st.liveSegments.flatMap(_.coveragePath)
+  private def recoverCoverage(st: TableState): Bitmap =
+    st.liveSegments.flatMap(_.coveragePath)
       .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel)))
-    if (heal) {
-      val covRel = s"_coverage/table/${st.version}-tblcov-healed.cov"
-      writeBytes(s"$root/$covRel", cov.serialize()) // best-effort, no commit
-    }
-    cov
-  }
 
   /** Metadata-only coverage analytics (reference table/coverage.rs:279-360):
     * half-open [startMicros, endMicros), answered from bitmaps without

@@ -57,6 +57,16 @@ class CheckConstraintSpec extends SparkFunSuite {
     assert(t.statsCandidates(spark, Seq(clean), violated)._1.isEmpty)
   }
 
+  test("a BETWEEN check clears a file on stats") {
+    val t = TsTable.create(tmpDir("chk-between"), tokenMeta)
+    t.append(TokenGen.generate(spark, 20, numFiles = 1))
+    val clean = SegmentMeta("s", "data/s.parquet", "parquet", 10L, None,
+      Map("n_tok" -> ColStats(Some(StatVal.L(100L)), Some(StatVal.L(200L)), 0L)), None)
+    // the analyzed predicate keeps Spark's Between node
+    assert(t.statsCandidates(spark, Seq(clean), expr("NOT (n_tok BETWEEN 64 AND 2048)"))._1.isEmpty)
+    assert(t.statsCandidates(spark, Seq(clean), expr("NOT (n_tok BETWEEN 64 AND 150)"))._1 == Seq(clean))
+  }
+
   test("addCheck validates existing data; dropCheck re-opens the gate") {
     val t = TsTable.create(tmpDir("chk2"), tokenMeta)
     t.append(TokenGen.generate(spark, 100, numFiles = 1))

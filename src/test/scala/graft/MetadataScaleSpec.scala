@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +16,8 @@ import graft.scan.StatsPruning
   * and four driver-side paths are O(files): commit replay
   * (TableState.apply per action), checkpoint serialize/parse, compaction
   * planning (sort + greedy pack), and stats pruning (per-file predicate
-  * evaluation in TsFileIndex.listFiles). None of them may touch the
+  * evaluation in TsFileIndex.listFiles, a Catalyst eval per file for a
+  * transform predicate). None of them may touch the
   * data plane, and all of them must stay interactive — a planner that
   * takes minutes at 10⁵ files is a scale bug no sf-scale correctness
   * gate would catch. This spec synthesizes 200 000 segment entries
@@ -29,6 +30,10 @@ import graft.scan.StatsPruning
 class MetadataScaleSpec extends AnyFunSuite {
 
   private val N = 200000
+  /** 2024-03-01T00:00:00Z: file i's `ts` spans 1.8 s from
+    * HourUs + (i − 1000)·1.8 s, so files 1000..2999 fill exactly this hour. */
+  private val HourUs = 1709251200L * 1000000L
+  private val SpanUs = 1800000L
 
   private def seg(i: Int): SegmentMeta = {
     val lo = f"doc-${i.toLong * 1000}%012d"
@@ -43,7 +48,9 @@ class MetadataScaleSpec extends AnyFunSuite {
       stats = Map(
         "doc_id" -> ColStats(Some(StatVal.S(lo)), Some(StatVal.S(hi)), 0L),
         "n_tok" -> ColStats(Some(StatVal.L((i % 512).toLong)), Some(StatVal.L((i % 512 + 64).toLong)), 0L),
-        "source" -> ColStats(Some(StatVal.S(s"src${i % 20}")), Some(StatVal.S(s"src${i % 20}")), 0L)),
+        "source" -> ColStats(Some(StatVal.S(s"src${i % 20}")), Some(StatVal.S(s"src${i % 20}")), 0L),
+        "ts" -> ColStats(Some(StatVal.L(HourUs + (i - 1000L) * SpanUs)),
+          Some(StatVal.L(HourUs + (i - 999L) * SpanUs - 1L)), 0L)),
       coveragePath = None)
   }
 
@@ -129,14 +136,20 @@ class MetadataScaleSpec extends AnyFunSuite {
     val docId = AttributeReference("doc_id", StringType)()
     def slit(s: String) = Literal(UTF8String.fromString(s), StringType)
     // a ~1% doc_id band: files 1000..2999 (ids are 1000 docs per file)
-    val pred = And(
+    val band = And(
       GreaterThanOrEqual(docId, slit(f"doc-${1000L * 1000}%012d")),
       LessThan(docId, slit(f"doc-${3000L * 1000}%012d")))
-    val (kept, sec) = timed {
-      segs.count(s => StatsPruning.eval(pred, s.stats, s.rowCount) != StatsPruning.AlwaysFalse)
+    // the same files by time, through a transform Catalyst evaluates per file
+    val hour = EqualTo(
+      TruncTimestamp(Literal("hour"), AttributeReference("ts", TimestampType)(), Some("UTC")),
+      Literal(HourUs, TimestampType))
+    for ((name, pred) <- Seq("doc_id band" -> band, "date_trunc('hour', ts)" -> hour)) {
+      val (kept, sec) = timed {
+        segs.count(s => StatsPruning.eval(pred, s.stats, s.rowCount) != StatsPruning.AlwaysFalse)
+      }
+      info(f"$name prune pass: $sec%.2f s, kept $kept of $N")
+      assert(kept == 2000) // exactly the band's files survive
+      assert(sec < 5.0, f"$name prune pass took $sec%.1f s at $N files — superlinear?")
     }
-    info(f"prune pass: $sec%.2f s, kept $kept of $N")
-    assert(kept == 2000) // exactly the band's files survive
-    assert(sec < 5.0, f"prune pass took $sec%.1f s at $N files — superlinear?")
   }
 }

@@ -109,7 +109,7 @@ class RobustnessSpec extends SparkFunSuite {
     assert(TsTable.open(root).scan(spark).count() == 200)
   }
 
-  test("coverage three-tier load: missing snapshot recovers from sidecars and heals") {
+  test("coverage load: a missing snapshot recovers from sidecars and writes nothing") {
     import org.apache.spark.sql.functions._
     val root = tmpDir("cov-heal")
     val t = TsTable.create(root, TableMeta("p",
@@ -121,12 +121,12 @@ class RobustnessSpec extends SparkFunSuite {
     // corrupt: delete the table snapshot sidecar
     java.nio.file.Files.delete(java.nio.file.Paths.get(root, ptr.coveragePath))
     // readonly fallback unions per-segment sidecars
-    val cov = t.loadTableCoverage(heal = true)
+    val cov = t.loadTableCoverage()
     assert(cov.cardinality == 3L)
-    // heal wrote a best-effort snapshot without a commit
-    val healed = java.nio.file.Files.list(
+    // recovery writes nothing: no uncommitted snapshot appears
+    val tableCov = java.nio.file.Files.list(
       java.nio.file.Paths.get(root, "_coverage", "table")).toList
-    assert(!healed.isEmpty)
+    assert(tableCov.isEmpty)
     // coverage queries still answer
     assert(t.coverageRatioForRange(0L, 240L * 1000000L) == 0.75)
   }

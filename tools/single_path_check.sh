@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: three engine concerns each have one owner.
+# Single-path check over src/main: four engine concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -11,6 +11,10 @@
 #     `contains` on one line); failures are typed.
 #  3. Reads: committed segments become rows only in `TsTable.read`
 #     (`RowTracking.attach`, `liveRowFilter`, `baseRelationToDataFrame`).
+#  4. Transform semantics: file pruning takes a transform's values only
+#     from Catalyst's own eval, so nothing under src/main/scala/graft/scan/
+#     refers to `java.time` or `TimeKernels` (no hand-ported calendar or
+#     bucket arithmetic).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -41,6 +45,8 @@ reads=$(code '(RowTracking\.attach|liveRowFilter|baseRelationToDataFrame)\(' |
   awk -F: -v f="$tstable" -v s="${span% *}" -v e="${span#* }" \
     '!($1 == f && $2 >= s && $2 <= e)' || true)
 
+semantics=$(code '\b(java\.time|TimeKernels)\b' | grep "^$src/graft/scan/" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -52,5 +58,6 @@ report() {
 report "log files read or named outside graft.log" "$history"
 report "exception-message matching" "$messages"
 report "segment reads outside TsTable.read" "$reads"
+report "transform semantics outside Catalyst's eval in graft.scan" "$semantics"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
