@@ -297,10 +297,11 @@ object StatsPruning {
         if (s.pad == 0L) (b.lo, b.hi)
         else (Math.subtractExact(b.lo.asInstanceOf[Long], s.pad), Math.addExact(b.hi.asInstanceOf[Long], s.pad))
       if (!s.wholeDays) Some((lo, hi))
-      else {
+      else { // from the start of lo's local day to just before the day after hi's
         val (dt, tz) = (s.input.dataType, e.asInstanceOf[TimeZoneAwareExpression].timeZoneId)
-        def dayStart(v: Any) = Cast(Cast(Literal(v, dt), DateType, tz), dt, tz).eval().asInstanceOf[Long]
-        Some((dayStart(lo), Math.addExact(dayStart(hi), MicrosPerDay - 1)))
+        def dayStart(v: Any, plusDays: Int) = Cast(DateAdd(Cast(Literal(v, dt), DateType, tz),
+          Literal(plusDays)), dt, tz).eval().asInstanceOf[Long]
+        Some((dayStart(lo, 0), dayStart(hi, 1) - 1))
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
