@@ -379,11 +379,12 @@ class PruneMatrixSpec extends SparkFunSuite {
       case a: AttributeReference if a.name == "ts" => Literal(v, a.dataType)
     }.eval()
     val seeds = Seq(20261018L, 7L, 42L)
+    val filesPerSeed = 15
     info(s"seeds: ${seeds.mkString(", ")}")
     val params = Gen.Parameters.default
     var verdicts = 0
     for (seed <- seeds; ((z, f, fe, kType, rest), pi) <- preds.zipWithIndex) {
-      val files = Gen.listOfN(15, fileGen).pureApply(params, Seed(seed * 1000 + pi))
+      val files = Gen.listOfN(filesPerSeed, fileGen).pureApply(params, Seed(seed * 1000 + pi))
       for ((mn, w, fracs, kFrac, kShift, nudge) <- files; op <- ops) {
         val mx = mn + w
         val kAt = mn + (kFrac * w).toLong + kShift
@@ -405,7 +406,7 @@ class PruneMatrixSpec extends SparkFunSuite {
         }
       }
     }
-    info(s"${preds.size} predicates x ${ops.size} ops x ${seeds.size * 15} files: $verdicts verdicts checked")
+    info(s"${preds.size} predicates x ${ops.size} ops x ${seeds.size * filesPerSeed} files: $verdicts verdicts checked")
     assert(verdicts > 1000)
   }
 
