@@ -1,5 +1,8 @@
 package graft.scan
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
@@ -62,30 +65,49 @@ object StatsPruning {
     case _                     => None
   }
 
+  /** A predicate prepared once for many files: everything that depends
+    * only on the predicate is derived up front, so a file costs only the
+    * comparisons of its own stats. */
+  type Pruner = (Map[String, ColStats], Long) => Tri
+  private val unknown: Pruner = (_, _) => Unknown
+
   /** Evaluate one Catalyst predicate against one file's stats. */
-  def eval(expr: Expression, stats: Map[String, ColStats], rowCount: Long): Tri = expr match {
-    case And(l, r) => and(eval(l, stats, rowCount), eval(r, stats, rowCount))
-    case Or(l, r)  => or(eval(l, stats, rowCount), eval(r, stats, rowCount))
-    case Not(c)    => not(eval(c, stats, rowCount))
-    case Literal(true, _)  => AlwaysTrue
-    case Literal(false, _) => AlwaysFalse
+  def eval(expr: Expression, stats: Map[String, ColStats], rowCount: Long): Tri =
+    prepare(expr)(stats, rowCount)
 
-    case In(v, list) if list.nonEmpty && list.forall(_.isInstanceOf[Literal]) =>
-      list.map(l => eval(EqualTo(v, l), stats, rowCount)).reduce(or)
-    case In(_, list) if list.isEmpty => AlwaysFalse
-    case InSet(v, set) if set.nonEmpty =>
-      set.toSeq.map(x => eval(EqualTo(v, Literal.create(x, v.dataType)), stats, rowCount)).reduce(or)
+  def prepare(expr: Expression): Pruner = pruner(replaced(expr))
 
-    case IsNull(c) => columnOf(c).flatMap(stats.get) match {
-      case Some(cs) if cs.nullCount == 0 && rowCount > 0 => AlwaysFalse
-      case Some(cs) if rowCount > 0 && cs.nullCount >= rowCount => AlwaysTrue
-      case _ => Unknown
+  /** `e` as the optimizer runs it: an analyzed predicate keeps
+    * RuntimeReplaceable nodes (BETWEEN, to_date, …) whose coerced form is
+    * only their replacement, which may share an input through a With. */
+  private def replaced(e: Expression): Expression = e.transformDown {
+    case r: RuntimeReplaceable => replaced(r.replacement)
+    case With(c, defs) => replaced(c.transform {
+      case r: CommonExpressionRef => defs.find(_.id == r.id).fold(r: Expression)(_.child)
+    })
+  }
+
+  private def pruner(expr: Expression): Pruner = expr match {
+    case And(l, r) => val (a, b) = (pruner(l), pruner(r)); (s, n) => and(a(s, n), b(s, n))
+    case Or(l, r)  => val (a, b) = (pruner(l), pruner(r)); (s, n) => or(a(s, n), b(s, n))
+    case Not(c)    => val a = pruner(c); (s, n) => not(a(s, n))
+    case Literal(true, _)  => (_, _) => AlwaysTrue
+    case Literal(false, _) => (_, _) => AlwaysFalse
+
+    // an empty list is AlwaysFalse
+    case In(v, list) if list.forall(_.isInstanceOf[Literal]) =>
+      anyOf(list.map(l => pruner(EqualTo(v, l))))
+    case InSet(v, set) =>
+      anyOf(set.toSeq.map(x => pruner(EqualTo(v, Literal.create(x, v.dataType)))))
+
+    case IsNull(c) => columnOf(c).fold(unknown) { col => (stats, rows) =>
+      stats.get(col) match {
+        case Some(cs) if cs.nullCount == 0 && rows > 0 => AlwaysFalse
+        case Some(cs) if rows > 0 && cs.nullCount >= rows => AlwaysTrue
+        case _ => Unknown
+      }
     }
-    case IsNotNull(c) => not(eval(IsNull(c), stats, rowCount))
-    // an analyzed BETWEEN keeps Spark's Between node (the optimizer
-    // replaces it)
-    case Between(v, lo, hi, _) =>
-      eval(And(GreaterThanOrEqual(v, lo), LessThanOrEqual(v, hi)), stats, rowCount)
+    case IsNotNull(c) => pruner(Not(IsNull(c)))
 
     case b: BinaryComparison =>
       val (colE, litE, flipped) = (b.left, b.right) match {
@@ -94,20 +116,17 @@ object StatsPruning {
         case _               => (b.left, None, false)
       }
       (columnOf(colE), litE.flatMap(litVal)) match {
-        case (Some(col), Some(k)) =>
-          stats.get(col) match {
-            case Some(cs) => evalCmp(b, flipped, cs, rowCount, k)
-            case None     => Unknown
-          }
-        case _ =>
-          litE.map(l => transformCmp(b, flipped, colE, l, stats, rowCount)).getOrElse(Unknown)
+        case (Some(col), Some(k)) => (stats, rows) =>
+          stats.get(col).fold(Unknown: Tri)(evalCmp(b, flipped, _, rows, k))
+        case _ => litE.fold(unknown)(transformCmp(b, flipped, colE, _))
       }
 
-    case e: StartsWith => (e.left, e.right) match {
-      case (c, Literal(p: UTF8String, _)) =>
-        (columnOf(c).flatMap(stats.get)) match {
+    case e: StartsWith => (columnOf(e.left), e.right) match {
+      case (Some(col), Literal(p: UTF8String, _)) =>
+        val prefix = p.toString
+        val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        (stats, _) => stats.get(col) match {
           case Some(ColStats(Some(StatVal.S(mn)), Some(StatVal.S(mx)), _)) =>
-            val prefix = p.toString
             // s.startsWith(prefix) ⇒ prefix ≤ s AND s's byte-prefix == the
             // prefix bytes. AlwaysFalse iff the whole [min,max] range
             // misses the prefix band — in the footer-stats UNSIGNED
@@ -115,7 +134,6 @@ object StatsPruning {
             // supplementary chars). Byte-lexicographic truncation is
             // monotone, so mn's byte-prefix above the prefix bytes puts
             // every s ≥ mn above the band.
-            val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val mnb = mn.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             def abovePrefixBand: Boolean = {
               val k = math.min(mnb.length, pb.length)
@@ -132,11 +150,13 @@ object StatsPruning {
             else Unknown
           case _ => Unknown
         }
-      case _ => Unknown
+      case _ => unknown
     }
 
-    case _ => Unknown // unrecognized predicate never prunes (sound)
+    case _ => unknown // unrecognized predicate never prunes (sound)
   }
+
+  private def anyOf(ps: Seq[Pruner]): Pruner = (s, n) => ps.foldLeft(AlwaysFalse: Tri)((t, p) => or(t, p(s, n)))
 
   // ---------------------------------------------------------------------
   // Transform pruning: `f(c) OP k`, where f is built only from
@@ -148,21 +168,39 @@ object StatsPruning {
   // any function's calendar arithmetic. Under a fixed-offset zone or on
   // NTZ values the bounds are exact; under an Olson zone a zoned node
   // evaluates at its input's bounds widened by a pad, and the result only
-  // prunes one way (AlwaysTrue becomes Unknown).
+  // prunes one way (AlwaysTrue becomes Unknown). f's nodes are bound once
+  // per predicate; a file only evaluates them at its endpoints.
   // ---------------------------------------------------------------------
 
   private val MicrosPerHour = 3600L * 1000000L
   private val MicrosPerDay  = 24L * MicrosPerHour
-  /** Pad for zoned bucketing (date_trunc, to_date, NTZ↔TIMESTAMP casts):
-    * local time steps back by at most a DST overlap (≤ 2 h: most 1 h,
-    * Antarctica/Troll 2 h, Lord Howe 0.5 h), so bucketing an input 4 h
-    * earlier or later bounds every value in between. */
+  /** Least pad for a zoned node: date_trunc converts instant → local →
+    * instant, and an input 4 h earlier or later bounds it across a DST
+    * change of up to 2 h (most 1 h, Antarctica/Troll 2 h). */
   private val DstPadMicros = 4L * MicrosPerHour
   /** Pad for calendar shifts (`ts + INTERVAL n DAYS/MONTHS`): a shift can
     * cross any offset change the zone makes, including dateline moves that
     * skip or repeat a whole day (Pacific/Apia 2011-12-30, Pacific/Kiritimati
-    * 1994-12-31); UTC offsets span [-12, +14], bounding any change at 26 h. */
+    * 1994-12-31); no zone's offsets spread wider than 25.5 h (Pacific/Apia,
+    * −11:26:56 … +14), bounding any change at 26 h. */
   private val ZoneShiftPadMicros = 26L * MicrosPerHour
+
+  /** Pad for a zoned node (date_trunc, to_date, NTZ↔TIMESTAMP casts, the
+    * epoch of an NTZ value) in zone `tz`; 0 for a fixed offset. A
+    * local↔instant conversion moves a value by the zone's offset at that
+    * value, so an input widened by the spread of every offset the zone has
+    * used bounds each value in between, across gaps (local→instant drops by
+    * a whole skipped day at Pacific/Apia 2011-12-30) and overlaps
+    * (instant→local repeats 23 h at Pacific/Kwajalein 1969-10-01). */
+  private def zonePad(tz: Option[String]): Long = tz.map(DateTimeUtils.getZoneId(_).getRules) match {
+    case Some(r) if r.isFixedOffset => 0L
+    case Some(r) =>
+      val secs = (r.getTransitions.asScala.flatMap(t => Seq(t.getOffsetBefore, t.getOffsetAfter)) ++
+        r.getTransitionRules.asScala.flatMap(t => Seq(t.getOffsetBefore, t.getOffsetAfter))).map(_.getTotalSeconds)
+      if (secs.isEmpty) ZoneShiftPadMicros
+      else math.max(DstPadMicros, (secs.max - secs.min) * 1000000L)
+    case None => ZoneShiftPadMicros
+  }
 
   /** One non-decreasing node over its column-dependent input, with the pad
     * its session zone needs (0 = exact). A month shift is non-decreasing
@@ -174,9 +212,6 @@ object StatsPruning {
 
   /** A file's bounds for a transform, as Catalyst values of its type. */
   private final case class Bounds(lo: Any, hi: Any, exact: Boolean, nulls: Long)
-
-  private def olson(tz: Option[String]): Boolean =
-    tz.forall(z => !DateTimeUtils.getZoneId(z).getRules.isFixedOffset)
 
   private def positive(l: Literal): Boolean = l.value match {
     case n: java.lang.Number => n.doubleValue > 0
@@ -202,18 +237,17 @@ object StatsPruning {
     * for any other node. */
   private def step(e: Expression): Option[Step] = {
     def exact(in: Expression) = Some(Step(in, 0L))
-    def zoned(in: Expression, tz: Option[String], pad: Long) =
-      Some(Step(in, if (olson(tz)) pad else 0L))
+    def zoned(in: Expression, tz: Option[String]) = Some(Step(in, zonePad(tz)))
     // TIMESTAMP → epoch is zone-free; NTZ → epoch reads local time
     def epoch(in: Expression, tz: Option[String]) = in.dataType match {
       case TimestampType    => exact(in)
-      case TimestampNTZType => zoned(in, tz, DstPadMicros)
+      case TimestampNTZType => zoned(in, tz)
       case _                => None
     }
     // Spark adds whole days and months as calendar units in the zone
     // (zone-free on NTZ); only a sub-day shift is a fixed duration
     def shift(in: Expression, tz: Option[String], months: Boolean) = Some(Step(in,
-      if (in.dataType == TimestampType && olson(tz)) ZoneShiftPadMicros else 0L, months))
+      if (in.dataType == TimestampType && zonePad(tz) > 0L) ZoneShiftPadMicros else 0L, months))
     e match {
       case KnownNullable(c)                    => exact(c)
       case PreciseTimestampConversion(c, _, _) => exact(c)
@@ -227,7 +261,7 @@ object StatsPruning {
         case (ByteType | ShortType | IntegerType | LongType, LongType | DoubleType) |
              (TimestampNTZType, DateType) => exact(c)
         case (TimestampType, DateType | TimestampNTZType) | (TimestampNTZType, TimestampType) =>
-          zoned(c, tz, DstPadMicros)
+          zoned(c, tz)
         case _ => None
       }
       case IntegralDivide(c, l: Literal, _) if positive(l) => exact(c)
@@ -235,7 +269,7 @@ object StatsPruning {
       case Add(c, _: Literal, _)                           => exact(c)
       case Add(_: Literal, c, _)                           => exact(c)
       case Subtract(c, _: Literal, _)                      => exact(c)
-      case TruncTimestamp(_: Literal, c, tz)               => zoned(c, tz, DstPadMicros)
+      case TruncTimestamp(_: Literal, c, tz)               => zoned(c, tz)
       case graft.functions.DateBin(l: Literal, c, _: Literal) if positive(l) => exact(c)
       case TimestampAddInterval(c, Literal(iv, _), tz) => iv match {
         case ci: CalendarInterval if ci.months == 0 && ci.days == 0 => exact(c)
@@ -257,13 +291,14 @@ object StatsPruning {
     case _                                                           => None
   }
 
-  /** Catalyst's eval of `e` with its input `in` bound to `v`; None when it
-    * throws (an ANSI overflow, an out-of-range timestamp) or is null. */
-  private def evalAt(e: Expression, in: Expression, v: Any): Option[Any] = {
-    val lit = Literal(v, in.dataType)
-    try Option(e.transformDown { case x if x.semanticEquals(in) => lit }.eval())
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
+  /** Catalyst's eval of `e` on a row holding `v`; None when it throws (an
+    * ANSI overflow, an out-of-range timestamp) or is null. */
+  private def at(e: Expression, v: Any): Option[Any] =
+    try Option(e.eval(InternalRow(v))) catch { case NonFatal(_) => None }
+
+  /** Catalyst's eval of `e` with its input `in` bound to `v`. */
+  private def evalAt(e: Expression, in: Expression, v: Any): Option[Any] =
+    at(e.transformDown { case x if x.semanticEquals(in) => Literal(v, in.dataType) }, v)
 
   private def ordered(lo: Any, hi: Any): Boolean =
     (StatVal.fromAny(lo), StatVal.fromAny(hi)) match {
@@ -271,39 +306,48 @@ object StatsPruning {
       case _                  => false
     }
 
-  /** [f(min), f(max)] over one file's stats, node by node from the column
-    * up; a node whose bounds come out reversed (an overflow wrap) or null
-    * stops the rule. */
-  private def bounds(e: Expression, stats: Map[String, ColStats]): Option[Bounds] = e match {
-    case a: AttributeReference =>
-      for { cs <- stats.get(a.name)
-            lo <- cs.min.flatMap(catalystValue(_, a.dataType))
-            hi <- cs.max.flatMap(catalystValue(_, a.dataType)) } yield Bounds(lo, hi, exact = true, cs.nullCount)
-    case _ =>
-      for { s <- step(e)
-            b <- bounds(s.input, stats)
-            (loIn, hiIn) <- evalPoints(e, s, b)
-            lo <- evalAt(e, s.input, loIn)
-            hi <- evalAt(e, s.input, hiIn) if ordered(lo, hi)
+  /** Step `s` of node `e`, with its input bound to row slot 0 once per
+    * predicate: a file's input bounds map to the node's bounds. */
+  private final class Node(e: Expression, s: Step) {
+    private def bind(x: Expression) = x.transformDown {
+      case y if y.semanticEquals(s.input) => BoundReference(0, s.input.dataType, nullable = true)
+    }
+    private val node = bind(e)
+    // a month shift's input rounds out to the start of its local day and
+    // to just before the start of the next
+    private val days = if (!s.wholeDays) None else {
+      val (dt, tz) = (s.input.dataType, e.asInstanceOf[TimeZoneAwareExpression].timeZoneId)
+      val day = Cast(s.input, DateType, tz)
+      Some((bind(Cast(day, dt, tz)), bind(Cast(DateAdd(day, Literal(1)), dt, tz))))
+    }
+
+    def apply(b: Bounds): Option[Bounds] =
+      for { (loIn, hiIn) <- points(b)
+            lo <- at(node, loIn)
+            hi <- at(node, hiIn) if ordered(lo, hi)
       } yield Bounds(lo, hi, b.exact && s.pad == 0L, b.nulls)
+
+    /** Where the node evaluates: its input's bounds widened by the pad,
+      * then rounded out to whole days for a month shift. */
+    private def points(b: Bounds): Option[(Any, Any)] =
+      try {
+        val (lo, hi) =
+          if (s.pad == 0L) (b.lo, b.hi)
+          else (Math.subtractExact(b.lo.asInstanceOf[Long], s.pad), Math.addExact(b.hi.asInstanceOf[Long], s.pad))
+        days match {
+          case None => Some((lo, hi))
+          case Some((start, next)) =>
+            for (l <- at(start, lo); h <- at(next, hi)) yield (l, h.asInstanceOf[Long] - 1)
+        }
+      } catch { case NonFatal(_) => None }
   }
 
-  /** Where step `s` of node `e` evaluates: its input's bounds widened by
-    * the zone pad, then rounded out to whole days in the node's zone for a
-    * month shift. */
-  private def evalPoints(e: Expression, s: Step, b: Bounds): Option[(Any, Any)] =
-    try {
-      val (lo, hi) =
-        if (s.pad == 0L) (b.lo, b.hi)
-        else (Math.subtractExact(b.lo.asInstanceOf[Long], s.pad), Math.addExact(b.hi.asInstanceOf[Long], s.pad))
-      if (!s.wholeDays) Some((lo, hi))
-      else { // from the start of lo's local day to just before the day after hi's
-        val (dt, tz) = (s.input.dataType, e.asInstanceOf[TimeZoneAwareExpression].timeZoneId)
-        def dayStart(v: Any, plusDays: Int) = Cast(DateAdd(Cast(Literal(v, dt), DateType, tz),
-          Literal(plusDays)), dt, tz).eval().asInstanceOf[Long]
-        Some((dayStart(lo, 0), dayStart(hi, 1) - 1))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** f's stats column and its nodes from the column up; None when some
+    * node is not non-decreasing. */
+  private def chain(f: Expression): Option[(AttributeReference, List[Node])] = f match {
+    case a: AttributeReference => Some((a, Nil))
+    case _ => for { s <- step(f); (a, ns) <- chain(s.input) } yield (a, ns :+ new Node(f, s))
+  }
 
   /** `f = k` can never hold: peeling identity wrappers and literal shifts
     * off f (moving k with them) reaches an exact bin — date_trunc,
@@ -319,18 +363,22 @@ object StatsPruning {
   private def binMoves(bin: Expression, k: Any): Boolean =
     step(bin).exists(s => s.pad == 0L && evalAt(bin, s.input, k).exists(_ != k))
 
-  /** Evaluate `f OP k` through f's bounds over the file's stats. */
-  private def transformCmp(b: BinaryComparison, flipped: Boolean, f: Expression,
-                           k: Literal, stats: Map[String, ColStats], rows: Long): Tri =
-    (litVal(k), bounds(f, stats)) match {
-      case (Some(kv), Some(fb)) =>
-        if (b.isInstanceOf[EqualTo] && offGrid(f, k.value)) AlwaysFalse
-        else {
+  /** `f OP k` through f's bounds over each file's stats. */
+  private def transformCmp(b: BinaryComparison, flipped: Boolean, f: Expression, k: Literal): Pruner =
+    (litVal(k), chain(f)) match {
+      case (Some(_), Some(_)) if b.isInstanceOf[EqualTo] && offGrid(f, k.value) => (_, _) => AlwaysFalse
+      case (Some(kv), Some((col, nodes))) => (stats, rows) =>
+        val fb = for { cs <- stats.get(col.name)
+                       lo <- cs.min.flatMap(catalystValue(_, col.dataType))
+                       hi <- cs.max.flatMap(catalystValue(_, col.dataType))
+                       fb <- nodes.foldLeft(Option(Bounds(lo, hi, exact = true, cs.nullCount)))(
+                         (acc, n) => acc.flatMap(n.apply)) } yield fb
+        fb.fold(Unknown: Tri) { fb =>
           val t = evalCmp(b, flipped,
             ColStats(StatVal.fromAny(fb.lo), StatVal.fromAny(fb.hi), fb.nulls), rows, kv)
           if (t == AlwaysTrue && !fb.exact) Unknown else t
         }
-      case _ => Unknown
+      case _ => unknown
     }
 
   /** reference pruning.rs:6-71 table, generalized. cMin/cMax = cmp(stat, k). */
@@ -382,7 +430,8 @@ object StatsPruning {
     * (reference prune_segments_by_time, ts_table_provider.rs:183-214). */
   def pruneSegments(segments: Seq[SegmentMeta], filters: Seq[Expression]): Seq[SegmentMeta] =
     if (filters.isEmpty) segments
-    else segments.filter { seg =>
-      filters.forall(f => eval(f, seg.stats, seg.rowCount) != AlwaysFalse)
+    else {
+      val ps = filters.map(prepare)
+      segments.filter(seg => ps.forall(_(seg.stats, seg.rowCount) != AlwaysFalse))
     }
 }

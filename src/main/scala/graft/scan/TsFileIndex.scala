@@ -43,8 +43,9 @@ final class TsFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val ps = dataFilters.map(StatsPruning.prepare)
     val kept = files.filter { case (seg, _) =>
-      dataFilters.forall(f => StatsPruning.eval(f, seg.stats, seg.rowCount) != StatsPruning.AlwaysFalse)
+      ps.forall(_(seg.stats, seg.rowCount) != StatsPruning.AlwaysFalse)
     }
     Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }

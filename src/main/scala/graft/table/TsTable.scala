@@ -1074,9 +1074,10 @@ final class TsTable private (val root: String, val store: LogStore) {
       else snapshot.where(cond).queryExecution.analyzed.collectFirst { case f: Filter => f.condition })
       .map(conjuncts).getOrElse(Seq(org.apache.spark.sql.graft.Bridge.toExpr(cond)))
     val inv = colMap.map(_.swap)
+    val ps = resolved.map(StatsPruning.prepare)
     val kept = segs.filterNot { seg =>
       val stats = seg.stats.map { case (k, v) => inv.getOrElse(k, k) -> v }
-      resolved.exists(StatsPruning.eval(_, stats, seg.rowCount) == StatsPruning.AlwaysFalse)
+      ps.exists(_(stats, seg.rowCount) == StatsPruning.AlwaysFalse)
     }
     (kept, resolved)
   }

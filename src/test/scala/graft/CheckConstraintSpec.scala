@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.data.TokenGen
-import graft.maintain.{Compaction, MergeInto, UpdateWhere}
+import graft.maintain.{Compaction, DeleteWhere, MergeInto, UpdateWhere}
 import graft.meta._
 import graft.table.{CheckViolationException, TsTable}
 
@@ -65,6 +65,27 @@ class CheckConstraintSpec extends SparkFunSuite {
     // the analyzed predicate keeps Spark's Between node
     assert(t.statsCandidates(spark, Seq(clean), expr("NOT (n_tok BETWEEN 64 AND 2048)"))._1.isEmpty)
     assert(t.statsCandidates(spark, Seq(clean), expr("NOT (n_tok BETWEEN 64 AND 150)"))._1 == Seq(clean))
+  }
+
+  test("BETWEEN over DATE bounds and to_date on a TIMESTAMP column prune by their replacement; DELETE finds the rows") {
+    import spark.implicits._
+    val t = TsTable.create(tmpDir("chk-between-ts"), TableMeta("ev",
+      TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1h"), None)), None, None))
+    t.append(Seq("2024-01-10 12:00:00", "2024-02-10 12:00:00").toDF("s")
+      .select(to_timestamp(col("s")).as("ts"), lit(1L).as("v")).coalesce(1))
+    def us(s: String) = java.time.Instant.parse(s).getEpochSecond * 1000000L
+    val jan10 = SegmentMeta("s", "data/s.parquet", "parquet", 10L, None,
+      Map("ts" -> ColStats(Some(StatVal.L(us("2024-01-10T00:00:00Z"))),
+        Some(StatVal.L(us("2024-01-11T00:00:00Z"))), 0L)), None)
+    // coercion casts the DATE bounds inside Between's replacement only;
+    // its raw parameters hold day numbers, not timestamp micros
+    val jan = expr("ts BETWEEN DATE '2024-01-01' AND DATE '2024-01-31'")
+    assert(t.statsCandidates(spark, Seq(jan10), jan)._1 == Seq(jan10))
+    // to_date is another node only its replacement (a cast) evaluates
+    assert(t.statsCandidates(spark, Seq(jan10), expr("to_date(ts) = DATE '2024-01-12'"))._1.isEmpty)
+    assert(t.statsCandidates(spark, Seq(jan10), expr("to_date(ts) = DATE '2024-01-10'"))._1 == Seq(jan10))
+    DeleteWhere.delete(spark, t, jan)
+    assert(t.scan(spark).count() == 1)
   }
 
   test("addCheck validates existing data; dropCheck re-opens the gate") {

@@ -304,14 +304,42 @@ class PruneMatrixSpec extends SparkFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
-  test("transform pruning is sound against Catalyst's own eval (fixed seeds, four zones)") {
+  test("day-skip zone (Pacific/Apia 2011): NTZ -> TIMESTAMP cast keeps the rows after the gap") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.session.timeZone")
+    val t = TsTable.create(tmpDir("prune-apia-ntz"), TableMeta("apia_ntz",
+      TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1m"), None)), None, None))
+    t.append((0 to 20).map(h => f"2011-12-31 $h%02d:00:00").toDF("tss")
+      .select(col("tss").cast("timestamp_ntz").as("ts"), lit(1.0).as("price")).coalesce(1))
+    spark.conf.set("spark.sql.session.timeZone", "Pacific/Apia")
+    try {
+      // local 2011-12-30 never happened in Apia: local -> instant drops a
+      // whole day across it, so the file's min converts 24 h below any
+      // point a 4 h pad reaches inside the gap
+      val early = expr("ts < TIMESTAMP '2011-12-31 12:00:00'")
+      val q = t.scan(spark).where(early)
+      assert(q.count() == 12 && filesRead(q) == 1)
+      // a row-level verb prunes on the analyzed predicate, where the cast
+      // to TIMESTAMP is still in place
+      graft.maintain.DeleteWhere.delete(spark, t, early)
+      assert(t.scan(spark).count() == 9, "NTZ -> TIMESTAMP bounds dropped rows after the skipped day")
+    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+  }
+
+  test("transform pruning is sound against Catalyst's own eval (fixed seeds, five zones, both timestamp types)") {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import graft.scan.StatsPruning
+    import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     scan.count() // build the table under UTC
+    val ntzT = TsTable.create(tmpDir("prune-prop-ntz"), TableMeta("prop_ntz",
+      TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1m"), None)), None, None))
+    ntzT.append(Seq("2024-03-01 10:00:00").toDF("tss")
+      .select(col("tss").cast("timestamp_ntz").as("ts"), lit(1.0).as("price")))
+    val ntzScan = ntzT.scan(spark)
     val transforms = Seq(
       "date_trunc('hour', ts)", "date_trunc('day', ts)", "date_trunc('week', ts)",
       "date_trunc('month', ts)", "date_trunc('quarter', ts)", "to_date(ts)",
@@ -323,9 +351,14 @@ class PruneMatrixSpec extends SparkFunSuite {
       "window(ts, '5 minutes').end",
       "date_bin(INTERVAL 5 MINUTES, ts, TIMESTAMP '1970-01-01 00:02:00')",
       "date_bin(INTERVAL 1 DAY, ts, TIMESTAMP '2000-01-01 00:00:00')")
+    // on an NTZ column: local -> instant (the cast Catalyst inserts when
+    // it meets a TIMESTAMP function or literal) and zone-free nodes
+    val ntzTransforms = Seq(
+      "CAST(ts AS TIMESTAMP)", "date_trunc('hour', ts)", "date_trunc('day', ts)",
+      "unix_timestamp(ts)", "to_date(ts)", "ts + INTERVAL 1 MONTH", "ts - INTERVAL 3 DAYS")
     val ops: Seq[(Expression, Expression) => Expression] = Seq(EqualTo, LessThan,
       LessThanOrEqual, GreaterThan, GreaterThanOrEqual, EqualNullSafe, (l, r) => Not(EqualTo(l, r)))
-    val zones = Seq("UTC", "+05:30", "America/New_York", "Pacific/Apia")
+    val zones = Seq("UTC", "+05:30", "America/New_York", "Pacific/Apia", "Pacific/Kwajalein")
 
     // one optimized `f(ts) = k` per (zone, transform): the conjuncts the
     // file index sees, with the comparison split into its two sides. The
@@ -340,7 +373,7 @@ class PruneMatrixSpec extends SparkFunSuite {
       "org.apache.spark.sql.catalyst.optimizer.UnwrapCastInBinaryComparison")
     val preds = try zones.flatMap { z =>
       spark.conf.set("spark.sql.session.timeZone", z)
-      transforms.map { f =>
+      (transforms.map(scan -> _) ++ ntzTransforms.map(ntzScan -> _)).map { case (scan, f) =>
         val k = scan.selectExpr(s"$f AS v").schema("v").dataType.sql match {
           case "DATE" => "DATE '2000-01-01'"
           case "TIMESTAMP" => "TIMESTAMP '2000-01-01 00:00:00'"
@@ -362,29 +395,40 @@ class PruneMatrixSpec extends SparkFunSuite {
 
     val Hour = 3600L * 1000000L
     val Day = 24 * Hour
-    val anchors = Seq("2024-03-10T07:00:00Z", "2024-11-03T06:00:00Z", "2011-12-30T10:00:00Z",
-      "1970-01-01T00:00:00Z", "2024-02-29T00:00:00Z", "2023-12-31T23:00:00Z")
-      .map(s => java.time.Instant.parse(s).getEpochSecond * 1000000L)
-    val minGen = Gen.oneOf(Gen.choose(-20L * 365 * Day, 60L * 365 * Day),
-      Gen.oneOf(anchors).flatMap(a => Gen.choose(a - 3 * Day, a + 3 * Day)))
-    val widthGen = Gen.choose(0, 11).flatMap(e => Gen.choose(0L, math.pow(10, e).toLong * 3))
-    val fileGen = for {
-      mn <- minGen; w <- widthGen
-      fracs <- Gen.listOfN(12, Gen.choose(0.0, 1.0))
-      kFrac <- Gen.choose(-0.5, 1.5); kShift <- Gen.oneOf(0L, 0L, Hour, -Hour, Day, -Day)
-      nudge <- Gen.oneOf(0, 0, 0, 1, -1)
-    } yield (mn, w, fracs, kFrac, kShift, nudge)
+    // each zone's transitions — DST changes, Apia's skipped day (as an
+    // instant, and as local time for NTZ), Kwajalein's 23 h repeat (1969)
+    // and skipped day (1993) — plus edges every zone shares
+    def micros(s: String) = java.time.Instant.parse(s).getEpochSecond * 1000000L
+    val common = Seq("1970-01-01T00:00:00Z", "2024-02-29T00:00:00Z", "2023-12-31T23:00:00Z")
+    val transitions = Map(
+      "America/New_York" -> Seq("2024-03-10T07:00:00Z", "2024-11-03T06:00:00Z"),
+      "Pacific/Apia" -> Seq("2011-12-30T10:00:00Z", "2011-12-31T00:00:00Z"),
+      "Pacific/Kwajalein" -> Seq("1969-09-30T13:00:00Z", "1993-08-21T12:00:00Z"))
+    // a zoned node goes wrong within hours of a transition, a calendar
+    // shift within days of one
+    def fileGen(z: String) = {
+      val near = Gen.oneOf((transitions.getOrElse(z, Nil) ++ common).map(micros))
+      for {
+        mn <- Gen.frequency(1 -> Gen.choose(-20L * 365 * Day, 60L * 365 * Day),
+          1 -> near.flatMap(a => Gen.choose(a - 3 * Day, a + 3 * Day)),
+          4 -> near.flatMap(a => Gen.choose(a - 4 * Hour, a + 4 * Hour)))
+        w <- Gen.choose(0, 11).flatMap(e => Gen.choose(0L, math.pow(10, e).toLong * 3))
+        fracs <- Gen.listOfN(12, Gen.choose(0.0, 1.0))
+        kFrac <- Gen.choose(-0.5, 1.5); kShift <- Gen.oneOf(0L, 0L, Hour, -Hour, Day, -Day)
+        nudge <- Gen.oneOf(0, 0, 0, 1, -1)
+      } yield (mn, w, fracs, kFrac, kShift, nudge)
+    }
 
     def at(e: Expression, v: Long): Any = e.transform {
       case a: AttributeReference if a.name == "ts" => Literal(v, a.dataType)
     }.eval()
     val seeds = Seq(20261018L, 7L, 42L)
-    val filesPerSeed = 15
+    val filesPerSeed = 30
     info(s"seeds: ${seeds.mkString(", ")}")
     val params = Gen.Parameters.default
     var verdicts = 0
     for (seed <- seeds; ((z, f, fe, kType, rest), pi) <- preds.zipWithIndex) {
-      val files = Gen.listOfN(filesPerSeed, fileGen).pureApply(params, Seed(seed * 1000 + pi))
+      val files = Gen.listOfN(filesPerSeed, fileGen(z)).pureApply(params, Seed(seed * 1000 + pi))
       for ((mn, w, fracs, kFrac, kShift, nudge) <- files; op <- ops) {
         val mx = mn + w
         val kAt = mn + (kFrac * w).toLong + kShift
