@@ -405,15 +405,15 @@ private[maintain] object RowLevel {
       * necessary-condition-oriented under padded rewrites, so "all rows
       * must match" cannot be concluded from it. */
     private def prunePredicate(condition: Column): Seq[SegmentMeta] = {
-      val (kept, resolved) = table.statsCandidates(spark, live, condition)
+      val (kept, pred) = table.statsCandidates(spark, live, condition)
       // the predicate is evaluated in independent jobs and whole files drop
       // on the first evaluation's word — a nondeterministic condition
       // (rand(), now()-derived exprs via the CLI's --where) could change a
       // row set no single evaluation ever selected. Reject up front, like
       // Delta-style engines do.
-      require(resolved.forall(_.deterministic),
+      require(pred.forall(_.deterministic),
         "DELETE WHERE requires a deterministic predicate; " +
-          s"got: ${resolved.filterNot(_.deterministic).mkString(", ")}")
+          s"got: ${pred.mkString(", ")}")
       kept
     }
 

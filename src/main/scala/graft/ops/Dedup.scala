@@ -513,8 +513,6 @@ object Dedup {
       // round where the checksum matches)
       converged = ssCount == edgeCount && ssSum == edgeSum &&
         ss.except(edges).isEmpty
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"CC round=$iter edges=$ssCount t=${System.nanoTime() / 1000000000}")
       edges = ss
       edgeCount = ssCount
       edgeSum = ssSum

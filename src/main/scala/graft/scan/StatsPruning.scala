@@ -55,13 +55,11 @@ object StatsPruning {
     case other             => StatVal.fromAny(other)
   }
 
-  /** Unwrap aliases/casts the way the reference unwraps Alias/Cast
-    * (time_predicate.rs:164-171). Casting can change comparison semantics,
-    * so only identity-safe unwraps are taken; anything else → column
-    * unresolvable → Unknown. */
+  /** The stats column a comparison side names: a bare attribute only.
+    * Casting can change comparison semantics, so a cast side is a
+    * transform (`transformCmp`), never an unwrap. */
   private def columnOf(e: Expression): Option[String] = e match {
     case a: AttributeReference => Some(a.name)
-    case Alias(c, _)           => columnOf(c)
     case _                     => None
   }
 
@@ -75,30 +73,21 @@ object StatsPruning {
   def eval(expr: Expression, stats: Map[String, ColStats], rowCount: Long): Tri =
     prepare(expr)(stats, rowCount)
 
-  def prepare(expr: Expression): Pruner = pruner(replaced(expr))
-
-  /** `e` as the optimizer runs it: an analyzed predicate keeps
-    * RuntimeReplaceable nodes (BETWEEN, to_date, …) whose coerced form is
-    * only their replacement, which may share an input through a With. */
-  private def replaced(e: Expression): Expression = e.transformDown {
-    case r: RuntimeReplaceable => replaced(r.replacement)
-    case With(c, defs) => replaced(c.transform {
-      case r: CommonExpressionRef => defs.find(_.id == r.id).fold(r: Expression)(_.child)
-    })
-  }
-
-  private def pruner(expr: Expression): Pruner = expr match {
-    case And(l, r) => val (a, b) = (pruner(l), pruner(r)); (s, n) => and(a(s, n), b(s, n))
-    case Or(l, r)  => val (a, b) = (pruner(l), pruner(r)); (s, n) => or(a(s, n), b(s, n))
-    case Not(c)    => val a = pruner(c); (s, n) => not(a(s, n))
+  /** `expr` prepared for many files. It is an optimized predicate, as
+    * the scan and maintenance both take it: literal casts folded and
+    * RuntimeReplaceable nodes (BETWEEN, to_date, …) replaced. */
+  def prepare(expr: Expression): Pruner = expr match {
+    case And(l, r) => val (a, b) = (prepare(l), prepare(r)); (s, n) => and(a(s, n), b(s, n))
+    case Or(l, r)  => val (a, b) = (prepare(l), prepare(r)); (s, n) => or(a(s, n), b(s, n))
+    case Not(c)    => val a = prepare(c); (s, n) => not(a(s, n))
     case Literal(true, _)  => (_, _) => AlwaysTrue
     case Literal(false, _) => (_, _) => AlwaysFalse
 
     // an empty list is AlwaysFalse
     case In(v, list) if list.forall(_.isInstanceOf[Literal]) =>
-      anyOf(list.map(l => pruner(EqualTo(v, l))))
+      anyOf(list.map(l => prepare(EqualTo(v, l))))
     case InSet(v, set) =>
-      anyOf(set.toSeq.map(x => pruner(EqualTo(v, Literal.create(x, v.dataType)))))
+      anyOf(set.toSeq.map(x => prepare(EqualTo(v, Literal.create(x, v.dataType)))))
 
     case IsNull(c) => columnOf(c).fold(unknown) { col => (stats, rows) =>
       stats.get(col) match {
@@ -107,7 +96,7 @@ object StatsPruning {
         case _ => Unknown
       }
     }
-    case IsNotNull(c) => pruner(Not(IsNull(c)))
+    case IsNotNull(c) => prepare(Not(IsNull(c)))
 
     case b: BinaryComparison =>
       val (colE, litE, flipped) = (b.left, b.right) match {
@@ -426,12 +415,16 @@ object StatsPruning {
   private def geTri(cMin: Int, cMax: Int): Tri =
     if (cMin >= 0) AlwaysTrue else if (cMax < 0) AlwaysFalse else Unknown
 
-  /** Keep a segment unless the conjunction of filters is AlwaysFalse
-    * (reference prune_segments_by_time, ts_table_provider.rs:183-214). */
+  /** The one keep rule, for scans and maintenance alike (reference
+    * prune_segments_by_time, ts_table_provider.rs:183-214): each filter is
+    * prepared once, and a segment stays unless some filter is AlwaysFalse
+    * over its stats. */
+  def keep(filters: Seq[Expression]): SegmentMeta => Boolean = {
+    val ps = filters.map(prepare)
+    seg => ps.forall(_(seg.stats, seg.rowCount) != AlwaysFalse)
+  }
+
+  /** The segments [[keep]] keeps. */
   def pruneSegments(segments: Seq[SegmentMeta], filters: Seq[Expression]): Seq[SegmentMeta] =
-    if (filters.isEmpty) segments
-    else {
-      val ps = filters.map(prepare)
-      segments.filter(seg => ps.forall(_(seg.stats, seg.rowCount) != AlwaysFalse))
-    }
+    segments.filter(keep(filters))
 }

@@ -43,11 +43,9 @@ final class TsFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val ps = dataFilters.map(StatsPruning.prepare)
-    val kept = files.filter { case (seg, _) =>
-      ps.forall(_(seg.stats, seg.rowCount) != StatsPruning.AlwaysFalse)
-    }
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
+    val keep = StatsPruning.keep(dataFilters)
+    val kept = files.collect { case (seg, f) if keep(seg) => f }
+    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 
   override def inputFiles: Array[String] = files.map(_._2.getPath.toString).toArray

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.UUID
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -1057,29 +1059,20 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
   /** The segments of `segs` a user predicate may match, by footer stats,
-    * with the predicate's conjuncts. The predicate is resolved against the
-    * table schema first (stats evaluation needs real attributes; an
-    * unresolved Column evaluates Unknown everywhere — sound, but
-    * pruning-free), and a segment drops only when some conjunct is
-    * provably false for all its rows, under its stats re-keyed to LOGICAL
-    * names (sidecars are keyed physical, like the files). */
+    * with the predicate the stats saw. That predicate is the one a scan
+    * hands [[TsFileIndex]]: the optimized filter of `cond` over the
+    * table's relation of zero files, so literal casts are folded,
+    * RuntimeReplaceable nodes replaced, and columns named physically
+    * (pushed below the rename projection), as the stats are keyed. A
+    * predicate that folds away, or a table with no schema adopted yet,
+    * keeps every segment. */
   private[graft] def statsCandidates(spark: SparkSession, segs: Seq[SegmentMeta],
                                      cond: Column): (Seq[SegmentMeta], Seq[Expression]) = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    val snapshot = scan(spark)
-    val resolved = (if (snapshot.columns.isEmpty) None // no schema adopted yet
-      else snapshot.where(cond).queryExecution.analyzed.collectFirst { case f: Filter => f.condition })
-      .map(conjuncts).getOrElse(Seq(org.apache.spark.sql.graft.Bridge.toExpr(cond)))
-    val inv = colMap.map(_.swap)
-    val ps = resolved.map(StatsPruning.prepare)
-    val kept = segs.filterNot { seg =>
-      val stats = seg.stats.map { case (k, v) => inv.getOrElse(k, k) -> v }
-      ps.exists(_(stats, seg.rowCount) == StatsPruning.AlwaysFalse)
-    }
-    (kept, resolved)
+    val empty = read(spark, Nil, cachedState.tableMeta)
+    val pred = if (empty.columns.isEmpty) Nil
+      else empty.where(cond).queryExecution.optimizedPlan
+        .collectFirst { case f: Filter => f.condition }.toSeq
+    (StatsPruning.pruneSegments(segs, pred), pred)
   }
 
   /** Schema evolution: ADD COLUMN as a metadata-only commit (one
@@ -1140,10 +1133,7 @@ final class TsTable private (val root: String, val store: LogStore) {
           require(!s.columns.contains(m.physicalName(oldName)),
             s"cannot rename cluster column '$oldName'")
       }
-      val word = java.util.regex.Pattern.compile(
-        "\\b" + java.util.regex.Pattern.quote(oldName) + "\\b",
-        java.util.regex.Pattern.CASE_INSENSITIVE)
-      m.checks.find { case (_, sql) => word.matcher(sql).find() }.foreach { case (cn, sql) =>
+      checkNaming(m, oldName).foreach { case (cn, sql) =>
         throw new IllegalStateException(
           s"cannot rename '$oldName': CHECK '$cn' ($sql) references it — drop the check first")
       }
@@ -1154,6 +1144,18 @@ final class TsTable private (val root: String, val store: LogStore) {
         (if (physical == newName) Map.empty[String, String] // renamed back
          else Map(newName -> physical))
       Some(m.copy(schemaJson = Some(evolved.json), colMap = cmap))
+    }
+
+  /** The first CHECK of `m` whose parsed expression names `column`
+    * (case-insensitively, in any part of an attribute name; a lambda
+    * variable of that name counts too, which only costs an explicit
+    * drop-check). */
+  private def checkNaming(m: TableMeta, column: String): Option[(String, String)] =
+    m.checks.find { case (_, sql) =>
+      CatalystSqlParser.parseExpression(sql).exists {
+        case a: UnresolvedAttribute => a.nameParts.exists(_.equalsIgnoreCase(column))
+        case _ => false
+      }
     }
 
   /** Schema evolution: DROP COLUMN as a metadata-only commit. Files keep
@@ -1180,12 +1182,7 @@ final class TsTable private (val root: String, val store: LogStore) {
           require(!s.columns.contains(m.physicalName(name)),
             s"cannot drop cluster column '$name'")
       }
-      // conservative word-boundary test: a check MIGHT reference the
-      // column → refuse (false positives only cost an explicit drop-check)
-      val word = java.util.regex.Pattern.compile(
-        "\\b" + java.util.regex.Pattern.quote(name) + "\\b",
-        java.util.regex.Pattern.CASE_INSENSITIVE)
-      m.checks.find { case (_, sql) => word.matcher(sql).find() }.foreach { case (cn, sql) =>
+      checkNaming(m, name).foreach { case (cn, sql) =>
         throw new IllegalStateException(
           s"cannot drop '$name': CHECK '$cn' ($sql) references it — drop the check first")
       }
@@ -1205,11 +1202,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * maintenance read, and the streaming source see the widened type
     * uniformly across file eras. Appends must arrive with the NEW type
     * (exact-match enforcement, same as any schema drift). Pruning: old
-    * files' stats sidecars keep their narrow-typed min/max — predicates
-    * that compile against the widened type simply stop pruning those
-    * files (sound, never wrong) until the next compaction rewrites them
-    * with widened stats. Lossy conversions (long→double, narrowing) are
-    * refused. The time-index column is refused (layout identity); cluster
+    * files' stats sidecars keep their narrow min/max, which compare
+    * exactly with the optimized predicate's literal folded to the wider
+    * type, so those files keep pruning. Lossy conversions (long→double,
+    * narrowing) are refused. The time-index column is refused (layout identity); cluster
     * columns are fine — the curve key range-normalizes numerics in DOUBLE
     * space whatever the declared width. */
   def alterColumnType(name: String, newType: org.apache.spark.sql.types.DataType,

@@ -84,6 +84,12 @@ class CheckConstraintSpec extends SparkFunSuite {
     // to_date is another node only its replacement (a cast) evaluates
     assert(t.statsCandidates(spark, Seq(jan10), expr("to_date(ts) = DATE '2024-01-12'"))._1.isEmpty)
     assert(t.statsCandidates(spark, Seq(jan10), expr("to_date(ts) = DATE '2024-01-10'"))._1 == Seq(jan10))
+    // literals type coercion casts to the column's type fold away: an INT
+    // literal against BIGINT, a DATE literal against TIMESTAMP
+    assert(t.statsCandidates(spark, Seq(jan10), expr("ts >= DATE '2024-03-01'"))._1.isEmpty)
+    val v1 = SegmentMeta("v", "data/v.parquet", "parquet", 10L, None,
+      Map("v" -> ColStats(Some(StatVal.L(1L)), Some(StatVal.L(1L)), 0L)), None)
+    assert(t.statsCandidates(spark, Seq(v1), col("v") > 5)._1.isEmpty)
     DeleteWhere.delete(spark, t, jan)
     assert(t.scan(spark).count() == 1)
   }

@@ -319,8 +319,7 @@ class PruneMatrixSpec extends SparkFunSuite {
       val early = expr("ts < TIMESTAMP '2011-12-31 12:00:00'")
       val q = t.scan(spark).where(early)
       assert(q.count() == 12 && filesRead(q) == 1)
-      // a row-level verb prunes on the analyzed predicate, where the cast
-      // to TIMESTAMP is still in place
+      // a row-level verb prunes the same optimized predicate as the scan
       graft.maintain.DeleteWhere.delete(spark, t, early)
       assert(t.scan(spark).count() == 9, "NTZ -> TIMESTAMP bounds dropped rows after the skipped day")
     } finally spark.conf.set("spark.sql.session.timeZone", prev)

@@ -188,6 +188,16 @@ class RenameColumnSpec extends SparkFunSuite {
     val rep2 = MergeInto.merge(spark, t, ins, key = "len_chars")
     assert(rep2.candidates == 0 && rep2.inserted == 3)
     assert(t.scan(spark).count() == 3003)
+
+    // CoW DELETE on the renamed key: the predicate is pruned as the scan
+    // sees it, on the physical column, so only the [2000, 3000) file is read
+    val cond = col("len_chars") >= 2500 && col("len_chars") < 2600
+    val expected = t.scan(spark).where(!cond).collect().map(_.toString).sorted.toSeq
+    val liveBefore = t.state.liveSegments.size
+    val del = DeleteWhere.delete(spark, t, cond)
+    assert(del.candidates == 1 && liveBefore > 1, s"${del.candidates} of $liveBefore files were candidates")
+    assert(del.rowsDeleted == 100)
+    assert(t.scan(spark).collect().map(_.toString).sorted.toSeq == expected)
   }
 
   test("streaming source and DSv1 relation over a renamed table") {

@@ -67,8 +67,15 @@ class SchemaEvolutionSpec extends SparkFunSuite {
     t.addCheck(spark, "q_bound", "quality IS NULL OR quality < 100")
     intercept[IllegalStateException] { t.dropColumn("quality") }     // check references it
     t.dropCheck("q_bound")
+    // the reference is read from the parsed CHECK: any letter case names
+    // the column, a string literal spelling it does not
+    t.addCheck(spark, "q_upper", "QUALITY IS NULL OR QUALITY < 100")
+    intercept[IllegalStateException] { t.dropColumn("quality") }
+    t.dropCheck("q_upper")
+    t.addCheck(spark, "not_q", "source <> 'quality'")
 
     t.dropColumn("quality")
+    t.dropCheck("not_q")
     assert(t.scan(spark).schema.fieldNames.toSeq ==
       Seq("doc_id", "tokens", "n_tok", "source"))
     assert(t.scan(spark).count() == 150)
@@ -154,6 +161,8 @@ class SchemaEvolutionSpec extends SparkFunSuite {
     t.alterColumnType("n_tok", LongType)
     assert(t.scan(spark).schema("n_tok").dataType == LongType)
     assert(t.scan(spark).agg(sum("n_tok")).collect()(0).getLong(0) == narrowSum)
+    // the narrow-era files keep pruning: the INT literal folds to BIGINT
+    assert(t.statsCandidates(spark, t.state.liveSegments, col("n_tok") > 5000)._1.isEmpty)
 
     // appends must arrive with the NEW type: the old int shape is drift…
     intercept[Exception] { t.append(TokenGen.generate(spark, 10, idStart = 5000)) }

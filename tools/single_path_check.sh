@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: four engine concerns each have one owner.
+# Single-path check over src/main: five engine concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -15,6 +15,10 @@
 #     from Catalyst's own eval, so nothing under src/main/scala/graft/scan/
 #     refers to `java.time` or `TimeKernels` (no hand-ported calendar or
 #     bucket arithmetic).
+#  5. Pruning entry: a segment is kept or pruned only through
+#     `StatsPruning.keep` / `pruneSegments`, so nothing outside
+#     src/main/scala/graft/scan/ calls `StatsPruning.prepare` or `eval`
+#     (maintenance hands over the optimized predicate a scan sees).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -47,6 +51,8 @@ reads=$(code '(RowTracking\.attach|liveRowFilter|baseRelationToDataFrame)\(' |
 
 semantics=$(code '\b(java\.time|TimeKernels)\b' | grep "^$src/graft/scan/" || true)
 
+entry=$(code 'StatsPruning\.(prepare|eval)\b' | grep -v "^$src/graft/scan/" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -59,5 +65,6 @@ report "log files read or named outside graft.log" "$history"
 report "exception-message matching" "$messages"
 report "segment reads outside TsTable.read" "$reads"
 report "transform semantics outside Catalyst's eval in graft.scan" "$semantics"
+report "stats pruning entered outside its keep rule" "$entry"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
