@@ -405,15 +405,15 @@ private[maintain] object RowLevel {
       * necessary-condition-oriented under padded rewrites, so "all rows
       * must match" cannot be concluded from it. */
     private def prunePredicate(condition: Column): Seq[SegmentMeta] = {
-      val (kept, pred) = table.statsCandidates(spark, live, condition)
+      val (kept, filters) = table.statsCandidates(spark, live, condition)
       // the predicate is evaluated in independent jobs and whole files drop
       // on the first evaluation's word — a nondeterministic condition
       // (rand(), now()-derived exprs via the CLI's --where) could change a
       // row set no single evaluation ever selected. Reject up front, like
       // Delta-style engines do.
-      require(pred.forall(_.deterministic),
+      require(filters.forall(_.deterministic),
         "DELETE WHERE requires a deterministic predicate; " +
-          s"got: ${pred.mkString(", ")}")
+          s"got: ${filters.filterNot(_.deterministic).mkString(", ")}")
       kept
     }
 

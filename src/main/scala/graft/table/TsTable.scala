@@ -1059,9 +1059,9 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
   /** The segments of `segs` a user predicate may match, by footer stats,
-    * with the predicate the stats saw. That predicate is the one a scan
-    * hands [[TsFileIndex]]: the optimized filter of `cond` over the
-    * table's relation of zero files, so literal casts are folded,
+    * with the filters the stats saw. They are the ones a scan hands
+    * [[TsFileIndex]]: the optimized filters of `cond` over the table's
+    * relation of zero files, so literal casts are folded,
     * RuntimeReplaceable nodes replaced, and columns named physically
     * (pushed below the rename projection), as the stats are keyed. A
     * predicate that folds away, or a table with no schema adopted yet,
@@ -1069,10 +1069,9 @@ final class TsTable private (val root: String, val store: LogStore) {
   private[graft] def statsCandidates(spark: SparkSession, segs: Seq[SegmentMeta],
                                      cond: Column): (Seq[SegmentMeta], Seq[Expression]) = {
     val empty = read(spark, Nil, cachedState.tableMeta)
-    val pred = if (empty.columns.isEmpty) Nil
-      else empty.where(cond).queryExecution.optimizedPlan
-        .collectFirst { case f: Filter => f.condition }.toSeq
-    (StatsPruning.pruneSegments(segs, pred), pred)
+    val filters = if (empty.columns.isEmpty) Nil
+      else empty.where(cond).queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
+    (StatsPruning.pruneSegments(segs, filters), filters)
   }
 
   /** Schema evolution: ADD COLUMN as a metadata-only commit (one
