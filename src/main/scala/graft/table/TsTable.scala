@@ -1204,9 +1204,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     * files' stats sidecars keep their narrow min/max, which compare
     * exactly with the optimized predicate's literal folded to the wider
     * type, so those files keep pruning. Lossy conversions (long→double,
-    * narrowing) are refused. The time-index column is refused (layout identity); cluster
-    * columns are fine — the curve key range-normalizes numerics in DOUBLE
-    * space whatever the declared width. */
+    * narrowing) are refused. The time-index column is refused (layout
+    * identity); cluster columns are fine — the curve key range-normalizes
+    * numerics in DOUBLE space whatever the declared width. */
   def alterColumnType(name: String, newType: org.apache.spark.sql.types.DataType,
                       maxRetries: Int = 3): Long =
     alterMeta(maxRetries) { (_, m) =>
