@@ -5,9 +5,9 @@ import java.util.UUID
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -1059,19 +1059,35 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
   /** The segments of `segs` a user predicate may match, by footer stats,
-    * with the filters the stats saw. They are the ones a scan hands
-    * [[TsFileIndex]]: the optimized filters of `cond` over the table's
-    * relation of zero files, so literal casts are folded,
-    * RuntimeReplaceable nodes replaced, and columns named physically
-    * (pushed below the rename projection), as the stats are keyed. A
-    * predicate that folds away, or a table with no schema adopted yet,
-    * keeps every segment. */
+    * with the optimized predicate's filter conditions (the whole
+    * predicate, for a determinism check). The stats see only what a scan
+    * hands [[TsFileIndex]]: the deterministic conjuncts without subqueries
+    * of the optimized filters that sit directly on the table's relation
+    * of zero files, so literal casts are folded, RuntimeReplaceable nodes
+    * replaced, and columns named physically, as the stats are keyed. A
+    * filter a subquery rewrite puts over another relation never prunes
+    * this table. A predicate that folds away, or a table with no schema
+    * adopted yet, keeps every segment. */
   private[graft] def statsCandidates(spark: SparkSession, segs: Seq[SegmentMeta],
                                      cond: Column): (Seq[SegmentMeta], Seq[Expression]) = {
     val empty = read(spark, Nil, cachedState.tableMeta)
-    val filters = if (empty.columns.isEmpty) Nil
-      else empty.where(cond).queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
-    (StatsPruning.pruneSegments(segs, filters), filters)
+    if (empty.columns.isEmpty) (segs, Nil)
+    else {
+      val own = empty.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.outputSet }.get
+      def onOwn(p: LogicalPlan): Boolean = p match {
+        case Filter(_, child) => onOwn(child)
+        case l: LogicalRelation => l.outputSet.subsetOf(own)
+        case _ => false
+      }
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
+        case other => Seq(other)
+      }
+      val plan = empty.where(cond).queryExecution.optimizedPlan
+      val scanned = plan.collect { case Filter(c, child) if onOwn(child) => conjuncts(c) }.flatten
+        .filter(e => e.deterministic && !SubqueryExpression.hasSubquery(e))
+      (StatsPruning.pruneSegments(segs, scanned), plan.collect { case f: Filter => f.condition })
+    }
   }
 
   /** Schema evolution: ADD COLUMN as a metadata-only commit (one

@@ -376,6 +376,24 @@ class MaintenanceSpec extends SparkFunSuite {
     assert(spark.conf.get(key) == before)
   }
 
+  test("delete where with an IN subquery prunes only on the table's own filters") {
+    import spark.implicits._
+    import graft.maintain.DeleteWhere
+    val t = TsTable.create(tmpDir("del-subq"), TableMeta("vals",
+      TableKind.Clustered(ClusterSpec(Seq("id"), "zorder")), None, None))
+    // the table's n stats lie in [1, 10]; the subquery's `n > 5000` is a
+    // filter over another table's column of the same name
+    t.append((1L to 10L).map(i => (i, i)).toDF("id", "n").coalesce(1))
+    val other = tmpDir("del-subq-other")
+    Seq((3L, 9000L), (4L, 1L), (7L, 6000L)).toDF("id", "n").write.mode("overwrite").parquet(other)
+    def inOther(cut: Long) = expr(s"id IN (SELECT id FROM parquet.`$other` WHERE n > $cut)")
+    val rep = DeleteWhere.delete(spark, t, inOther(8000L))
+    assert(rep.candidates == 1 && rep.rowsDeleted == 1, s"unexpected: $rep")
+    DeleteWhere.deleteMor(spark, t, inOther(5000L))
+    assert(t.scan(spark).select("id").as[Long].collect().sorted.toSeq ==
+      (1L to 10L).filterNot(Set(3L, 7L)))
+  }
+
   test("delete where: fully-matched files drop metadata-only while partials rewrite") {
     import spark.implicits._
     import graft.maintain.DeleteWhere
