@@ -3,7 +3,7 @@ package graft.maintain
 import java.nio.file.{Files, Path}
 import graft.log.{TableState, VersionExpiredException}
 import graft.meta.PathNorm
-import graft.table.TsTable
+import graft.table.{Fanout, TsTable}
 
 /** Snapshot expiration + manifest rewrite (north rule; the reference lists
   * both as roadmap — README.md:374-376, checkpoints note in
@@ -104,7 +104,7 @@ object Expire {
     val dataDir = table.localPath("data")
     val listed = SweptDirs.flatMap(d => list(table.localPath(d))).filter(Files.isRegularFile(_))
     val candidates = (listed ++ dead).distinct.filterNot(live)
-    val deleted = par(candidates) { p =>
+    val deleted = Fanout.map(candidates) { p =>
       val size =
         if (dead(p) || mtime(p) < cutoff) try Files.size(p) catch { case _: java.io.IOException => -1L }
         else -1L
@@ -153,19 +153,4 @@ object Expire {
     } catch { case _: Exception => Long.MaxValue // vanished mid-walk: treat as live
     } finally s.close()
   }
-
-  /** `f` over `xs`, in order. Unlinks are independent driver file IO —
-    * hundreds after every compaction at bench scale, 10^5+ at production
-    * file counts — so past a handful a bounded pool overlaps the syscall
-    * latency. */
-  private def par[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.size < 16) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.traverse(xs)(x => Future(f(x))), scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    }
 }

@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -33,25 +34,26 @@ object FooterStats {
   /** The footer metadata key Spark writes its schema under. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** Footer stats for many files, read concurrently: each read is an
-    * independent footer open (network/disk latency bound), so a
-    * 200-small-file append pays one round trip instead of 200 sequential
-    * ones. Result order matches `files`. */
-  def readAll(conf: Configuration, files: Seq[String], parallelism: Int = 32): Seq[(String, FileStats)] = {
-    if (files.lengthCompare(2) < 0) return files.map(f => f -> read(conf, f))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(files.size, parallelism))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(
-        Future.sequence(files.map(f => Future(f -> read(conf, f)))),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
-  }
+  /** Footer stats for many files, read on the driver's metadata fan-out
+    * ([[Fanout]]): each read is an independent footer open (network/disk
+    * latency bound), so a 200-small-file append overlaps its round trips
+    * instead of paying 200 sequential ones. Result order matches `files`. */
+  def readAll(conf: Configuration, files: Seq[String]): Seq[(String, FileStats)] =
+    Fanout.map(files)(f => f -> read(conf, f))
+
+  /** The one way the engine opens a Parquet footer; the caller closes the
+    * reader. The read options come from the caller's already-loaded Hadoop
+    * conf: `ParquetFileReader.open(in)` alone builds a fresh
+    * `Configuration` per file, parsing Hadoop's default resources again. */
+  def open(conf: Configuration, file: String): ParquetFileReader =
+    open(HadoopInputFile.fromPath(new HPath(file), conf))
+
+  private def open(in: HadoopInputFile): ParquetFileReader =
+    ParquetFileReader.open(in, HadoopReadOptions.builder(in.getConfiguration).build())
 
   def read(conf: Configuration, file: String): FileStats = {
     val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
+    val reader = open(in)
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq

@@ -1,9 +1,6 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import scala.jdk.CollectionConverters._
 
@@ -28,8 +25,7 @@ object KeyBloom {
     * early exit on the first possible hit. */
   def mayContainAny(conf: Configuration, file: String, colName: String,
                     keys: Array[Any]): Boolean = {
-    val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
+    val reader = FooterStats.open(conf, file)
     try {
       reader.getFooter.getBlocks.asScala.exists { block =>
         block.getColumns.asScala.find(_.getPath.toDotString == colName) match {
@@ -59,27 +55,19 @@ object KeyBloom {
   }
 
   /** Filter `files` (path, anything) down to those that may contain at
-    * least one key. Footer reads fan out on a bounded driver pool — the
-    * same driver-side metadata plane as stats collection; at 10^5 candidate
+    * least one key. Footer reads go through the driver's metadata fan-out
+    * ([[Fanout]]), the same plane as stats collection; at 10^5 candidate
     * files and object-store latency this is minutes of metadata IO vs hours
-    * of data rewrite, and it parallelizes to the pool width. */
+    * of data rewrite. */
   def filterMayContain[T](conf: Configuration, files: Seq[(String, T)], colName: String,
-                          keys: Array[Any], poolSize: Int = 32): Seq[T] = {
-    if (files.isEmpty || keys.isEmpty) return files.map(_._2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(poolSize, math.max(1, files.size)))
-    try {
-      val futs = files.map { case (path, tag) =>
-        pool.submit(new java.util.concurrent.Callable[Option[T]] {
-          def call(): Option[T] =
-            // a failed footer read (transient IO, corrupt bloom page) must
-            // not abort the MERGE — same conservative contract as every
-            // other untestable case: keep the file as a candidate
-            try { if (mayContainAny(conf, path, colName, keys)) Some(tag) else None }
-            catch { case _: Exception => Some(tag) }
-        })
-      }
-      futs.flatMap(_.get())
-    } finally pool.shutdown()
+                          keys: Array[Any]): Seq[T] = {
+    if (keys.isEmpty) return files.map(_._2)
+    Fanout.map(files) { case (path, tag) =>
+      // a failed footer read (transient IO, corrupt bloom page) must not
+      // abort the MERGE — same conservative contract as every other
+      // untestable case: keep the file as a candidate
+      try { if (mayContainAny(conf, path, colName, keys)) Some(tag) else None }
+      catch { case _: Exception => Some(tag) }
+    }.flatten
   }
 }

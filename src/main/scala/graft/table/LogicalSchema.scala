@@ -1,9 +1,6 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import scala.jdk.CollectionConverters._
@@ -25,8 +22,7 @@ object LogicalSchema {
   /** Walk the parquet footer schema of `file` and throw
     * [[SchemaMismatchException]] on the first unsupported logical type. */
   def validateFooterSchema(conf: Configuration, file: String): Unit = {
-    val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
+    val reader = FooterStats.open(conf, file)
     val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
     schema.getFields.asScala.foreach(validate(_, Nil))
   }

@@ -363,8 +363,14 @@ final class TsTable private (val root: String, val store: LogStore) {
     * table's identity key (last cluster column — doc_id in the token
     * layout). Space-curve clustering interleaves the key bits, so per-file
     * [min,max] stops pruning MERGE candidates; the bloom answers "can key k
-    * be in this file" from footer metadata alone (KeyBloom). Adaptive
-    * sizing keeps the filter proportional to each file's actual NDV.
+    * be in this file" from footer metadata alone (KeyBloom). The filter
+    * is adaptive: parquet builds candidate filters by halving from the
+    * maximum size (1 MiB) and keeps the smallest that holds the file's
+    * distinct keys at the 1 % false-positive rate. Parquet's default of 5
+    * candidates stops at 64 KiB, more than a 50-row MERGE image's data;
+    * [[TsTable.BloomCandidates]] reaches down to the 32-byte block floor,
+    * so each bloom is sized to its file's keys (1 KiB for 50 rows, 8 KiB
+    * for 4,000; parquet drops candidates too small for 500 keys).
     *
     * Round-6 additions (guide §6):
     *  - zstd: interleaved warm A/B vs snappy on the token payload measured
@@ -387,7 +393,8 @@ final class TsTable private (val root: String, val store: LogStore) {
     (clusterSpec.map(_.columns.last) match {
       case Some(key) => Map(
         s"parquet.bloom.filter.enabled#$key" -> "true",
-        "parquet.bloom.filter.adaptive.enabled" -> "true")
+        "parquet.bloom.filter.adaptive.enabled" -> "true",
+        s"parquet.bloom.filter.candidates.number#$key" -> TsTable.BloomCandidates.toString)
       case None => Map.empty
     })
   }
@@ -1496,6 +1503,15 @@ object TsTable {
     * fails the first segment write and names the knob. */
   private[graft] lazy val rowGroupBytes: Long =
     parseRowGroupBytes(sys.env.get("SPARK_GRAFT_ROWGROUP_BYTES"))
+
+  /** Adaptive key-bloom candidates from parquet's maximum filter size down
+    * to its 32-byte block floor, halving each step: log2(1 MiB / 32) + 1 =
+    * 16. */
+  private val BloomCandidates: Int = {
+    import org.apache.parquet.column.ParquetProperties.DEFAULT_MAX_BLOOM_FILTER_BYTES
+    import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter.LOWER_BOUND_BYTES
+    Integer.numberOfTrailingZeros(DEFAULT_MAX_BLOOM_FILTER_BYTES / LOWER_BOUND_BYTES) + 1
+  }
 
   private[graft] def parseRowGroupBytes(v: Option[String]): Long = v match {
     case None => 8L * 1024 * 1024

@@ -40,7 +40,8 @@ class SkewSpec extends SparkFunSuite {
     val df = TokenGen.generate(spark, 8000, lenSpread = 1)
       .withColumn("source", lit("src00"))
     t.append(df.repartition(16))
-    Compaction.run(spark, t, targetFileSize = 2L * 1024 * 1024)
+    // the 16 segments hold about 1.3 MB, so a 1 MiB target makes two files
+    Compaction.run(spark, t, targetFileSize = 1L * 1024 * 1024)
     val (mx, med) = sizeBalance(t)
     assert(t.state.liveSegments.size >= 2)
     assert(mx <= med * 3, s"degenerate-skew output unbalanced: max=$mx median=$med")

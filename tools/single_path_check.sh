@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: five engine concerns each have one owner.
+# Single-path check over src/main: six engine concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -19,6 +19,10 @@
 #     `StatsPruning.keep` / `pruneSegments`, so nothing outside
 #     src/main/scala/graft/scan/ calls `StatsPruning.prepare` or `eval`
 #     (maintenance hands over the optimized predicate a scan sees).
+#  6. Footers: a Parquet footer is opened only by `FooterStats.open`, on
+#     the caller's Hadoop conf, so nothing else calls
+#     `ParquetFileReader.open` (its one-argument form builds a fresh
+#     `Configuration` per file).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -40,18 +44,28 @@ history=$(code '\b(readCommit|commitPath|checkpointPath)\b' | grep -v "^$src/gra
 
 messages=$(code 'getMessage.*\.contains\(')
 
-tstable=$src/graft/table/TsTable.scala
-span=$(awk '/private\[graft\] def read\(spark: SparkSession, segs/ { s = NR }
-            s && !e && NR > s && /^  }$/ { e = NR }
-            END { print s + 0, e + 0 }' "$tstable")
+# drop the offenders (file:line:text on stdin) that lie in file $1 between
+# the first line matching $2 and the next line, from there on, matching $3
+outside() {
+  local span
+  span=$(A="$2" B="$3" awk '!s && $0 ~ ENVIRON["A"] { s = NR }
+                            s && !e && $0 ~ ENVIRON["B"] { e = NR }
+                            END { print s + 0, e + 0 }' "$1")
+  awk -F: -v f="$1" -v s="${span% *}" -v e="${span#* }" '!($1 == f && $2 >= s && $2 <= e)'
+}
+
 reads=$(code '(RowTracking\.attach|liveRowFilter|baseRelationToDataFrame)\(' |
   grep -vE ':[0-9]+:.*def (attach|liveRowFilter)\(' |
-  awk -F: -v f="$tstable" -v s="${span% *}" -v e="${span#* }" \
-    '!($1 == f && $2 >= s && $2 <= e)' || true)
+  outside $src/graft/table/TsTable.scala \
+    'private\[graft\] def read\(spark: SparkSession, segs' '^  }$' || true)
 
 semantics=$(code '\b(java\.time|TimeKernels)\b' | grep "^$src/graft/scan/" || true)
 
 entry=$(code 'StatsPruning\.(prepare|eval)\b' | grep -v "^$src/graft/scan/" || true)
+
+footers=$(code 'ParquetFileReader\.open\(' |
+  outside $src/graft/table/FooterStats.scala \
+    'private def open\(in: HadoopInputFile\)' 'ParquetFileReader\.open\(' || true)
 
 status=0
 report() {
@@ -66,5 +80,6 @@ report "exception-message matching" "$messages"
 report "segment reads outside TsTable.read" "$reads"
 report "transform semantics outside Catalyst's eval in graft.scan" "$semantics"
 report "stats pruning entered outside its keep rule" "$entry"
+report "Parquet footer opened outside the one opener" "$footers"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
