@@ -162,17 +162,22 @@ object ClusterKey {
     fit(table.state.liveSegments,
       table.clusterSpec.map(_.columns).getOrElse(TokenColumns))
 
-  /** The clustering key — the spec'd columns interleaved into one
-    * LongType sort column. The first three columns are the curve
-    * dimensions; fewer than three pad with a constant, columns beyond the
-    * third are dropped from the key (standard Z-order practice — leading
-    * dimensions dominate locality). String
-    * coordinates are ORDER-PRESERVING (fitted prefix windows, not hashes)
-    * so per-file min/max STRING stats line up with curve order and
-    * per-dimension scans prune files after clustering. */
+  /** The clustering key — the spec'd columns packed into one LongType
+    * routing column. For zorder and hilbert the first three columns are
+    * the curve dimensions; fewer than three pad with a constant, columns
+    * beyond the third are dropped from the key (standard Z-order practice
+    * — leading dimensions dominate locality). For lexico the first three
+    * coordinates are packed most significant first (c0 << 42 | c1 << 21 |
+    * c2, NULL coordinates as 0): order-preserving, so a file straddles two
+    * values only where their coordinates collide. String coordinates are
+    * ORDER-PRESERVING (fitted prefix windows, not hashes) so per-file
+    * min/max STRING stats line up with curve order and per-dimension scans
+    * prune files after clustering. */
   def curveKey(curve: String, f: Fit = Fit.default): Column = {
     val cs = f.coords.take(3).map(_.toCoord).padTo(3, lit(0L))
-    ofExpr(CurveKey3(toExpr(cs(0)), toExpr(cs(1)), toExpr(cs(2)), hilbert = curve == "hilbert"))
+    if (curve == "lexico")
+      cs.map(coalesce(_, lit(0L))).reduce((hi, lo) => shiftleft(hi, SpaceCurve.BitsPerDim).bitwiseOR(lo))
+    else ofExpr(CurveKey3(toExpr(cs(0)), toExpr(cs(1)), toExpr(cs(2)), hilbert = curve == "hilbert"))
   }
 
   /** Range-partition tie-break salt: hash of the FINEST (last) cluster

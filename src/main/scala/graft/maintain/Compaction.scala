@@ -1,11 +1,9 @@
 package graft.maintain
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.log.{ConflictException, CommitFileExistsException, LogAction}
+import org.apache.spark.sql.SparkSession
 import graft.meta.SegmentMeta
-import graft.table.{FooterStats, TsTable}
+import graft.table.TsTable
 
 /** Bin-packing small-file compaction with space-filling-curve clustering —
   * the centerpiece of the north rule (new vs the reference, whose roadmap
@@ -16,13 +14,15 @@ import graft.table.{FooterStats, TsTable}
   * Scale design:
   *  - The PLAN is O(files) driver-side arithmetic over manifest stats — no
   *    data is read to decide what to rewrite.
-  *  - Each bin's REWRITE is one distributed job:
-  *    read(bin files) → curve key (codegen'd CurveKey3) →
-  *    repartitionByRange(outFiles, key, salt) → sortWithinPartitions(key) →
-  *    write. Range partitioning samples the key distribution, so skewed
-  *    sources land balanced output files; the salt column breaks ties for
-  *    heavily-duplicated curve keys (hot sources) without perturbing the
-  *    final order (sort is on the full (key, salt) prefix order).
+  *  - Each bin's REWRITE is one call to the clustered writer,
+  *    [[RangeBuckets.cluster]]: read(bin files) → curve key (codegen'd
+  *    CurveKey3) + salt → range bounds from a narrow sample of the bin →
+  *    hash repartition(outFiles) on the codegen'd range label →
+  *    sortWithinPartitions(key, salt) → write. The bounds are equi-depth
+  *    over the bin's own rows, so skewed sources land balanced output
+  *    files; the salt column breaks ties for heavily-duplicated curve keys
+  *    (hot sources) without perturbing the final order. The bin's payload
+  *    is read once.
   *  - Bins commit independently (atomic swap per bin) and journal to the
   *    lineage log, so a crashed job resumes by skipping completed bins and
   *    concurrent readers stay snapshot-isolated throughout.
@@ -38,15 +38,6 @@ object Compaction {
                           binsSkipped: Int, rowsRewritten: Long, bytesRewritten: Long,
                           filesIn: Int, filesOut: Int, millis: Long)
 
-  /** Plan rewrite groups ("bins"): small files below the threshold are
-    * packed greedily into groups of up to `groupFactor × targetFileSize`
-    * bytes. Each group is ONE distributed rewrite with a GLOBAL
-    * range-partition over the curve key — clustering quality (and hence
-    * post-maintenance scan pruning) needs many inputs sorted together,
-    * not per-output-file sorts; the group cap only bounds the unit of
-    * checkpoint/resume and of commit atomicity. A group is worth
-    * rewriting when it has ≥ 2 inputs. Deterministic given the manifest.
-    */
   /** A DV'd file becomes a rewrite candidate only once its masked-row
     * ratio crosses this — compaction is the pass that materializes DVs
     * away, but "any DV ⇒ rewrite" would let a 0.01 % MOR delete trigger a
@@ -69,6 +60,15 @@ object Compaction {
     * lose the version race K−1 times before its turn. */
   val DefaultBinParallelism: Int = 4
 
+  /** Plan rewrite groups ("bins"): small files below the threshold are
+    * packed greedily into groups of up to `groupFactor × targetFileSize`
+    * bytes. Each group is ONE distributed rewrite with a GLOBAL
+    * range-partition over the curve key — clustering quality (and hence
+    * post-maintenance scan pruning) needs many inputs sorted together,
+    * not per-output-file sorts; the group cap only bounds the unit of
+    * checkpoint/resume and of commit atomicity. A group is worth
+    * rewriting when it has ≥ 2 inputs, or one that carries a deletion
+    * vector. Deterministic given the manifest. */
   def plan(segments: Seq[SegmentMeta], targetFileSize: Long,
            smallFileThreshold: Double = 0.9, groupFactor: Int = 64,
            dvDebtThreshold: Double = DefaultDvDebtThreshold): Seq[Bin] = {
@@ -209,40 +209,10 @@ object Compaction {
       // live-rows-only, outputs are fresh segments with no DV. Row
       // tracking: a compaction is row-preserving, so the rewrite reads ids
       // attached (coalesce of materialized column / base+position) and
-      // MATERIALIZES them into the output files — the sort below reorders
-      // rows, so position-based defaults could not survive it. The
-      // boundary SAMPLE reads all rows without ids: deleted rows skew the
-      // approximate range bounds marginally, never correctness, and it
-      // prunes to the cluster-key columns only.
+      // MATERIALIZES them into the output files — the sort reorders rows,
+      // so position-based defaults could not survive it.
       val meta = table.state.tableMeta
-      val raw = table.read(scoped, inputs, meta, live = false)
       val df = table.read(scoped, inputs, meta, ids = meta.exists(_.rowTracking))
-      val sorted = curve match {
-        case ("zorder" | "hilbert") if outFiles > 1 =>
-          // range boundaries from an EXPLICIT sample over the cluster-key
-          // columns only — parquet column pruning skips the token payload
-          // (~95 % of the bin's bytes), unlike repartitionByRange, whose
-          // boundary-sampling job re-executes the FULL child and read the
-          // bin twice per rewrite (measured ~40 % of zorder rewrite wall;
-          // caching the rows instead was measured and LOST badly —
-          // deserialized token rows are ~3× the parquet bytes. MERGE
-          // differs: its child embeds an anti join, so it caches and
-          // keeps the stock range exchange).
-          // the sample is a manifest-backed read too: a read.parquet here
-          // re-listed the whole bin (a second listing job per rewrite);
-          // column pruning keeps the sample scan narrow
-          sampledBoundsFor(raw, curve, fit,
-            math.max(inputs.map(_.rowCount).sum, 1L), outFiles) match {
-            case None =>
-              // a zero-row sample (manifest rowCounts inflating the fraction
-              // denominator, or a pathological Bernoulli draw) must degrade
-              // to the stock range exchange, not abort the rewrite
-              clusterSorted(df, curve, outFiles, fit)
-            case Some((bk, bs, labels)) =>
-              clusterSortedByBounds(df, curve, outFiles, fit, bk, bs, labels)
-          }
-        case _ => clusterSorted(df, curve, outFiles, fit)
-      }
       // compaction is LOGICALLY ROW-PRESERVING (DV materialization
       // included: the masked rows were already deleted, and recorded, by
       // the commit that attached the DV) — mark it so change-feed readers
@@ -250,61 +220,10 @@ object Compaction {
       val done = table.transact(maxRetries) { tx =>
         tx.remove(inputs)
         tx.markDataNeutral()
-        tx.stage(sorted)
+        tx.stage(RangeBuckets.cluster(df, curve, fit, outFiles, inputs.map(_.rowCount).sum))
       }
       (done.value, done.version)
     }
-  }
-
-  /** Explicit range-partition boundaries from a narrow sample of
-    * `sampleSrc` (projected to curve key + salt, so parquet column pruning
-    * skips the payload): the shared boundary pass behind
-    * [[clusterSortedByBounds]]. Used by compaction AND by MERGE — with
-    * precomputed bounds the clustered write is ONE execution of its child,
-    * where `repartitionByRange`'s own boundary-sampling job re-executed
-    * the full child (for MERGE that child embeds the anti-join + union, so
-    * rounds 2–5 paid a MEMORY_AND_DISK persist of the whole merged row set
-    * just to keep the double execution cheap; the explicit bounds remove
-    * both the cache and the second pass). Returns None on an empty sample
-    * (degrade to the stock range exchange, never abort). */
-  private[maintain] def sampledBoundsFor(sampleSrc: DataFrame, curve: String,
-      fit: ClusterKey.Fit, rows: Long,
-      outFiles: Int): Option[(Array[Long], Array[Long], Array[Int])] = {
-    val targetSamples = math.min(outFiles.toLong * 1000L, 1000000L)
-    val fraction = math.min(1.0, targetSamples.toDouble / math.max(rows, 1L))
-    val sample = sampleSrc
-      .select(ClusterKey.curveKey(curve, fit).as("k"),
-        ClusterKey.saltCol(fit).as("s"))
-      .sample(withReplacement = false, fraction, seed = 42L)
-      .collect()
-      .map(r => (if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1)))
-    if (sample.isEmpty) None
-    else {
-      val (bk, bs) = RangeBuckets.boundsFromSample(sample, outFiles)
-      Some((bk, bs, RangeBuckets.labelsFor(outFiles)))
-    }
-  }
-
-  /** The zorder/hilbert layout against PRECOMPUTED range boundaries: the
-    * codegen'd [[RangeBucketLabel]] routes each row to its range's label,
-    * the hash `repartition(n, lbl)` delivers range r to shuffle partition
-    * r (labels invert HashPartitioning — see [[RangeBuckets]]), and the
-    * in-partition sort restores exact (key, salt) order. Identical layout
-    * semantics to `repartitionByRange(n, key, salt)` with ONE read of the
-    * bin instead of two. */
-  private[maintain] def clusterSortedByBounds(df: DataFrame, curve: String, outFiles: Int,
-                                              fit: ClusterKey.Fit, bk: Array[Long],
-                                              bs: Array[Long], labels: Array[Int]): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
-    df.withColumn("__ckey", coalesce(ClusterKey.curveKey(curve, fit), lit(Long.MinValue)))
-      .withColumn("__salt", coalesce(ClusterKey.saltCol(fit), lit(0L)))
-      .withColumn("__lbl", ofExpr(RangeBucketLabel(
-        toExpr(col("__ckey")), toExpr(col("__salt")),
-        bk.toSeq, bs.toSeq, labels.toSeq)))
-      .repartition(outFiles, col("__lbl"))
-      .sortWithinPartitions(col("__ckey"), col("__salt"))
-      .drop("__ckey", "__salt", "__lbl")
   }
 
   /** Run `f` with parquet read splits sized so `totalBytes` of input makes
@@ -342,30 +261,5 @@ object Compaction {
     }
     scoped.conf.set("spark.sql.files.maxPartitionBytes", targetSplit.toString)
     f(scoped)
-  }
-
-  /** Apply the clustering layout: curve key + salt → GLOBAL range partition
-    * over the whole bin → in-partition sort → key columns dropped before
-    * write (byte-identical user schema). The salt breaks ties when curve
-    * keys collide heavily (hot source × narrow n_tok) so range
-    * partitioning stays balanced under Zipf skew; it is a suffix of the
-    * sort order, never perturbing curve locality.
-    * "lexico" = hierarchical (source, n_tok, doc_id) sort: perfect
-    * leading-column pruning, no multi-dim balance — offered as the
-    * alternative layout. */
-  def clusterSorted(df: DataFrame, curve: String, outFiles: Int,
-                    fit: ClusterKey.Fit = ClusterKey.Fit.default): DataFrame = curve match {
-    case "zorder" | "hilbert" =>
-      df.withColumn("__ckey", ClusterKey.curveKey(curve, fit))
-        .withColumn("__salt", ClusterKey.saltCol(fit))
-        .repartitionByRange(outFiles, col("__ckey"), col("__salt"))
-        .sortWithinPartitions(col("__ckey"), col("__salt"))
-        .drop("__ckey", "__salt")
-    case "lexico" =>
-      val cols = fit.coords.map(c => col(c.column))
-      df.repartitionByRange(outFiles, cols: _*)
-        .sortWithinPartitions(cols: _*)
-    case _ =>
-      df.repartition(outFiles)
   }
 }

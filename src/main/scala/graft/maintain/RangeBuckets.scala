@@ -1,33 +1,66 @@
 package graft.maintain
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
-/** Range partitioning WITHOUT the range exchange's hidden second read.
+/** The one clustered writer, and the range routing behind it.
   *
-  * `repartitionByRange` samples its child to learn boundaries — and the
-  * sampling job EXECUTES the full child, so a compaction bin is read and
-  * decoded twice per rewrite (measured: the sample pass roughly doubles
-  * scan bytes, ~40 % of zorder rewrite wall time — the token payload is
-  * ~95 % of the bytes and the sampler decodes it just to throw it away).
-  * This helper splits the two concerns the exchange fuses:
+  * Every clustered write — a compaction bin, a copy-on-write MERGE's
+  * survivors ∪ incoming rows, a merge-on-read upsert or UPDATE image —
+  * lays out its files through [[cluster]]. The frame is ranged on its own
+  * rows (skew-aware partitioning in the sense of FP-Hadoop, PAPERS.md):
   *
-  *  1. boundaries come from an EXPLICIT sample over a NARROW projection
-  *     (cluster-key columns only — parquet column pruning skips the
-  *     payload), collected once driver-side;
-  *  2. routing is a codegen'd binary search over those boundary literals
-  *     ([[RangeBucketLabel]]) feeding a plain hash `repartition(n, lbl)`
-  *     — whose label values are chosen with [[RangeBuckets.labelsFor]]
-  *     to INVERT Spark's `HashPartitioning` (pmod(murmur3(label), n) ==
-  *     range index), so range r lands exactly in shuffle partition r and
-  *     the hash exchange becomes a range exchange with zero sampling.
+  *  1. a sample of the frame, projected to (routing key, salt) so column
+  *     pruning skips the payload, is collected once driver-side and cut
+  *     into equi-depth boundaries ([[boundsFromSample]]); because the
+  *     sample is drawn from the rows that land in the output, new keys
+  *     beyond the old files' range get buckets of their own;
+  *  2. a codegen'd binary search over those boundary literals
+  *     ([[RangeBucketLabel]]) feeds a plain hash `repartition(n, lbl)`,
+  *     whose label values ([[labelsFor]]) INVERT Spark's
+  *     `HashPartitioning` (pmod(murmur3(label), n) == range index), so
+  *     range r lands exactly in shuffle partition r with no range
+  *     exchange — whose own sampler would run the frame a second time.
   *
-  * Net: one full read of the bin instead of two; identical clustering
-  * semantics (contiguous (key, salt) ranges per output file, nulls
-  * low-ordered via the caller's coalesce).
+  * The frame's payload is read once; each output file holds a contiguous
+  * (key, salt) range, nulls low-ordered.
   */
 object RangeBuckets {
+
+  /** `df` laid out on `curve` in up to `files` files; `rows` estimates
+    * its row count (it sets the sample fraction). zorder and hilbert
+    * route and sort on (curve key, salt); lexico routes on its packed
+    * coordinates ([[ClusterKey.curveKey]]) and sorts on the cluster
+    * columns themselves; any other curve is a plain `repartition(files)`.
+    * An empty sample (or `files` ≤ 1) gives no boundaries: one sorted
+    * file. */
+  def cluster(df: DataFrame, curve: String, fit: ClusterKey.Fit, files: Int,
+              rows: Long): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
+    val inFileOrder = curve match {
+      case "zorder" | "hilbert" => Seq(col("__ckey"), col("__salt"))
+      case "lexico" => fit.coords.map(c => col(c.column))
+      case _ => return df.repartition(files)
+    }
+    val keyed = df
+      .withColumn("__ckey", coalesce(ClusterKey.curveKey(curve, fit), lit(Long.MinValue)))
+      .withColumn("__salt", coalesce(ClusterKey.saltCol(fit), lit(0L)))
+    val fraction = math.min(1.0, math.min(files * 1000L, 1000000L).toDouble / math.max(rows, 1L))
+    val sample =
+      if (files <= 1) Array.empty[(Long, Long)]
+      else keyed.select(col("__ckey"), col("__salt"))
+        .sample(withReplacement = false, fraction, seed = 42L)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (bk, bs) = boundsFromSample(sample, files)
+    keyed.withColumn("__lbl", ofExpr(RangeBucketLabel(toExpr(col("__ckey")),
+        toExpr(col("__salt")), bk.toSeq, bs.toSeq, labelsFor(bk.length + 1).toSeq)))
+      .repartition(bk.length + 1, col("__lbl"))
+      .sortWithinPartitions(inFileOrder: _*)
+      .drop("__ckey", "__salt", "__lbl")
+  }
 
   /** labels(r) routes range r to shuffle partition r under Spark's
     * `HashPartitioning(Seq(lbl: Int), n)`: the label L(r) is the smallest

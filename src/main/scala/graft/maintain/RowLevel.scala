@@ -4,7 +4,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -209,13 +208,11 @@ private[maintain] object RowLevel {
         Compaction.withSizedReadSplits(spark, candBytes, cands.size) { scoped =>
           if (table.cdfEnabled) tx.stageCdc(changes(scoped, cands))
           tx.remove(cands)
-          if (cands.isEmpty) stageClustered(tx, in, files, None)
-          else {
+          val out = if (cands.isEmpty) in else {
             val old = read(scoped, cands)
-            stageClustered(tx,
-              old.join(in.select(key), Seq(key), "left_anti").unionByName(withIds(in, Some(old))),
-              files, Some((read(scoped, cands, ids = false, live = false), candRows)))
+            old.join(in.select(key), Seq(key), "left_anti").unionByName(withIds(in, Some(old)))
           }
+          tx.stage(clustered(out, files, candRows + inputRows))
         }
       }
       if (done.replayed) return result(0, done.version)
@@ -243,8 +240,8 @@ private[maintain] object RowLevel {
         // sized like a small append: never more files than cores, never so
         // many that a tiny write fragments (compaction bin-packs later)
         val out = images.map { case (df, rows) =>
-          stageClustered(tx, df, math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            math.ceil(rows * 4096.0 / targetFileSize).toInt * 4)), None)
+          tx.stage(clustered(df, math.max(1, math.min(spark.sparkContext.defaultParallelism,
+            math.ceil(rows * 4096.0 / targetFileSize).toInt * 4)), rows))
         }.getOrElse(Nil)
         if (table.cdfEnabled && (plan.isDefined || outcome == Upsert))
           tx.stageCdc(changes(spark, cands))
@@ -335,32 +332,11 @@ private[maintain] object RowLevel {
       }
     }
 
-    /** THE clustering write: `df` laid out on the table's curve in `files`
-      * files. With `boundsFrom` (a narrow read, its row estimate), range
-      * bounds come from a sample of it over the cluster-key columns only,
-      * and `df` runs once, uncached. The stock range exchange instead
-      * samples `df` itself before shuffling, which would run its plan
-      * twice: `df` is persisted for it, unless it only reads cached data
-      * (the persisted input set). */
-    private def stageClustered(tx: Txn, df: DataFrame, files: Int,
-                               boundsFrom: Option[(DataFrame, Long)]): Seq[SegmentMeta] = {
-      val curve = table.clusterSpec.map(_.curve).getOrElse("none")
-      val fit = ClusterKey.fitFor(table)
-      val ranged = files > 1 && Set("zorder", "hilbert", "lexico")(curve)
-      val bounds = boundsFrom.filter(_ => ranged && curve != "lexico").flatMap {
-        case (src, rows) => Compaction.sampledBoundsFor(src, curve, fit, math.max(rows, 1L), files)
-      }
-      bounds match {
-        case Some((bk, bs, labels)) =>
-          tx.stage(Compaction.clusterSortedByBounds(df, curve, files, fit, bk, bs, labels))
-        case None =>
-          val persist = ranged && !df.queryExecution.optimizedPlan.collectLeaves()
-            .forall(_.isInstanceOf[InMemoryRelation])
-          if (persist) df.persist(StorageLevel.MEMORY_AND_DISK)
-          try tx.stage(Compaction.clusterSorted(df, curve, files, fit))
-          finally if (persist) df.unpersist(false)
-      }
-    }
+    /** `df` (about `rows` rows) laid out on the table's curve in `files`
+      * files by the one clustered writer, [[RangeBuckets.cluster]]. */
+    private def clustered(df: DataFrame, files: Int, rows: Long): DataFrame =
+      RangeBuckets.cluster(df, table.clusterSpec.map(_.curve).getOrElse("none"),
+        ClusterKey.fitFor(table), files, rows)
 
     /** Row-id candidates from the manifest alone
       * ([[graft.table.RowTracking.mayHoldIds]]) against the id set's [min, max]. */

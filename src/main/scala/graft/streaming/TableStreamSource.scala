@@ -85,8 +85,8 @@ final class TableStreamSource(
   with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   private val table = TsTable.open(rootPath)
-  private def opt(key: String): Option[String] =
-    options.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
+  private def opt[T](key: String)(parse: String => T): Option[T] =
+    TableStreamSource.option(options, key)(parse)
 
   /** `startingVersion=latest` / `startingTimestamp` resolve ONCE per query
     * lifetime: the resolved version is persisted under the query's
@@ -131,7 +131,7 @@ final class TableStreamSource(
     * first batch. Schema gains `_change_type`/`_commit_version`/
     * `_commit_timestamp`. */
   private val readChangeFeed: Boolean =
-    opt("readChangeFeed").exists(_.toBoolean)
+    opt("readChangeFeed")(_.toBoolean).getOrElse(false)
 
   /** The table meta every batch reads under: the source schema is pinned
     * at init, and physical names never change, so its column mapping stays
@@ -152,10 +152,10 @@ final class TableStreamSource(
     else tableSchema
 
   private val skipChangeCommits: Boolean =
-    opt("skipChangeCommits").forall(_.toBoolean)
+    opt("skipChangeCommits")(_.toBoolean).getOrElse(true)
   private val maxVersionsPerTrigger: Option[Long] =
-    opt("maxVersionsPerTrigger").map { v =>
-      val n = v.toLong; require(n > 0, s"maxVersionsPerTrigger must be > 0, got $n"); n
+    opt("maxVersionsPerTrigger")(_.toLong).map { n =>
+      require(n > 0, s"maxVersionsPerTrigger must be > 0, got $n"); n
     }
   /** Smallest RETAINED version stamped at or after `tsMillis` — the "tail
     * from this wall-clock instant" anchor. Never-skip rule under clock
@@ -170,13 +170,14 @@ final class TableStreamSource(
 
   /** None = initial-snapshot mode; Some(v) = tail commits >= v. */
   private val startingVersion: Option[Long] =
-    (opt("startingVersion"), opt("startingTimestamp")) match {
+    (opt("startingVersion")(v => Option.unless(v.equalsIgnoreCase("latest"))(v.toLong)),
+      opt("startingTimestamp")(identity)) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
         "options startingVersion and startingTimestamp are mutually exclusive")
-      case (Some(v), _) if v.equalsIgnoreCase("latest") =>
+      case (Some(None), _) => // latest
         Some(resolveAnchored(table.store.currentVersion() + 1))
-      case (Some(v), _) =>
-        val n = v.toLong; require(n >= 1, s"startingVersion must be >= 1, got $n"); Some(n)
+      case (Some(Some(n)), _) =>
+        require(n >= 1, s"startingVersion must be >= 1, got $n"); Some(n)
       case (_, Some(ts)) =>
         // epoch millis or any ISO-8601 instant, anchored like `latest`
         val ms = ts.toLongOption.getOrElse(java.time.Instant.parse(ts).toEpochMilli)
@@ -299,6 +300,15 @@ final class TableStreamSource(
 }
 
 object TableStreamSource {
+  /** Option `key` of `options` (the name matched case-insensitively),
+    * parsed by `parse`; a value `parse` rejects fails naming the option
+    * and the value instead of surfacing the bare parse error. */
+  def option[T](options: Map[String, String], key: String)(parse: String => T): Option[T] =
+    options.collectFirst { case (k, v) if k.equalsIgnoreCase(key) =>
+      try parse(v) catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"option $key has an invalid value: '$v'", e) }
+    }
+
   /** Source schema in change-feed mode: the table's logical columns +
     * the feed's three metadata columns, in [[graft.maintain.ChangeFeed]]'s
     * column order (streamingBatch re-tags by POSITION). */
@@ -414,7 +424,7 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
     // version or tag composes with it (the branch shares main's prefix)
     val table = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("branch") => v }
       .map(main.branch).getOrElse(main)
-    val pinned = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("versionAsOf") => v.toLong }
+    val pinned = TableStreamSource.option(parameters, "versionAsOf")(_.toLong)
       .orElse(parameters.collectFirst {
         case (k, v) if k.equalsIgnoreCase("tag") => table.tagVersion(v) })
       .orElse(parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("timestampAsOf") =>
@@ -455,8 +465,7 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
     val meta = TsTable.open(root(parameters)).meta
     val base = meta.schema.getOrElse(
       throw new IllegalStateException("table has no adopted schema yet"))
-    val cdf = parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("readChangeFeed") => v.toBoolean }.getOrElse(false)
+    val cdf = TableStreamSource.option(parameters, "readChangeFeed")(_.toBoolean).getOrElse(false)
     // same tracked-pin rule as the Source itself: a CDF stream of a
     // row-tracked table declares `_row_id`
     val declared =

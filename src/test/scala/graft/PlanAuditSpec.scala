@@ -288,4 +288,47 @@ class PlanAuditSpec extends SparkFunSuite {
       assert(bareJobs == 0, s"$name ran $bareJobs listing/footer-inference job(s)")
     }
   }
+
+  test("clustered writes route on sampled bounds: no plan holds a range exchange") {
+    def tokens(curve: String, rows: Int): TsTable = {
+      val t = TsTable.create(tmpDir(s"plan-$curve"), TableMeta("tokens",
+        TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), curve)), None, None))
+      t.append(TokenGen.generate(spark, rows, numFiles = 4, lenSpread = 64))
+      t
+    }
+    def bytes(t: TsTable) = t.state.liveSegments.flatMap(_.fileSize).sum
+    val upd = TokenGen.generate(spark, 100, idStart = 50L, lenSpread = 64)
+      .withColumn("source", lit("rev"))
+    val fresh = TokenGen.generate(spark, 100, idStart = 90000L, lenSpread = 64)
+    val writes: Seq[(String, () => Unit)] = Seq(
+      "zorder compaction bin" -> { () =>
+        val t = tokens("zorder", 2000)
+        graft.maintain.Compaction.run(spark, t, targetFileSize = bytes(t) / 3)
+      },
+      "lexico compaction bin" -> { () =>
+        val t = tokens("lexico", 2000)
+        graft.maintain.Compaction.run(spark, t, targetFileSize = bytes(t) / 3)
+      },
+      "CoW MERGE with candidates" -> { () =>
+        val r = graft.maintain.MergeInto.merge(spark, tokens("zorder", 800), upd)
+        assert(r.candidates > 0)
+      },
+      "CoW MERGE without candidates" -> { () =>
+        val r = graft.maintain.MergeInto.merge(spark, tokens("zorder", 800), fresh)
+        assert(r.candidates == 0 && r.inserted == 100)
+      },
+      "MOR MERGE" -> { () => graft.maintain.MergeInto.mergeMor(spark, tokens("zorder", 800), upd) },
+      "MOR UPDATE" -> { () =>
+        val r = graft.maintain.UpdateWhere.updateMor(spark, tokens("zorder", 800),
+          col("doc_id") < "doc-000000000200", Map("source" -> lit("rev")))
+        assert(r.rowsUpdated == 200)
+      })
+    val ranged = writes.flatMap { case (name, run) =>
+      val plans = PlanCapture(spark)(run())
+      assert(plans.exists(_.toString.contains("WriteFiles")), s"$name: no write captured")
+      plans.map(_.toString).filter(_.toLowerCase.contains("rangepartitioning"))
+        .map(p => s"$name:\n$p")
+    }
+    assert(ranged.isEmpty, s"range exchange in a clustered write:\n${ranged.mkString("\n")}")
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.data.TokenGen
-import graft.maintain.Compaction
+import graft.maintain.{Compaction, MergeInto}
 import graft.meta._
 import graft.table.TsTable
 
@@ -51,5 +51,28 @@ class SkewSpec extends SparkFunSuite {
       .select(hash(col("tokens"))).collect()
     val got = t.scan(spark).orderBy("doc_id").select(hash(col("tokens"))).collect()
     want.zip(got).foreach { case (w, g) => assert(w == g) }
+  }
+
+  test("insert-heavy merge: new keys beyond the candidates' curve range stay balanced") {
+    val root = tmpDir("skew-merge")
+    val t = TsTable.create(root, tokenMeta)
+    t.append(TokenGen.generate(spark, 2000, numFiles = 4, lenSpread = 64))
+    Compaction.run(spark, t, targetFileSize = 64L * 1024 * 1024)
+    assert(t.state.liveSegments.size == 1)
+    val candBytes = t.state.liveSegments.flatMap(_.fileSize).sum
+    // 100 revised rows and 8 000 new ones (4x the candidates' 2 000 rows)
+    // whose source, n_tok and doc_id all lie above the fitted ranges, so
+    // every new curve key sorts after every candidate key
+    val updates = TokenGen.generate(spark, 100, lenSpread = 64)
+      .unionByName(TokenGen.generate(spark, 8000, idStart = 2000L, lenSpread = 64)
+        .withColumn("source", lit("src99")).withColumn("n_tok", col("n_tok") + 1000))
+    // about eight output files for the 10 000 rows
+    val r = MergeInto.merge(spark, t, updates, targetFileSize = candBytes * 5 / 8 + 1)
+    assert(r.candidates == 1 && r.updated == 100 && r.inserted == 8000)
+    assert(t.state.liveSegments.size >= 6, "fixture should produce several output files")
+    val (mx, med) = sizeBalance(t)
+    assert(mx <= med * 2, s"merge output skewed: max=$mx median=$med " +
+      s"sizes=${t.state.liveSegments.flatMap(_.fileSize).sorted}")
+    assert(t.scan(spark).count() == 10000)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -13,6 +15,7 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.queryExecutionListeners", classOf[PlanCapture].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -36,6 +39,33 @@ object SparkTestBase {
   }, "graft-test-tmp-cleanup"))
 
   def registerForCleanup(p: java.nio.file.Path): Unit = cleanupDirs.add(p)
+}
+
+/** Records the executed plan of every successful query while a
+  * [[PlanCapture.apply]] block runs. It is registered through
+  * `spark.sql.queryExecutionListeners`, so every session gets one —
+  * including the isolated sessions maintenance creates with `newSession()`,
+  * which a listener added to the test session would not hear. */
+final class PlanCapture extends QueryExecutionListener {
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    PlanCapture.sink.get.foreach(_.add(qe.executedPlan))
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+}
+
+object PlanCapture {
+  private val sink = new java.util.concurrent.atomic.AtomicReference(
+    Option.empty[java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]])
+
+  /** The executed plans of the queries `f` runs, in completion order. */
+  def apply(spark: SparkSession)(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    sink.set(Some(plans))
+    try { f; org.apache.spark.graft.ListenerBusDrain(spark.sparkContext) }
+    finally sink.set(None)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
 }
 
 abstract class SparkFunSuite extends AnyFunSuite {

@@ -356,4 +356,19 @@ class TableStreamSourceSpec extends SparkFunSuite {
     assert(got.where(col("lang").isNull).count() == 100)
     assert(got.where(col("lang") === "en").count() == 50)
   }
+
+  test("a boolean option that does not parse names the option and the value") {
+    val t = TsTable.create(tmpDir("srcstream-badbool"), tokenMeta)
+    t.append(TokenGen.generate(spark, 10))
+    val e = intercept[IllegalArgumentException](t.readStream(spark, Map("readChangeFeed" -> "yes")))
+    assert(e.getMessage.contains("readChangeFeed") && e.getMessage.contains("'yes'"), e.getMessage)
+  }
+
+  test("a long option that does not parse names the option and the value") {
+    val t = TsTable.create(tmpDir("srcstream-badlong"), tokenMeta)
+    t.append(TokenGen.generate(spark, 10))
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("graft-table").option("versionAsOf", "v1").load(t.root))
+    assert(e.getMessage.contains("versionAsOf") && e.getMessage.contains("'v1'"), e.getMessage)
+  }
 }

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: six engine concerns each have one owner.
+# Single-path check over src/main: seven engine concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -23,6 +23,12 @@
 #     the caller's Hadoop conf, so nothing else calls
 #     `ParquetFileReader.open` (its one-argument form builds a fresh
 #     `Configuration` per file).
+#  7. Clustered layout: every clustered table write lays out its files
+#     through the one writer, `RangeBuckets.cluster`, which routes on
+#     bounds sampled from the rows it writes, so nothing under
+#     src/main/scala/graft/maintain/ or graft/table/ calls
+#     `repartitionByRange` (its range exchange samples by running its
+#     input a second time). graft/ops (Packing, Sampling) writes no table.
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -67,6 +73,8 @@ footers=$(code 'ParquetFileReader\.open\(' |
   outside $src/graft/table/FooterStats.scala \
     'private def open\(in: HadoopInputFile\)' 'ParquetFileReader\.open\(' || true)
 
+layout=$(code '\brepartitionByRange\b' | grep -E "^$src/graft/(maintain|table)/" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -81,5 +89,6 @@ report "segment reads outside TsTable.read" "$reads"
 report "transform semantics outside Catalyst's eval in graft.scan" "$semantics"
 report "stats pruning entered outside its keep rule" "$entry"
 report "Parquet footer opened outside the one opener" "$footers"
+report "clustered layout outside the one writer" "$layout"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
