@@ -143,8 +143,7 @@ object Main {
         case (_, Some(n), _) => t.scanAtTag(spark, n)
         case (_, _, Some(ts)) =>
           // epoch millis or any ISO-8601 instant (AS OF TIMESTAMP)
-          val ms = ts.toLongOption.getOrElse(java.time.Instant.parse(ts).toEpochMilli)
-          t.scanAsOf(spark, ms)
+          t.scanAsOf(spark, TsTable.instantMillis("--at-timestamp", ts))
         case _ =>
           // --with-row-ids: current snapshot plus _row_id/_row_commit
           // (row tracking must be enabled; historical pins read plain)

@@ -20,21 +20,21 @@ object MergeInto {
   final case class Report(candidates: Int, filesOut: Int, updated: Long, inserted: Long,
                           survivors: Long, version: Long)
 
-  /** Max distinct update keys probed against parquet footer BLOOMS on the
-    * driver pool. This is a path-selection threshold, not a pruning cap:
-    * above it, refinement switches to the exact key-column semi-join
-    * (below), which never collects keys to the driver.
+  /** The largest input key set a keyed MERGE or delete-by-key holds on the
+    * driver. At or below it, one collect returns every key: candidate
+    * ranges are tested on the driver, the same keys probe the footer
+    * BLOOMS, and the match is a literal key set, so no plan of the run
+    * joins. Above it the keys stay distributed: the ranges are tested
+    * where the keys are, a copy-on-write run refines them with the exact
+    * key-column semi-join (below), and the match is a keyed join.
     *
     * Why switch so early — the bloom math: segment blooms are
     * adaptive-sized at ~1 % FPP, so a file containing NONE of the K update
     * keys escapes candidacy only if ALL K probes miss: 0.99^K ≈ 0.36 at
     * K=100, 0.077 at K=256, ~0 beyond. Footer blooms prune point-lookups
     * and small batches brilliantly and large batches not at all — no bloom
-    * sized for 1 % FPP can testify about 10^5 keys. The old implementation
-    * capped K at 200 000 (collect-cost bound) and above that SKIPPED
-    * refinement entirely; between ~10^3 and the cap it burned footer IO on
-    * probes that pruned nothing. The exact pass keeps pruning working at
-    * any K. */
+    * sized for 1 % FPP can testify about 10^5 keys. The exact pass keeps
+    * pruning working at any K. */
   val BloomKeyCap: Long = 256L
 
   /** Exact distributed candidate refinement for update sets too large for
@@ -62,7 +62,7 @@ object MergeInto {
     Report(r.candidates, r.filesOut, r.matched, r.inserted, r.survivors, r.version)
 
   /** Copy-on-write MERGE: candidate files are rewritten as their rows
-    * left-anti-joined against the update keys, unioned with the updates
+    * whose key the update set misses, unioned with the updates
     * (matched and brand-new keys), re-clustered with the table's curve.
     * Input rows must be key-unique; duplicates are dropped. `txn` =
     * (appId, batchId) streaming-upsert watermark: lands as a SetTxn action
@@ -102,9 +102,10 @@ object MergeInto {
   /** `MERGE INTO … WHEN MATCHED THEN DELETE` — delete-by-key, the other
     * half of the upsert MERGE (GDPR/right-to-be-forgotten over doc ids),
     * merge-on-read: matched-row-proportional cost, no file bytes move,
-    * exactly like [[DeleteWhere.deleteMor]]. The match test is a
-    * broadcast/shuffle LEFT join Catalyst sizes itself; keys collect to the
-    * driver only for footer-bloom probes (at most [[BloomKeyCap]]). */
+    * exactly like [[DeleteWhere.deleteMor]]. Up to [[BloomKeyCap]] keys
+    * the match is a literal key set on the driver (one collect, which also
+    * feeds the footer-bloom probes); above it, a keyed LEFT join Catalyst
+    * plans (broadcast or shuffle). NULL keys never match. */
   def mergeDelete(spark: SparkSession, table: TsTable, keys: DataFrame,
                   key: String = "doc_id"): DeleteWhere.Report =
     DeleteWhere.report(RowLevel.run(spark, table, RowLevel.Keys(keys, key), RowLevel.Delete,

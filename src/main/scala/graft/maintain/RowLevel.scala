@@ -1,11 +1,11 @@
 package graft.maintain
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
 import graft.coverage.Bitmap
 import graft.meta.{ColStats, PathNorm, SegmentMeta, StatVal}
@@ -68,6 +68,7 @@ private[maintain] object RowLevel {
     private val tracking = table.rowTrackingEnabled
     private var m: Match = _      // the match, its input set prepared by [[prepare]]
     private var in: DataFrame = _ // that input set (keys and row ids)
+    private var keys: KeySet = _  // a [[Keys]] match's key set, built once in [[apply]]
 
     private def result(cands: Int, version: Long, matched: Long = 0L, inserted: Long = 0L,
                        filesOut: Int = 0, changed: Int = 0, dropped: Int = 0, dv: Int = 0) =
@@ -88,7 +89,11 @@ private[maintain] object RowLevel {
       }
       val cached = prepare(input)
       try {
-        val inputRows = if (m.isInstanceOf[Predicate]) -1L else in.count() // -1: no input set
+        val inputRows = m match {
+          case Predicate(_) => -1L // no input set
+          case Keys(in, key) => keys = keySet(in, key); keys.rows
+          case RowIds(_) => in.count()
+        }
         // an EMPTY streamed batch still advances its watermark, so its
         // replay is recognized; checked before pruning, since stat-less
         // segments are always candidates
@@ -97,7 +102,7 @@ private[maintain] object RowLevel {
         val cands = m match {
           case Predicate(cond) => prunePredicate(cond)
           case _ if live.isEmpty => Nil
-          case Keys(_, key) => pruneKeys(key, inputRows)
+          case Keys(_, _) => keys.candidates(live)
           case RowIds(_) => pruneIds()
         }
         if (cands.isEmpty && outcome != Upsert) result(0, table.version)
@@ -108,9 +113,9 @@ private[maintain] object RowLevel {
     }
 
     /** Set [[m]] to `input` with its input set deduplicated (one row per
-      * key or id), upsert rows pinned to the table schema, and — in
-      * merge-on-read, where the count, pruning, the matched-row pass and
-      * the write all read it — persisted; returns what it persisted. */
+      * key or id), upsert rows pinned to the table schema, and persisted:
+      * the key set, the matched-row pass and the write all read it.
+      * Returns what it persisted. */
     private def prepare(input: Match): Option[DataFrame] = {
       // keyed rows must carry exactly the table's columns; row-id rows may
       // carry more (change-feed records), and keep their `_row_id`
@@ -126,7 +131,7 @@ private[maintain] object RowLevel {
         case None => df
       }
       // persisted after `pin` validated it: a rejected set leaves no cache
-      def kept(df: DataFrame) = Option.when(mor)(df.persist(StorageLevel.MEMORY_AND_DISK))
+      def kept(df: DataFrame) = Some(df.persist(StorageLevel.MEMORY_AND_DISK))
       val upsert = outcome == Upsert
       input match {
         case Predicate(_) => m = input; None
@@ -134,7 +139,7 @@ private[maintain] object RowLevel {
           val set = (if (upsert) df else df.select(col(key))).dropDuplicates(key)
           in = if (upsert) pin(set, keyed = true) else set
           m = Keys(in, key)
-          kept(set)
+          kept(in)
         case RowIds(df) => // merge-on-read only
           val ids = if (upsert) pin(df, keyed = false)
                     else df.select(col(df.columns.head).cast("long").as(RowIdCol))
@@ -148,7 +153,7 @@ private[maintain] object RowLevel {
     /** Rows of `df` (a live read) the match selects. */
     private def matched(df: DataFrame): DataFrame = m match {
       case Predicate(cond) => df.where(coalesce(cond, lit(false)))
-      case Keys(in, key) => df.join(in.select(key), Seq(key), "left_semi")
+      case Keys(_, _) => keys.semi(df)
       case RowIds(in) => df.join(in.select(RowIdCol), Seq(RowIdCol), "left_semi")
     }
 
@@ -190,9 +195,9 @@ private[maintain] object RowLevel {
     }
 
     /** Copy-on-write keyed upsert: every candidate is rewritten as its
-      * survivors (anti-join on the key) ∪ the input rows, re-clustered. */
+      * survivors (the rows the key set misses) ∪ the input rows,
+      * re-clustered. */
     private def rewriteUpsert(cands: Seq[SegmentMeta], inputRows: Long): Result = {
-      val Keys(_, key) = m
       val candBytes = cands.flatMap(_.fileSize).sum
       val candRows = cands.map(_.liveRowCount).sum // DV'd rows never reach the rewrite
       // output sized by the inputs' bytes/row (manifest only, 4 KiB when
@@ -210,7 +215,7 @@ private[maintain] object RowLevel {
           tx.remove(cands)
           val out = if (cands.isEmpty) in else {
             val old = read(scoped, cands)
-            old.join(in.select(key), Seq(key), "left_anti").unionByName(withIds(in, Some(old)))
+            keys.anti(old).unionByName(withIds(in, Some(old)))
           }
           tx.stage(clustered(out, files, candRows + inputRows))
         }
@@ -259,13 +264,10 @@ private[maintain] object RowLevel {
       case Predicate(cond) => morBase(spark, table, cands)(raw =>
         raw.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
           coalesce(cond, lit(false)).as("__m"), bucketExpr(table).as("__b")))
-      case Keys(in, key) => morBase(spark, table, cands)(raw =>
-        raw.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
-            col(key), bucketExpr(table).as("__b"))
-          // LEFT join + hit flag = "key IS IN the input set", planned by
-          // Catalyst (broadcast or shuffle); NULL keys never match
-          .join(in.select(col(key)).withColumn("__hit", lit(true)), Seq(key), "left")
-          .select(col("__f"), col("__i"), coalesce(col("__hit"), lit(false)).as("__m"), col("__b")))
+      case Keys(_, key) => morBase(spark, table, cands)(raw =>
+        keys.hit(raw.select(col("_metadata.file_path").as("__f"),
+            col("_metadata.row_index").as("__i"), col(key), bucketExpr(table).as("__b")))
+          .select(col("__f"), col("__i"), col("__m"), col("__b")))
       case RowIds(in) => idPositions(in.select(RowIdCol), cands)
     }
 
@@ -322,9 +324,9 @@ private[maintain] object RowLevel {
               if (cands.isEmpty) (None, noId)
               else {
                 val all = read(session, cands)
-                val keys = all.select(key)
-                (Some(withIds(in.join(keys, Seq(key), "left_semi"), Some(all)).drop(RowCommitCol)),
-                  noId.join(keys, Seq(key), "left_anti"))
+                val held = all.select(key)
+                (Some(withIds(in.join(held, Seq(key), "left_semi"), Some(all)).drop(RowCommitCol)),
+                  noId.join(held, Seq(key), "left_anti"))
               }
           }
           (Option.when(cands.nonEmpty)(tag(old, "update_pre")) ++ post.map(tag(_, "update_post")) ++
@@ -409,73 +411,145 @@ private[maintain] object RowLevel {
       else (perFile, candidates.filter(s => perFile.contains(canonical(s))))
     }
 
-    /** Key candidates: stats-range hits refined by footer blooms (small key
-      * sets) or an exact distributed semi-join (large ones); stat-less files
-      * are always candidates (sound).
-      *
-      * No exact pre-pass in merge-on-read: above the bloom
-      * cap, the COW rewrite saves full file-BYTES per pruned candidate, so
-      * the exact key-column pre-pass always pays there — but the MOR paths'
-      * next step ([[morBase]]) is itself a key-column-projected scan of the
-      * candidates whose join produces no DV for unmatched files. Running the
-      * exact pre-pass first would read the same narrow bytes TWICE for at
-      * most the saving of morBase's tiny join output (round-6 measurement:
-      * merge_upsert_mor carries two back-to-back candidate key scans).
-      * Footer blooms (≤ cap) stay on: they prune from metadata alone, no
-      * scan. */
-    private def pruneKeys(key: String, inputRows: Long): Seq[SegmentMeta] = {
-      // stats sidecars, footer blooms, and raw candidate files are keyed by
-      // the frozen PHYSICAL column name; `key` is logical (identical unless
-      // the merge key was renamed)
-      val physKey = table.colMap.getOrElse(key, key)
-      // [min, max] ranges grouped PER STAT TYPE: a numeric merge key carries
-      // L/D stats, and matching only strings would classify every segment
-      // stat-less — every micro-batch of a streaming upsert on a numeric key
-      // would pay a full-table rewrite/scan instead of batch-proportional cost
-      val ranges = live.flatMap(seg => seg.stats.get(physKey).collect {
-        case ColStats(Some(StatVal.S(a)), Some(StatVal.S(b)), _) => (seg.segmentId, a: Any, b: Any)
-        case ColStats(Some(StatVal.L(a)), Some(StatVal.L(b)), _) => (seg.segmentId, a, b)
-        case ColStats(Some(StatVal.D(a)), Some(StatVal.D(b)), _) => (seg.segmentId, a, b)
-      })
-      val withStats = ranges.map(_._1).toSet
-      val keysDf = in.select(col(key)).distinct()
-      // broadcast the file ranges (manifest-sized), shuffle only the keys
-      val hitIds = ranges.groupBy(_._2.getClass).values.flatMap { rs =>
-        val t = Literal(rs.head._2).dataType
-        val rangesDf = spark.createDataFrame(rs.map(Row.fromTuple).asJava,
-          new StructType().add("segment_id", StringType).add("kmin", t).add("kmax", t))
-        keysDf.join(broadcast(rangesDf), col(key) >= col("kmin") && col(key) <= col("kmax"))
-          .select("segment_id").distinct().collect().map(_.getString(0))
-      }.toSet
-      // Refinement: range stats are void after space-curve clustering
-      // (interleaved keys make every file span the keyspace), so range hits
-      // are re-tested for ACTUAL key presence: small input sets (≤
-      // BloomKeyCap) probe each candidate's parquet column bloom — footer
-      // metadata only, no job; large ones (COW) run an exact DISTRIBUTED
-      // semi-join of the candidates' key column against the input keys
-      // ([[MergeInto.refineCandidatesExact]]): keys never collect to the
-      // driver, no false positives at any K, and the cost is a single-column
-      // projected scan — a few % of the bytes the rewrite would spend on each
-      // file it excludes. (An expected-yield guard that SKIPS the exact pass
-      // when a uniform-key model predicts no pruning was tried and reverted:
-      // insert-heavy merges carry many ABSENT keys that inflate K while being
-      // exactly what the pass prunes.)
-      val rangeHits = live.filter(s => hitIds.contains(s.segmentId))
-      val refined: Set[String] = table.bloomKeyColumn match {
-        case Some(bloomCol) if bloomCol == physKey && rangeHits.nonEmpty =>
-          if (inputRows <= MergeInto.BloomKeyCap) {
-            val keys: Array[Any] = in.select(col(key)).collect().map(_.get(0))
-            KeyBloom.filterMayContain(spark.sparkContext.hadoopConfiguration,
-              rangeHits.map(s => (PathNorm.resolve(table.root, s.path), s.segmentId)),
-              bloomCol, keys).toSet
-          } else if (!mor)
-            MergeInto.refineCandidatesExact(spark, table, in.select(col(key)), key, rangeHits)
-          else hitIds
-        case _ => hitIds
+    /** The key set of `in` (deduplicated by `key`). One collect of at most
+      * [[MergeInto.BloomKeyCap]] + 1 keys decides small from large; a
+      * small set is then every key, and so its row count too. */
+    private def keySet(in: DataFrame, key: String): KeySet = {
+      val head = in.select(col(key)).limit(MergeInto.BloomKeyCap.toInt + 1).collect()
+      if (head.length <= MergeInto.BloomKeyCap)
+        new Small(key, head.toSeq.map(_.get(0)), in.schema(key).dataType)
+      else new Large(key, in.select(col(key)), in.count())
+    }
+
+    /** A [[Keys]] match's input key set, built once per run: the row
+      * count, the candidate pruning and the match all come from it, so the
+      * input is read once. NULL keys never match: a table row with a NULL
+      * key is never hit and survives [[anti]]. */
+    private sealed trait KeySet {
+      def key: String
+      /** Rows of the input set; it is deduplicated by key, so its keys. */
+      def rows: Long
+      /** The rows of `df` whose key is in the set. */
+      def semi(df: DataFrame): DataFrame
+      /** The rows of `df` whose key is not in the set. */
+      def anti(df: DataFrame): DataFrame
+      /** `df` with a boolean `__m`: its row's key is in the set. */
+      def hit(df: DataFrame): DataFrame
+      /** The ids of the segments in `ranged` — (segment, min, max) of the
+        * key's stats — that may hold a key of the set. */
+      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String]
+
+      /** Stats sidecars, footer blooms and raw candidate files are keyed by
+        * the frozen PHYSICAL column name; `key` is logical (identical
+        * unless the merge key was renamed). */
+      protected def physKey: String = table.colMap.getOrElse(key, key)
+      protected def bloomed: Boolean = table.bloomKeyColumn.contains(physKey)
+
+      /** Key candidates: the segments whose [min, max] can hold a key,
+        * refined by [[holding]]; stat-less segments are always candidates
+        * (sound). Ranges are taken per stat type: a numeric key carries
+        * L/D stats, and matching only strings would classify every segment
+        * stat-less, so every micro-batch of a streaming upsert on a numeric
+        * key would pay a full-table rewrite or scan.
+        *
+        * The refinement exists because range stats are void after
+        * space-curve clustering: interleaved keys make every file span the
+        * keyspace, so range hits are re-tested for ACTUAL key presence. */
+      def candidates(live: Seq[SegmentMeta]): Seq[SegmentMeta] = {
+        val ranged = live.flatMap(seg => seg.stats.get(physKey).collect {
+          case ColStats(Some(a: StatVal.S), Some(b: StatVal.S), _) => (seg, a, b)
+          case ColStats(Some(a: StatVal.L), Some(b: StatVal.L), _) => (seg, a, b)
+          case ColStats(Some(a: StatVal.D), Some(b: StatVal.D), _) => (seg, a, b)
+        })
+        val withStats = ranged.map(_._1.segmentId).toSet
+        val held = holding(ranged)
+        live.filter(s => held(s.segmentId) || !withStats(s.segmentId))
       }
-      live.filter(s => refined.contains(s.segmentId) || !withStats(s.segmentId))
+    }
+
+    /** At most [[MergeInto.BloomKeyCap]] keys, held on the driver. Ranges
+      * are tested there ([[within]]), the same keys probe each range hit's
+      * footer bloom (metadata only, no job), and the match is a literal-set
+      * predicate on the key, so no plan of the run joins. */
+    private final class Small(val key: String, all: Seq[Any], keyType: DataType) extends KeySet {
+      private val present = all.filter(_ != null)
+      def rows: Long = all.size.toLong
+      // NULL when the key is NULL: `where` drops such a row, [[anti]] and
+      // [[hit]] read it as no match
+      private val isIn: Column =
+        if (present.isEmpty) lit(false)
+        else col(key).isin(present.map(k => Bridge.ofExpr(Literal.create(k, keyType))): _*)
+      private val hitOrFalse = coalesce(isIn, lit(false))
+      def semi(df: DataFrame): DataFrame = df.where(isIn)
+      def anti(df: DataFrame): DataFrame = df.where(!hitOrFalse)
+      def hit(df: DataFrame): DataFrame = df.withColumn("__m", hitOrFalse)
+
+      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String] = {
+        val vals = present.map(StatVal.fromAny)
+        val hits = ranged.collect { case (s, lo, hi) if vals.exists(within(lo, hi, _)) => s }
+        // a bloom hashes the column's physical type: keys of another type
+        // than the table's key (an uncast delete-by-key set) skip the probe
+        val typed = table.meta.schema.exists(_.fields.exists(f =>
+          f.name == key && f.dataType == keyType))
+        if (bloomed && typed && hits.nonEmpty)
+          KeyBloom.filterMayContain(spark.sparkContext.hadoopConfiguration,
+            hits.map(s => (PathNorm.resolve(table.root, s.path), s.segmentId)),
+            physKey, present.toArray).toSet
+        else hits.map(_.segmentId).toSet
+      }
+    }
+
+    /** More keys than [[MergeInto.BloomKeyCap]], left distributed: the
+      * match is a keyed join Catalyst plans (broadcast or shuffle), and the
+      * ranges are tested ([[within]]) where the keys are. Blooms cannot
+      * testify about that many keys (see [[MergeInto.BloomKeyCap]]), so a
+      * copy-on-write run refines the range hits with an exact distributed
+      * semi-join of their key column ([[MergeInto.refineCandidatesExact]]):
+      * keys never collect to the driver, and the single-column scan costs a
+      * few % of the bytes the rewrite would spend on each file it excludes.
+      * Merge-on-read skips it: its matched-row pass ([[morBase]]) is itself
+      * a key-column scan of the candidates that attaches no DV to an
+      * unmatched file, so the exact pass would read the same narrow bytes
+      * twice. (An expected-yield guard that skipped the exact pass when a
+      * uniform-key model predicted no pruning was tried and reverted:
+      * insert-heavy merges carry many ABSENT keys that inflate the set
+      * while being exactly what the pass prunes.) */
+    private final class Large(val key: String, set: DataFrame, val rows: Long) extends KeySet {
+      def semi(df: DataFrame): DataFrame = df.join(set, Seq(key), "left_semi")
+      def anti(df: DataFrame): DataFrame = df.join(set, Seq(key), "left_anti")
+      def hit(df: DataFrame): DataFrame =
+        df.join(set.withColumn("__m", lit(true)), Seq(key), "left")
+          .withColumn("__m", coalesce(col("__m"), lit(false)))
+
+      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String] = {
+        // the ranges (manifest-sized) travel with the task; each partition
+        // of keys tests only the ranges no key of its has hit yet
+        val rs = ranged.map { case (s, lo, hi) => (s.segmentId, lo, hi) }
+        val hitIds = if (rs.isEmpty) Set.empty[String] else set.mapPartitions { ks =>
+          var left = rs
+          ks.foreach { r =>
+            if (left.nonEmpty && !r.isNullAt(0)) {
+              val k = StatVal.fromAny(r.get(0))
+              left = left.filterNot { case (_, lo, hi) => within(lo, hi, k) }
+            }
+          }
+          val missed = left.map(_._1).toSet
+          rs.iterator.map(_._1).filterNot(missed)
+        }(Encoders.STRING).distinct().collect().toSet
+        if (bloomed && !mor && hitIds.nonEmpty)
+          MergeInto.refineCandidatesExact(spark, table, set, key,
+            ranged.map(_._1).filter(s => hitIds(s.segmentId)))
+        else hitIds
+      }
     }
   }
+
+  /** Whether key `k` may lie in a segment's key stats [`lo`, `hi`], in the
+    * stats order ([[StatVal.cmp]]: unsigned UTF-8 for strings, the order
+    * footers compute min/max in). A key the stats cannot order (None, or
+    * another type) may: the segment stays a candidate. */
+  private def within(lo: StatVal, hi: StatVal, k: Option[StatVal]): Boolean =
+    k.forall(v => StatVal.cmp(lo, v).forall(_ <= 0) && StatVal.cmp(v, hi).forall(_ <= 0))
 
   /** Bucket id of a row for the coverage recompute — same arithmetic as
     * the coverage builder (pre-epoch clamp, floor-div on the non-negative

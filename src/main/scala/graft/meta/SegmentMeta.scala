@@ -165,9 +165,12 @@ object SegmentMeta {
 
   /** Content-addressed segment id, mirroring the reference's
     * `"segment-id-v1\0" + rel_path + "\0" + bytes → blake3[..32hex]`
-    * (metadata/segments.rs:191-201). We hash (rel_path, file length, first
-    * and last 64KiB) with SHA-256 — deterministic and idempotent for retry
-    * dedup without re-reading multi-GB files end to end at 100 TB scale.
+    * (metadata/segments.rs:191-201). We SHA-256 (rel_path, file length,
+    * footer region): a Parquet footer holds every column chunk's offsets,
+    * sizes, value counts and min/max, so files that differ in content
+    * differ there — deterministic and idempotent for retry dedup at the
+    * IO of a footer (a few KiB), not of the file. A file without a
+    * Parquet tail hashes its last 64 KiB instead.
     */
   def segmentIdV1(relPath: String, file: java.nio.file.Path): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -177,13 +180,17 @@ object SegmentMeta {
     val size = java.nio.file.Files.size(file)
     md.update(java.nio.ByteBuffer.allocate(8).putLong(size).array())
     val ch = java.nio.channels.FileChannel.open(file)
+    def read(len: Long): java.nio.ByteBuffer = {
+      val buf = java.nio.ByteBuffer.allocate(len.toInt)
+      while (buf.hasRemaining && ch.read(buf, size - len + buf.position()) >= 0) {}
+      buf.flip(); buf
+    }
     try {
-      val head = java.nio.ByteBuffer.allocate(math.min(size, 65536L).toInt)
-      ch.read(head, 0L); head.flip(); md.update(head)
-      if (size > 65536L) {
-        val tail = java.nio.ByteBuffer.allocate(math.min(size - 65536L, 65536L).toInt)
-        ch.read(tail, size - tail.capacity()); tail.flip(); md.update(tail)
-      }
+      // tail: 4-byte little-endian footer length, then the magic "PAR1"
+      val tail = read(math.min(size, 8L)).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val footer = if (size >= 12L && tail.getInt(4) == 0x31524150) tail.getInt(0).toLong else -1L
+      md.update(read(if (footer > 0L && footer <= size - 12L) footer + 8L
+                     else math.min(size, 65536L)))
     } finally ch.close()
     "seg-" + md.digest().take(16).map("%02x".format(_)).mkString
   }

@@ -179,8 +179,8 @@ final class TableStreamSource(
       case (Some(Some(n)), _) =>
         require(n >= 1, s"startingVersion must be >= 1, got $n"); Some(n)
       case (_, Some(ts)) =>
-        // epoch millis or any ISO-8601 instant, anchored like `latest`
-        val ms = ts.toLongOption.getOrElse(java.time.Instant.parse(ts).toEpochMilli)
+        // anchored like `latest`
+        val ms = TsTable.instantMillis("startingTimestamp", ts)
         Some(resolveAnchored(firstVersionAtOrAfter(ms)))
       case _ => None
     }
@@ -427,9 +427,8 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
     val pinned = TableStreamSource.option(parameters, "versionAsOf")(_.toLong)
       .orElse(parameters.collectFirst {
         case (k, v) if k.equalsIgnoreCase("tag") => table.tagVersion(v) })
-      .orElse(parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("timestampAsOf") =>
-        table.versionAsOf(v.toLongOption.getOrElse(java.time.Instant.parse(v).toEpochMilli))
-      })
+      .orElse(TableStreamSource.option(parameters, "timestampAsOf")(identity).map(v =>
+        table.versionAsOf(TsTable.instantMillis("timestampAsOf", v))))
     val st = pinned.map(v => graft.log.TableState.rebuildAt(table.store, v))
       .getOrElse(table.state)
     // the DSv1 relation contract returns a bare BaseRelation — there is no

@@ -1498,6 +1498,17 @@ final class TsTable private (val root: String, val store: LogStore) {
 }
 
 object TsTable {
+  /** The instant `value` of `option` in epoch millis: epoch millis or an
+    * ISO-8601 instant. A value that is neither fails naming the option and
+    * the value. */
+  def instantMillis(option: String, value: String): Long =
+    value.toLongOption.getOrElse {
+      try java.time.Instant.parse(value).toEpochMilli
+      catch { case e: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(s"option $option has an invalid value: '$value' " +
+          "(expected epoch millis or an ISO-8601 instant)", e) }
+    }
+
   /** Parquet row-group size for data segments: SPARK_GRAFT_ROWGROUP_BYTES
     * (a positive byte count), 8 MiB when unset. Parsed once; a bad value
     * fails the first segment write and names the knob. */

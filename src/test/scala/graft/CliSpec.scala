@@ -190,4 +190,13 @@ class CliSpec extends SparkFunSuite {
     assert(e.getMessage != null && e.getMessage.contains("1w"),
       s"bucket error should name the bad spec: ${e.getMessage}")
   }
+
+  test("query --at-timestamp rejects a bad instant naming the flag and the value") {
+    val root = tmpDir("cli-badts")
+    run("create", "--table", root, "--cluster-by", "source,n_tok,doc_id")
+    val e = intercept[IllegalArgumentException] {
+      run("query", "--table", root, "--sql", "SELECT count(*) FROM t", "--at-timestamp", "noon")
+    }
+    assert(e.getMessage.contains("--at-timestamp") && e.getMessage.contains("'noon'"), e.getMessage)
+  }
 }

@@ -53,4 +53,21 @@ class FooterSpec extends SparkFunSuite {
     val falsePositives = absent.count(mayContain(blooms, _))
     assert(falsePositives <= 200, s"$falsePositives of 10000 absent keys hit blooms of $sizes bytes")
   }
+
+  test("segment ids hash the footer: stable for one file, distinct for different content") {
+    import spark.implicits._
+    def file(name: String, docId: String): java.nio.file.Path = {
+      val dir = tmpDir(name)
+      Seq((docId, 7)).toDF("doc_id", "n_tok").coalesce(1).write.mode("overwrite").parquet(dir)
+      java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+    }
+    val (a, b) = (file("segid-a", "doc-a"), file("segid-b", "doc-b"))
+    assert(java.nio.file.Files.size(a) == java.nio.file.Files.size(b), "expected equal sizes")
+    val rel = "data/part-00000.parquet" // the same relative path for both
+    val idA = SegmentMeta.segmentIdV1(rel, a)
+    assert(idA.matches("seg-[0-9a-f]{32}"), idA)
+    assert(SegmentMeta.segmentIdV1(rel, a) == idA, "the id of one file must be stable")
+    assert(SegmentMeta.segmentIdV1(rel, b) != idA, "files with different rows share an id")
+  }
 }

@@ -199,27 +199,6 @@ class PlanAuditSpec extends SparkFunSuite {
       s"clean branch must not materialize _metadata:\n$plan")
   }
 
-  test("MOR merge matched-pass: keyed join on the merge key, never NLJ/cartesian") {
-    val root = tmpDir("plan-mor")
-    val t = TsTable.create(root, TableMeta("tokens",
-      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
-    t.append(TokenGen.generate(spark, 800, numFiles = 2))
-    val upd = TokenGen.generate(spark, 50, idStart = 100L).withColumn("source", lit("rev"))
-    graft.maintain.MergeInto.mergeMor(spark, t, upd)
-    // audit the equivalent matched-pass plan shape (the operator's join)
-    val keysDf = upd.select("doc_id")
-    val raw = spark.read.parquet(t.state.liveSegments.map(s => s"$root/${s.path}"): _*)
-    val probe = raw.select(col("_metadata.file_path").as("__f"),
-        col("_metadata.row_index").as("__i"), col("doc_id"))
-      .join(keysDf.withColumn("__hit", lit(true)), Seq("doc_id"), "left")
-    val plan = executed(probe)
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"matched pass must stay keyed:\n$plan")
-    assert(plan.contains("Join"), s"expected a keyed join:\n$plan")
-    // the real operator's effects: one commit, bytes untouched, DVs present
-    assert(t.state.liveSegments.exists(_.dvPath.isDefined))
-  }
-
   test("snapshot diff: fast path plans no join; general path joins keyed (no NLJ)") {
     val root = tmpDir("plan-diff")
     val t = TsTable.create(root, TableMeta("tokens",
@@ -263,6 +242,53 @@ class PlanAuditSpec extends SparkFunSuite {
     finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     (plans.asScala.toSeq, bare.get)
+  }
+
+  test("keyed MERGE: no join below the key-set cap, one input scan, keyed joins above") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the file scans of an executed plan, through adaptive stages and into
+    // cached relations: a scan node is shared by every plan reading its cache
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val cap = graft.maintain.MergeInto.BloomKeyCap.toInt
+    for (rows <- Seq(cap / 4, cap + 50); mor <- Seq(false, true)) {
+      val what = s"${if (mor) "MOR" else "CoW"} MERGE of $rows keys"
+      val t = TsTable.create(tmpDir("plan-merge"), TableMeta("tokens",
+        TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+      t.append(TokenGen.generate(spark, 800, numFiles = 2))
+      // 100 of the input keys are live, the rest insert
+      val dir = tmpDir("plan-merge-input")
+      TokenGen.generate(spark, rows, idStart = 700L).withColumn("source", lit("rev"))
+        .write.mode("overwrite").parquet(dir)
+      val upd = spark.read.parquet(dir)
+      var executed = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
+      val (plans, _) = audited {
+        executed = PlanCapture(spark) {
+          val r = if (mor) graft.maintain.MergeInto.mergeMor(spark, t, upd)
+                  else graft.maintain.MergeInto.merge(spark, t, upd)
+          assert(r.updated == math.min(rows, 100) && r.candidates > 0, s"$what: $r")
+        }
+      }
+      val all = plans.mkString("\n")
+      if (rows <= cap) {
+        assert(!all.contains("Join"), s"$what planned a join:\n$all")
+        val inputScans = executed.flatMap(scans)
+          .filter(_.relation.location.rootPaths.exists(_.toString.contains(dir)))
+        assert(inputScans.map(System.identityHashCode).distinct.size == 1,
+          s"$what scanned its input in ${inputScans.size} plans:\n$all")
+      } else {
+        assert(all.contains("Join"), s"$what planned no keyed join:\n$all")
+        assert(!all.contains("BroadcastNestedLoopJoin") && !all.contains("CartesianProduct"),
+          s"$what must join on the key:\n$all")
+      }
+    }
   }
 
   test("change feed, snapshot diff and exact refinement read segments through TsFileIndex") {

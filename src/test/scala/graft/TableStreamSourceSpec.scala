@@ -371,4 +371,18 @@ class TableStreamSourceSpec extends SparkFunSuite {
       spark.read.format("graft-table").option("versionAsOf", "v1").load(t.root))
     assert(e.getMessage.contains("versionAsOf") && e.getMessage.contains("'v1'"), e.getMessage)
   }
+
+  test("a timestamp option that does not parse names the option and the value") {
+    val t = TsTable.create(tmpDir("srcstream-badts"), tokenMeta)
+    t.append(TokenGen.generate(spark, 10))
+    val asOf = intercept[IllegalArgumentException](
+      spark.read.format("graft-table").option("timestampAsOf", "yesterday").load(t.root))
+    assert(asOf.getMessage.contains("timestampAsOf") && asOf.getMessage.contains("'yesterday'"),
+      asOf.getMessage)
+    // the source resolves its start when the query starts it
+    val starting = intercept[IllegalArgumentException](new graft.streaming.TableStreamSource(
+      spark.sqlContext, t.root, Map("startingTimestamp" -> "2026-13-01")))
+    assert(starting.getMessage.contains("startingTimestamp") &&
+      starting.getMessage.contains("'2026-13-01'"), starting.getMessage)
+  }
 }

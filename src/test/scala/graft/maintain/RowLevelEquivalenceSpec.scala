@@ -1,7 +1,9 @@
 package graft.maintain
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.SparkFunSuite
@@ -207,6 +209,67 @@ class RowLevelEquivalenceSpec extends SparkFunSuite {
       assert(insertOnly.survivors == 200 && insertOnly.inserted == 5, s"mor=$mor")
       val overlapping = merge(rows(0 until 10, "n", ts = false, 0))
       assert(overlapping.updated == 10 && overlapping.survivors == 195, s"mor=$mor")
+    }
+  }
+
+  /** Rows keyed by `keys` (NULL allowed) with content tagged `rev`. */
+  private def keyed(keys: Seq[Any], keyType: DataType, rev: String): DataFrame = {
+    val schema = new StructType().add("doc_id", keyType).add("n_tok", IntegerType)
+      .add("source", StringType).add("tokens", ArrayType(IntegerType))
+    spark.createDataFrame(keys.zipWithIndex.map { case (k, i) =>
+      Row(k, (i * 7 + rev.length) % 50, s"$rev${i % 3}", Seq(i, i + 1))
+    }.asJava, schema).repartition(2)
+  }
+
+  // string keys cycle through a BMP letter, U+FFFD and a supplementary
+  // character, so every file's [min, max] spans all three. The verbs aim
+  // at U+FFFD keys only (index 1 mod 3): in UTF-16 order they sort above a
+  // file's supplementary max, so a UTF-16 range test would prune every file
+  private val keyKinds: Seq[(String, DataType, Int => Any)] = Seq(
+    ("string", StringType, i => Seq("a", "\uFFFD", "\uD83D\uDE00")(i % 3) + "%05d".format(i)),
+    ("bigint", LongType, i => (i - 300) * 7919L))
+
+  test("keyed MERGE and delete-by-key agree across the key-set cap, NULL keys included") {
+    val cap = MergeInto.BloomKeyCap.toInt
+    for ((kind, keyType, k) <- keyKinds; n <- Seq(cap - 1, cap, cap + 1)) withClue(s"$kind, $n keys: ") {
+      // two appends of 300 keyed rows; the first adds two NULL-key rows
+      val batches = Seq((0 until 300).map(k) ++ Seq(null, null), (300 until 600).map(k))
+      def table(name: String): TsTable = {
+        val t = TsTable.create(tmpDir(s"rl-cap-$name"), clusteredMeta)
+        t.enableCdf()
+        batches.zipWithIndex.foreach { case (b, i) => t.append(keyed(b, keyType, s"a$i")) }
+        t
+      }
+      val initial = batches.zipWithIndex.map { case (b, i) => keyed(b, keyType, s"a$i") }
+        .reduce(_ unionByName _)
+      // n input rows: one NULL key, half the rest live keys, half new ones
+      val live = (0 until (n - 1) / 2).map(i => k(3 * i + 1))
+      val fresh = (0 until n - 1 - live.size).map(i => k(1000 + 3 * i + 1))
+      val input = live ++ fresh :+ null
+
+      val upd = keyed(input, keyType, "m")
+      val merged = sorted(initial.join(upd.select("doc_id"), Seq("doc_id"), "left_anti")
+        .unionByName(upd))
+      val cow = table("cow"); val mor = table("mor")
+      val rc = MergeInto.merge(spark, cow, upd)
+      val rm = MergeInto.mergeMor(spark, mor, upd)
+      assert((rc.updated, rc.inserted) == ((live.size.toLong, n - live.size.toLong)), s"CoW $rc")
+      assert((rm.updated, rm.inserted) == ((rc.updated, rc.inserted)), s"MOR $rm")
+      Seq("CoW" -> cow, "MOR" -> mor).foreach { case (mode, t) =>
+        assert(sorted(t.scan(spark)) == merged, s"$mode MERGE scans differently")
+        assert(replayed(t) == merged, s"$mode MERGE: change feed replay differs")
+      }
+
+      val keys = spark.createDataFrame(input.map(Row(_)).asJava,
+        new StructType().add("doc_id", keyType))
+      val deleted = sorted(initial.join(keys, Seq("doc_id"), "left_anti"))
+      val byKey = table("delete-keys"); val byPredicate = table("delete-where")
+      val dk = MergeInto.mergeDelete(spark, byKey, keys)
+      val dp = DeleteWhere.delete(spark, byPredicate, col("doc_id").isin(live: _*))
+      assert(dk.rowsDeleted == live.size && dp.rowsDeleted == live.size, s"$dk / $dp")
+      assert(sorted(byKey.scan(spark)) == deleted, "delete-by-key scans differently")
+      assert(sorted(byPredicate.scan(spark)) == deleted, "predicate delete scans differently")
+      assert(replayed(byKey) == deleted, "delete-by-key: change feed replay differs")
     }
   }
 }

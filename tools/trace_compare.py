@@ -5,15 +5,17 @@ Usage: tools/trace_compare.py <parent.json> <change.json>
 
 Each argument is the saved stdout of one `perfbench/run.py --trace 1` run
 (only its last non-empty line, the metrics JSON, is read). Prints every
-`*.jobs`, `*.input_rows` and `*.output_bytes` metric of either run
-(`scan.lookup_input_rows` included) side by side and marks the rows whose
-values differ with `DIFF`. Exits 1 when any
+work count of either run side by side -- `*.jobs`, `*.input_rows`
+(`scan.lookup_input_rows` included) and `*.output_bytes`, and the pruning
+verdicts `*.candidates`, `*.files_in`, `*.files_out` and `*.dv_attached` --
+and marks the rows whose values differ with `DIFF`. Exits 1 when any
 differs, 0 otherwise, 2 on bad input.
 """
 import json
 import sys
 
-SUFFIXES = ("jobs", "input_rows", "output_bytes")
+SUFFIXES = ("jobs", "input_rows", "output_bytes",
+            "candidates", "files_in", "files_out", "dv_attached")
 
 
 def metrics(path):
@@ -35,7 +37,7 @@ def main(argv):
     a, b = metrics(argv[1]), metrics(argv[2])
     names = sorted(n for n in set(a) | set(b) if n.endswith(SUFFIXES))
     if not names:
-        print("no *.jobs / *.input_rows / *.output_bytes metrics found", file=sys.stderr)
+        print("no work-count metrics found", file=sys.stderr)
         return 2
     width = max(len(n) for n in names)
     print(f"{'metric':<{width}}  {'parent':>14}  {'change':>14}")
