@@ -153,15 +153,6 @@ object ScalingBench {
     } finally stream.close()
   }
 
-  private def deleteTree(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.foreach(deleteTree) }
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "500000").toLong
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILES", "200").toInt
@@ -198,7 +189,7 @@ object ScalingBench {
     val times = scala.collection.mutable.Map(nLo -> List.empty[Double], nHi -> List.empty[Double])
     for (trial <- 1 to trials; cpus <- Seq(nLo, nHi)) {
       val work = newTemp(s"graft-scale-$cpus-$trial")
-      deleteTree(work); copyTree(template, work)
+      PathNorm.deleteTree(work); copyTree(template, work)
       val spark = newSession(cpus)
       // JIT/codegen warmup (untimed): run the same job shape on a tiny
       // scratch table first, so whole-stage codegen compilation, parquet
@@ -208,12 +199,12 @@ object ScalingBench {
       // on every trial — asymmetrically biasing the hi-parallelism side
       // of the ratio, whose real work is 4× shorter.
       val warm = newTemp(s"graft-scale-warm-$cpus-$trial")
-      deleteTree(warm)
+      PathNorm.deleteTree(warm)
       val wt = TsTable.create(warm.toString, TableMeta("tokens",
         TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
       wt.append(TokenGen.generate(spark, 20000, numFiles = 8))
       Compaction.run(spark, wt, targetFileSize = target)
-      deleteTree(warm)
+      PathNorm.deleteTree(warm)
       val tbl = TsTable.open(work.toString)
       val t1 = System.nanoTime()
       val rep = Compaction.run(spark, tbl, targetFileSize = target)
@@ -228,9 +219,9 @@ object ScalingBench {
           "input files are not 'small'; raise SPARK_GRAFT_BENCH_FILES or SPARK_GRAFT_TARGET_MB")
       times(cpus) = times(cpus) :+ sec
       System.err.println(s"[scaling] trial=$trial cpus=$cpus sec=$sec bins=${rep.binsExecuted} filesOut=${rep.filesOut}")
-      deleteTree(work)
+      PathNorm.deleteTree(work)
     }
-    deleteTree(template)
+    PathNorm.deleteTree(template)
 
     val probeAfter = hostProbe(nLo, nHi)
     System.err.println(f"[scaling] host probe ($nLo->$nHi) after: $probeAfter%.3f")

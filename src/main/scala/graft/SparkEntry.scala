@@ -51,7 +51,7 @@ object SparkEntry {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       val it = roots.iterator()
       while (it.hasNext) {
-        try deleteTree(java.nio.file.Paths.get(it.next()))
+        try PathNorm.deleteTree(java.nio.file.Paths.get(it.next()))
         catch { case _: Exception => () }
       }
     }, "graft-temproot-cleanup"))
@@ -60,15 +60,6 @@ object SparkEntry {
       roots.add(p)
       p
     }
-  }
-
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val st = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; st.iterator().asScala.foreach(deleteTree) }
-      finally st.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
@@ -733,7 +724,7 @@ object SparkEntry {
       // the table (the scan below reads table segments only) — reclaim the
       // dataset-sized dirs now instead of leaking them per invocation
       Seq(src, ckpt).foreach { d =>
-        try deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
+        try PathNorm.deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
       }
       t.scan(s).select("event_id", "user_id", "event_type", "value")
     }),
@@ -767,7 +758,7 @@ object SparkEntry {
       graft.streaming.StreamingUpsert.applyAvailable(stream, t, ckpt)
       t.refresh()
       Seq(src, ckpt).foreach { d =>
-        try deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
+        try PathNorm.deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
       }
       t.scan(s).select("doc_id", "text", "lang", "source", "n_chars")
     }),

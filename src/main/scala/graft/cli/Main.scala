@@ -75,6 +75,9 @@ import graft.table.TsTable
   *   refs    --table ROOT   (tags + branches with base/head versions)
   *   history --table ROOT [--max-rows N]
   *   coverage --table ROOT --start ISO --end ISO
+  *
+  * A flag value that does not parse (a number, an instant) fails with an
+  * IllegalArgumentException naming the flag and the value.
   */
 object Main {
 
@@ -82,6 +85,15 @@ object Main {
     args.sliding(2).collectFirst { case Array(k, v) if k == s"--$name" => v }
   private def req(args: Array[String], name: String): String =
     opt(args, name).getOrElse(sys.error(s"missing --$name"))
+  /** `--name`'s value through `parse`; a value it rejects fails naming the
+    * flag and the value. */
+  private def opt[T](args: Array[String], name: String, parse: String => T): Option[T] =
+    opt(args, name).map { v =>
+      try parse(v) catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"--$name has an invalid value: '$v'", e) }
+    }
+  private def req[T](args: Array[String], name: String, parse: String => T): T =
+    opt(args, name, parse).getOrElse(sys.error(s"missing --$name"))
   private def flag(args: Array[String], name: String): Boolean =
     args.contains(s"--$name")
   private def multi(args: Array[String], name: String): Seq[String] =
@@ -137,9 +149,9 @@ object Main {
       val t0 = System.nanoTime()
       val t = openTable(args)
       // --at-version / --at-tag / --at-timestamp pin a historical snapshot
-      val scan = (opt(args, "at-version"), opt(args, "at-tag"),
+      val scan = (opt(args, "at-version", _.toLong), opt(args, "at-tag"),
         opt(args, "at-timestamp")) match {
-        case (Some(v), _, _) => t.scanAt(spark, v.toLong)
+        case (Some(v), _, _) => t.scanAt(spark, v)
         case (_, Some(n), _) => t.scanAtTag(spark, n)
         case (_, _, Some(ts)) =>
           // epoch millis or any ISO-8601 instant (AS OF TIMESTAMP)
@@ -167,37 +179,36 @@ object Main {
       val df = spark.sql(sqlText, params)
       if (flag(args, "explain")) df.explain("formatted")
       else output(df, opt(args, "output"), opt(args, "format").getOrElse("csv"),
-        opt(args, "max-rows").map(_.toInt), pager = flag(args, "pager"))
+        opt(args, "max-rows", _.toInt), pager = flag(args, "pager"))
       if (flag(args, "timing"))
         println(f"time: ${(System.nanoTime() - t0) / 1e9}%.3f s")
 
     case "compact" =>
       val t = openTable(args)
       val rep = Compaction.run(spark, t,
-        targetFileSize = opt(args, "target-file-size").map(_.toLong).getOrElse(512L * 1024 * 1024),
+        targetFileSize = opt(args, "target-file-size", _.toLong).getOrElse(512L * 1024 * 1024),
         jobId = opt(args, "job-id").getOrElse(java.util.UUID.randomUUID().toString.take(8)),
         where = opt(args, "where").map(org.apache.spark.sql.functions.expr),
-        dvDebtThreshold = opt(args, "dv-debt-threshold").map(_.toDouble)
+        dvDebtThreshold = opt(args, "dv-debt-threshold", _.toDouble)
           .getOrElse(Compaction.DefaultDvDebtThreshold),
-        binParallelism = opt(args, "bin-parallelism").map(_.toInt)
+        binParallelism = opt(args, "bin-parallelism", _.toInt)
           .getOrElse(Compaction.DefaultBinParallelism))
       println(s"compacted: bins=${rep.binsExecuted}/${rep.binsPlanned} rows=${rep.rowsRewritten} " +
         s"filesIn=${rep.filesIn} filesOut=${rep.filesOut} ms=${rep.millis} jobId=${rep.jobId}")
 
     case "expire" =>
       val t = TsTable.open(req(args, "table"))
-      val rep = Expire.expire(t, req(args, "keep-from").toLong)
+      val rep = Expire.expire(t, req(args, "keep-from", _.toLong))
       println(s"expired: dataFiles=${rep.dataFilesDeleted} bytes=${rep.bytesDeleted} " +
         s"commitsDropped=${rep.commitsDropped}")
 
     case "delete" =>
       val t = openTable(args)
-      val rep = opt(args, "row-ids") match {
-        case Some(csv) =>
+      val rep = opt(args, "row-ids", _.split(',').map(_.trim.toLong).toSeq) match {
+        case Some(ids) =>
           // id-addressed MOR delete: positional files pay zero data reads
           import spark.implicits._
-          graft.maintain.RowIdOps.deleteByRowIds(spark, t,
-            csv.split(',').map(_.trim.toLong).toSeq.toDF("_row_id"))
+          graft.maintain.RowIdOps.deleteByRowIds(spark, t, ids.toDF("_row_id"))
         case None =>
           val cond = org.apache.spark.sql.functions.expr(req(args, "where"))
           if (flag(args, "mor")) DeleteWhere.deleteMor(spark, t, cond)
@@ -241,28 +252,28 @@ object Main {
 
     case "restore" =>
       val t = TsTable.open(req(args, "table"))
-      val rep = graft.maintain.Restore.restore(t, req(args, "to-version").toLong)
+      val rep = graft.maintain.Restore.restore(t, req(args, "to-version", _.toLong))
       println(s"restored: to=v${rep.restoredTo} added=${rep.filesAdded} " +
         s"removed=${rep.filesRemoved} rows=${rep.rowsAfter} -> v${rep.version}")
 
     case "diff" =>
       val t = TsTable.open(req(args, "table"))
-      val from = req(args, "from").toLong
-      val to = opt(args, "to").map(_.toLong).getOrElse { t.refresh(); t.version }
+      val from = req(args, "from", _.toLong)
+      val to = opt(args, "to", _.toLong).getOrElse { t.refresh(); t.version }
       val df = graft.maintain.SnapshotDiff.diff(spark, t, from, to,
         opt(args, "key").getOrElse("doc_id"))
       output(df, opt(args, "output"), opt(args, "format").getOrElse("csv"),
-        opt(args, "max-rows").map(_.toInt))
+        opt(args, "max-rows", _.toInt))
 
     case "changes" =>
       // writer-recorded change feed (vs `diff`'s state reconstruction):
       // commits (--since, --to], rows tagged _change_type/_commit_version
       val t = TsTable.open(req(args, "table"))
-      val since = req(args, "since").toLong
-      val to = opt(args, "to").map(_.toLong).getOrElse { t.refresh(); t.version }
+      val since = req(args, "since", _.toLong)
+      val to = opt(args, "to", _.toLong).getOrElse { t.refresh(); t.version }
       val df = graft.maintain.ChangeFeed.read(spark, t, since, to)
       output(df, opt(args, "output"), opt(args, "format").getOrElse("csv"),
-        opt(args, "max-rows").map(_.toInt))
+        opt(args, "max-rows", _.toInt))
 
     case "shell" =>
       // interactive REPL (reference shell.rs); --table ROOT opens tables up
@@ -338,15 +349,16 @@ object Main {
     case "clone" =>
       val t = openTable(args)
       val dest = req(args, "target")
-      val c = t.cloneTo(dest, opt(args, "at-version").map(_.toLong))
-      println(s"cloned v${opt(args, "at-version").getOrElse(t.version)} -> $dest " +
+      val at = opt(args, "at-version", _.toLong)
+      val c = t.cloneTo(dest, at)
+      println(s"cloned v${at.getOrElse(t.version)} -> $dest " +
         s"(v${c.version}, ${c.state.liveSegments.size} referenced files, zero data copied)")
 
     case "tag" =>
       val t = TsTable.open(req(args, "table"))
       (opt(args, "name"), opt(args, "drop")) match {
         case (Some(n), _) =>
-          val v = t.setTag(n, opt(args, "version").map(_.toLong))
+          val v = t.setTag(n, opt(args, "version", _.toLong))
           println(s"tagged '${n}' -> v${t.tags(n)} (commit v$v)")
         case (_, Some(n)) =>
           t.dropTag(n); println(s"dropped tag '$n'")
@@ -359,7 +371,7 @@ object Main {
       val t = TsTable.open(req(args, "table"))
       (opt(args, "create"), opt(args, "publish"), opt(args, "drop")) match {
         case (Some(n), _, _) =>
-          val b = t.createBranch(n, opt(args, "at").map(_.toLong))
+          val b = t.createBranch(n, opt(args, "at", _.toLong))
           println(s"created branch '$n' at v${b.version}")
         case (_, Some(n), _) =>
           val v = t.publishBranch(n, dropAfter = !flag(args, "keep"))
@@ -378,7 +390,7 @@ object Main {
     case "analyze" =>
       val t = openTable(args)
       println(graft.maintain.Analyze.analyze(t,
-        opt(args, "target-file-size").map(_.toLong).getOrElse(512L * 1024 * 1024)).render)
+        opt(args, "target-file-size", _.toLong).getOrElse(512L * 1024 * 1024)).render)
 
     case "files" =>
       val t = openTable(args)
@@ -387,7 +399,7 @@ object Main {
         .withColumn("stats", org.apache.spark.sql.functions.to_json(
           org.apache.spark.sql.functions.col("stats")))
       output(df, opt(args, "output"), opt(args, "format").getOrElse("csv"),
-        opt(args, "max-rows").map(_.toInt))
+        opt(args, "max-rows", _.toInt))
 
     case "refs" =>
       val t = TsTable.open(req(args, "table"))
@@ -396,16 +408,16 @@ object Main {
 
     case "history" =>
       val t = openTable(args)
-      val n = opt(args, "max-rows").map(_.toInt).getOrElse(20)
+      val n = opt(args, "max-rows", _.toInt).getOrElse(20)
       print(org.apache.spark.sql.graft.Bridge.showString(
         t.history(spark, limit = math.max(n, 1)), n, truncate = 0))
 
     case "coverage" =>
       val t = TsTable.open(req(args, "table"))
-      val us = (d: String) => java.time.Instant.parse(d).toEpochMilli * 1000L
-      val (a, b) = (us(req(args, "start")), us(req(args, "end")))
+      val us = (flag: String) => TsTable.instantMillis(s"--$flag", req(args, flag)) * 1000L
+      val (a, b) = (us("start"), us("end"))
       println(s"ratio=${t.coverageRatioForRange(a, b)} maxGap=${t.maxGapLenForRange(a, b)} " +
-        s"lastWindow=${t.lastFullyCoveredWindow(b, opt(args, "window").map(_.toLong).getOrElse(1L))}")
+        s"lastWindow=${t.lastFullyCoveredWindow(b, opt(args, "window", _.toLong).getOrElse(1L))}")
 
     case other => sys.error(s"unknown verb '$other'")
   }

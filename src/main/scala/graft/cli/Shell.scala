@@ -1,15 +1,20 @@
 package graft.cli
 
 import java.io.{BufferedReader, PrintStream}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.table.TsTable
 
 /** Interactive shell — the Spark rebuild of the reference CLI shell
   * (timeseries-table-cli/src/shell.rs:401-480 meta-command dispatch,
   * :727-1004 quote/comment-aware statement handling): dot meta-commands
   * plus multi-line SQL statements terminated by an unquoted `;`. Opened
-  * tables register as temp views, so plain SQL resolves them by name (the
-  * Spark-native equivalent of the reference's alias rewrite).
+  * tables register as temp views, so plain SQL resolves them by name. The
+  * reference's `alias NAME` rewrites SQL text; here `.alias NAME [TABLE]`
+  * makes NAME resolve to TABLE (a view over the table's current view), so
+  * Spark's analyzer scopes it like any other name: CTEs and correlation
+  * aliases shadow it, and a column or struct field of that name is never
+  * touched. Aliases share the catalog's one, case-insensitive namespace
+  * with the open tables.
   *
   * Driven through (in, out) streams so tests can script it; `graft.cli.Main
   * shell` wires it to stdin/stdout.
@@ -18,7 +23,7 @@ object Shell {
 
   private final case class State(
       var tables: Map[String, TsTable] = Map.empty,
-      var aliases: Map[String, String] = Map.empty, // alias -> registered view
+      var aliases: Map[String, String] = Map.empty, // alias -> open table
       var timing: Boolean = false,
       var maxRows: Int = 20,
       var pager: Boolean = false,
@@ -71,8 +76,8 @@ object Shell {
           |.refresh NAME          re-register NAME at latest version
           |.timing on|off         print statement wall time
           |.maxrows N             rows shown per statement (default 20)
-          |.alias NAME [TABLE]    rewrite NAME to TABLE in SQL (show: .alias)
-          |.alias --clear         drop all aliases   (.unalias NAME: drop one)
+          |.alias NAME [TABLE]    NAME resolves to TABLE (a view)
+          |.alias --clear         drop all aliases   (.alias: list, .unalias NAME: drop one)
           |.pager on|off          page statement output through `less -S`
           |.append NAME PATH      append a parquet file to NAME (transactional)
           |.clear                 abandon the partial SQL statement buffer
@@ -91,35 +96,39 @@ object Shell {
       case ".version" => withTable(st, out, parts) { (n, t) => out.println(s"v${t.version}") }
       case ".at" => parts.tail match {
         case Seq(name, v) if st.tables.contains(name) =>
-          st.tables(name).scanAt(spark, v.toLong).createOrReplaceTempView(name)
+          register(st, name, st.tables(name).scanAt(spark, v.toLong))
           out.println(s"$name pinned at v$v")
         case _ => out.println("usage: .at NAME VERSION (open it first)")
       }
       case ".refresh" => withTable(st, out, parts) { (n, t) =>
-        t.refresh(); t.scan(spark).createOrReplaceTempView(n); out.println(s"$n at v${t.version}") }
+        t.refresh(); register(st, n, t.scan(spark)); out.println(s"$n at v${t.version}") }
       case ".history" => withTable(st, out, parts) { (_, t) =>
         out.print(org.apache.spark.sql.graft.Bridge.showString(
           t.history(spark, limit = st.maxRows), st.maxRows, truncate = 0)) }
-      // SQL alias rewriting (reference shell.rs:387-516: `alias NAME` with
-      // the quote-aware tokenizer) generalized to this shell's multiple
-      // tables: `.alias NAME TABLE` (TABLE defaults to the only open table)
+      // reference shell.rs:387-516 `alias NAME`, generalized to this
+      // shell's multiple tables: `.alias NAME TABLE` (TABLE defaults to the
+      // only open table)
       case ".alias" => parts.tail match {
         case Seq() =>
           if (st.aliases.isEmpty) out.println("alias: (none)")
           else st.aliases.toSeq.sortBy(_._1).foreach { case (a, t) => out.println(s"alias: $a -> $t") }
-        case Seq("--clear") => st.aliases = Map.empty; out.println("alias: (none)")
-        case Seq(name) if st.tables.size == 1 => setAlias(st, out, name, st.tables.keys.head)
+        case Seq("--clear") =>
+          st.aliases.keys.foreach(spark.catalog.dropTempView)
+          st.aliases = Map.empty; out.println("alias: (none)")
+        case Seq(name) if st.tables.size == 1 => setAlias(spark, st, out, name, st.tables.keys.head)
         case Seq(name) => out.println(
           if (st.tables.isEmpty) "no open tables (.open first)"
           else "several tables open — usage: .alias NAME TABLE")
-        case Seq(name, tbl) if st.tables.contains(tbl) => setAlias(st, out, name, tbl)
+        case Seq(name, tbl) if st.tables.contains(tbl) => setAlias(spark, st, out, name, tbl)
         case Seq(_, tbl) => out.println(s"no such table '$tbl' (.tables)")
         case _ => out.println("usage: .alias [NAME [TABLE] | --clear]")
       }
       case ".unalias" => parts.tail match {
-        case Seq(name) if st.aliases.contains(name) =>
-          st.aliases -= name; out.println(s"alias '$name' dropped")
-        case Seq(name) => out.println(s"no such alias '$name'")
+        case Seq(name) => named(st.aliases, name) match {
+          case Some(a) =>
+            spark.catalog.dropTempView(a); st.aliases -= a; out.println(s"alias '$a' dropped")
+          case None => out.println(s"no such alias '$name'")
+        }
         case _ => out.println("usage: .unalias NAME")
       }
       case ".pager" => parts.tail match {
@@ -143,7 +152,7 @@ object Shell {
         case Seq(name, path) if st.tables.contains(name) =>
           val t = st.tables(name)
           val v = t.appendParquetFile(spark, path)
-          t.scan(spark).createOrReplaceTempView(name)
+          register(st, name, t.scan(spark))
           out.println(s"appended $path to $name -> v$v")
         case Seq(name, _) => out.println(s"no such table '$name' (.tables)")
         case _ => out.println("usage: .append NAME PARQUET_PATH")
@@ -164,15 +173,35 @@ object Shell {
                         root: String, nameOpt: Option[String]): Unit =
     try {
       val name = nameOpt.getOrElse(viewNameFor(root))
+      named(st.aliases, name).foreach(a =>
+        throw new IllegalArgumentException(s"'$name' is an alias (.unalias $a first)"))
       val t = TsTable.open(root)
-      t.scan(spark).createOrReplaceTempView(name)
-      st.tables += name -> t
+      register(st, name, t.scan(spark))
+      st.tables = st.tables -- named(st.tables, name) + (name -> t) // one view per name
       out.println(s"opened $root as $name (v${t.version})")
     } catch { case e: Exception => out.println(s"error: ${e.getMessage}") }
 
-  private def setAlias(st: State, out: PrintStream, name: String, tbl: String): Unit =
+  /** Register `df` as the view `name`. Re-registering an open table
+    * re-registers its aliases from the same DataFrame, so an alias follows
+    * `.at` pins, refreshes and appends. */
+  private def register(st: State, name: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(name)
+    st.aliases.foreach { case (a, t) => if (t == name) df.createOrReplaceTempView(a) }
+  }
+
+  /** The key of `m` equal to `name` in the catalog's case-insensitive sense. */
+  private def named(m: Map[String, Any], name: String): Option[String] =
+    m.keys.find(_.equalsIgnoreCase(name))
+
+  private def setAlias(spark: SparkSession, st: State, out: PrintStream,
+                       name: String, tbl: String): Unit =
     if (!isValidAlias(name)) out.println("alias must match [A-Za-z_][A-Za-z0-9_]*")
-    else { st.aliases += name -> tbl; out.println(s"alias: $name -> $tbl") }
+    else if (named(st.tables, name).isDefined) out.println(s"error: '$name' is an open table")
+    else {
+      st.aliases = st.aliases -- named(st.aliases, name) + (name -> tbl)
+      spark.table(tbl).createOrReplaceTempView(name)
+      out.println(s"alias: $name -> $tbl")
+    }
 
   private[graft] def isValidAlias(s: String): Boolean =
     s.nonEmpty && (s.head.isLetter && s.head <= 'z' || s.head == '_') &&
@@ -182,8 +211,7 @@ object Shell {
     if (sql.trim.isEmpty) return
     val t0 = System.nanoTime()
     try {
-      val rewritten = st.aliases.foldLeft(sql) { case (s, (a, t)) => rewriteSqlAlias(s, a, t) }
-      val df = spark.sql(rewritten)
+      val df = spark.sql(sql)
       // showString is what df.show prints; capture it for our own stream
       val text = org.apache.spark.sql.graft.Bridge.showString(df, st.maxRows, truncate = 0)
       if (st.pager) pageOutput(text, out, st.pagerCmd) else out.print(text)
@@ -196,8 +224,8 @@ object Shell {
     }
   }
 
-  /** One step of the shared SQL lexical scanner (also used by
-    * Main.rewritePositional; the reference's tokenizer, shell.rs:401-480).
+  /** One step of the SQL lexical scanner shared by splitFirstStatement and
+    * Main.rewritePositional (the reference's tokenizer, shell.rs:401-480).
     * States: ' ' code, '\'' / '"' string (backslash escapes honored, as
     * Spark's default lexer does), '`' backtick identifier, '-' line
     * comment, '*' block comment. Returns (new state, chars consumed). */
@@ -238,221 +266,6 @@ object Shell {
       state = s2; i += adv
     }
     (None, text)
-  }
-
-  /** Rewrite occurrences of `alias` to `actual` (reference
-    * rewrite_sql_alias, shell.rs:401-516) — but ONLY in table-reference
-    * positions, so a column, SELECT-alias or CTE that happens to share the
-    * alias name is never silently rewritten (that changed query semantics
-    * without warning). A bare or backtick identifier equal to the alias is
-    * replaced when it is
-    *  - directly after FROM / JOIN / INTO / TABLE / UPDATE / DESCRIBE /
-    *    DESC / ANALYZE / VIEW / USING (comments between keyword and name
-    *    are transparent; USING covers `MERGE INTO t USING seqs` — a join's
-    *    `USING (cols)` is never affected because '(' follows, not an
-    *    identifier), or
-    *  - after a top-level comma inside a FROM list (`FROM a, seqs`), or
-    *  - the head of a qualified name (`seqs.x` — but never `x.seqs`),
-    * and its name is not defined as a CTE in the same statement
-    * (`WITH seqs AS (…)` pins `seqs` to the CTE everywhere). Quoted
-    * strings and comments pass through untouched via the shared scanner. */
-  private[graft] def rewriteSqlAlias(sql: String, alias: String, actual: String): String = {
-    if (alias == actual) return sql
-    @inline def identChar(c: Char): Boolean =
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
-
-    // ---- pass 1: tokenize -------------------------------------------------
-    // kinds: 'i' bare ident (text = ident), 'b' backtick ident (text =
-    // unescaped content), 'c' significant single char, 's' quoted string,
-    // 'm' comment, 'w' whitespace. Comments and whitespace are
-    // position-transparent; everything else is a significant token.
-    final case class Tok(kind: Char, text: String, raw: String)
-    val toks = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '`') {
-        val content = new StringBuilder
-        var j = i + 1
-        var closed = false
-        while (j < sql.length && !closed) {
-          if (sql.charAt(j) == '`') {
-            if (j + 1 < sql.length && sql.charAt(j + 1) == '`') { content += '`'; j += 2 }
-            else { closed = true; j += 1 }
-          } else { content += sql.charAt(j); j += 1 }
-        }
-        toks += Tok(if (closed) 'b' else 'c', content.toString, sql.substring(i, j))
-        i = j
-      } else if (identChar(c)) {
-        val start = i
-        while (i < sql.length && identChar(sql.charAt(i))) i += 1
-        toks += Tok('i', sql.substring(start, i), sql.substring(start, i))
-      } else if (c == '\'' || c == '"' || (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-')
-                 || (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*')) {
-        // string or comment: run the shared scanner until it returns to code
-        val start = i
-        var (state, adv) = scanStep(sql, i, ' ')
-        i += adv
-        while (i < sql.length && state != ' ') {
-          val (s2, a2) = scanStep(sql, i, state)
-          state = s2; i += a2
-        }
-        val raw = sql.substring(start, math.min(i, sql.length))
-        toks += Tok(if (c == '\'' || c == '"') 's' else 'm', raw, raw)
-      } else {
-        toks += Tok(if (c.isWhitespace) 'w' else 'c', c.toString, c.toString)
-        i += 1
-      }
-    }
-    @inline def significant(t: Tok): Boolean = t.kind != 'w' && t.kind != 'm'
-    def nextSig(from: Int): Int = {
-      var j = from + 1
-      while (j < toks.length && !significant(toks(j))) j += 1
-      j
-    }
-
-    // ---- the from-scope state machine, shared by both sweeps below --------
-    // PER PAREN LEVEL ('(' pushes, ')' pops — function args and subqueries
-    // are their own scopes) with three states: Off, Active (inside a
-    // relation list), Suspended (a JOIN condition: ON/USING interrupt the
-    // list, and a top-level comma resumes it — `FROM a JOIN b ON … , seqs`
-    // is still a relation position).
-    // USING is a ref keyword only in its MERGE position (`MERGE INTO t
-    // USING src`): isRefPosition is consulted solely for identifier tokens
-    // and a join's `USING (cols)` is followed by '(', so including it here
-    // cannot misfire on join column lists. Its membership also (correctly)
-    // stops `USING seqs` from being parsed as a correlation-alias
-    // declaration in sweep 1 below.
-    val refKeywords = Set("FROM", "JOIN", "INTO", "TABLE", "UPDATE",
-      "DESCRIBE", "DESC", "ANALYZE", "VIEW", "USING")
-    val fromEnders = Set("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "SELECT",
-      "UNION", "EXCEPT", "INTERSECT", "WINDOW", "QUALIFY", "SET", "VALUES", "WITH")
-    final class FromScope {
-      private var state = 0 // 0 off, 1 active, 2 suspended (ON/USING)
-      private val stack = scala.collection.mutable.Stack.empty[Int]
-      def active: Boolean = state == 1
-      def step(t: Tok): Unit = t.kind match {
-        case 'i' =>
-          val up = t.text.toUpperCase
-          if (up == "FROM" || up == "JOIN") state = 1
-          else if (up == "ON" || up == "USING") { if (state != 0) state = 2 }
-          else if (fromEnders(up)) state = 0
-        case 'c' =>
-          if (t.text == "(") { stack.push(state); state = 0 }
-          else if (t.text == ")") state = (if (stack.nonEmpty) stack.pop() else 0)
-          else if (t.text == ",") { if (state == 2) state = 1 }
-        case _ => ()
-      }
-    }
-    def isRefPosition(scope: FromScope, prevSig: Option[Tok]): Boolean = {
-      val afterKeyword = prevSig.exists(p => p.kind == 'i' && refKeywords(p.text.toUpperCase))
-      val afterFromComma = scope.active && prevSig.exists(p => p.kind == 'c' && p.text == ",")
-      afterKeyword || afterFromComma
-    }
-
-    // ---- sweep 1: declared names + whether the alias is really a table ref
-    //  - CTE names (WITH a AS (…), b(cols) AS (…)) via a WITH-clause STACK
-    //    (a nested WITH inside a CTE body must not clear the outer
-    //    clause's tracking), stored lowercase — Spark resolves CTE names
-    //    case-insensitively; a CTE shadows the whole statement;
-    //  - correlation aliases (`FROM events seqs`, `FROM x AS seqs`,
-    //    `(subquery) seqs`): an identifier in an active relation list whose
-    //    predecessor is a non-keyword identifier or ')' — these shadow
-    //    ONLY their own paren scope (SQL correlation aliases are
-    //    scope-local: `FROM seqs WHERE x IN (SELECT 1 FROM events seqs)`
-    //    must still rewrite the outer reference);
-    //  - aliasUsedAsRef: the alias appears in at least one genuine
-    //    table-reference position — the gate for qualified-head rewriting,
-    //    so a struct column `seqs.field FROM t` is never touched.
-    val cteNames = scala.collection.mutable.Set.empty[String] // lowercase
-    // (startTokIdx, endTokIdx inclusive) spans where a correlation alias
-    // equal to OUR alias shadows it
-    val corrSpans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var aliasUsedAsRef = false
-    locally {
-      val scope = new FromScope
-      var prevSig: Option[Tok] = None
-      var depth = 0
-      val withStack = scala.collection.mutable.Stack.empty[Int] // open WITH clause depths
-      var expectCte = false
-      // token indices of currently-open '(' (for correlation scope spans)
-      val openParens = scala.collection.mutable.Stack.empty[Int]
-      // corrSpans entries whose ')' has not closed yet: (spanIdx, parenCount)
-      val pending = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      for (j <- toks.indices) {
-        val t = toks(j)
-        if (significant(t)) {
-          val isName = t.kind == 'i' || t.kind == 'b'
-          if (isName && expectCte && !t.text.equalsIgnoreCase("RECURSIVE")) {
-            cteNames += t.text.toLowerCase; expectCte = false
-          } else if (isName && t.kind == 'i' && t.text.equalsIgnoreCase("WITH")) {
-            withStack.push(depth); expectCte = true
-          } else if (isName && withStack.nonEmpty && withStack.top == depth &&
-                     Set("SELECT", "INSERT", "FROM", "UPDATE", "DELETE", "TABLE")(t.text.toUpperCase)) {
-            withStack.pop(); expectCte = false
-          } else if (isName) {
-            if (isRefPosition(scope, prevSig)) { if (t.text == alias) aliasUsedAsRef = true }
-            else if (scope.active && prevSig.exists(p =>
-              (p.kind == 'i' && !refKeywords(p.text.toUpperCase)) ||
-                (p.kind == 'c' && p.text == ")")) &&
-              t.text.equalsIgnoreCase(alias)) {
-              // correlation alias: shadow from its enclosing '(' (or the
-              // statement start) until the matching ')' (or statement end)
-              corrSpans += ((if (openParens.nonEmpty) openParens.top else 0, toks.length - 1))
-              pending += ((corrSpans.length - 1, openParens.size))
-            }
-          }
-          if (t.kind == 'c') {
-            if (t.text == "(") { depth += 1; openParens.push(j) }
-            else if (t.text == ")") {
-              depth -= 1
-              if (openParens.nonEmpty) openParens.pop()
-              // close the spans declared inside the paren that just ended
-              var i = pending.length - 1
-              while (i >= 0) {
-                if (pending(i)._2 == openParens.size + 1) {
-                  val si = pending(i)._1
-                  corrSpans(si) = (corrSpans(si)._1, j)
-                  pending.remove(i)
-                }
-                i -= 1
-              }
-            }
-            else if (t.text == "," && withStack.nonEmpty && withStack.top == depth)
-              expectCte = true
-          }
-          scope.step(t)
-          prevSig = Some(t)
-        }
-      }
-    }
-    val cteShadowed = cteNames.contains(alias.toLowerCase)
-    def shadowedAt(j: Int): Boolean =
-      cteShadowed || corrSpans.exists { case (s, e) => j >= s && j <= e }
-
-    // ---- sweep 2: rewrite ------------------------------------------------
-    val out = new StringBuilder(sql.length + 16)
-    val scope = new FromScope
-    var prevSig: Option[Tok] = None
-    for (j <- toks.indices) {
-      val t = toks(j)
-      val isAliasTok = (t.kind == 'i' || t.kind == 'b') && t.text == alias && !shadowedAt(j)
-      val replace = isAliasTok && {
-        val k = nextSig(j)
-        val qualifiedHead = aliasUsedAsRef &&
-          k < toks.length && toks(k).kind == 'c' && toks(k).text == "." &&
-          !prevSig.exists(p => p.kind == 'c' && p.text == ".")
-        isRefPosition(scope, prevSig) || qualifiedHead
-      }
-      if (replace)
-        out ++= (if (t.kind == 'b') "`" + actual.replace("`", "``") + "`" else actual)
-      else out ++= t.raw
-      if (significant(t)) {
-        scope.step(t)
-        prevSig = Some(t)
-      }
-    }
-    out.toString
   }
 
   /** Pipe `text` through the pager (reference page_output, query.rs:180-211:

@@ -45,21 +45,15 @@ object Analyze {
     }
   }
 
-  /** Total order within one StatVal runtime type (stats of one column
-    * always carry one type — they come from the same parquet column). */
-  private def lt(a: StatVal, b: StatVal): Boolean = (a, b) match {
-    case (StatVal.L(x), StatVal.L(y)) => x < y
-    case (StatVal.D(x), StatVal.D(y)) => x < y
-    case (StatVal.S(x), StatVal.S(y)) => x < y
-    case (StatVal.B(x), StatVal.B(y)) => !x && y
-    case _ => false // mixed types: treat as incomparable (no false pruning claims)
-  }
+  /** Stats order: the one footers use (`StatVal.cmp`, unsigned UTF-8 for
+    * strings); incomparable types are never less (no false overlap claims). */
+  private def lt(a: StatVal, b: StatVal): Boolean = StatVal.cmp(a, b).exists(_ < 0)
 
   /** files whose [min,max] on `column` intersect each file's range,
     * excluding itself: overlaps(i) = n - |{j: min_j > max_i}| -
     * |{j: max_j < min_i}| - 1, by binary search over the sorted
     * endpoint arrays. */
-  private[maintain] def overlapStats(column: String,
+  private[graft] def overlapStats(column: String,
                                      segs: Seq[SegmentMeta]): Option[ColumnClustering] = {
     val ranges = segs.flatMap(_.stats.get(column) match {
       case Some(ColStats(Some(mn), Some(mx), _)) => Some((mn, mx))

@@ -81,4 +81,15 @@ class AnalyzeSpec extends SparkFunSuite {
     // render is human-shaped and total
     assert(r2.render.contains("recommendCompaction"))
   }
+
+  test("overlap orders string stats the way footers do (unsigned UTF-8)") {
+    def seg(id: String, mn: String, mx: String): SegmentMeta =
+      SegmentMeta(id, s"data/$id.parquet", "parquet", 10, Some(1024L),
+        Map("k" -> ColStats(Some(StatVal.S(mn)), Some(StatVal.S(mx)), 0)), None, None, 0)
+    // U+E000 sorts below the supplementary U+1F600 in UTF-8 but above its
+    // surrogate pair in UTF-16: the ranges are disjoint in footer order
+    val smile = "\uD83D\uDE00"
+    val c = Analyze.overlapStats("k", Seq(seg("a", "a", "\uE000"), seg("b", smile, smile))).get
+    assert(c.filesWithStats == 2 && c.avgOverlap == 0.0 && c.maxOverlap == 0, c)
+  }
 }

@@ -176,12 +176,12 @@ object BenchProfile {
       "q38_pipeline_e2e").foreach { name =>
       section(name) { SparkEntry.queries(name)(spark, sfDir).count() }
     }
-    try SparkEntry.deleteTree(java.nio.file.Paths.get(root)) catch { case _: Exception => () }
+    try graft.meta.PathNorm.deleteTree(java.nio.file.Paths.get(root)) catch { case _: Exception => () }
     } // passes
 
     spark.stop()
     Seq(stage, updStage, updMorStage).foreach { d =>
-      try SparkEntry.deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
+      try graft.meta.PathNorm.deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
     }
   }
 }

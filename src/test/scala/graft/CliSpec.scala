@@ -199,4 +199,19 @@ class CliSpec extends SparkFunSuite {
     }
     assert(e.getMessage.contains("--at-timestamp") && e.getMessage.contains("'noon'"), e.getMessage)
   }
+
+  test("a bad numeric flag or --start instant fails naming the flag and the value") {
+    val root = tmpDir("cli-badnum")
+    run("create", "--table", root, "--cluster-by", "source,n_tok,doc_id")
+    val e = intercept[IllegalArgumentException] {
+      run("query", "--table", root, "--sql", "SELECT count(*) FROM t", "--max-rows", "ten")
+    }
+    assert(e.getMessage.contains("--max-rows") && e.getMessage.contains("'ten'"), e.getMessage)
+    val ts = tmpDir("cli-badstart")
+    run("create", "--table", ts, "--time-column", "ts", "--bucket", "1h")
+    val e2 = intercept[IllegalArgumentException] {
+      run("coverage", "--table", ts, "--start", "yesterday", "--end", "2024-01-01T00:00:00Z")
+    }
+    assert(e2.getMessage.contains("--start") && e2.getMessage.contains("'yesterday'"), e2.getMessage)
+  }
 }

@@ -397,4 +397,18 @@ class RobustnessSpec extends SparkFunSuite {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(staging)),
       "stop() left heartbeat debris behind")
   }
+
+  test("PathNorm.deleteTree removes a directory link, not the target's files") {
+    import java.nio.file.{Files, Paths}
+    val target = Paths.get(tmpDir("tree-target"))
+    Files.writeString(target.resolve("keep.txt"), "keep")
+    val root = Paths.get(tmpDir("tree-root"))
+    Files.createDirectories(root.resolve("sub"))
+    Files.writeString(root.resolve("sub/own.txt"), "own")
+    Files.createSymbolicLink(root.resolve("sub/link"), target)
+    PathNorm.deleteTree(root)
+    assert(!Files.exists(root), "the tree itself was not deleted")
+    assert(Files.readString(target.resolve("keep.txt")) == "keep",
+      "deleting the tree deleted a file behind a linked directory")
+  }
 }

@@ -93,97 +93,55 @@ class ShellSpec extends SparkFunSuite {
     assert(out.contains("tok\t"), s"REPL died before .tables:\n$out")
   }
 
-  test("alias rewrite: quote-aware, backtick-aware, exact-identifier only") {
-    import Shell.rewriteSqlAlias
-    assert(rewriteSqlAlias("SELECT * FROM seqs", "seqs", "tok") == "SELECT * FROM tok")
-    // substring identifiers stay untouched
-    assert(rewriteSqlAlias("SELECT seqs2, aseqs FROM seqs", "seqs", "tok") ==
-      "SELECT seqs2, aseqs FROM tok")
-    // single-quoted strings and comments pass through
-    assert(rewriteSqlAlias("SELECT 'seqs' FROM seqs -- seqs\n", "seqs", "tok") ==
-      "SELECT 'seqs' FROM tok -- seqs\n")
-    assert(rewriteSqlAlias("SELECT /* seqs */ 1 FROM seqs", "seqs", "tok") ==
-      "SELECT /* seqs */ 1 FROM tok")
-    // backtick identifier matches rewrite quoted; others untouched
-    assert(rewriteSqlAlias("SELECT `seqs`.x FROM `seqs`", "seqs", "tok") ==
-      "SELECT `tok`.x FROM `tok`")
-    assert(rewriteSqlAlias("SELECT `seqs extra` FROM seqs", "seqs", "tok") ==
-      "SELECT `seqs extra` FROM tok")
-    // escaped backtick content compares unescaped
-    assert(rewriteSqlAlias("SELECT * FROM `se``qs`", "se`qs", "x`y") ==
-      "SELECT * FROM `x``y`")
+  /** A 25-row table opened as `tok` with the alias `seqs`, then `sql`;
+    * each statement tags its one result `name=value`. */
+  private def aliased(sql: String): String = {
+    val root = tmpDir("shell-alias-views")
+    val t = TsTable.create(root, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    t.append(TokenGen.generate(spark, 25))
+    drive(s""".open $root AS tok
+             |.alias seqs tok
+             |$sql
+             |.alias --clear
+             |.quit
+             |""".stripMargin)
+  }
+
+  test("alias views: FROM, JOIN, from-list comma, subquery, qualified head read the table") {
+    val out = aliased(
+      """SELECT concat('from=', count(*)) AS r FROM seqs;
+        |SELECT concat('join=', count(*)) AS r FROM tok JOIN seqs ON tok.doc_id = seqs.doc_id;
+        |SELECT concat('comma=', count(*)) AS r FROM (SELECT 1 AS one) x, seqs;
+        |SELECT concat('sub=', count(*)) AS r FROM (SELECT doc_id FROM seqs WHERE n_tok >= 0) s;
+        |SELECT concat('head=', count(DISTINCT seqs.doc_id)) AS r FROM seqs;
+        |""".stripMargin)
+    for (tag <- Seq("from", "join", "comma", "sub", "head"))
+      assert(out.contains(s"$tag=25"), s"$tag did not read the 25 table rows:\n$out")
+    assert(!out.contains("error:"), out)
     assert(Shell.isValidAlias("_a1") && !Shell.isValidAlias("1a") &&
       !Shell.isValidAlias("a-b") && !Shell.isValidAlias(""))
   }
 
-  test("alias rewrite: table-reference positions only (columns, CTEs, args survive)") {
-    import Shell.rewriteSqlAlias
-    // a column that happens to share the alias name is NOT a table ref
-    assert(rewriteSqlAlias("SELECT seqs FROM x", "seqs", "tok") ==
-      "SELECT seqs FROM x")
-    assert(rewriteSqlAlias("SELECT f(seqs) FROM x WHERE seqs > 1", "seqs", "tok") ==
-      "SELECT f(seqs) FROM x WHERE seqs > 1")
-    // AS-aliases and ORDER/GROUP references survive
-    assert(rewriteSqlAlias("SELECT a AS seqs FROM x ORDER BY seqs", "seqs", "tok") ==
-      "SELECT a AS seqs FROM x ORDER BY seqs")
-    // a CTE shadowing the alias pins the name to the CTE everywhere
-    assert(rewriteSqlAlias("WITH seqs AS (SELECT 1 AS a) SELECT * FROM seqs", "seqs", "tok") ==
-      "WITH seqs AS (SELECT 1 AS a) SELECT * FROM seqs")
-    // from-list comma and JOIN are table positions; function-arg commas are not
-    assert(rewriteSqlAlias("SELECT * FROM x, seqs", "seqs", "tok") ==
-      "SELECT * FROM x, tok")
-    assert(rewriteSqlAlias("SELECT * FROM x JOIN seqs ON x.id = seqs.id", "seqs", "tok") ==
-      "SELECT * FROM x JOIN tok ON x.id = tok.id")
-    assert(rewriteSqlAlias("SELECT coalesce(a, seqs) FROM x, seqs", "seqs", "tok") ==
-      "SELECT coalesce(a, seqs) FROM x, tok")
-    // qualified-name heads rewrite; qualified TAILS never do
-    assert(rewriteSqlAlias("SELECT seqs.x, t.seqs FROM seqs", "seqs", "tok") ==
-      "SELECT tok.x, t.seqs FROM tok")
-    // comments between keyword and table name are transparent
-    assert(rewriteSqlAlias("SELECT * FROM /* c */ seqs", "seqs", "tok") ==
-      "SELECT * FROM /* c */ tok")
-    assert(rewriteSqlAlias("INSERT INTO seqs SELECT * FROM seqs", "seqs", "tok") ==
-      "INSERT INTO tok SELECT * FROM tok")
-    // a scalar subquery's inner FROM must not leak from-list state into the
-    // enclosing SELECT list; a subquery in the from list still rewrites
-    assert(rewriteSqlAlias("SELECT (SELECT 1 FROM t), seqs FROM x", "seqs", "tok") ==
-      "SELECT (SELECT 1 FROM t), seqs FROM x")
-    assert(rewriteSqlAlias("SELECT * FROM (SELECT 1 FROM seqs) a, seqs", "seqs", "tok") ==
-      "SELECT * FROM (SELECT 1 FROM tok) a, tok")
-    // a correlation alias shadows the name everywhere (head included)
-    assert(rewriteSqlAlias("SELECT seqs.a FROM events seqs", "seqs", "tok") ==
-      "SELECT seqs.a FROM events seqs")
-    assert(rewriteSqlAlias("SELECT seqs.a FROM events AS seqs", "seqs", "tok") ==
-      "SELECT seqs.a FROM events AS seqs")
-    // a struct column's qualified head is not a table ref (no FROM seqs here)
-    assert(rewriteSqlAlias("SELECT seqs.field FROM t", "seqs", "tok") ==
-      "SELECT seqs.field FROM t")
-    // CTE column-list form and case-insensitive CTE names both shadow
-    assert(rewriteSqlAlias("WITH seqs(a) AS (SELECT 1) SELECT a FROM seqs", "seqs", "tok") ==
-      "WITH seqs(a) AS (SELECT 1) SELECT a FROM seqs")
-    assert(rewriteSqlAlias("WITH SEQS AS (SELECT 1 AS a) SELECT * FROM seqs", "seqs", "tok") ==
-      "WITH SEQS AS (SELECT 1 AS a) SELECT * FROM seqs")
-    // relation list resumes after a JOIN condition
-    assert(rewriteSqlAlias("SELECT * FROM a JOIN b ON a.id = b.id, seqs", "seqs", "tok") ==
-      "SELECT * FROM a JOIN b ON a.id = b.id, tok")
-    // MERGE INTO t USING <alias> is a table-ref position…
-    assert(rewriteSqlAlias("MERGE INTO dst USING seqs ON dst.id = seqs.id " +
-      "WHEN MATCHED THEN UPDATE SET *", "seqs", "tok") ==
-      "MERGE INTO dst USING tok ON dst.id = tok.id WHEN MATCHED THEN UPDATE SET *")
-    // …while a join's USING (cols) column list is never rewritten
-    assert(rewriteSqlAlias("SELECT * FROM a JOIN b USING (seqs), seqs", "seqs", "tok") ==
-      "SELECT * FROM a JOIN b USING (seqs), tok")
-    // correlation-alias shadowing is SCOPE-LOCAL: the inner subquery's
-    // alias must not suppress the outer table reference
-    assert(rewriteSqlAlias(
-      "SELECT * FROM seqs WHERE x IN (SELECT 1 FROM events seqs)", "seqs", "tok") ==
-      "SELECT * FROM tok WHERE x IN (SELECT 1 FROM events seqs)")
-    // a nested WITH inside a CTE body must not clear the outer clause's
-    // tracking — the sibling CTE after it still shadows
-    assert(rewriteSqlAlias(
-      "WITH a AS (WITH b AS (SELECT 1) SELECT * FROM b), seqs AS (SELECT 2) SELECT * FROM seqs",
-      "seqs", "tok") ==
-      "WITH a AS (WITH b AS (SELECT 1) SELECT * FROM b), seqs AS (SELECT 2) SELECT * FROM seqs")
+  test("alias views: CTEs, correlation aliases shadow it; columns, fields keep names") {
+    val out = aliased(
+      """WITH seqs AS (SELECT 7 AS a) SELECT concat('cte=', count(*), '/', max(a)) AS r FROM seqs;
+        |WITH SEQS AS (SELECT 8 AS a) SELECT concat('ctecase=', max(a)) AS r FROM seqs;
+        |WITH seqs(a) AS (SELECT 9) SELECT concat('ctecols=', max(a)) AS r FROM seqs;
+        |WITH a AS (WITH b AS (SELECT 1 AS x) SELECT * FROM b), seqs AS (SELECT 2 AS x)
+        |  SELECT concat('nested=', max(x)) AS r FROM seqs;
+        |SELECT concat('corrin=', max(seqs.a)) AS r FROM (SELECT 5 AS a) seqs;
+        |SELECT concat('corrout=', count(*)) AS r FROM seqs
+        |  WHERE n_tok IN (SELECT seqs.n_tok FROM tok seqs);
+        |SELECT concat('col=', seqs) AS r FROM (SELECT 3 AS seqs) x;
+        |SELECT concat('selalias=', a) AS seqs FROM (SELECT 4 AS a) x ORDER BY seqs;
+        |SELECT concat('field=', seqs.f) AS r FROM (SELECT named_struct('f', 6) AS seqs) x;
+        |SELECT concat('tail=', s.seqs) AS r FROM (SELECT named_struct('seqs', 10) AS s) x;
+        |""".stripMargin)
+    for (want <- Seq("cte=1/7", "ctecase=8", "ctecols=9", "nested=2", "corrin=5", "corrout=25",
+                     "col=3", "selalias=4", "field=6", "tail=10"))
+      assert(out.contains(want), s"missing $want:\n$out")
+    assert(!out.contains("error:"), out)
   }
 
   test("shell: .alias rewrites queries, .unalias drops, invalid names rejected") {
@@ -207,6 +165,56 @@ class ShellSpec extends SparkFunSuite {
     assert(out.contains("alias 'seqs' dropped"), out)
     // after unalias the name no longer resolves
     assert(out.contains("TABLE_OR_VIEW_NOT_FOUND") || out.contains("error:"), out)
+  }
+
+  test("shell: an alias follows .at/.refresh/.append; alias and table names never clash") {
+    val root = tmpDir("shell-alias-follow")
+    val t = TsTable.create(root, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    t.append(TokenGen.generate(spark, 10).coalesce(1))
+    val v1 = t.version
+    t.append(TokenGen.generate(spark, 5, idStart = 100).coalesce(1))
+    val ext = tmpDir("shell-alias-follow-src")
+    TokenGen.generate(spark, 4, idStart = 900).coalesce(1).write.mode("overwrite").parquet(ext)
+    val file = java.nio.file.Files.list(java.nio.file.Paths.get(ext))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get().toString
+    val other = tmpDir("shell-alias-follow-other")
+    TsTable.create(other, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    val out1 = drive(
+      s""".open $root AS tok
+         |.alias seqs tok
+         |SELECT concat('now=', count(*)) AS r FROM seqs;
+         |.at tok $v1
+         |SELECT concat('at=', count(*)) AS r FROM seqs;
+         |.alias --clear
+         |.quit
+         |""".stripMargin)
+    assert(out1.contains("now=15") && out1.contains("at=10"), out1)
+    // a commit from outside the shell, then .refresh and .append
+    t.append(TokenGen.generate(spark, 3, idStart = 500).coalesce(1))
+    val out = drive(
+      s""".open $root AS tok
+         |.alias seqs tok
+         |.at tok $v1
+         |.refresh tok
+         |SELECT concat('refresh=', count(*)) AS r FROM seqs;
+         |.append tok $file
+         |SELECT concat('append=', count(*)) AS r FROM seqs;
+         |.alias tok tok
+         |.alias TOK tok
+         |.open $other AS seqs
+         |.open $other AS SEQS
+         |.tables
+         |SELECT concat('alive=', count(*)) AS r FROM seqs;
+         |.unalias SEQS
+         |.quit
+         |""".stripMargin)
+    assert(out.contains("refresh=18") && out.contains("append=22"), out)
+    assert(out.contains("error: 'tok' is an open table") && out.contains("error: 'TOK' is an open table"), out)
+    assert(out.contains("error: 'seqs' is an alias") && out.contains("error: 'SEQS' is an alias"), out)
+    assert(out.contains("alive=22") && out.contains("alias 'seqs' dropped"), out)
+    assert(!out.contains(s"opened $other"), out)
   }
 
   test("shell: .pager pipes output through the pager, falls back on spawn failure") {

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: seven engine concerns each have one owner.
+# Single-path check over src/main: eight concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -29,6 +29,11 @@
 #     src/main/scala/graft/maintain/ or graft/table/ calls
 #     `repartitionByRange` (its range exchange samples by running its
 #     input a second time). graft/ops (Packing, Sampling) writes no table.
+#  8. Tree deletion: a local directory tree is deleted only by
+#     `PathNorm.deleteTree`, which removes a symbolic link without following
+#     it, so no file outside src/main/scala/graft/meta/PathNorm.scala
+#     defines a `deleteTree` (a copy that follows a linked directory deletes
+#     its target's files).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -75,6 +80,8 @@ footers=$(code 'ParquetFileReader\.open\(' |
 
 layout=$(code '\brepartitionByRange\b' | grep -E "^$src/graft/(maintain|table)/" || true)
 
+trees=$(code '\bdef deleteTree\b' | grep -v "^$src/graft/meta/PathNorm\.scala:" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -90,5 +97,6 @@ report "transform semantics outside Catalyst's eval in graft.scan" "$semantics"
 report "stats pruning entered outside its keep rule" "$entry"
 report "Parquet footer opened outside the one opener" "$footers"
 report "clustered layout outside the one writer" "$layout"
+report "directory tree deleted outside PathNorm.deleteTree" "$trees"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
