@@ -65,6 +65,8 @@ object Shell {
 
   private def meta(spark: SparkSession, st: State, out: PrintStream, cmd: String): Unit = {
     val parts = cmd.split("\\s+").toSeq
+    // an open table's name, as the catalog resolves it (case-insensitively)
+    object Open { def unapply(name: String): Option[String] = named(st.tables, name) }
     parts.head match {
       case ".help" => out.println(
         """.open ROOT [AS name]   register a graft table as a view
@@ -95,9 +97,9 @@ object Shell {
         out.println(t.scan(spark).schema.treeString) }
       case ".version" => withTable(st, out, parts) { (n, t) => out.println(s"v${t.version}") }
       case ".at" => parts.tail match {
-        case Seq(name, v) if st.tables.contains(name) =>
-          register(st, name, st.tables(name).scanAt(spark, v.toLong))
-          out.println(s"$name pinned at v$v")
+        case Seq(Open(n), v) =>
+          register(st, n, st.tables(n).scanAt(spark, v.toLong))
+          out.println(s"$n pinned at v$v")
         case _ => out.println("usage: .at NAME VERSION (open it first)")
       }
       case ".refresh" => withTable(st, out, parts) { (n, t) =>
@@ -119,7 +121,7 @@ object Shell {
         case Seq(name) => out.println(
           if (st.tables.isEmpty) "no open tables (.open first)"
           else "several tables open — usage: .alias NAME TABLE")
-        case Seq(name, tbl) if st.tables.contains(tbl) => setAlias(spark, st, out, name, tbl)
+        case Seq(name, Open(tbl)) => setAlias(spark, st, out, name, tbl)
         case Seq(_, tbl) => out.println(s"no such table '$tbl' (.tables)")
         case _ => out.println("usage: .alias [NAME [TABLE] | --clear]")
       }
@@ -149,11 +151,11 @@ object Shell {
       // append from the REPL (validates magic + logical schema, refuses
       // overwrite), then re-registers the view at the new version
       case ".append" => parts.tail match {
-        case Seq(name, path) if st.tables.contains(name) =>
-          val t = st.tables(name)
+        case Seq(Open(n), path) =>
+          val t = st.tables(n)
           val v = t.appendParquetFile(spark, path)
-          register(st, name, t.scan(spark))
-          out.println(s"appended $path to $name -> v$v")
+          register(st, n, t.scan(spark))
+          out.println(s"appended $path to $n -> v$v")
         case Seq(name, _) => out.println(s"no such table '$name' (.tables)")
         case _ => out.println("usage: .append NAME PARQUET_PATH")
       }
@@ -164,8 +166,10 @@ object Shell {
 
   private def withTable(st: State, out: PrintStream, parts: Seq[String])
                        (f: (String, TsTable) => Unit): Unit = parts.tail match {
-    case Seq(name) if st.tables.contains(name) => f(name, st.tables(name))
-    case Seq(name) => out.println(s"no such table '$name' (.tables)")
+    case Seq(name) => named(st.tables, name) match {
+      case Some(n) => f(n, st.tables(n))
+      case None    => out.println(s"no such table '$name' (.tables)")
+    }
     case _ => out.println(s"usage: ${parts.head} NAME")
   }
 

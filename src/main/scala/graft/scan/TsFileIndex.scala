@@ -11,8 +11,10 @@ import graft.meta.SegmentMeta
 /** A manifest-backed [[FileIndex]]: the table's transaction-log snapshot is
   * the source of truth for which files exist (never a directory listing —
   * at 100 TB a recursive listing is the scalability killer the log format
-  * exists to avoid), and per-file min/max stats prune files before Spark
-  * plans the scan.
+  * exists to avoid), and the one pruning entry ([[FilePruning]]) drops
+  * files before Spark plans the scan: per-file min/max stats, then, for a
+  * key-equality or small key-set filter on `bloomColumn`, each surviving
+  * file's footer bloom.
   *
   * This is the Spark-native analog of the reference's
   * `TsTableProvider::scan` file registration + `prune_segments_by_time`
@@ -20,14 +22,15 @@ import graft.meta.SegmentMeta
   * DSv2 source) keeps Spark's whole native Parquet path — vectorized
   * reader, row-group/page pruning from pushed filters, whole-stage codegen,
   * row-group splitting across tasks — while the `listFiles` hook applies
-  * our sound stats pruning. Filters remain "inexact": Spark re-applies
+  * our sound stats and bloom pruning. Filters remain "inexact": Spark re-applies
   * them, matching the reference's Inexact pushdown (ts_table_provider.rs:231-238).
   */
 final class TsFileIndex(
     spark: SparkSession,
     val tableRoot: HPath,
     segments: Seq[SegmentMeta],
-    dataSchema: StructType) extends FileIndex {
+    dataSchema: StructType,
+    bloomColumn: Option[String]) extends FileIndex {
 
   private val files: Seq[(SegmentMeta, FileStatus)] = segments.map { seg =>
     // a shallow clone's external references are absolute — scan in place
@@ -43,9 +46,9 @@ final class TsFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keep = StatsPruning.keep(dataFilters)
-    val kept = files.collect { case (seg, f) if keep(seg) => f }
-    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
+    val kept = FilePruning.prune(files, dataFilters, bloomColumn,
+      spark.sparkContext.hadoopConfiguration)(_._1, _._2.getPath.toString)
+    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }
 
   override def inputFiles: Array[String] = files.map(_._2.getPath.toString).toArray

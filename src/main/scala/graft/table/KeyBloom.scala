@@ -1,7 +1,11 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Footer-metadata key-membership tests against the Parquet column bloom
@@ -10,18 +14,21 @@ import scala.jdk.CollectionConverters._
   *
   * Why: after space-curve clustering every file's [min,max] on the identity
   * key spans nearly the whole keyspace (bit interleaving destroys key
-  * locality), so range stats alone stop pruning MERGE candidates — the
-  * write-side analog of the reference's scan pruning
+  * locality), so range stats alone stop pruning MERGE candidates or point
+  * lookups — the analog of the reference's scan pruning
   * (crates/timeseries-table-datafusion/src/ts_table_provider/pruning.rs:84-103).
-  * The bloom lives in the file footer region, so the test is O(footer) IO
-  * per file — never a data scan.
+  * Two callers probe: a keyed MERGE or delete-by-key of few keys, and the
+  * bloom tier of the one pruning entry (`graft.scan.FilePruning`), which
+  * every scan and predicate-scoped maintenance plans through. The bloom
+  * lives in the file footer region, so the test is O(footer) IO per file —
+  * never a data scan.
   */
 object KeyBloom {
 
   /** True iff `file` may contain ANY of `keys` in column `colName`,
     * answered from bloom filters only. Conservative: a missing column,
-    * missing bloom, or unsupported key type answers true (sound — the file
-    * stays a rewrite candidate). Keys are matched per row group with
+    * missing bloom, or a key the column's stored type cannot hold answers
+    * true (sound — the file stays). Keys are matched per row group with
     * early exit on the first possible hit. */
   def mayContainAny(conf: Configuration, file: String, colName: String,
                     keys: Array[Any]): Boolean = {
@@ -33,26 +40,30 @@ object KeyBloom {
           case Some(cm) =>
             val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(cm)
             if (bloom == null) true // no bloom written → cannot rule out
-            else keys.exists { k =>
-              hashOf(bloom, k) match {
-                case Some(h) => bloom.findHash(h)
-                case None    => true // untestable key type → sound fallback
-              }
+            else {
+              val stored = cm.getPrimitiveType.getPrimitiveTypeName
+              keys.exists(k => hashOf(bloom, stored, k).forall(bloom.findHash))
             }
         }
       }
     } finally reader.close()
   }
 
-  private def hashOf(bloom: org.apache.parquet.column.values.bloomfilter.BloomFilter,
-                     k: Any): Option[Long] = k match {
-    case s: String            => Some(bloom.hash(Binary.fromString(s)))
-    case l: java.lang.Long    => Some(bloom.hash(l.longValue()))
-    case i: java.lang.Integer => Some(bloom.hash(i.intValue()))
-    case d: java.lang.Double  => Some(bloom.hash(d.doubleValue()))
-    case f: java.lang.Float   => Some(bloom.hash(f.floatValue()))
-    case _                    => None
-  }
+  /** `k`'s hash as the writer hashed a value of the `stored` physical type.
+    * None when `k` is not of that type — a BIGINT key over an INT32 file
+    * written before the column was widened, a key of another type than
+    * the column's — so the file cannot be ruled out. A [[UTF8String]]
+    * hashes its UTF-8 bytes as Spark stored them. */
+  private def hashOf(bloom: BloomFilter, stored: PrimitiveTypeName, k: Any): Option[Long] =
+    (k, stored) match {
+      case (u: UTF8String, BINARY)        => Some(bloom.hash(Binary.fromConstantByteArray(u.getBytes)))
+      case (s: String, BINARY)            => Some(bloom.hash(Binary.fromString(s)))
+      case (l: java.lang.Long, INT64)     => Some(bloom.hash(l.longValue()))
+      case (i: java.lang.Integer, INT32)  => Some(bloom.hash(i.intValue()))
+      case (d: java.lang.Double, DOUBLE)  => Some(bloom.hash(d.doubleValue()))
+      case (f: java.lang.Float, FLOAT)    => Some(bloom.hash(f.floatValue()))
+      case _                              => None
+    }
 
   /** Filter `files` (path, anything) down to those that may contain at
     * least one key. Footer reads go through the driver's metadata fan-out
@@ -64,8 +75,8 @@ object KeyBloom {
     if (keys.isEmpty) return files.map(_._2)
     Fanout.map(files) { case (path, tag) =>
       // a failed footer read (transient IO, corrupt bloom page) must not
-      // abort the MERGE — same conservative contract as every other
-      // untestable case: keep the file as a candidate
+      // abort the MERGE or the scan — same conservative contract as every
+      // other untestable case: keep the file
       try { if (mayContainAny(conf, path, colName, keys)) Some(tag) else None }
       catch { case _: Exception => Some(tag) }
     }.flatten

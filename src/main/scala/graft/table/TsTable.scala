@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import graft.coverage.{Bitmap, BucketMath}
 import graft.log._
 import graft.meta._
-import graft.scan.{StatsPruning, TsFileIndex}
+import graft.scan.{FilePruning, TsFileIndex}
 
 /** The table handle: transaction-log + replayed state + scan/append/
   * maintenance entry points. Spark-native rebuild of the reference's
@@ -318,7 +318,7 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   private def relationFor(spark: SparkSession, segs: Seq[SegmentMeta],
                           schema: StructType): HadoopFsRelation = {
-    val index = new TsFileIndex(spark, new HPath(root), segs, schema)
+    val index = new TsFileIndex(spark, new HPath(root), segs, schema, bloomKeyColumn)
     HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
@@ -390,7 +390,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     Map(
       "compression" -> "zstd",
       "parquet.block.size" -> TsTable.rowGroupBytes.toString) ++
-    (clusterSpec.map(_.columns.last) match {
+    (bloomKeyColumn match {
       case Some(key) => Map(
         s"parquet.bloom.filter.enabled#$key" -> "true",
         "parquet.bloom.filter.adaptive.enabled" -> "true",
@@ -399,8 +399,12 @@ final class TsTable private (val root: String, val store: LogStore) {
     })
   }
 
-  /** The column KeyBloom pruning can test, when blooms are being written. */
-  private[graft] def bloomKeyColumn: Option[String] = clusterSpec.map(_.columns.last)
+  /** The column KeyBloom pruning can test, when blooms are being written
+    * (physical name). */
+  private[graft] def bloomKeyColumn: Option[String] = cachedState.tableMeta.flatMap(_.kind match {
+    case TableKind.Clustered(s) => s.columns.lastOption
+    case _                      => None
+  })
 
   // -------------------------------------------------------------- append
 
@@ -1065,10 +1069,11 @@ final class TsTable private (val root: String, val store: LogStore) {
     else m.foldLeft(df) { case (d, (from, to)) =>
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
-  /** The segments of `segs` a user predicate may match, by footer stats,
-    * with the optimized predicate's filter conditions (the whole
-    * predicate, for a determinism check). The stats see only what a scan
-    * hands [[TsFileIndex]]: the deterministic conjuncts without subqueries
+  /** The segments of `segs` a user predicate may match, by the scan's one
+    * pruning entry ([[FilePruning]]: footer stats, then key blooms), with
+    * the optimized predicate's filter conditions (the whole predicate, for
+    * a determinism check). The entry sees only what a scan hands
+    * [[TsFileIndex]]: the deterministic conjuncts without subqueries
     * of the optimized filters that sit directly on the table's relation
     * of zero files, so literal casts are folded, RuntimeReplaceable nodes
     * replaced, and columns named physically, as the stats are keyed. A
@@ -1093,7 +1098,8 @@ final class TsTable private (val root: String, val store: LogStore) {
       val plan = empty.where(cond).queryExecution.optimizedPlan
       val scanned = plan.collect { case Filter(c, child) if onOwn(child) => conjuncts(c) }.flatten
         .filter(e => e.deterministic && !SubqueryExpression.hasSubquery(e))
-      (StatsPruning.pruneSegments(segs, scanned), plan.collect { case f: Filter => f.condition })
+      (FilePruning.prune(segs, scanned, bloomKeyColumn, spark.sparkContext.hadoopConfiguration)(
+        identity, abs), plan.collect { case f: Filter => f.condition })
     }
   }
 

@@ -459,14 +459,18 @@ class MaintenanceSpec extends SparkFunSuite {
     t.append(Seq(40L, 60L).toDF("id").coalesce(1))
     val before = t.state.liveSegments.map(_.segmentId).toSet
 
-    // id = 40: BOTH files are stats candidates (A's [min,max] covers 40),
-    // but only B contains the row — A's bytes must survive untouched
-    val rep = DeleteWhere.delete(spark, t, col("id") === 40L)
+    // 40 ≤ id ≤ 40: BOTH files are stats candidates (A's [min,max] covers
+    // 40) and a range never probes the key blooms, but only B contains the
+    // row — A's bytes must survive untouched
+    val rep = DeleteWhere.delete(spark, t, col("id") >= 40L && col("id") <= 40L)
     assert(rep.candidates == 2 && rep.rowsDeleted == 1 && rep.filesOut == 1,
       s"per-file refinement failed: $rep")
+    // id = 60: A's bloom rules it out before the match pass
+    val eq = DeleteWhere.delete(spark, t, col("id") === 60L)
+    assert(eq.candidates == 1 && eq.rowsDeleted == 1, s"bloom tier kept A: $eq")
     val after = t.state.liveSegments.map(_.segmentId).toSet
     assert(before.intersect(after).size == 1, "zero-match candidate was rewritten")
-    assert(t.scan(spark).select("id").as[Long].collect().sorted.toSeq == Seq(0L, 60L, 99L))
+    assert(t.scan(spark).select("id").as[Long].collect().sorted.toSeq == Seq(0L, 99L))
   }
 
   test("delete where: NULL predicate rows are kept (SQL DELETE semantics)") {
@@ -652,7 +656,7 @@ class MaintenanceSpec extends SparkFunSuite {
     import spark.implicits._
     // every label must land in exactly the shuffle partition whose range
     // index it encodes -- verified through a REAL hash repartition, the
-    // same exchange clusterSortedByBounds uses
+    // same exchange RangeBuckets.cluster uses
     val n = 37
     val labels = RangeBuckets.labelsFor(n)
     assert(labels.distinct.length == n)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.log.{LogAction, TableState}
 import graft.maintain.Compaction
 import graft.meta._
-import graft.scan.StatsPruning
+import graft.scan.{FilePruning, StatsPruning}
 
 /** Driver-side metadata costs at production file counts.
   *
@@ -153,4 +153,44 @@ class MetadataScaleSpec extends AnyFunSuite {
       assert(sec < 5.0, f"$name prune pass took $sec%.1f s at $N files — superlinear?")
     }
   }
+
+  test(s"a point lookup past the bloom tier's file cap opens no footer over $N files") {
+    import org.apache.hadoop.conf.Configuration
+    val source = AttributeReference("source", StringType)()
+    val docId = AttributeReference("doc_id", StringType)()
+    def slit(s: String) = Literal(UTF8String.fromString(s), StringType)
+    val lookup = EqualTo(source, slit("src3"))
+    // every footer open instantiates the counting file system; the
+    // synthetic files do not exist, so a probe would fail and keep its file
+    val conf = new Configuration()
+    conf.set("fs.file.impl", classOf[FooterOpenCounter].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    def prune(filters: Seq[Expression]) = FilePruning.prune(segs, filters, Some("source"), conf)(
+      identity, s => s"/graft-metadata-scale/${s.path}")
+
+    FooterOpenCounter.opened.set(0)
+    val (kept, sec) = timed(prune(Seq(lookup)))
+    info(f"point lookup over ${kept.size} stats-kept files: $sec%.2f s")
+    assert(kept.size == N / 20 && kept.size > FilePruning.BloomFileCap)
+    assert(FooterOpenCounter.opened.get == 0, "the bloom tier probed past its file cap")
+    assert(sec < 5.0, f"point-lookup prune took $sec%.1f s at $N files — superlinear?")
+
+    // below the cap the tier probes each stats-kept file: files 0..99 hold
+    // src3 five times
+    val few = prune(Seq(lookup, LessThan(docId, slit(f"doc-${100L * 1000}%012d"))))
+    assert(few.size == 5 && FooterOpenCounter.opened.get == 5)
+  }
+}
+
+/** A local file system that counts its instances: with its cache off,
+  * every footer open makes one. */
+final class FooterOpenCounter extends org.apache.hadoop.fs.LocalFileSystem {
+  override def initialize(name: java.net.URI, conf: org.apache.hadoop.conf.Configuration): Unit = {
+    FooterOpenCounter.opened.incrementAndGet()
+    super.initialize(name, conf)
+  }
+}
+
+object FooterOpenCounter {
+  val opened = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -217,6 +217,28 @@ class ShellSpec extends SparkFunSuite {
     assert(!out.contains(s"opened $other"), out)
   }
 
+  test("shell: table names match case-insensitively, as SQL resolves them") {
+    val root = tmpDir("shell-case")
+    val t = TsTable.create(root, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    t.append(TokenGen.generate(spark, 10).coalesce(1))
+    val v1 = t.version
+    t.append(TokenGen.generate(spark, 5, idStart = 100).coalesce(1))
+    val out = drive(
+      s""".open $root AS tok
+         |.refresh TOK
+         |.at TOK $v1
+         |SELECT concat('at=', count(*)) AS r FROM tok;
+         |.version Tok
+         |.alias seqs TOK
+         |SELECT concat('alias=', count(*)) AS r FROM seqs;
+         |.quit
+         |""".stripMargin)
+    assert(out.contains(s"tok at v${t.version}") && out.contains(s"tok pinned at v$v1"), out)
+    assert(out.contains("at=10") && out.contains("alias=10") && out.contains("alias: seqs -> tok"), out)
+    assert(!out.contains("no such table") && !out.contains("usage:"), out)
+  }
+
   test("shell: .pager pipes output through the pager, falls back on spawn failure") {
     val root = tmpDir("shell-pager")
     val t = TsTable.create(root, TableMeta("tokens",

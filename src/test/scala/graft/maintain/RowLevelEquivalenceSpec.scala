@@ -272,6 +272,34 @@ class RowLevelEquivalenceSpec extends SparkFunSuite {
       assert(replayed(byKey) == deleted, "delete-by-key: change feed replay differs")
     }
   }
+
+  test("a predicate delete by doc_id IN (…) deletes the same rows in both modes; DVs only where a key lives") {
+    for ((kind, keyType, k) <- keyKinds) withClue(s"$kind: ") {
+      val batches = Seq((0 until 300).map(k), (300 until 600).map(k))
+      def table(name: String): TsTable = {
+        val t = TsTable.create(tmpDir(s"rl-in-$name"), clusteredMeta)
+        batches.zipWithIndex.foreach { case (b, i) => t.append(keyed(b, keyType, s"a$i")) }
+        t
+      }
+      val initial = batches.zipWithIndex.map { case (b, i) => keyed(b, keyType, s"a$i") }
+        .reduce(_ unionByName _)
+      // four live keys across both appends and one absent key
+      val victims = Seq(1, 4, 301, 598).map(k) :+ k(5000)
+      val cond = col("doc_id").isin(victims: _*)
+      val expected = sorted(initial.where(!cond))
+      val cow = table("cow"); val mor = table("mor")
+      val holding = mor.scan(spark).where(cond).select(input_file_name()).distinct().count()
+      val rc = DeleteWhere.delete(spark, cow, cond)
+      val rm = DeleteWhere.deleteMor(spark, mor, cond)
+      assert(rc.rowsDeleted == 4 && rm.rowsDeleted == 4, s"$rc / $rm")
+      assert(sorted(cow.scan(spark)) == expected, "CoW delete scans differently")
+      assert(sorted(mor.scan(spark)) == expected, "MOR delete scans differently")
+      val dvs = mor.state.liveSegments.filter(_.dvPath.isDefined)
+      assert(rm.dvAttached == holding && dvs.size == holding, s"$rm, $holding files hold a key")
+      assert(dvs.map(_.dvCardinality).sum == 4)
+      assert(rc.candidates >= holding, rc)
+    }
+  }
 }
 
 object RowLevelEquivalenceSpec {

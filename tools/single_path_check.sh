@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: eight concerns each have one owner.
+# Single-path check over src/main: nine concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -34,6 +34,12 @@
 #     it, so no file outside src/main/scala/graft/meta/PathNorm.scala
 #     defines a `deleteTree` (a copy that follows a linked directory deletes
 #     its target's files).
+#  9. Bloom probes: a footer key bloom prunes files only in the one
+#     pruning entry's bloom tier (`FilePruning.prune`, under
+#     src/main/scala/graft/scan/) and in a keyed MERGE or delete-by-key of
+#     few keys (src/main/scala/graft/maintain/RowLevel.scala), so nothing
+#     else calls `KeyBloom.filterMayContain` (a scan or maintenance verb
+#     that probed on its own could keep other files than the entry).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -82,6 +88,9 @@ layout=$(code '\brepartitionByRange\b' | grep -E "^$src/graft/(maintain|table)/"
 
 trees=$(code '\bdef deleteTree\b' | grep -v "^$src/graft/meta/PathNorm\.scala:" || true)
 
+probes=$(code 'KeyBloom\.filterMayContain\b' |
+  grep -vE "^$src/graft/(scan/|maintain/RowLevel\.scala:)" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -98,5 +107,6 @@ report "stats pruning entered outside its keep rule" "$entry"
 report "Parquet footer opened outside the one opener" "$footers"
 report "clustered layout outside the one writer" "$layout"
 report "directory tree deleted outside PathNorm.deleteTree" "$trees"
+report "a bloom probe outside the pruning tier" "$probes"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
