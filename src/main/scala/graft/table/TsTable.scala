@@ -385,19 +385,44 @@ final class TsTable private (val root: String, val store: LogStore) {
     *    Scale-independent: intra-file parallelism at ANY cluster size
     *    (a 512 MB production file gets 64 independently scannable groups);
     *    cost measured +1 % file bytes. Override via
-    *    SPARK_GRAFT_ROWGROUP_BYTES ([[TsTable.rowGroupBytes]]). */
-  private[graft] def segmentWriteOptions: Map[String, String] = {
-    Map(
-      "compression" -> "zstd",
-      "parquet.block.size" -> TsTable.rowGroupBytes.toString) ++
-    (bloomKeyColumn match {
+    *    SPARK_GRAFT_ROWGROUP_BYTES ([[TsTable.rowGroupBytes]]).
+    *  - no dictionary, v2 pages ([[TsTable.fileWriteOptions]]): integer
+    *    leaves (the `tokens` elements, `n_tok`) are DELTA_BINARY_PACKED
+    *    and strings DELTA_BYTE_ARRAY. Parquet keeps a column chunk's
+    *    dictionary whenever the dictionary-encoded data is smaller than
+    *    the *uncompressed* plain data and never compares it with the
+    *    zstd'd alternative. On a small file the token column's dictionary
+    *    (up to 50,257 ids) is about as large as the data it encodes;
+    *    building it, falling back from it and writing its page took about
+    *    44 % of the parquet write tasks' CPU in a 1 ms JFR profile of
+    *    perfbench `maintain_cycle` (4-core host). A writer probe on that
+    *    host, 6,000 TokenGen rows (`lenSpread` 449) with zstd and the
+    *    doc_id bloom, median of 5 runs, dictionary + v1 → no dictionary +
+    *    v2:
+    *
+    * {{{
+    *   rows per file           write CPU (ms)   bytes per row
+    *   250                     2,660 → 2,360    731.7 → 645.4
+    *   750                     1,690 → 1,340    749.8 → 639.2
+    *   3,000                   1,130 →   930    624.8 → 636.5 (+1.9 %)
+    *   10k-40k, full groups                     about 591 → 636 (+7.6 %)
+    * }}}
+    *
+    *    A dictionary is per column chunk, so a file that fills 8 MiB row
+    *    groups (about 40 times the token vocabulary per chunk) would be
+    *    smaller with it: the last row. Every file is still written without
+    *    one. No measured workload writes such files (every perfbench write
+    *    stays below a row group), and choosing per write needs a bytes-per-
+    *    file figure the writers do not have reliably (the optimizer sizes a
+    *    generated append at about 28 B/row against about 2 KB written). */
+  private[graft] def segmentWriteOptions: Map[String, String] =
+    TsTable.fileWriteOptions ++ (bloomKeyColumn match {
       case Some(key) => Map(
         s"parquet.bloom.filter.enabled#$key" -> "true",
         "parquet.bloom.filter.adaptive.enabled" -> "true",
         s"parquet.bloom.filter.candidates.number#$key" -> TsTable.BloomCandidates.toString)
       case None => Map.empty
     })
-  }
 
   /** The column KeyBloom pruning can test, when blooms are being written
     * (physical name). */
@@ -745,9 +770,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * scannable table state). Physical column names on disk, like the data
     * files: the feed reader maps back through the read-time column
     * mapping, so a CDC file written before a RENAME reads under the new
-    * name. */
+    * name. Encoded like a data segment, without the key bloom (nothing
+    * probes the feed by key). */
   private[table] def stageCdc(tx: Txn, df: DataFrame): Seq[LogAction.AddCdcFile] =
-    writeStaged(tx, toPhysical(df), Map.empty, n => s"_cdc/cdc-$n")(_ => ())._1
+    writeStaged(tx, toPhysical(df), TsTable.fileWriteOptions, n => s"_cdc/cdc-$n")(_ => ())._1
       .map { case (_, rel, fs) => LogAction.AddCdcFile(rel, fs.rowCount) }
 
   /** CHECK constraint: add an ingest-quality gate (name → SQL predicate)
@@ -1520,6 +1546,15 @@ object TsTable {
     * fails the first segment write and names the knob. */
   private[graft] lazy val rowGroupBytes: Long =
     parseRowGroupBytes(sys.env.get("SPARK_GRAFT_ROWGROUP_BYTES"))
+
+  /** Codec, row-group size and encoding of every file a table writes:
+    * data segments ([[TsTable.segmentWriteOptions]], which add the key
+    * bloom and say why) and change-feed files. */
+  private def fileWriteOptions: Map[String, String] = Map(
+    "compression" -> "zstd",
+    "parquet.block.size" -> rowGroupBytes.toString,
+    "parquet.enable.dictionary" -> "false",
+    "parquet.writer.version" -> "v2")
 
   /** Adaptive key-bloom candidates from parquet's maximum filter size down
     * to its 32-byte block floor, halving each step: log2(1 MiB / 32) + 1 =

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: nine concerns each have one owner.
+# Single-path check over src/main: ten concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -40,6 +40,13 @@
 #     few keys (src/main/scala/graft/maintain/RowLevel.scala), so nothing
 #     else calls `KeyBloom.filterMayContain` (a scan or maintenance verb
 #     that probed on its own could keep other files than the entry).
+# 10. Segment encoding: table, maintenance and streaming code writes
+#     Parquet only through `TsTable.writeStaged`, which writes every file
+#     with the table's codec, row-group size and encoding (no dictionary,
+#     v2 delta pages), so nothing else under
+#     src/main/scala/graft/{table,maintain,streaming}/ chains a
+#     DataFrameWriter (`.write`, no parentheses) into `.parquet(` or
+#     `format("parquet")` within four lines.
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -91,6 +98,23 @@ trees=$(code '\bdef deleteTree\b' | grep -v "^$src/graft/meta/PathNorm\.scala:" 
 probes=$(code 'KeyBloom\.filterMayContain\b' |
   grep -vE "^$src/graft/(scan/|maintain/RowLevel\.scala:)" || true)
 
+# file:line:text of each DataFrameWriter chain in $@ that writes Parquet
+parquet_writes() {
+  grep -rlE --include='*.scala' '\.write(\.|[[:space:]]*$)' "$@" |
+    while read -r f; do
+      awk -v f="$f" '{ line[NR] = $0 }
+        END {
+          for (i = 1; i <= NR; i++) {
+            if (line[i] ~ /^[[:space:]]*(\/\/|\*|\/\*\*)/ || line[i] !~ /\.write(\.|[[:space:]]*$)/) continue
+            for (j = i; j <= i + 3 && j <= NR; j++)
+              if (line[j] ~ /\.parquet\(|format\("parquet"\)/) { print f ":" i ":" line[i]; break }
+          }
+        }' "$f"
+    done
+}
+writes=$(parquet_writes $src/graft/table $src/graft/maintain $src/graft/streaming |
+  outside $src/graft/table/TsTable.scala 'private def writeStaged\[' '^  }$' || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -108,5 +132,6 @@ report "Parquet footer opened outside the one opener" "$footers"
 report "clustered layout outside the one writer" "$layout"
 report "directory tree deleted outside PathNorm.deleteTree" "$trees"
 report "a bloom probe outside the pruning tier" "$probes"
+report "a Parquet write outside TsTable.writeStaged" "$writes"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
