@@ -60,8 +60,8 @@ object Compaction {
     * lose the version race K−1 times before its turn. */
   val DefaultBinParallelism: Int = 4
 
-  /** Plan rewrite groups ("bins"): small files below the threshold are
-    * packed greedily into groups of up to `groupFactor × targetFileSize`
+  /** Plan rewrite groups ("bins"): small files (below 90 % of
+    * `targetFileSize`) are packed greedily into groups of up to `groupFactor × targetFileSize`
     * bytes. Each group is ONE distributed rewrite with a GLOBAL
     * range-partition over the curve key — clustering quality (and hence
     * post-maintenance scan pruning) needs many inputs sorted together,
@@ -70,13 +70,13 @@ object Compaction {
     * rewriting when it has ≥ 2 inputs, or one that carries a deletion
     * vector. Deterministic given the manifest. */
   def plan(segments: Seq[SegmentMeta], targetFileSize: Long,
-           smallFileThreshold: Double = 0.9, groupFactor: Int = 64,
+           groupFactor: Int = 64,
            dvDebtThreshold: Double = DefaultDvDebtThreshold): Seq[Bin] = {
     def dvDebtDue(s: SegmentMeta): Boolean =
       s.dvCardinality > 0 && s.dvCardinality.toDouble >= dvDebtThreshold * s.rowCount
     val small = segments
       .filter(s => dvDebtDue(s) ||
-        s.fileSize.exists(_ < (targetFileSize * smallFileThreshold).toLong))
+        s.fileSize.exists(_ < (targetFileSize * 0.9).toLong))
       .sortBy(_.segmentId)
     val cap = targetFileSize * groupFactor
     val bins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[SegmentMeta]]
@@ -119,7 +119,6 @@ object Compaction {
     * byte-identical. */
   def run(spark: SparkSession, table: TsTable, targetFileSize: Long,
           jobId: String = UUID.randomUUID().toString.take(8),
-          curve: Option[String] = None,
           groupFactor: Int = 64,
           maxRetries: Int = 5,
           where: Option[org.apache.spark.sql.Column] = None,
@@ -129,7 +128,7 @@ object Compaction {
     val journal = new LineageJournal(table.root, jobId)
     val done = journal.completedBins()
     table.refresh()
-    val curveName = curve.orElse(table.clusterSpec.map(_.curve)).getOrElse("none")
+    val curveName = table.clusterSpec.map(_.curve).getOrElse("none")
     val inScope = where match {
       case None => table.state.liveSegments
       case Some(cond) => table.statsCandidates(spark, table.state.liveSegments, cond)._1

@@ -551,17 +551,11 @@ private[maintain] object RowLevel {
   private def within(lo: StatVal, hi: StatVal, k: Option[StatVal]): Boolean =
     k.forall(v => StatVal.cmp(lo, v).forall(_ <= 0) && StatVal.cmp(v, hi).forall(_ <= 0))
 
-  /** Bucket id of a row for the coverage recompute — same arithmetic as
-    * the coverage builder (pre-epoch clamp, floor-div on the non-negative
-    * domain); null ts -> null bucket, which carries no coverage. Constant
-    * null for non-time-series tables. */
-  private[maintain] def bucketExpr(table: TsTable): Column = table.timeSpec match {
-    case Some(spec) =>
-      val len = spec.bucket.lengthSeconds
-      expr(s"greatest(unix_micros(CAST(`${spec.timestampColumn}` AS TIMESTAMP)), 0L) " +
-        s"div ${1000000L * len}L")
-    case None => lit(null).cast("long")
-  }
+  /** Bucket id of a row for the coverage recompute — the expression
+    * staging computes coverage with ([[Txn.bucketOf]]); null ts -> null bucket,
+    * which carries no coverage. Constant null for non-time-series tables. */
+  private[maintain] def bucketExpr(table: TsTable): Column =
+    table.timeSpec.fold(lit(null).cast("long"))(Txn.bucketOf)
 
   /** Candidate read for a MOR pass: `project` maps the raw candidate scan
     * to the (__f, __i, __m, __b) shape, and candidates already carrying a

@@ -1,7 +1,6 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -11,18 +10,24 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.coverage.{Bitmap, BucketMath}
 import graft.log._
 import graft.meta._
 import graft.scan.{FilePruning, TsFileIndex}
 
-/** The table handle: transaction-log + replayed state + scan/append/
-  * maintenance entry points. Spark-native rebuild of the reference's
-  * `TimeSeriesTable` (crates/timeseries-table-core/src/table.rs:53-57).
+/** The table handle: transaction log + replayed state, the reads, the
+  * pruning entry and the metadata verbs. Spark-native rebuild of the
+  * reference's `TimeSeriesTable` (crates/timeseries-table-core/src/table.rs:53-57).
   *
-  * Metadata (log replay, coverage bitmaps, commit protocol) is driver-side
-  * and O(files); every data-plane operation (stats, coverage construction,
+  * Every write goes through one [[Txn]] ([[transact]]), which owns the
+  * commit protocol: staging, CHECK gating, coverage snapshots, row-id
+  * allocation and the OCC loop. The handle keeps what its Txns share: the
+  * cached state, [[refresh]], the in-JVM commit lock and the monotonic
+  * [[publish]] of a committed state.
+  *
+  * Metadata (log replay, coverage bitmaps, commits) is driver-side and
+  * O(files); every data-plane operation (stats, coverage construction,
   * rewrite, scan) is a distributed Spark job. Readers are snapshot-isolated:
   * `scan` captures CURRENT once and then touches only immutable files.
   */
@@ -30,94 +35,27 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   @volatile private var cachedState: TableState = TableState.rebuild(store)
 
-  /** Serializes intra-process validate+commit critical sections (see
-    * occLoop) — the in-JVM half of the Delta-style "lock locally,
-    * OCC globally" commit discipline. */
+  /** Serializes the validate + commit section of this handle's [[Txn]]s —
+    * the in-JVM half of the Delta-style "lock locally, OCC globally" commit
+    * discipline: in-JVM writers (e.g. 4 concurrent compaction bins + an
+    * append + a MOR delete on one handle) serialize instead of burning each
+    * other's OCC retry budgets on pure self-races. */
   private val commitLock = new Object
 
   def state: TableState = cachedState
   def version: Long = cachedState.version
 
-  /** The OCC commit loop under every [[Txn]]. `body` validates against
-    * the refreshed snapshot, assembles actions, and commits via
-    * [[commitAndAdvance]] (throw to abort; retryable commit races surface
-    * as Conflict/CommitFileExists). The whole validate+commit section runs
-    * under [[commitLock]], so in-JVM writers (e.g. 4 concurrent compaction
-    * bins + an append + a MOR delete on one table instance) serialize
-    * instead of burning each other's OCC retry budgets on pure
-    * self-races. Cross-process losers rebase-retry with jittered backoff
-    * OUTSIDE the lock, and the Txn deletes an aborted commit's staged
-    * files outside it too. */
-  private[table] def occLoop(maxRetries: Int)(body: TableState => Long): Long = {
-    var attempt = 0
-    while (true) {
-      val res: Option[Long] = commitLock.synchronized {
-        refresh()
-        try Some(body(cachedState))
-        catch {
-          case _: ConflictException | _: CommitFileExistsException if attempt < maxRetries =>
-            attempt += 1; None
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => Thread.sleep(5L + scala.util.Random.nextInt(25 * attempt))
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Commit `actions` over snapshot `st` and advance the cached state.
-    * The monotonic guard makes the assignment safe even if a future
-    * caller commits outside [[commitLock]]: a slow writer's post-commit
-    * assignment can never regress a newer snapshot already visible to
-    * readers. Returns the committed version. */
-  private[table] def commitAndAdvance(st: TableState, actions0: Seq[LogAction]): Long = {
-    val actions = assignRowTracking(st, actions0)
-    val v = store.commitWithExpectedVersion(st.version, actions)
-    val ns = actions.foldLeft(st)(_ apply _).copy(version = v)
-    if (ns.version > cachedState.version) cachedState = ns
-    v
-  }
-
-  /** Row-tracking id allocation — the ONE commit-time hook every writer
-    * verb funnels through (append, swap, DV attach, restore, publish,
-    * merge). Each AddSegment that carries no baseRowId yet (fresh
-    * append/rewrite output) is assigned `[hw, hw + rowCount)` plus
-    * `rowVersion = this commit's version`; DV re-attach and RESTORE
-    * re-adds COPY their SegmentMeta and thus keep their ranges untouched.
-    * The bumped high-water mark rides the SAME commit (reusing the
-    * commit's own UpdateTableMeta when it carries one). Runs inside the
-    * OCC loop, so a rebase re-assigns from the new snapshot's high water —
-    * two racing appends can never mint overlapping id ranges. Pure
-    * metadata: no data file is read or written here. */
-  private def assignRowTracking(st: TableState, actions: Seq[LogAction]): Seq[LogAction] = {
-    // honor the POST-commit flag: the enabling commit backfills its own adds
-    val metaIdx = actions.lastIndexWhere(_.isInstanceOf[LogAction.UpdateTableMeta])
-    val effMeta =
-      if (metaIdx >= 0) actions(metaIdx).asInstanceOf[LogAction.UpdateTableMeta].meta
-      else st.tableMeta.orNull
-    if (effMeta == null || !effMeta.rowTracking) return actions
-    var hw = math.max(effMeta.rowIdHighWater,
-      st.tableMeta.map(_.rowIdHighWater).getOrElse(0L))
-    val v = st.version + 1
-    var assigned = false
-    val out = actions.map {
-      case LogAction.AddSegment(s) if s.baseRowId.isEmpty =>
-        val b = hw; hw += s.rowCount; assigned = true
-        LogAction.AddSegment(s.copy(baseRowId = Some(b), rowVersion = Some(v)))
-      case a => a
-    }
-    if (!assigned) return actions
-    val newMeta = effMeta.copy(rowIdHighWater = hw)
-    if (metaIdx >= 0) out.updated(metaIdx, LogAction.UpdateTableMeta(newMeta))
-    else out :+ LogAction.UpdateTableMeta(newMeta)
+  /** Advance the cached state to `st` unless a newer one is already
+    * visible: a slow writer's post-commit publish, or a refresh that
+    * rebuilt an older version, never regresses the snapshot readers see. */
+  private[table] def publish(st: TableState): Unit = synchronized {
+    if (st.version > cachedState.version) cachedState = st
   }
 
   /** Reload state only if CURRENT advanced (reference table.rs:205-251). */
   def refresh(): Boolean = {
     val cur = store.currentVersion()
-    if (cur != cachedState.version) { cachedState = TableState.rebuildAt(store, cur); true }
+    if (cur != cachedState.version) { publish(TableState.rebuildAt(store, cur)); true }
     else false
   }
 
@@ -134,10 +72,11 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   /** Run one [[Txn]]: `build` stages files and declares the commit, then
-    * the Txn commits through [[occLoop]]. Any failure in `build` or the
-    * commit, and a replayed watermark, deletes every file the Txn staged. */
+    * the Txn commits through its OCC loop under this handle's commit lock.
+    * Any failure in `build` or the commit, and a replayed watermark,
+    * deletes every file the Txn staged. */
   private[graft] def transact[A](maxRetries: Int = 3)(build: Txn => A): Txn.Done[A] = {
-    val tx = new Txn(this)
+    val tx = new Txn(this, commitLock)
     try {
       val value = build(tx)
       val v = tx.commit(maxRetries)
@@ -359,71 +298,6 @@ final class TsTable private (val root: String, val store: LogStore) {
     * files, passthrough for a shallow clone's absolute source references. */
   private def abs(seg: SegmentMeta): String = graft.meta.PathNorm.resolve(root, seg.path)
 
-  /** Parquet write options for data segments: a column bloom filter on the
-    * table's identity key (last cluster column — doc_id in the token
-    * layout). Space-curve clustering interleaves the key bits, so per-file
-    * [min,max] stops pruning MERGE candidates; the bloom answers "can key k
-    * be in this file" from footer metadata alone (KeyBloom). The filter
-    * is adaptive: parquet builds candidate filters by halving from the
-    * maximum size (1 MiB) and keeps the smallest that holds the file's
-    * distinct keys at the 1 % false-positive rate. Parquet's default of 5
-    * candidates stops at 64 KiB, more than a 50-row MERGE image's data;
-    * [[TsTable.BloomCandidates]] reaches down to the 32-byte block floor,
-    * so each bloom is sized to its file's keys (1 KiB for 50 rows, 8 KiB
-    * for 4,000; parquet drops candidates too small for 500 keys).
-    *
-    * Round-6 additions (guide §6):
-    *  - zstd: interleaved warm A/B vs snappy on the token payload measured
-    *    equal-or-faster encode at equal size in every window (and ~2×
-    *    faster in disk-pressured windows — fewer dirty bytes to write
-    *    back); better ratio on text/doc payloads generally.
-    *  - 8 MB row groups: the parquet default (128 MB) gives a compacted
-    *    64 MB file ONE row group, and Spark's scan can only assign a row
-    *    group to the split holding its midpoint — a compacted table
-    *    scanned with 6/32 cores (measured: full-scan 0.71 s → 0.33 s at
-    *    bench scale, restoring parity with the pre-compaction layout).
-    *    Scale-independent: intra-file parallelism at ANY cluster size
-    *    (a 512 MB production file gets 64 independently scannable groups);
-    *    cost measured +1 % file bytes. Override via
-    *    SPARK_GRAFT_ROWGROUP_BYTES ([[TsTable.rowGroupBytes]]).
-    *  - no dictionary, v2 pages ([[TsTable.fileWriteOptions]]): integer
-    *    leaves (the `tokens` elements, `n_tok`) are DELTA_BINARY_PACKED
-    *    and strings DELTA_BYTE_ARRAY. Parquet keeps a column chunk's
-    *    dictionary whenever the dictionary-encoded data is smaller than
-    *    the *uncompressed* plain data and never compares it with the
-    *    zstd'd alternative. On a small file the token column's dictionary
-    *    (up to 50,257 ids) is about as large as the data it encodes;
-    *    building it, falling back from it and writing its page took about
-    *    44 % of the parquet write tasks' CPU in a 1 ms JFR profile of
-    *    perfbench `maintain_cycle` (4-core host). A writer probe on that
-    *    host, 6,000 TokenGen rows (`lenSpread` 449) with zstd and the
-    *    doc_id bloom, median of 5 runs, dictionary + v1 → no dictionary +
-    *    v2:
-    *
-    * {{{
-    *   rows per file           write CPU (ms)   bytes per row
-    *   250                     2,660 → 2,360    731.7 → 645.4
-    *   750                     1,690 → 1,340    749.8 → 639.2
-    *   3,000                   1,130 →   930    624.8 → 636.5 (+1.9 %)
-    *   10k-40k, full groups                     about 591 → 636 (+7.6 %)
-    * }}}
-    *
-    *    A dictionary is per column chunk, so a file that fills 8 MiB row
-    *    groups (about 40 times the token vocabulary per chunk) would be
-    *    smaller with it: the last row. Every file is still written without
-    *    one. No measured workload writes such files (every perfbench write
-    *    stays below a row group), and choosing per write needs a bytes-per-
-    *    file figure the writers do not have reliably (the optimizer sizes a
-    *    generated append at about 28 B/row against about 2 KB written). */
-  private[graft] def segmentWriteOptions: Map[String, String] =
-    TsTable.fileWriteOptions ++ (bloomKeyColumn match {
-      case Some(key) => Map(
-        s"parquet.bloom.filter.enabled#$key" -> "true",
-        "parquet.bloom.filter.adaptive.enabled" -> "true",
-        s"parquet.bloom.filter.candidates.number#$key" -> TsTable.BloomCandidates.toString)
-      case None => Map.empty
-    })
-
   /** The column KeyBloom pruning can test, when blooms are being written
     * (physical name). */
   private[graft] def bloomKeyColumn: Option[String] = cachedState.tableMeta.flatMap(_.kind match {
@@ -445,9 +319,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     * the table's watermark for that appId is skipped — including on the
     * OCC rebase path, so a crashed-and-replayed streaming batch can never
     * double-land even if the first attempt's commit won a race. The data
-    * is staged by the same routine as every rewrite ([[stageSegments]])
-    * inside one [[Txn]], which deletes the staged files on any rejection
-    * (schema, identity, coverage overlap, CHECK) or replay. */
+    * is staged by the same routine as every rewrite ([[Txn.stage]]) inside
+    * one [[Txn]], which deletes the staged files on any rejection (schema,
+    * identity, coverage overlap, CHECK) or replay. */
   def append(df: DataFrame, maxRetries: Int = 3,
              txn: Option[(String, Long)] = None): Long = {
     // cheap pre-check: skip the data write entirely when the batch is
@@ -486,9 +360,8 @@ final class TsTable private (val root: String, val store: LogStore) {
         val diskSchema = TsTable.footerSchema(staged.map(_._2))
           .getOrElse(spark.read.parquet(segs.map(abs): _*).schema)
         val identity = timeSpec.flatMap(extractEntityIdentity(spark, segs, _))
-        val appendCov = timeSpec.map(_ => segs.flatMap(_.coveragePath)
-          .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel))))
-        tx.onCommit(st => appendActions(st, segs, diskSchema, identity, appendCov))
+        val appendCov = timeSpec.map(_ => coverageUnion(segs))
+        tx.onCommit(st => appendActions(tx, st, segs, diskSchema, identity, appendCov))
       }
     }.version
   }
@@ -496,7 +369,7 @@ final class TsTable private (val root: String, val store: LogStore) {
   /** The append's snapshot-dependent actions, re-derived on every OCC
     * rebase: schema adopt-or-enforce, entity identity pin-or-enforce and
     * the coverage overlap check + new coverage snapshot. */
-  private def appendActions(st: TableState, segs: Seq[SegmentMeta], diskSchema: StructType,
+  private def appendActions(tx: Txn, st: TableState, segs: Seq[SegmentMeta], diskSchema: StructType,
                             identity: Option[Map[String, String]],
                             appendCov: Option[Bitmap]): Seq[LogAction] = {
     var m = st.tableMeta.getOrElse(meta)
@@ -539,7 +412,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       val overlap = cov.intersect(tableCov)
       if (!overlap.isEmpty)
         throw CoverageOverlapException(segs.head.path, overlap.cardinality, overlap.runList.head._1)
-      writeTableCoverage(st, tableCov.union(cov))
+      tx.writeTableCoverage(st, tableCov.union(cov))
     }
 
     (if (metaChanged) Seq(LogAction.UpdateTableMeta(m)) else Nil) ++ coverageAction.toSeq
@@ -590,95 +463,6 @@ final class TsTable private (val root: String, val store: LogStore) {
     // by no commit and Expire would never reclaim it — delete it whether
     // the append landed or was rejected (in-root sources stay the
     // caller's files and are left alone)
-  }
-
-  /** The one staging routine behind every data write (append, rewrites,
-    * MOR re-appends): write `df` under the frozen physical names, enforce
-    * CHECK constraints and, on time-series tables, build coverage while the
-    * files still sit in the heartbeat-guarded staging tree, then move the
-    * non-empty ones under data/ as segments with footer stats and coverage
-    * sidecars. Every file is registered with `tx` before it lands, so the
-    * Txn deletes them on any abort. Returns each segment with the Spark
-    * schema embedded in its footer (None when absent or malformed).
-    *
-    * Zero-row part files (a rewrite partition whose every row was filtered
-    * away) are discarded: committing one would create a rowCount=0 segment
-    * with no coverage sidecar, which wedges the time-series append
-    * precondition forever. An all-empty input stages nothing. */
-  private[table] def stageSegments(tx: Txn, df: DataFrame)
-      : Seq[(SegmentMeta, Option[StructType])] = {
-    val spark = df.sparkSession
-    // toPhysical: frames arrive under logical names (appends, and every
-    // maintenance read through [[read]]) and land under the files' frozen
-    // physical names
-    val phys = toPhysical(df)
-    val (written, cov) = writeStaged(tx, phys, segmentWriteOptions, n => s"data/$n") { live =>
-      // CHECK constraints gate appends and rewrites alike: the stats fast
-      // path clears pass-through rewrites (existing rows were validated
-      // at their own write), and it is the only net that can catch an
-      // UPDATE whose SET drives rows out of bounds
-      enforceChecks(spark, live.map { case (p, fs) => (p, fs.stats, fs.rowCount) })
-      timeSpec match {
-        case Some(spec) if live.nonEmpty =>
-          if (!phys.schema.fieldNames.contains(spec.timestampColumn))
-            throw SchemaMismatchException(s"time column '${spec.timestampColumn}' missing from appended data")
-          computeCoverage(spark, live.map(_._1), spec)
-        case _ => Map.empty[String, Bitmap]
-      }
-    }
-    written.map { case (src, rel, fs) =>
-      val segId = SegmentMeta.segmentIdV1(rel, localPath(rel))
-      val covRel = cov.get(graft.meta.PathNorm.canonical(src)).map { bm =>
-        val r = s"_coverage/segments/segcov-$segId.cov"
-        tx.writeSidecar(r, bm.serialize())
-        r
-      }
-      // asNullable: file sources report every field nullable, so the
-      // embedded writer schema is normalized identically or adopt-then-
-      // enforce would reject a second append whose pipeline produced
-      // non-null columns (e.g. generator kernels)
-      val schema = fs.sparkSchemaJson.flatMap(j => scala.util.Try(
-        org.apache.spark.sql.graft.Bridge.asNullable(
-          DataType.fromJson(j).asInstanceOf[StructType])).toOption)
-      SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats, covRel) -> schema
-    }
-  }
-
-  /** Write `df` under a fresh `.staging-*` tree, run `inStaging` over its
-    * non-empty part files (absolute staged paths + footer stats), then move
-    * them to `dest(<commitId>-<i>.parquet)` (root-relative), registering
-    * each with `tx` first. Returns (staged path, relative path, stats) per
-    * file and `inStaging`'s result. The liveness beacon keeps the staging
-    * tree's mtime fresh until the move, so Expire's crashed-writer
-    * reclamation never races a live writer. */
-  private def writeStaged[T](tx: Txn, df: DataFrame, options: Map[String, String],
-                             dest: String => String)
-                            (inStaging: Seq[(String, FooterStats.FileStats)] => T)
-      : (Seq[(String, String, FooterStats.FileStats)], T) = {
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingAbs = s"$root/.staging-$commitId"
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-      df.write.options(options).mode("overwrite").parquet(stagingAbs)
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val live = FooterStats.readAll(conf, listParquet(stagingAbs)).filter(_._2.rowCount > 0)
-      val result = inStaging(live)
-      val moved = live.zipWithIndex.map { case ((src, fs), i) =>
-        val rel = dest(f"$commitId-$i%05d.parquet")
-        tx.register(rel)
-        Files.createDirectories(localPath(rel).getParent)
-        Files.move(Paths.get(PathNorm.stripFileScheme(src)), localPath(rel))
-        (src, rel, fs)
-      }
-      (moved, result)
-    } finally {
-      // stop (join) the beacon before deleting its tree: a touch racing
-      // the recursive delete could recreate .heartbeat mid-walk. A tree
-      // that will not delete (failed write) is left to Expire
-      heartbeat.stop()
-      try PathNorm.deleteTree(Paths.get(PathNorm.stripFileScheme(stagingAbs)))
-      catch { case _: java.io.IOException => () }
-    }
   }
 
   // ------------------------------------------------------ change data feed
@@ -763,19 +547,6 @@ final class TsTable private (val root: String, val store: LogStore) {
     Some(m)
   }
 
-  /** Stage a change-record DataFrame (logical table columns +
-    * `_change_type`) as parquet under `_cdc/` for [[Txn.stageCdc]] and
-    * return its AddCdcFile actions — plain files, without the footer-stats/
-    * coverage/check machinery of [[stageSegments]] (the feed is not
-    * scannable table state). Physical column names on disk, like the data
-    * files: the feed reader maps back through the read-time column
-    * mapping, so a CDC file written before a RENAME reads under the new
-    * name. Encoded like a data segment, without the key bloom (nothing
-    * probes the feed by key). */
-  private[table] def stageCdc(tx: Txn, df: DataFrame): Seq[LogAction.AddCdcFile] =
-    writeStaged(tx, toPhysical(df), TsTable.fileWriteOptions, n => s"_cdc/cdc-$n")(_ => ())._1
-      .map { case (_, rel, fs) => LogAction.AddCdcFile(rel, fs.rowCount) }
-
   /** CHECK constraint: add an ingest-quality gate (name → SQL predicate)
     * as a metadata-only commit. SQL CHECK semantics: a row passes when
     * the predicate is TRUE or NULL; only provably-FALSE rows violate.
@@ -791,7 +562,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       require(!m.checks.exists(_._1 == name), s"check '$name' already exists")
       // validate INSIDE the OCC loop, so a write racing this commit gets
       // re-validated on the rebase (a write that lands after our commit
-      // is gated by enforceChecks instead — no unvalidated window)
+      // is gated by its Txn's CHECK re-gate instead — no unvalidated window)
       if (st.liveSegments.nonEmpty) {
         val bad = read(spark, st).where(not(cond) === lit(true)).count()
         if (bad > 0) throw CheckViolationException(name, predicateSql, bad)
@@ -1052,32 +823,6 @@ final class TsTable private (val root: String, val store: LogStore) {
       Some(m.copy(checks = m.checks.filterNot(_._1 == name)))
     }
 
-  /** Enforce the table's CHECK constraints over freshly staged files.
-    * Stats fast path, sound by the Tri algebra's one reliable direction:
-    * eval(NOT check) == AlwaysFalse over a file's footer stats means NO
-    * row makes the predicate FALSE (TRUE or NULL both pass, per SQL
-    * CHECK), so the file skips the row-level scan — on appends of clean
-    * data with tight stats this costs driver arithmetic only. Files the
-    * stats can't clear get ONE filtered count over just those files. */
-  private[table] def enforceChecks(spark: SparkSession,
-                                   files: Seq[(String, Map[String, graft.meta.ColStats], Long)]): Unit = {
-    val checks = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-    if (checks.isEmpty || files.isEmpty) return
-    import org.apache.spark.sql.functions.{expr, lit, not}
-    // the staged files as stats-only segments; a file is cleared when
-    // NOT check is provably false over its stats
-    val staged = files.map { case (p, stats, rc) => SegmentMeta(p, p, "parquet", rc, None, stats, None) }
-    checks.foreach { case (name, sql) =>
-      val cond = expr(sql)
-      val suspects = statsCandidates(spark, staged, not(cond))._1
-      if (suspects.nonEmpty) {
-        val bad = toLogical(spark.read.parquet(suspects.map(_.path): _*))
-          .where(not(cond) === lit(true)).count()
-        if (bad > 0) throw CheckViolationException(name, sql, bad)
-      }
-    }
-  }
-
   // ------------------------------------------------- column mapping view
 
   /** logical → physical column mapping (empty = never renamed). */
@@ -1335,94 +1080,6 @@ final class TsTable private (val root: String, val store: LogStore) {
       }
     }
 
-  /** Coverage snapshot for the state AFTER removing `removeIds` and adding
-    * `added`: union of the surviving + new segments' sidecars, written as
-    * a fresh sidecar whose pointer action commits WITH the swap. None for
-    * non-time-series tables. */
-  private[table] def coverageActionFor(st: TableState, removeIds: Seq[String],
-                                       added: Seq[SegmentMeta]): Option[LogAction] = {
-    if (timeSpec.isEmpty) return None
-    val removed = removeIds.toSet
-    val survivors = st.liveSegments.filterNot(s => removed(s.segmentId))
-    Some(writeTableCoverage(st, (survivors ++ added).flatMap(_.coveragePath)
-      .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel)))))
-  }
-
-  /** Write `cov` as the coverage snapshot of the commit after `st` and
-    * return its pointer action. Orphans from lost OCC races age out
-    * through expire's sweep. */
-  private def writeTableCoverage(st: TableState, cov: Bitmap): LogAction = {
-    val covRel = s"_coverage/table/${st.version + 1}-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
-    writeBytes(s"$root/$covRel", cov.serialize())
-    LogAction.UpdateTableCoverage(timeSpec.get.bucket.spec, covRel)
-  }
-
-  private def readBitmap(rel: String): Bitmap =
-    Bitmap.deserialize(Files.readAllBytes(localPath(rel)))
-
-  /** Per-file coverage bitmaps — ONE distributed job that never ships raw
-    * (file, bucket) rows to the driver: each partition folds its rows into
-    * per-file distinct-bucket sets and emits them as serialized partial
-    * bitmaps; partials merge by file via union (the Spark form of the
-    * reference's rayon partial-bitmap merge, coverage.rs:324-352), so the
-    * driver receives exactly one run-length bitmap per staged file. The
-    * old distinct+collect shipped every distinct (file, bucket) pair — at
-    * 1 s buckets a year-spanning append is ~3×10^7 driver rows; now the
-    * driver cost is O(files × runs), runs-compressed. Bucket id =
-    * floorDiv(epochSeconds, len) with pre-epoch clamp to 0, matching
-    * BucketMath / the reference's release-mode clamp (bucket.rs:66-75). */
-  private def computeCoverage(spark: SparkSession, paths: Seq[String],
-                              spec: TimeIndexSpec): Map[String, Bitmap] = {
-    import spark.implicits._
-    val lenSec = spec.bucket.lengthSeconds
-    val job = spark.read.parquet(paths: _*)
-      // null timestamps carry NO coverage (reference flatten,
-      // coverage.rs:179-246). The filter must run on the COLUMN: inside
-      // the bucket expression greatest() SKIPS nulls, so a null ts would
-      // otherwise clamp to bucket 0 and falsely claim epoch coverage
-      // (and collide two unrelated appends that both hold a null row)
-      .where(col(spec.timestampColumn).isNotNull)
-      .select(
-        input_file_name().as("f"),
-        // greatest(...,0) clamps pre-epoch (reference bucket.rs:66-75);
-        // integer `div` truncation == floor on the clamped non-negative domain
-        // CAST handles TIMESTAMP_NTZ columns; session tz is UTC so the
-        // cast is value-preserving
-        expr(s"greatest(unix_micros(CAST(`${spec.timestampColumn}` AS TIMESTAMP)), 0L) div ${1000000L * lenSec}L")
-          .as("b"))
-      // dedup FIRST through Spark's hash aggregate — map-side partial,
-      // Tungsten-managed, spillable. Folding raw rows straight into
-      // per-task sets would pin unbounded unspillable heap on exactly the
-      // fine-bucket wide-range shape this path exists for; after distinct
-      // each partition holds only unique (file, bucket) pairs, so a plain
-      // buffer per file suffices (no per-row set membership checks).
-      .distinct()
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val perFile = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        it.foreach { case (f, b) =>
-          if (b > Int.MaxValue) throw BucketDomainOverflowException(b)
-          perFile.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer.empty) += b.toInt
-        }
-        perFile.iterator.map { case (f, s) => (f, Bitmap(s).serialize()) }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        (f, it.foldLeft(Bitmap.empty)((acc, p) => acc.union(Bitmap.deserialize(p._2))).serialize())
-      }
-    // surface the typed overflow error the way the driver-side build did,
-    // not buried as the cause of a generic SparkException
-    val partials =
-      try job.collect()
-      catch {
-        case e: Exception =>
-          var c: Throwable = e
-          while (c != null && !c.isInstanceOf[BucketDomainOverflowException]) c = c.getCause
-          if (c != null) throw c else throw e
-      }
-    partials.map { case (f, bytes) => normalizeFileUri(f) -> Bitmap.deserialize(bytes) }.toMap
-  }
-
   /** Entity identity via footer-stats fast path (min==max per column ⇒
     * constant), falling back to a distinct().limit(2) scan — the same
     * two-tier scheme as the reference (formats/parquet/entity_identity.rs). */
@@ -1464,15 +1121,15 @@ final class TsTable private (val root: String, val store: LogStore) {
             s"coverage pointer bucket '${ptr.bucketSpec}' != table bucket '${spec.bucket.spec}'")
         val p = Paths.get(PathNorm.stripFileScheme(s"$root/${ptr.coveragePath}"))
         if (Files.exists(p)) Bitmap.deserialize(Files.readAllBytes(p))
-        else recoverCoverage(st)
-      case None =>
-        if (st.liveSegments.isEmpty) Bitmap.empty else recoverCoverage(st)
+        else coverageUnion(st.liveSegments)
+      case None => coverageUnion(st.liveSegments)
     }
   }
 
-  private def recoverCoverage(st: TableState): Bitmap =
-    st.liveSegments.flatMap(_.coveragePath)
-      .foldLeft(Bitmap.empty)((acc, rel) => acc.union(readBitmap(rel)))
+  /** The union of the coverage sidecars of `segs`. */
+  private[table] def coverageUnion(segs: Seq[SegmentMeta]): Bitmap =
+    segs.flatMap(_.coveragePath).foldLeft(Bitmap.empty)((acc, rel) =>
+      acc.union(Bitmap.deserialize(Files.readAllBytes(localPath(rel)))))
 
   /** Metadata-only coverage analytics (reference table/coverage.rs:279-360):
     * half-open [startMicros, endMicros), answered from bitmaps without
@@ -1499,34 +1156,10 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   // --------------------------------------------------------------- utils
 
-  private def listParquet(dir: String): Seq[String] = {
-    val d = Paths.get(PathNorm.stripFileScheme(dir))
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(d)
-    try s.iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    finally s.close()
-  }
-
-  private[graft] def writeBytes(path: String, bytes: Array[Byte]): Unit = {
-    val p = Paths.get(PathNorm.stripFileScheme(path))
-    Files.createDirectories(p.getParent)
-    Files.write(p, bytes)
-  }
-
   /** A manifest path as a local path: root-relative, or absolute (a
     * shallow clone's external reference) as is. */
   private[graft] def localPath(rel: String): java.nio.file.Path =
     Paths.get(PathNorm.stripFileScheme(PathNorm.resolve(root, rel)))
-
-  /** Canonical local path for matching input_file_name() URIs against
-    * staging paths: input_file_name yields "file:///abs/x" while staging
-    * paths can be RELATIVE (a CLI `--table ./events` root) — bare scheme
-    * stripping would never match those, committing time-series segments
-    * without coverage sidecars and wedging later appends. PathNorm
-    * absolutizes + normalizes both producers. */
-  private def normalizeFileUri(p: String): String = graft.meta.PathNorm.canonical(p)
 }
 
 object TsTable {
@@ -1540,37 +1173,6 @@ object TsTable {
         throw new IllegalArgumentException(s"option $option has an invalid value: '$value' " +
           "(expected epoch millis or an ISO-8601 instant)", e) }
     }
-
-  /** Parquet row-group size for data segments: SPARK_GRAFT_ROWGROUP_BYTES
-    * (a positive byte count), 8 MiB when unset. Parsed once; a bad value
-    * fails the first segment write and names the knob. */
-  private[graft] lazy val rowGroupBytes: Long =
-    parseRowGroupBytes(sys.env.get("SPARK_GRAFT_ROWGROUP_BYTES"))
-
-  /** Codec, row-group size and encoding of every file a table writes:
-    * data segments ([[TsTable.segmentWriteOptions]], which add the key
-    * bloom and say why) and change-feed files. */
-  private def fileWriteOptions: Map[String, String] = Map(
-    "compression" -> "zstd",
-    "parquet.block.size" -> rowGroupBytes.toString,
-    "parquet.enable.dictionary" -> "false",
-    "parquet.writer.version" -> "v2")
-
-  /** Adaptive key-bloom candidates from parquet's maximum filter size down
-    * to its 32-byte block floor, halving each step: log2(1 MiB / 32) + 1 =
-    * 16. */
-  private val BloomCandidates: Int = {
-    import org.apache.parquet.column.ParquetProperties.DEFAULT_MAX_BLOOM_FILTER_BYTES
-    import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter.LOWER_BOUND_BYTES
-    Integer.numberOfTrailingZeros(DEFAULT_MAX_BLOOM_FILTER_BYTES / LOWER_BOUND_BYTES) + 1
-  }
-
-  private[graft] def parseRowGroupBytes(v: Option[String]): Long = v match {
-    case None => 8L * 1024 * 1024
-    case Some(s) => s.trim.toLongOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_ROWGROUP_BYTES must be a positive byte count, got '$s'"))
-  }
 
   /** The schema an append adopts from its staged files' footers: the
     * embedded Spark schema when every file carries the same one, else None

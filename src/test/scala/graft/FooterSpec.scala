@@ -12,7 +12,7 @@ import graft.data.TokenGen
 import graft.log.LogAction
 import graft.maintain.{Compaction, DeleteWhere, MergeInto}
 import graft.meta._
-import graft.table.{FooterStats, RowTracking, TsTable}
+import graft.table.{FooterStats, RowTracking, TsTable, Txn}
 
 /** The footer layer: every segment's key bloom is sized to the keys the
   * file holds, at the unchanged 1 % false-positive rate, and every file
@@ -132,7 +132,8 @@ class FooterSpec extends SparkFunSuite {
     // the other segment options and committed as a segment
     val legacySrc = tmpDir("footer-mixed-src")
     TokenGen.generate(spark, 2500).coalesce(1).write.mode("overwrite")
-      .options(t.segmentWriteOptions -- Seq("parquet.enable.dictionary", "parquet.writer.version"))
+      .options(Txn.segmentWriteOptions(t.bloomKeyColumn) --
+        Seq("parquet.enable.dictionary", "parquet.writer.version"))
       .parquet(legacySrc)
     val rel = "data/legacy-0.parquet"
     val dictFile = PathNorm.resolve(t.root, rel)

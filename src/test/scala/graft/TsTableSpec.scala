@@ -251,15 +251,6 @@ class TsTableSpec extends SparkFunSuite {
     assert(TsTable.footerSchema(Seq(None, None)).isEmpty)
   }
 
-  test("SPARK_GRAFT_ROWGROUP_BYTES: a positive byte count; bad values fail naming the knob") {
-    assert(TsTable.parseRowGroupBytes(None) == 8L * 1024 * 1024)
-    assert(TsTable.parseRowGroupBytes(Some("1048576")) == 1048576L)
-    for (bad <- Seq("", "8MB", "0", "-1")) {
-      val e = intercept[IllegalArgumentException](TsTable.parseRowGroupBytes(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_ROWGROUP_BYTES"), e.getMessage)
-    }
-  }
-
   test("foreign parquet with INT96 timestamps is rejected by name, file never copied") {
     import java.nio.file.{Files, Paths}
     val root = tmpDir("int96-reject")
@@ -405,5 +396,30 @@ class TsTableSpec extends SparkFunSuite {
     t1.refresh()
     assert(t1.state.liveSegments.size == 2)
     assert(t1.scan(spark).count() == 100)
+  }
+
+  test("row ids on rebase: a Txn committing over another handle's append takes the next range") {
+    val root = tmpDir("tok-rt-rebase")
+    val t = TsTable.create(root, tokenMeta)
+    t.append(TokenGen.generate(spark, 100, numFiles = 1))
+    t.enableRowTracking()
+    val done = t.transact() { tx =>
+      val staged = tx.stage(TokenGen.generate(spark, 50, idStart = 9000L, numFiles = 1))
+      TsTable.open(root).append(TokenGen.generate(spark, 30, idStart = 5000L, numFiles = 1))
+      staged
+    }
+    val live = t.state.liveSegments
+    val mine = live.filter(s => done.value.exists(_.segmentId == s.segmentId))
+    val other = live.filter(s => s.baseRowId.exists(_ >= 100L)).diff(mine)
+    def range(segs: Seq[SegmentMeta]) =
+      (segs.flatMap(_.baseRowId).min, segs.map(s => s.baseRowId.get + s.rowCount).max)
+    assert(mine.map(_.rowCount).sum == 50 && other.map(_.rowCount).sum == 30)
+    // the other append committed first from the high water 100; the Txn's
+    // allocation re-ran on the snapshot it committed over
+    assert(range(other) == (100L, 130L) && range(mine) == (130L, 180L))
+    assert(mine.forall(_.rowVersion.contains(done.version)))
+    assert(t.meta.rowIdHighWater == 180L)
+    assert(t.scanWithRowIds(spark).select("_row_id").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 180L))
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
 import graft.log.LogAction
 import graft.meta._
-import graft.table.{ConcurrentSegmentChangeException, TsTable}
+import graft.table.{CheckViolationException, ConcurrentSegmentChangeException, TsTable}
 
 /** The abort paths of [[graft.table.Txn]]: whatever a transaction staged —
   * data segments, coverage sidecars, change-feed files, DV sidecars — is
@@ -82,6 +82,23 @@ class TxnAbortSpec extends SparkFunSuite {
       assert(TsTable.open(root).version == v0 + 1, "only the conflicting commit landed")
       assert(unreferenced(root).isEmpty, s"debris: ${unreferenced(root)}")
     }
+  }
+
+  test("a CHECK another handle adds between stage and commit re-gates the staged files") {
+    val root = tmpDir("txn-check-race")
+    val t = TsTable.create(root, pricesMeta)
+    t.append(hourDf(10).coalesce(1))
+    val v0 = t.version
+    // the staged hour-12 prices run 1200..1259: clean under the snapshot the
+    // Txn read, ten of them violate the check that lands before its commit
+    val e = intercept[CheckViolationException](t.transact() { tx =>
+      tx.stage(hourDf(12).coalesce(1))
+      TsTable.open(root).addCheck(spark, "cap", "price < 1250")
+    })
+    assert(e.check == "cap" && e.violations == 10)
+    assert(TsTable.open(root).version == v0 + 1, "only the check commit landed")
+    assert(unreferenced(root).isEmpty, s"debris: ${unreferenced(root)}")
+    assert(t.scan(spark).count() == 60)
   }
 
   test("a replayed (app, batch) returns the watermark version and leaves no staged file") {

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: ten concerns each have one owner.
+# Single-path check over src/main: eleven concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -41,12 +41,19 @@
 #     else calls `KeyBloom.filterMayContain` (a scan or maintenance verb
 #     that probed on its own could keep other files than the entry).
 # 10. Segment encoding: table, maintenance and streaming code writes
-#     Parquet only through `TsTable.writeStaged`, which writes every file
+#     Parquet only through `Txn.writeStaged`, which writes every file
 #     with the table's codec, row-group size and encoding (no dictionary,
 #     v2 delta pages), so nothing else under
 #     src/main/scala/graft/{table,maintain,streaming}/ chains a
 #     DataFrameWriter (`.write`, no parentheses) into `.parquet(` or
 #     `format("parquet")` within four lines.
+# 11. Commits: a table version lands only through `Txn.commit`, the one
+#     OCC loop (conflict set, CHECK re-gate, coverage snapshot, row ids),
+#     so nothing outside src/main/scala/graft/log/ and
+#     src/main/scala/graft/table/Txn.scala calls
+#     `commitWithExpectedVersion(`, apart from the two v1 bootstrap
+#     commits on an empty log: `commitWithExpectedVersion(0L, ...)` inside
+#     `TsTable.create` and `TsTable.cloneTo`.
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -113,7 +120,15 @@ parquet_writes() {
     done
 }
 writes=$(parquet_writes $src/graft/table $src/graft/maintain $src/graft/streaming |
-  outside $src/graft/table/TsTable.scala 'private def writeStaged\[' '^  }$' || true)
+  outside $src/graft/table/Txn.scala 'private def writeStaged\[' '^  }$' || true)
+
+bootstrap=':[0-9]+:.*commitWithExpectedVersion\(0L,'
+commits=$(code 'commitWithExpectedVersion\(' | grep -vE "^$src/graft/(log/|table/Txn\.scala:)" || true)
+commits=$( { echo "$commits" | grep -vE "$bootstrap"
+             echo "$commits" | grep -E "$bootstrap" |
+               outside $src/graft/table/TsTable.scala '^  def create\(' '^  }$' |
+               outside $src/graft/table/TsTable.scala '^  def cloneTo\(' '^  }$'
+           } | grep . || true)
 
 status=0
 report() {
@@ -132,6 +147,7 @@ report "Parquet footer opened outside the one opener" "$footers"
 report "clustered layout outside the one writer" "$layout"
 report "directory tree deleted outside PathNorm.deleteTree" "$trees"
 report "a bloom probe outside the pruning tier" "$probes"
-report "a Parquet write outside TsTable.writeStaged" "$writes"
+report "a Parquet write outside Txn.writeStaged" "$writes"
+report "a commit outside Txn.commit" "$commits"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
