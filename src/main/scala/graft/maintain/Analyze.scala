@@ -87,7 +87,7 @@ object Analyze {
     val physicalRows = live.map(_.rowCount).sum
     val liveRows = live.map(_.liveRowCount).sum
     val bytes = live.flatMap(_.fileSize).sum
-    val small = live.count(_.fileSize.exists(_ < (targetFileSize * 0.9).toLong))
+    val small = live.count(Compaction.isSmall(_, targetFileSize))
     val dvFiles = live.count(_.dvPath.isDefined)
     val dvDebt = live.map(_.dvCardinality).sum
     val dvRatio = if (physicalRows == 0) 0.0 else dvDebt.toDouble / physicalRows

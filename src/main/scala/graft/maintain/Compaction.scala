@@ -60,12 +60,16 @@ object Compaction {
     * lose the version race K−1 times before its turn. */
   val DefaultBinParallelism: Int = 4
 
-  /** Plan rewrite groups ("bins"): small files (below 90 % of
-    * `targetFileSize`) are packed greedily into groups of up to `groupFactor × targetFileSize`
-    * bytes. Each group is ONE distributed rewrite with a GLOBAL
-    * range-partition over the curve key — clustering quality (and hence
-    * post-maintenance scan pruning) needs many inputs sorted together,
-    * not per-output-file sorts; the group cap only bounds the unit of
+  /** Whether `s` is a small file: below 90 % of `targetFileSize`. */
+  def isSmall(s: SegmentMeta, targetFileSize: Long): Boolean =
+    s.fileSize.exists(_ < (targetFileSize * 0.9).toLong)
+
+  /** Plan rewrite groups ("bins"): small files ([[isSmall]]) and files
+    * whose DV debt is due are packed greedily into groups of up to
+    * `groupFactor × targetFileSize` bytes. Each group is ONE distributed
+    * rewrite with a GLOBAL range-partition over the curve key —
+    * clustering quality (and hence post-maintenance scan pruning) needs
+    * many inputs sorted together, not per-output-file sorts; the group cap only bounds the unit of
     * checkpoint/resume and of commit atomicity. A group is worth
     * rewriting when it has ≥ 2 inputs, or one that carries a deletion
     * vector. Deterministic given the manifest. */
@@ -74,10 +78,7 @@ object Compaction {
            dvDebtThreshold: Double = DefaultDvDebtThreshold): Seq[Bin] = {
     def dvDebtDue(s: SegmentMeta): Boolean =
       s.dvCardinality > 0 && s.dvCardinality.toDouble >= dvDebtThreshold * s.rowCount
-    val small = segments
-      .filter(s => dvDebtDue(s) ||
-        s.fileSize.exists(_ < (targetFileSize * 0.9).toLong))
-      .sortBy(_.segmentId)
+    val small = segments.filter(s => dvDebtDue(s) || isSmall(s, targetFileSize)).sortBy(_.segmentId)
     val cap = targetFileSize * groupFactor
     val bins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[SegmentMeta]]
     var size = 0L

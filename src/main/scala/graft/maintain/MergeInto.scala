@@ -1,8 +1,6 @@
 package graft.maintain
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.meta.{PathNorm, SegmentMeta}
 import graft.table.TsTable
 
 /** MERGE INTO (upsert) for revised sequences, and delete-by-key — new vs
@@ -21,12 +19,14 @@ object MergeInto {
                           survivors: Long, version: Long)
 
   /** The largest input key set a keyed MERGE or delete-by-key holds on the
-    * driver. At or below it, one collect returns every key: candidate
-    * ranges are tested on the driver, the same keys probe the footer
-    * BLOOMS, and the match is a literal key set, so no plan of the run
-    * joins. Above it the keys stay distributed: the ranges are tested
-    * where the keys are, a copy-on-write run refines them with the exact
-    * key-column semi-join (below), and the match is a keyed join.
+    * driver, and the most keys the pruning entry's bloom tier probes
+    * (`graft.scan.FilePruning`). At or below it, one collect returns every
+    * key and the match is the predicate `key IN (keys)`: its candidates
+    * come from the one pruning entry like any predicate's (footer stats,
+    * then the key BLOOMS), and no plan of the run joins. Above it the keys
+    * stay distributed: the ranges are tested where the keys are, a
+    * copy-on-write run refines them with an exact key-column semi-join,
+    * and the match is a keyed join.
     *
     * Why switch so early — the bloom math: segment blooms are
     * adaptive-sized at ~1 % FPP, so a file containing NONE of the K update
@@ -36,27 +36,6 @@ object MergeInto {
     * sized for 1 % FPP can testify about 10^5 keys. The exact pass keeps
     * pruning working at any K. */
   val BloomKeyCap: Long = 256L
-
-  /** Exact distributed candidate refinement for update sets too large for
-    * footer blooms: semi-join the live rows of `segs`' key column
-    * (single-column projected scan, input_file_name-tagged) against the
-    * update keys and return the segment ids of files that actually contain
-    * ≥ 1 key. Update keys never collect to the driver; the only collect is
-    * the distinct hit FILE list, bounded by the candidate count. Sound by
-    * construction (zero false negatives — a file omitted here provably
-    * holds no update key) and, unlike blooms, zero false positives at any
-    * key-set size. */
-  private[graft] def refineCandidatesExact(spark: SparkSession, table: TsTable,
-      updKeys: DataFrame, key: String, segs: Seq[SegmentMeta]): Set[String] = {
-    val byPath = segs.map(s =>
-      PathNorm.canonical(PathNorm.resolve(table.root, s.path)) -> s.segmentId).toMap
-    table.read(spark, segs, table.state.tableMeta)
-      .select(col(key), input_file_name().as("__file"))
-      .join(updKeys, Seq(key), "left_semi")
-      .select("__file").distinct().collect()
-      .iterator.flatMap(r => byPath.get(PathNorm.canonical(r.getString(0))))
-      .toSet
-  }
 
   private[maintain] def report(r: RowLevel.Result): Report =
     Report(r.candidates, r.filesOut, r.matched, r.inserted, r.survivors, r.version)
@@ -103,9 +82,9 @@ object MergeInto {
     * half of the upsert MERGE (GDPR/right-to-be-forgotten over doc ids),
     * merge-on-read: matched-row-proportional cost, no file bytes move,
     * exactly like [[DeleteWhere.deleteMor]]. Up to [[BloomKeyCap]] keys
-    * the match is a literal key set on the driver (one collect, which also
-    * feeds the footer-bloom probes); above it, a keyed LEFT join Catalyst
-    * plans (broadcast or shuffle). NULL keys never match. */
+    * the match is the predicate `key IN (keys)` (one collect), pruned and
+    * matched as [[DeleteWhere.deleteMor]] would; above it, a keyed LEFT
+    * join Catalyst plans (broadcast or shuffle). NULL keys never match. */
   def mergeDelete(spark: SparkSession, table: TsTable, keys: DataFrame,
                   key: String = "doc_id"): DeleteWhere.Report =
     DeleteWhere.report(RowLevel.run(spark, table, RowLevel.Keys(keys, key), RowLevel.Delete,

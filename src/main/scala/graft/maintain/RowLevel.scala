@@ -5,19 +5,21 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
 import graft.coverage.Bitmap
 import graft.meta.{ColStats, PathNorm, SegmentMeta, StatVal}
-import graft.table.{BucketDomainOverflowException, DeletionVectors, KeyBloom, RowTracking, TsTable, Txn}
+import graft.table.{BucketDomainOverflowException, DeletionVectors, RowTracking, TsTable, Txn}
 import graft.table.RowTracking.{RowCommitCol, RowIdCol, commitOfThisWrite}
 
 /** The row-level rewrite core behind DELETE, UPDATE, MERGE and the row-id
   * verbs — the shape of Spark DSv2's row-level operations
   * (`SupportsRowLevelOperations`, SPARK-35801). A verb is one [[run]] of
   *
-  *  - a [[Match]], which rows: a predicate, a key set or a row-id set, each
-  *    with its own file pruning;
+  *  - a [[Match]], which rows: a predicate, a key set or a row-id set. A
+  *    predicate, and a key set of at most [[MergeInto.BloomKeyCap]] keys
+  *    as the predicate `key IN (keys)`, prune through the one pruning
+  *    entry ([[TsTable.statsCandidates]]); a larger key set and a row-id
+  *    set prune on their own;
   *  - an [[Outcome]], what the matched rows become: nothing ([[Delete]]),
   *    their SET image ([[Update]]), or the input row with their key or id
   *    ([[Upsert]]; input rows that match nothing insert);
@@ -34,7 +36,7 @@ import graft.table.RowTracking.{RowCommitCol, RowIdCol, commitOfThisWrite}
   * deletion vector is honoured, and a rewrite materializes it away.
   * SQL semantics: a row whose predicate is NULL does not match; NULL keys
   * never match. */
-private[maintain] object RowLevel {
+private[graft] object RowLevel {
 
   sealed trait Match
   final case class Predicate(cond: Column) extends Match
@@ -68,7 +70,10 @@ private[maintain] object RowLevel {
     private val tracking = table.rowTrackingEnabled
     private var m: Match = _      // the match, its input set prepared by [[prepare]]
     private var in: DataFrame = _ // that input set (keys and row ids)
-    private var keys: KeySet = _  // a [[Keys]] match's key set, built once in [[apply]]
+    /** The match as a predicate: a [[Predicate]]'s condition, or a small
+      * key set's `key IN (keys)` ([[keySet]]). */
+    private var cond: Option[Column] = None
+    private var large: Option[Large] = None // a key set past the cap ([[keySet]])
 
     private def result(cands: Int, version: Long, matched: Long = 0L, inserted: Long = 0L,
                        filesOut: Int = 0, changed: Int = 0, dropped: Int = 0, dv: Int = 0) =
@@ -90,8 +95,8 @@ private[maintain] object RowLevel {
       val cached = prepare(input)
       try {
         val inputRows = m match {
-          case Predicate(_) => -1L // no input set
-          case Keys(in, key) => keys = keySet(in, key); keys.rows
+          case Predicate(c) => cond = Some(c); -1L // no input set
+          case Keys(in, key) => keySet(in, key)
           case RowIds(_) => in.count()
         }
         // an EMPTY streamed batch still advances its watermark, so its
@@ -99,11 +104,11 @@ private[maintain] object RowLevel {
         // segments are always candidates
         if (inputRows == 0L)
           return result(0, table.transact()(tx => txn.foreach(tx.watermark)).version)
-        val cands = m match {
-          case Predicate(cond) => prunePredicate(cond)
-          case _ if live.isEmpty => Nil
-          case Keys(_, _) => keys.candidates(live)
-          case RowIds(_) => pruneIds()
+        val cands = (m, large) match {
+          case (RowIds(_), _) => if (live.isEmpty) Nil else pruneIds()
+          case (_, Some(l)) => if (live.isEmpty) Nil else l.candidates(live)
+          // a key set with no non-null key has no predicate and no candidate
+          case _ => cond.fold(Seq.empty[SegmentMeta])(prunePredicate)
         }
         if (cands.isEmpty && outcome != Upsert) result(0, table.version)
         else if (mor) mergeOnRead(cands, inputRows)
@@ -150,11 +155,14 @@ private[maintain] object RowLevel {
       }
     }
 
+    /** [[cond]], false where it is NULL. */
+    private def hit: Column = coalesce(cond.getOrElse(lit(false)), lit(false))
+
     /** Rows of `df` (a live read) the match selects. */
-    private def matched(df: DataFrame): DataFrame = m match {
-      case Predicate(cond) => df.where(coalesce(cond, lit(false)))
-      case Keys(_, _) => keys.semi(df)
-      case RowIds(in) => df.join(in.select(RowIdCol), Seq(RowIdCol), "left_semi")
+    private def matched(df: DataFrame): DataFrame = (m, large) match {
+      case (RowIds(in), _) => df.join(in.select(RowIdCol), Seq(RowIdCol), "left_semi")
+      case (_, Some(l)) => l.semi(df)
+      case _ => df.where(hit)
     }
 
     /** The live rows of `segs` under this run's snapshot, with the
@@ -166,8 +174,6 @@ private[maintain] object RowLevel {
     /** Copy-on-write by predicate: per-file match counts pick the files to
       * touch; zero-match candidates keep their bytes and segment ids. */
     private def rewrite(cands: Seq[SegmentMeta]): Result = {
-      val Predicate(cond) = m
-      val hit = coalesce(cond, lit(false))
       val (perFile, touched) = matchCounts(cands)
       val rows = perFile.values.sum
       if (rows == 0L) return result(cands.size, table.version)
@@ -215,7 +221,7 @@ private[maintain] object RowLevel {
           tx.remove(cands)
           val out = if (cands.isEmpty) in else {
             val old = read(scoped, cands)
-            keys.anti(old).unionByName(withIds(in, Some(old)))
+            large.fold(old.where(!hit))(_.anti(old)).unionByName(withIds(in, Some(old)))
           }
           tx.stage(clustered(out, files, candRows + inputRows))
         }
@@ -260,15 +266,15 @@ private[maintain] object RowLevel {
     }
 
     /** The (file, position, matched, survivor bucket) pass of [[morCompute]]. */
-    private def positions(cands: Seq[SegmentMeta]): DataFrame = m match {
-      case Predicate(cond) => morBase(spark, table, cands)(raw =>
-        raw.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
-          coalesce(cond, lit(false)).as("__m"), bucketExpr(table).as("__b")))
-      case Keys(_, key) => morBase(spark, table, cands)(raw =>
-        keys.hit(raw.select(col("_metadata.file_path").as("__f"),
+    private def positions(cands: Seq[SegmentMeta]): DataFrame = (m, large) match {
+      case (RowIds(in), _) => idPositions(in.select(RowIdCol), cands)
+      case (Keys(_, key), Some(l)) => morBase(spark, table, cands)(raw =>
+        l.hit(raw.select(col("_metadata.file_path").as("__f"),
             col("_metadata.row_index").as("__i"), col(key), bucketExpr(table).as("__b")))
           .select(col("__f"), col("__i"), col("__m"), col("__b")))
-      case RowIds(in) => idPositions(in.select(RowIdCol), cands)
+      case _ => morBase(spark, table, cands)(raw =>
+        raw.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
+          hit.as("__m"), bucketExpr(table).as("__b")))
     }
 
     /** SET applied against the OLD values (assignments are simultaneous),
@@ -411,91 +417,26 @@ private[maintain] object RowLevel {
       else (perFile, candidates.filter(s => perFile.contains(canonical(s))))
     }
 
-    /** The key set of `in` (deduplicated by `key`). One collect of at most
-      * [[MergeInto.BloomKeyCap]] + 1 keys decides small from large; a
-      * small set is then every key, and so its row count too. */
-    private def keySet(in: DataFrame, key: String): KeySet = {
+    /** Read a [[Keys]] match's key set (`in`, deduplicated by `key`) once
+      * and return its row count. One collect of at most
+      * [[MergeInto.BloomKeyCap]] + 1 keys decides: up to the cap it is
+      * every key, and the match becomes the predicate `key IN (keys)`
+      * ([[cond]]), pruned and matched like any other, so no plan of the
+      * run joins; above it the keys stay distributed ([[large]]). NULL
+      * keys never match: a table row with a NULL key is never hit. A set
+      * with no non-null key gets no predicate (an IN of nothing folds
+      * away, and a predicate that folds away keeps every segment). */
+    private def keySet(in: DataFrame, key: String): Long = {
       val head = in.select(col(key)).limit(MergeInto.BloomKeyCap.toInt + 1).collect()
-      if (head.length <= MergeInto.BloomKeyCap)
-        new Small(key, head.toSeq.map(_.get(0)), in.schema(key).dataType)
-      else new Large(key, in.select(col(key)), in.count())
-    }
-
-    /** A [[Keys]] match's input key set, built once per run: the row
-      * count, the candidate pruning and the match all come from it, so the
-      * input is read once. NULL keys never match: a table row with a NULL
-      * key is never hit and survives [[anti]]. */
-    private sealed trait KeySet {
-      def key: String
-      /** Rows of the input set; it is deduplicated by key, so its keys. */
-      def rows: Long
-      /** The rows of `df` whose key is in the set. */
-      def semi(df: DataFrame): DataFrame
-      /** The rows of `df` whose key is not in the set. */
-      def anti(df: DataFrame): DataFrame
-      /** `df` with a boolean `__m`: its row's key is in the set. */
-      def hit(df: DataFrame): DataFrame
-      /** The ids of the segments in `ranged` — (segment, min, max) of the
-        * key's stats — that may hold a key of the set. */
-      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String]
-
-      /** Stats sidecars, footer blooms and raw candidate files are keyed by
-        * the frozen PHYSICAL column name; `key` is logical (identical
-        * unless the merge key was renamed). */
-      protected def physKey: String = table.colMap.getOrElse(key, key)
-      protected def bloomed: Boolean = table.bloomKeyColumn.contains(physKey)
-
-      /** Key candidates: the segments whose [min, max] can hold a key,
-        * refined by [[holding]]; stat-less segments are always candidates
-        * (sound). Ranges are taken per stat type: a numeric key carries
-        * L/D stats, and matching only strings would classify every segment
-        * stat-less, so every micro-batch of a streaming upsert on a numeric
-        * key would pay a full-table rewrite or scan.
-        *
-        * The refinement exists because range stats are void after
-        * space-curve clustering: interleaved keys make every file span the
-        * keyspace, so range hits are re-tested for ACTUAL key presence. */
-      def candidates(live: Seq[SegmentMeta]): Seq[SegmentMeta] = {
-        val ranged = live.flatMap(seg => seg.stats.get(physKey).collect {
-          case ColStats(Some(a: StatVal.S), Some(b: StatVal.S), _) => (seg, a, b)
-          case ColStats(Some(a: StatVal.L), Some(b: StatVal.L), _) => (seg, a, b)
-          case ColStats(Some(a: StatVal.D), Some(b: StatVal.D), _) => (seg, a, b)
-        })
-        val withStats = ranged.map(_._1.segmentId).toSet
-        val held = holding(ranged)
-        live.filter(s => held(s.segmentId) || !withStats(s.segmentId))
-      }
-    }
-
-    /** At most [[MergeInto.BloomKeyCap]] keys, held on the driver. Ranges
-      * are tested there ([[within]]), the same keys probe each range hit's
-      * footer bloom (metadata only, no job), and the match is a literal-set
-      * predicate on the key, so no plan of the run joins. */
-    private final class Small(val key: String, all: Seq[Any], keyType: DataType) extends KeySet {
-      private val present = all.filter(_ != null)
-      def rows: Long = all.size.toLong
-      // NULL when the key is NULL: `where` drops such a row, [[anti]] and
-      // [[hit]] read it as no match
-      private val isIn: Column =
-        if (present.isEmpty) lit(false)
-        else col(key).isin(present.map(k => Bridge.ofExpr(Literal.create(k, keyType))): _*)
-      private val hitOrFalse = coalesce(isIn, lit(false))
-      def semi(df: DataFrame): DataFrame = df.where(isIn)
-      def anti(df: DataFrame): DataFrame = df.where(!hitOrFalse)
-      def hit(df: DataFrame): DataFrame = df.withColumn("__m", hitOrFalse)
-
-      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String] = {
-        val vals = present.map(StatVal.fromAny)
-        val hits = ranged.collect { case (s, lo, hi) if vals.exists(within(lo, hi, _)) => s }
-        // a bloom hashes the column's physical type: keys of another type
-        // than the table's key (an uncast delete-by-key set) skip the probe
-        val typed = table.meta.schema.exists(_.fields.exists(f =>
-          f.name == key && f.dataType == keyType))
-        if (bloomed && typed && hits.nonEmpty)
-          KeyBloom.filterMayContain(spark.sparkContext.hadoopConfiguration,
-            hits.map(s => (PathNorm.resolve(table.root, s.path), s.segmentId)),
-            physKey, present.toArray).toSet
-        else hits.map(_.segmentId).toSet
+      if (head.length > MergeInto.BloomKeyCap) {
+        large = Some(new Large(key, in.select(col(key))))
+        in.count()
+      } else {
+        val keyType = in.schema(key).dataType
+        val present = head.toSeq.map(_.get(0)).filter(_ != null)
+        cond = Option.when(present.nonEmpty)(
+          col(key).isin(present.map(k => Bridge.ofExpr(Literal.create(k, keyType))): _*))
+        head.length
       }
     }
 
@@ -504,8 +445,8 @@ private[maintain] object RowLevel {
       * ranges are tested ([[within]]) where the keys are. Blooms cannot
       * testify about that many keys (see [[MergeInto.BloomKeyCap]]), so a
       * copy-on-write run refines the range hits with an exact distributed
-      * semi-join of their key column ([[MergeInto.refineCandidatesExact]]):
-      * keys never collect to the driver, and the single-column scan costs a
+      * semi-join of their key column ([[refineCandidatesExact]]): keys
+      * never collect to the driver, and the single-column scan costs a
       * few % of the bytes the rewrite would spend on each file it excludes.
       * Merge-on-read skips it: its matched-row pass ([[morBase]]) is itself
       * a key-column scan of the candidates that attaches no DV to an
@@ -513,15 +454,36 @@ private[maintain] object RowLevel {
       * twice. (An expected-yield guard that skipped the exact pass when a
       * uniform-key model predicted no pruning was tried and reverted:
       * insert-heavy merges carry many ABSENT keys that inflate the set
-      * while being exactly what the pass prunes.) */
-    private final class Large(val key: String, set: DataFrame, val rows: Long) extends KeySet {
+      * while being exactly what the pass prunes.) A table row with a NULL
+      * key is never hit and survives [[anti]]. */
+    private final class Large(key: String, set: DataFrame) {
+      /** The rows of `df` whose key is in the set. */
       def semi(df: DataFrame): DataFrame = df.join(set, Seq(key), "left_semi")
+      /** The rows of `df` whose key is not in the set. */
       def anti(df: DataFrame): DataFrame = df.join(set, Seq(key), "left_anti")
+      /** `df` with a boolean `__m`: its row's key is in the set. */
       def hit(df: DataFrame): DataFrame =
         df.join(set.withColumn("__m", lit(true)), Seq(key), "left")
           .withColumn("__m", coalesce(col("__m"), lit(false)))
 
-      protected def holding(ranged: Seq[(SegmentMeta, StatVal, StatVal)]): Set[String] = {
+      /** Key candidates: the segments whose [min, max] can hold a key,
+        * refined as above; stat-less segments are always candidates
+        * (sound). Ranges are taken per stat type: a numeric key carries
+        * L/D stats, and matching only strings would classify every segment
+        * stat-less, so every micro-batch of a streaming upsert on a numeric
+        * key would pay a full-table rewrite or scan. The refinement exists
+        * because range stats are void after space-curve clustering:
+        * interleaved keys make every file span the keyspace. */
+      def candidates(live: Seq[SegmentMeta]): Seq[SegmentMeta] = {
+        // stats and footers are keyed by the frozen PHYSICAL column name;
+        // `key` is logical (identical unless the merge key was renamed)
+        val physKey = table.colMap.getOrElse(key, key)
+        val ranged = live.flatMap(seg => seg.stats.get(physKey).collect {
+          case ColStats(Some(a: StatVal.S), Some(b: StatVal.S), _) => (seg, a, b)
+          case ColStats(Some(a: StatVal.L), Some(b: StatVal.L), _) => (seg, a, b)
+          case ColStats(Some(a: StatVal.D), Some(b: StatVal.D), _) => (seg, a, b)
+        })
+        val withStats = ranged.map(_._1.segmentId).toSet
         // the ranges (manifest-sized) travel with the task; each partition
         // of keys tests only the ranges no key of its has hit yet
         val rs = ranged.map { case (s, lo, hi) => (s.segmentId, lo, hi) }
@@ -536,10 +498,12 @@ private[maintain] object RowLevel {
           val missed = left.map(_._1).toSet
           rs.iterator.map(_._1).filterNot(missed)
         }(Encoders.STRING).distinct().collect().toSet
-        if (bloomed && !mor && hitIds.nonEmpty)
-          MergeInto.refineCandidatesExact(spark, table, set, key,
-            ranged.map(_._1).filter(s => hitIds(s.segmentId)))
-        else hitIds
+        val held =
+          if (table.bloomKeyColumn.contains(physKey) && !mor && hitIds.nonEmpty)
+            refineCandidatesExact(spark, table, set, key,
+              ranged.map(_._1).filter(s => hitIds(s.segmentId)))
+          else hitIds
+        live.filter(s => held(s.segmentId) || !withStats(s.segmentId))
       }
     }
   }
@@ -550,6 +514,27 @@ private[maintain] object RowLevel {
     * another type) may: the segment stays a candidate. */
   private def within(lo: StatVal, hi: StatVal, k: Option[StatVal]): Boolean =
     k.forall(v => StatVal.cmp(lo, v).forall(_ <= 0) && StatVal.cmp(v, hi).forall(_ <= 0))
+
+  /** Exact distributed candidate refinement for key sets too large for
+    * footer blooms: semi-join the live rows of `segs`' key column
+    * (single-column projected scan, input_file_name-tagged) against the
+    * keys and return the segment ids of files that actually contain ≥ 1
+    * key. Keys never collect to the driver; the only collect is the
+    * distinct hit FILE list, bounded by the candidate count. Sound by
+    * construction (zero false negatives — a file omitted here provably
+    * holds no key) and, unlike blooms, zero false positives at any
+    * key-set size. */
+  private[graft] def refineCandidatesExact(spark: SparkSession, table: TsTable,
+      keys: DataFrame, key: String, segs: Seq[SegmentMeta]): Set[String] = {
+    val byPath = segs.map(s =>
+      PathNorm.canonical(PathNorm.resolve(table.root, s.path)) -> s.segmentId).toMap
+    table.read(spark, segs, table.state.tableMeta)
+      .select(col(key), input_file_name().as("__file"))
+      .join(keys, Seq(key), "left_semi")
+      .select("__file").distinct().collect()
+      .iterator.flatMap(r => byPath.get(PathNorm.canonical(r.getString(0))))
+      .toSet
+  }
 
   /** Bucket id of a row for the coverage recompute — the expression
     * staging computes coverage with ([[Txn.bucketOf]]); null ts -> null bucket,

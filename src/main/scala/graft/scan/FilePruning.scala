@@ -27,22 +27,28 @@ import graft.table.KeyBloom
   * compares by more than its bytes, and a floating key's -0.0/0.0 and NaN
   * hash apart but compare equal. A file whose footer cannot answer stays
   * (see [[KeyBloom.mayContainAny]]). At most [[MergeInto.BloomKeyCap]] keys
-  * probe at most [[BloomFileCap]] files; past either cap the files are
-  * left to Parquet's row-group bloom filter at execution.
+  * probe, and the caller caps the files probed: past either cap the files
+  * are kept. A scan caps them at [[BloomFileCap]] and leaves the rest to
+  * Parquet's row-group bloom filter at execution; maintenance probes
+  * every stats survivor, since it rewrites or DV-scans each file it keeps.
   */
 object FilePruning {
 
-  /** The most stats-kept files whose footers the bloom tier reads. */
+  /** The most stats-kept files whose footers a scan's bloom tier reads.
+    * It bounds scan planning: past it the executors open those footers
+    * anyway, and Parquet tests the same blooms per row group. */
   val BloomFileCap = 1024
 
   /** The entries of `files` that may match every filter: stats, then
-    * bloom on `bloomColumn` (physical name). `seg` is an entry's segment
-    * and `path` its resolved file path. */
+    * bloom on `bloomColumn` (physical name) when at most `bloomFileCap`
+    * entries survive the stats. `seg` is an entry's segment and `path`
+    * its resolved file path. */
   def prune[F](files: Seq[F], filters: Seq[Expression], bloomColumn: Option[String],
-               conf: => Configuration)(seg: F => SegmentMeta, path: F => String): Seq[F] = {
+               bloomFileCap: Int, conf: => Configuration)
+              (seg: F => SegmentMeta, path: F => String): Seq[F] = {
     val stats = StatsPruning.keep(filters)
     val kept = files.filter(f => stats(seg(f)))
-    if (kept.isEmpty || kept.lengthCompare(BloomFileCap) > 0) kept
+    if (kept.isEmpty || kept.lengthCompare(bloomFileCap) > 0) kept
     else bloomColumn.flatMap(c => probeKeys(filters, c).map(c -> _)) match {
       case Some((c, keys)) => KeyBloom.filterMayContain(conf, kept.map(f => (path(f), f)), c, keys.toArray)
       case None => kept

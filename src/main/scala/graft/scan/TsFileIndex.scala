@@ -46,7 +46,7 @@ final class TsFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = FilePruning.prune(files, dataFilters, bloomColumn,
+    val kept = FilePruning.prune(files, dataFilters, bloomColumn, FilePruning.BloomFileCap,
       spark.sparkContext.hadoopConfiguration)(_._1, _._2.getPath.toString)
     Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }

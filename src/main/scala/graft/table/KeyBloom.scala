@@ -17,9 +17,10 @@ import scala.jdk.CollectionConverters._
   * locality), so range stats alone stop pruning MERGE candidates or point
   * lookups — the analog of the reference's scan pruning
   * (crates/timeseries-table-datafusion/src/ts_table_provider/pruning.rs:84-103).
-  * Two callers probe: a keyed MERGE or delete-by-key of few keys, and the
-  * bloom tier of the one pruning entry (`graft.scan.FilePruning`), which
-  * every scan and predicate-scoped maintenance plans through. The bloom
+  * One caller probes: the bloom tier of the one pruning entry
+  * (`graft.scan.FilePruning`), which every scan and every predicate-scoped
+  * maintenance verb plans through, a keyed MERGE or delete-by-key of few
+  * keys included (its keys become `key IN (keys)`). The bloom
   * lives in the file footer region, so the test is O(footer) IO per file —
   * never a data scan.
   */
@@ -50,18 +51,15 @@ object KeyBloom {
   }
 
   /** `k`'s hash as the writer hashed a value of the `stored` physical type.
-    * None when `k` is not of that type — a BIGINT key over an INT32 file
-    * written before the column was widened, a key of another type than
-    * the column's — so the file cannot be ruled out. A [[UTF8String]]
-    * hashes its UTF-8 bytes as Spark stored them. */
+    * The entry probes Catalyst values of a STRING, INT or BIGINT column: a
+    * [[UTF8String]] hashes its UTF-8 bytes as Spark stored them. None when
+    * `k` is not of that type — a BIGINT key over an INT32 file written
+    * before the column was widened — so the file cannot be ruled out. */
   private def hashOf(bloom: BloomFilter, stored: PrimitiveTypeName, k: Any): Option[Long] =
     (k, stored) match {
       case (u: UTF8String, BINARY)        => Some(bloom.hash(Binary.fromConstantByteArray(u.getBytes)))
-      case (s: String, BINARY)            => Some(bloom.hash(Binary.fromString(s)))
       case (l: java.lang.Long, INT64)     => Some(bloom.hash(l.longValue()))
       case (i: java.lang.Integer, INT32)  => Some(bloom.hash(i.intValue()))
-      case (d: java.lang.Double, DOUBLE)  => Some(bloom.hash(d.doubleValue()))
-      case (f: java.lang.Float, FLOAT)    => Some(bloom.hash(f.floatValue()))
       case _                              => None
     }
 

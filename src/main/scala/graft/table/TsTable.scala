@@ -841,7 +841,8 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d }
 
   /** The segments of `segs` a user predicate may match, by the scan's one
-    * pruning entry ([[FilePruning]]: footer stats, then key blooms), with
+    * pruning entry ([[FilePruning]]: footer stats, then key blooms of
+    * every stats survivor), with
     * the optimized predicate's filter conditions (the whole predicate, for
     * a determinism check). The entry sees only what a scan hands
     * [[TsFileIndex]]: the deterministic conjuncts without subqueries
@@ -869,8 +870,10 @@ final class TsTable private (val root: String, val store: LogStore) {
       val plan = empty.where(cond).queryExecution.optimizedPlan
       val scanned = plan.collect { case Filter(c, child) if onOwn(child) => conjuncts(c) }.flatten
         .filter(e => e.deterministic && !SubqueryExpression.hasSubquery(e))
-      (FilePruning.prune(segs, scanned, bloomKeyColumn, spark.sparkContext.hadoopConfiguration)(
-        identity, abs), plan.collect { case f: Filter => f.condition })
+      // no file cap: a maintenance verb rewrites or DV-scans every file it keeps
+      (FilePruning.prune(segs, scanned, bloomKeyColumn, Int.MaxValue,
+        spark.sparkContext.hadoopConfiguration)(identity, abs),
+        plan.collect { case f: Filter => f.condition })
     }
   }
 

@@ -558,7 +558,7 @@ class MaintenanceSpec extends SparkFunSuite {
     assert(keysDf.count() == 1000000L)
 
     val files = live.map(s => (s"$root/${s.path}", s.segmentId))
-    val got = MergeInto.refineCandidatesExact(spark, t, keysDf, "doc_id", live)
+    val got = RowLevel.refineCandidatesExact(spark, t, keysDf, "doc_id", live)
 
     // ground truth per file: which files actually hold one of the 3 keys
     val expected = files.filter { case (path, _) =>

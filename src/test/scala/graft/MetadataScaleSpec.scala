@@ -165,8 +165,9 @@ class MetadataScaleSpec extends AnyFunSuite {
     val conf = new Configuration()
     conf.set("fs.file.impl", classOf[FooterOpenCounter].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
-    def prune(filters: Seq[Expression]) = FilePruning.prune(segs, filters, Some("source"), conf)(
-      identity, s => s"/graft-metadata-scale/${s.path}")
+    def prune(filters: Seq[Expression], cap: Int = FilePruning.BloomFileCap) =
+      FilePruning.prune(segs, filters, Some("source"), cap, conf)(
+        identity, s => s"/graft-metadata-scale/${s.path}")
 
     FooterOpenCounter.opened.set(0)
     val (kept, sec) = timed(prune(Seq(lookup)))
@@ -174,6 +175,12 @@ class MetadataScaleSpec extends AnyFunSuite {
     assert(kept.size == N / 20 && kept.size > FilePruning.BloomFileCap)
     assert(FooterOpenCounter.opened.get == 0, "the bloom tier probed past its file cap")
     assert(sec < 5.0, f"point-lookup prune took $sec%.1f s at $N files — superlinear?")
+
+    // maintenance probes every stats survivor: one footer open each (the
+    // synthetic files keep)
+    val probed = prune(Seq(lookup), cap = Int.MaxValue)
+    assert(probed.size == kept.size && FooterOpenCounter.opened.get == kept.size)
+    FooterOpenCounter.opened.set(0)
 
     // below the cap the tier probes each stats-kept file: files 0..99 hold
     // src3 five times

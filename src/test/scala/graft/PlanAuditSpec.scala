@@ -303,7 +303,7 @@ class PlanAuditSpec extends SparkFunSuite {
       "ChangeFeed.read" -> (() => graft.maintain.ChangeFeed.read(spark, t, 0L, t.version).collect()),
       "SnapshotDiff fast path" ->
         (() => graft.maintain.SnapshotDiff.diff(spark, t, v1, t.version, "doc_id").collect()),
-      "refineCandidatesExact" -> (() => graft.maintain.MergeInto.refineCandidatesExact(
+      "refineCandidatesExact" -> (() => graft.maintain.RowLevel.refineCandidatesExact(
         spark, t, keys, "doc_id", t.state.liveSegments)))
     reads.foreach { case (name, run) =>
       val (plans, bareJobs) = audited(run())

@@ -273,6 +273,37 @@ class RowLevelEquivalenceSpec extends SparkFunSuite {
     }
   }
 
+  test("a DOUBLE bloom key: -0.0 matches the 0.0 row by key and by predicate, as 0.0 = -0.0") {
+    import spark.implicits._
+    val meta = TableMeta("neg", TableKind.Clustered(ClusterSpec(Seq("g", "k"), "zorder")), None, None)
+    // k, the last cluster column, carries the footer bloom; 0.0 lives in
+    // the first file, and the second file holds other keys
+    def table(name: String): TsTable = {
+      val t = TsTable.create(tmpDir(s"rl-neg-zero-$name"), meta)
+      t.append(Seq(("a", 0.0, "old"), ("a", 1.5, "old")).toDF("g", "k", "v").coalesce(1))
+      t.append(Seq(("b", 2.5, "old"), ("b", 3.5, "old")).toDF("g", "k", "v").coalesce(1))
+      assert(t.bloomKeyColumn.contains("k") && t.state.liveSegments.size == 2)
+      t
+    }
+    def zeros(t: TsTable): Seq[String] =
+      t.scan(spark).where(col("k") === 0.0).select("v").as[String].collect().toSeq
+    val upd = Seq(("a", -0.0, "new")).toDF("g", "k", "v")
+
+    val byKey = table("delete-keys")
+    val dk = MergeInto.mergeDelete(spark, byKey, Seq(-0.0).toDF("k"), key = "k")
+    assert(dk.rowsDeleted == 1 && zeros(byKey).isEmpty, s"mergeDelete: $dk")
+    val byPredicate = table("delete-where")
+    val dp = DeleteWhere.deleteMor(spark, byPredicate, col("k") === -0.0)
+    assert(dp.rowsDeleted == 1 && zeros(byPredicate).isEmpty, s"deleteMor: $dp")
+    for (mor <- Seq(false, true)) {
+      val t = table(s"merge-$mor")
+      val r = if (mor) MergeInto.mergeMor(spark, t, upd, key = "k")
+              else MergeInto.merge(spark, t, upd, key = "k")
+      assert((r.updated, r.inserted) == ((1L, 0L)) && zeros(t) == Seq("new") &&
+        t.scan(spark).count() == 4, s"mor=$mor: $r")
+    }
+  }
+
   test("a predicate delete by doc_id IN (…) deletes the same rows in both modes; DVs only where a key lives") {
     for ((kind, keyType, k) <- keyKinds) withClue(s"$kind: ") {
       val batches = Seq((0 until 300).map(k), (300 until 600).map(k))

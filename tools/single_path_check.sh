@@ -36,10 +36,10 @@
 #     its target's files).
 #  9. Bloom probes: a footer key bloom prunes files only in the one
 #     pruning entry's bloom tier (`FilePruning.prune`, under
-#     src/main/scala/graft/scan/) and in a keyed MERGE or delete-by-key of
-#     few keys (src/main/scala/graft/maintain/RowLevel.scala), so nothing
-#     else calls `KeyBloom.filterMayContain` (a scan or maintenance verb
-#     that probed on its own could keep other files than the entry).
+#     src/main/scala/graft/scan/), so nothing else calls
+#     `KeyBloom.filterMayContain` (a scan or maintenance verb that probed
+#     on its own could keep other files than the entry; a keyed MERGE or
+#     delete-by-key of few keys prunes as the predicate `key IN (keys)`).
 # 10. Segment encoding: table, maintenance and streaming code writes
 #     Parquet only through `Txn.writeStaged`, which writes every file
 #     with the table's codec, row-group size and encoding (no dictionary,
@@ -102,8 +102,7 @@ layout=$(code '\brepartitionByRange\b' | grep -E "^$src/graft/(maintain|table)/"
 
 trees=$(code '\bdef deleteTree\b' | grep -v "^$src/graft/meta/PathNorm\.scala:" || true)
 
-probes=$(code 'KeyBloom\.filterMayContain\b' |
-  grep -vE "^$src/graft/(scan/|maintain/RowLevel\.scala:)" || true)
+probes=$(code 'KeyBloom\.filterMayContain\b' | grep -v "^$src/graft/scan/" || true)
 
 # file:line:text of each DataFrameWriter chain in $@ that writes Parquet
 parquet_writes() {
