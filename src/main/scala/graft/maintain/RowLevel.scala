@@ -167,9 +167,8 @@ private[graft] object RowLevel {
 
     /** The live rows of `segs` under this run's snapshot, with the
       * row-tracking columns when the table tracks rows. */
-    private def read(session: SparkSession, segs: Seq[SegmentMeta], ids: Boolean = tracking,
-                     live: Boolean = true) =
-      table.read(session, segs, snapshot.tableMeta, ids, live)
+    private def read(session: SparkSession, segs: Seq[SegmentMeta], ids: Boolean = tracking) =
+      table.read(session, segs, snapshot.tableMeta, ids)
 
     /** Copy-on-write by predicate: per-file match counts pick the files to
       * touch; zero-match candidates keep their bytes and segment ids. */
@@ -268,12 +267,12 @@ private[graft] object RowLevel {
     /** The (file, position, matched, survivor bucket) pass of [[morCompute]]. */
     private def positions(cands: Seq[SegmentMeta]): DataFrame = (m, large) match {
       case (RowIds(in), _) => idPositions(in.select(RowIdCol), cands)
-      case (Keys(_, key), Some(l)) => morBase(spark, table, cands)(raw =>
-        l.hit(raw.select(col("_metadata.file_path").as("__f"),
+      case (Keys(_, key), Some(l)) => morBase(spark, table, cands)(rows =>
+        l.hit(rows.select(col("_metadata.file_path").as("__f"),
             col("_metadata.row_index").as("__i"), col(key), bucketExpr(table).as("__b")))
           .select(col("__f"), col("__i"), col("__m"), col("__b")))
-      case _ => morBase(spark, table, cands)(raw =>
-        raw.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
+      case _ => morBase(spark, table, cands)(rows =>
+        rows.select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
           hit.as("__m"), bucketExpr(table).as("__b")))
     }
 
@@ -362,22 +361,22 @@ private[graft] object RowLevel {
       val (materialized, positional) = cands.partition(_.stats.contains(RowIdCol))
       val posBase = Option.when(positional.nonEmpty) {
         import spark.implicits._
-        val intervals = positional.map(s =>
-          (canonical(s), s.baseRowId.get, s.baseRowId.get + s.rowCount - 1))
-          .toDF("__f", "__lo", "__hi")
+        // each interval carries its file's DV, like a listed file's _metadata
+        val intervals = positional.map(s => (canonical(s), s.baseRowId.get,
+            s.baseRowId.get + s.rowCount - 1, s.dvPath.map(PathNorm.resolve(table.root, _))))
+          .toDF("__f", "__lo", "__hi", "__dv")
         ids.join(broadcast(intervals), col(RowIdCol) >= col("__lo") && col(RowIdCol) <= col("__hi"))
-          .select(col("__f"), (col(RowIdCol) - col("__lo")).as("__i"))
+          .select(col("__f"), (col(RowIdCol) - col("__lo")).as("__i"), col("__dv"))
+          .where(!DeletionVectors.deleted(col("__dv"), col("__i"))).drop("__dv")
       }
       val matBase = Option.when(materialized.nonEmpty) {
-        read(spark, materialized, ids = true, live = false)
+        read(spark, materialized, ids = true)
           .select(col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
             col(RowIdCol))
           .join(ids, Seq(RowIdCol), "left_semi").select(col("__f"), col("__i"))
       }
-      val base = (posBase ++ matBase).reduce(_ unionByName _)
+      (posBase ++ matBase).reduce(_ unionByName _)
         .select(col("__f"), col("__i"), lit(true).as("__m"), lit(null).cast("long").as("__b"))
-      DeletionVectors.predicate(table.root, cands, col("__f"), col("__i"))
-        .map(base.where).getOrElse(base)
     }
 
     private def canonical(s: SegmentMeta): String =
@@ -542,18 +541,16 @@ private[graft] object RowLevel {
   private[maintain] def bucketExpr(table: TsTable): Column =
     table.timeSpec.fold(lit(null).cast("long"))(Txn.bucketOf)
 
-  /** Candidate read for a MOR pass: `project` maps the raw candidate scan
-    * to the (__f, __i, __m, __b) shape, and candidates already carrying a
-    * DV are then read live-rows-only, so new positions never overlap the
-    * existing bitmap and survivor coverage is exact by construction. */
+  /** Candidate read for a MOR pass: `project` maps the candidates' live
+    * rows, whose `_metadata` positions are physical, to the (__f, __i,
+    * __m, __b) shape. A candidate already carrying a DV is read
+    * live-rows-only, so new positions never overlap the existing bitmap
+    * and survivor coverage is exact by construction. */
   private[maintain] def morBase(spark: SparkSession, table: TsTable,
                                 candidates: Seq[SegmentMeta])
-                               (project: DataFrame => DataFrame): DataFrame = {
+                               (project: DataFrame => DataFrame): DataFrame =
     // logical names: `project` carries user predicates / merge keys
-    val base0 = project(table.read(spark, candidates, table.state.tableMeta, live = false))
-    DeletionVectors.predicate(table.root, candidates, col("__f"), col("__i"))
-      .map(base0.where).getOrElse(base0)
-  }
+    project(table.read(spark, candidates, table.state.tableMeta))
 
   /** The driver-side outcome of a MOR matched-row pass, already declared
     * on its [[graft.table.Txn]]: the DV upserts, the fully-matched

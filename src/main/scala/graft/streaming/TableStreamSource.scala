@@ -309,6 +309,24 @@ object TableStreamSource {
         throw new IllegalArgumentException(s"option $key has an invalid value: '$v'", e) }
     }
 
+  /** The option keys each graft-table surface reads: `path` (the table
+    * root, which is also the one key Spark itself passes) and its own. */
+  val BatchReadOptions = Set("path", "branch", "versionAsOf", "tag", "timestampAsOf")
+  val StreamReadOptions = Set("path", "startingVersion", "startingTimestamp",
+    "skipChangeCommits", "maxVersionsPerTrigger", "readChangeFeed")
+  val SinkOptions = Set("path", "checkpointLocation")
+
+  /** Fail on an option key outside `known` (names matched
+    * case-insensitively, as [[option]] matches them), naming the key: a
+    * misspelt option would otherwise be silently ignored. */
+  def requireKnown(options: Map[String, String], known: Set[String], surface: String): Unit = {
+    val unknown = options.keys.filterNot(k => known.exists(_.equalsIgnoreCase(k)))
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"graft-table $surface does not read option ${unknown.toSeq.sorted.mkString(", ")}; " +
+          s"it reads ${known.toSeq.sorted.mkString(", ")}")
+  }
+
   /** Source schema in change-feed mode: the table's logical columns +
     * the feed's three metadata columns, in [[graft.maintain.ChangeFeed]]'s
     * column order (streamingBatch re-tags by POSITION). */
@@ -336,7 +354,9 @@ object TableStreamSource {
   * The batch relation is the same manifest-backed, stats-pruned FileIndex
   * as `TsTable.scan` (reference: the DataFusion TableProvider is the
   * reference's equivalent single integration point,
-  * ts_table_provider.rs:126-295). */
+  * ts_table_provider.rs:126-295). The batch source, the stream source and
+  * the sink each fail on an option key they do not read
+  * ([[TableStreamSource.requireKnown]]). */
 final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProvider
     with RelationProvider with CreatableRelationProvider with DataSourceRegister {
   override def shortName(): String = "graft-table"
@@ -350,6 +370,7 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
   override def createSink(
       sqlContext: SQLContext, parameters: Map[String, String],
       partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
+    TableStreamSource.requireKnown(parameters, TableStreamSource.SinkOptions, "sink")
     require(outputMode == OutputMode.Append(),
       s"graft-table sink supports Append output mode only (got $outputMode)")
     require(partitionColumns.isEmpty,
@@ -419,6 +440,7 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
 
   override def createRelation(
       sqlContext: SQLContext, parameters: Map[String, String]): BaseRelation = {
+    TableStreamSource.requireKnown(parameters, TableStreamSource.BatchReadOptions, "batch source")
     val main = TsTable.open(root(parameters))
     // branch-scoped read (WAP audit via plain spark.read); time travel by
     // version or tag composes with it (the branch shares main's prefix)
@@ -461,6 +483,7 @@ final class GraftSourceProvider extends StreamSourceProvider with StreamSinkProv
   override def sourceSchema(
       sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) = {
+    TableStreamSource.requireKnown(parameters, TableStreamSource.StreamReadOptions, "stream source")
     val meta = TsTable.open(root(parameters)).meta
     val base = meta.schema.getOrElse(
       throw new IllegalStateException("table has no adopted schema yet"))

@@ -1,14 +1,17 @@
 package graft.table
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Not}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.coverage.Bitmap
-import graft.meta.{PathNorm, SegmentMeta}
+import graft.meta.PathNorm
+import graft.scan.TsFileIndex
 
 /** Merge-on-read deletion vectors (Delta-DV / Iceberg-positional-delete
   * analog; a north-rule maintenance addition — the reference's log is
@@ -20,14 +23,16 @@ import graft.meta.{PathNorm, SegmentMeta}
   * rewriting the file — at 100 TB, deleting 1 % of rows becomes KBs of
   * sidecar writes instead of a ~1 TB copy-on-write pass. The scan applies
   * DVs as ONE extra codegen'd conjunct over Parquet's native
-  * `_metadata.row_index` / `_metadata.file_path` columns, so the
-  * vectorized reader, column pruning, pushed filters and whole-stage
+  * `_metadata.row_index` and the file's `_metadata.dv_path` constant, so
+  * the vectorized reader, column pruning, pushed filters and whole-stage
   * codegen all survive unchanged; a table with no DVs pays literally
-  * nothing (the filter is not planned).
+  * nothing (the filter is not planned), and a clean file of a DV'd
+  * snapshot one null test per row.
   *
-  * Scale shape: the PLAN ships only a manifest-sized (file → dv-path)
-  * map; bitmap BYTES are loaded lazily by the executors that actually
-  * scan the corresponding file (per-JVM cache below), so DV volume never
+  * Scale shape: each file's sidecar path rides in the file listing
+  * ([[graft.scan.TsFileIndex]]), so the PLAN ships nothing per file;
+  * bitmap BYTES are loaded lazily by the executors that actually scan the
+  * corresponding file (per-JVM cache below), so DV volume never
   * concentrates on the driver. Compaction materializes DVs away (its
   * rewrite reads files DV-filtered and emits fresh segments); snapshot
   * expiration reclaims unreferenced DV files like any other sidecar.
@@ -40,29 +45,16 @@ object DeletionVectors {
     * so this is a guard, not a limit anyone meets. */
   val MaxRowsPerFile: Long = Int.MaxValue.toLong
 
-  /** NOT-deleted filter over `_metadata` for `segs`, or None when they
-    * carry no DVs (the common, zero-cost case). [[TsTable.read]] is the
-    * one caller. */
-  private[table] def liveRowFilter(tableRoot: String, segs: Seq[SegmentMeta]): Option[Column] = {
-    predicate(tableRoot, segs,
-      col("_metadata.file_path"), col("_metadata.row_index"))
-  }
+  /** The NOT-deleted filter over `_metadata`, for a read of segments some
+    * of which carry DVs. [[TsTable.read]] is the one caller. */
+  private[table] def liveRowFilter: Column =
+    !deleted(col("_metadata." + TsFileIndex.DvPath), col("_metadata.row_index"))
 
-  /** Same filter over explicit path/index columns, for the maintenance
-    * passes that read positions raw (`TsTable.read(live = false)`) and
-    * mask their own (file, position) columns. */
-  def predicate(tableRoot: String, segs: Seq[SegmentMeta],
-                filePath: Column, rowIndex: Column): Option[Column] = {
-    val withDv = segs.filter(_.dvPath.isDefined)
-    if (withDv.isEmpty) None
-    else {
-      val root = PathNorm.canonical(tableRoot)
-      val byFile: Map[String, String] = withDv.map { s =>
-        PathNorm.canonical(PathNorm.resolve(root, s.path)) -> s"$root/${s.dvPath.get}"
-      }.toMap
-      import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
-      Some(ofExpr(Not(DvDeleted(toExpr(filePath), toExpr(rowIndex), new DvLookup(byFile)))))
-    }
+  /** Whether the DV at `dvPath` (resolved; NULL = no DV) marks position
+    * `rowIndex` deleted — false, never NULL, for a clean file. */
+  def deleted(dvPath: Column, rowIndex: Column): Column = {
+    import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
+    ofExpr(DvDeleted(toExpr(dvPath), toExpr(rowIndex)))
   }
 
   /** Read a DV sidecar (absolute path) into a bitmap. */
@@ -94,59 +86,64 @@ private[graft] object DvCache {
   }
 }
 
-/** The per-query lookup the generated code calls once per row: resolves
-  * the row's file to its DV bitmap (memoized — within a scan task the file
-  * changes at most once per split, so the common case is one UTF8String
-  * byte-compare) and tests the position. Thread-confined memo: codegen
-  * reference objects can be shared across local-mode task threads. */
-final class DvLookup(dvByFile: Map[String, String]) extends Serializable {
+/** The lookup the generated code calls once per row: resolves a DV
+  * sidecar path to its bitmap (memoized per task thread — within a scan
+  * task the file changes at most once per split, so the common case is
+  * one UTF8String byte-compare) and tests the position. DV files are
+  * immutable, so a path's bitmap never changes and the memo needs no
+  * scoping to a query. */
+object DvLookup {
 
   private final class Memo {
     var lastPath: UTF8String = _
-    var lastBm: Bitmap = _ // null = file has no DV
+    var lastBm: Bitmap = _
   }
-  @transient private lazy val memo = new ThreadLocal[Memo] {
-    override def initialValue(): Memo = new Memo
-  }
+  private val memo = ThreadLocal.withInitial[Memo](() => new Memo)
 
-  def deleted(filePath: UTF8String, rowIndex: Long): Boolean = {
+  def deleted(dvPath: UTF8String, rowIndex: Long): Boolean = {
     val m = memo.get()
-    if (m.lastPath == null || !m.lastPath.equals(filePath)) {
-      m.lastPath = filePath.clone()
-      m.lastBm = dvByFile.get(PathNorm.canonical(filePath.toString))
-        .map(DvCache.bitmap).orNull
+    if (m.lastPath == null || !m.lastPath.equals(dvPath)) {
+      m.lastBm = DvCache.bitmap(dvPath.toString)
+      m.lastPath = dvPath.clone()
     }
-    val bm = m.lastBm
-    if (bm == null) false
-    else {
-      if (rowIndex > DeletionVectors.MaxRowsPerFile)
-        throw new IllegalStateException(
-          s"row position $rowIndex exceeds the DV position domain — file larger than 2^31 rows?")
-      bm.contains(rowIndex.toInt)
-    }
+    if (rowIndex > DeletionVectors.MaxRowsPerFile)
+      throw new IllegalStateException(
+        s"row position $rowIndex exceeds the DV position domain — file larger than 2^31 rows?")
+    m.lastBm.contains(rowIndex.toInt)
   }
 }
 
-/** `dv_deleted(file_path, row_index)` — true iff the snapshot's DV marks
-  * the row deleted. Codegen'd to one virtual call so the scan's filter
-  * stays inside whole-stage codegen. */
-case class DvDeleted(left: Expression, right: Expression, lookup: DvLookup)
-    extends BinaryExpression {
+/** `dv_deleted(dv_path, row_index)` — true iff the DV at `dv_path` marks
+  * the row deleted. A NULL `dv_path` (a clean file) gives false, not NULL,
+  * without a lookup, so `NOT dv_deleted(…)` keeps every row of a clean
+  * file. Codegen'd to one static call so the scan's filter stays inside
+  * whole-stage codegen. */
+case class DvDeleted(left: Expression, right: Expression) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
     case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (string file_path, bigint row_index), got $l / $r")
+      s"$prettyName needs (string dv_path, bigint row_index), got $l / $r")
   }
   override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
   override def prettyName: String = "dv_deleted"
 
-  override protected def nullSafeEval(fp: Any, ri: Any): Any =
-    lookup.deleted(fp.asInstanceOf[UTF8String], ri.asInstanceOf[Long])
+  override def eval(input: InternalRow): Any = {
+    val p = left.eval(input)
+    val i = right.eval(input)
+    p != null && i != null && DvLookup.deleted(p.asInstanceOf[UTF8String], i.asInstanceOf[Long])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dvLookup", lookup, classOf[DvLookup].getName)
-    defineCodeGen(ctx, ev, (fp, ri) => s"$ref.deleted($fp, $ri)")
+    val p = left.genCode(ctx)
+    val i = right.genCode(ctx)
+    val lookup = DvLookup.getClass.getName.stripSuffix("$")
+    ev.copy(code = code"""
+      ${p.code}
+      ${i.code}
+      boolean ${ev.value} = !${p.isNull} && !${i.isNull} && $lookup.deleted(${p.value}, ${i.value});""",
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

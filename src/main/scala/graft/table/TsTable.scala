@@ -8,13 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, SubqueryExpre
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.coverage.{Bitmap, BucketMath}
 import graft.log._
 import graft.meta._
-import graft.scan.{FilePruning, TsFileIndex}
+import graft.scan.{FilePruning, GraftParquetFileFormat, TsFileIndex}
 
 /** The table handle: transaction log + replayed state, the reads, the
   * pruning entry and the metadata verbs. Spark-native rebuild of the
@@ -200,39 +199,31 @@ final class TsTable private (val root: String, val store: LogStore) {
     *    been adopted yet.
     *  - planning: a manifest-backed [[TsFileIndex]] relation, so stats
     *    pruning applies and no listing or schema-inference job runs.
-    *  - row ids (`ids`): `_row_id`/`_row_commit` bound from `_metadata`
-    *    before any deletion-vector mask, since positions are physical.
-    *  - deletion vectors (`live`): the snapshot splits into two relations
-    *    so only the DV'd files pay the per-row filter — the clean ones scan
-    *    exactly as a DV-free table (no `_metadata` columns, no lookup call,
-    *    full whole-stage codegen), and Catalyst pushes query filters and
-    *    column pruning through the union into both branches. A union is
-    *    planned only when both kinds exist. `live = false` returns one
-    *    unfiltered relation with `_metadata` reachable, for the passes that
-    *    mask positions themselves.
+    *  - row ids (`ids`): `_row_id`/`_row_commit` bound from each file's
+    *    `_metadata` constants before any deletion-vector mask, since
+    *    positions are physical.
+    *  - deletion vectors: one relation serves the whole snapshot. When any
+    *    file carries a DV, one conjunct masks the rows its sidecar marks,
+    *    reading the file's `_metadata.dv_path` constant; a clean file's is
+    *    NULL and keeps every row. Catalyst pushes query filters and column
+    *    pruning to the one scan, and `_metadata` stays reachable above it,
+    *    for the passes that select row positions.
     *  - names: LOGICAL out. Files keep their frozen physical names (RENAME
     *    COLUMN); one alias projection on top restores the logical view, and
     *    filters and column pruning push through it (identity for
     *    never-renamed tables). Writes map back in [[Txn.stage]].
     *  - empty sets: a relation over zero files, of the declared schema. */
   private[graft] def read(spark: SparkSession, segs: Seq[SegmentMeta], meta: Option[TableMeta],
-                          ids: Boolean = false, live: Boolean = true): DataFrame = {
+                          ids: Boolean = false): DataFrame = {
     val logical = meta.flatMap(_.schema).getOrElse(
       segs.headOption.fold(new StructType())(s => spark.read.parquet(abs(s)).schema))
     val idCols = if (ids) Seq(RowTracking.RowIdCol, RowTracking.RowCommitCol) else Nil
     val schema = StructType(meta.fold(logical)(_.physicalize(logical)).fields ++
       idCols.map(StructField(_, LongType)))
-    def bound(ss: Seq[SegmentMeta]) = {
-      val rel = spark.baseRelationToDataFrame(relationFor(spark, ss, schema))
-      if (ids) RowTracking.attach(rel, root, ss) else rel
-    }
-    val (dvSegs, clean) = segs.partition(_.dvPath.isDefined)
+    val rel = spark.baseRelationToDataFrame(relationFor(spark, segs, schema))
+    val bound = if (ids) RowTracking.attach(rel, segs) else rel
     val rows =
-      if (!live || dvSegs.isEmpty) bound(segs)
-      else {
-        val masked = bound(dvSegs).where(DeletionVectors.liveRowFilter(root, dvSegs).get)
-        if (clean.isEmpty) masked else bound(clean).unionByName(masked)
-      }
+      if (segs.exists(_.dvPath.isDefined)) bound.where(DeletionVectors.liveRowFilter) else bound
     val cmap = meta.fold(Map.empty[String, String])(_.colMap)
     if (cmap.isEmpty) rows
     else rows.select((logical.fieldNames.toSeq.map(n => col(cmap.getOrElse(n, n)).as(n)) ++
@@ -247,9 +238,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * is adopted) — the batch half of the "graft-table" data source, so
     * `spark.read.format("graft-table").load(root)` and SQL
     * `CREATE TEMPORARY VIEW t USING graft-table OPTIONS (path '…')` scan
-    * through the same pruned FileIndex as `TsTable.scan`. A bare
-    * BaseRelation has no projection hook, so the provider refuses DV'd and
-    * renamed snapshots, whose [[read]] is not a single relation. */
+    * through the same pruned FileIndex as `TsTable.scan`. Its listing
+    * carries each file's DV path, but a bare BaseRelation has no filter or
+    * projection hook, so the provider refuses DV'd and renamed snapshots,
+    * whose [[read]] masks or renames above the relation. */
   private[graft] def relationAt(spark: SparkSession, st: TableState): Option[HadoopFsRelation] =
     read(spark, st).queryExecution.analyzed.collectFirst {
       case l: LogicalRelation if l.relation.schema.nonEmpty => l.relation.asInstanceOf[HadoopFsRelation]
@@ -263,7 +255,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       partitionSchema = new StructType(),
       dataSchema = schema,
       bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
+      fileFormat = new GraftParquetFileFormat(),
       options = Map.empty)(spark)
   }
 

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StringType
 import graft.data.TokenGen
 import graft.maintain.{Compaction, DeleteWhere, Expire, MergeInto}
 import graft.meta.{ClusterSpec, TableKind, TableMeta, TimeBucket, TimeIndexSpec}
-import graft.table.TsTable
+import graft.table.{DeletionVectors, DvDeleted, TsTable}
 
 /** Merge-on-read deletion vectors: scan semantics, union of successive
   * DVs, time travel, interplay with compaction / MERGE / COW delete /
@@ -237,5 +239,39 @@ class DvSpec extends SparkFunSuite {
       spark.read.format("graft-table").load(root).count()
     }
     assert(e.getMessage.contains("deletion vectors"))
+  }
+
+  test("one relation holds a DV'd and a clean file; a NULL dv_path keeps every row") {
+    val root = tmpDir("dv-mixed")
+    val t = TsTable.create(root, tokenMeta)
+    // two disjoint-range appends so the MOR delete grazes only the first
+    t.append(TokenGen.generate(spark, 400, numFiles = 1))
+    t.append(TokenGen.generate(spark, 400, idStart = 90000L, numFiles = 1))
+    val cond = col("doc_id") < "doc-000000000100"
+    DeleteWhere.deleteMor(spark, t, cond)
+    val segs = t.state.liveSegments
+    assert(segs.count(_.dvPath.isDefined) == 1 && segs.count(_.dvPath.isEmpty) == 1)
+    // plain-Parquet oracle: the data files as written, less the deleted rows
+    val oracle = spark.read.parquet(segs.map(s => s"$root/${s.path}"): _*).where(!cond)
+    for (wholeStage <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        assert(t.scan(spark).count() == oracle.count(), s"wholeStage=$wholeStage")
+        assert(docIds(t.scan(spark)) == docIds(oracle), s"wholeStage=$wholeStage")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+    // each file's facts arrive as its _metadata constants: the DV'd file's
+    // sidecar, NULL for the clean one and for the untracked base row id
+    val facts = t.scan(spark).select("_metadata.file_path", "_metadata.dv_path",
+      "_metadata.base_row_id").distinct().collect()
+    assert(facts.length == 2 && facts.forall(_.isNullAt(2)))
+    assert(facts.map(r => Option(r.getString(1)).map(_.split('/').last)).toSet ==
+      segs.map(_.dvPath.map(_.split('/').last)).toSet)
+    // the mask on a clean file: false, never NULL, interpreted and codegen'd
+    val clean = DvDeleted(Literal(null, StringType), Literal(0L))
+    assert(!clean.nullable && clean.eval() == false)
+    val masked = spark.range(3).select(
+      DeletionVectors.deleted(lit(null).cast(StringType), col("id")).as("d"))
+    assert(masked.collect().map(_.get(0)).toSeq == Seq(false, false, false))
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.log.{LogAction, TableState}
 import graft.maintain.Compaction
@@ -27,7 +26,7 @@ import graft.scan.{FilePruning, StatsPruning}
   * roundtrip ~2 s, plan ~0.3 s, prune ~0.6 s) so host noise cannot flake
   * the suite while a quadratic regression still fails it loudly.
   */
-class MetadataScaleSpec extends AnyFunSuite {
+class MetadataScaleSpec extends SparkFunSuite {
 
   private val N = 200000
   /** 2024-03-01T00:00:00Z: file i's `ts` spans 1.8 s from
@@ -130,6 +129,31 @@ class MetadataScaleSpec extends AnyFunSuite {
     info(f"lookup-map build: $mapSec%.3f s for $N files")
     assert(allocSec < 2.0 && pruneSec < 2.0 && mapSec < 5.0,
       f"row-tracking metadata pass superlinear? alloc=$allocSec%.1f prune=$pruneSec%.1f map=$mapSec%.1f")
+  }
+
+  test(s"a row-tracked, DV'd read plans no per-file state: its expressions do not grow to $N files") {
+    val schema = StructType(Seq(StructField("doc_id", StringType), StructField("n_tok", LongType),
+      StructField("source", StringType), StructField("ts", TimestampType)))
+    val meta = TableMeta("scale", TableKind.Clustered(ClusterSpec(Seq("source", "doc_id"), "zorder")),
+      Some(schema.json), None, rowTracking = true)
+    val t = graft.table.TsTable.create(tmpDir("metadata-scale"), meta)
+    // every file tracked, every tenth one DV'd
+    val tracked = segs.zipWithIndex.map { case (s, i) =>
+      s.copy(baseRowId = Some(i.toLong * 3000L), rowVersion = Some(7L),
+        dvPath = Option.when(i % 10 == 0)(f"_dv/dv-$i%08d.dv"), dvCardinality = 1L) }
+    // the Java-serialized expressions of the analyzed read, as they would
+    // ship to executors in the plan
+    def planBytes(files: Int): Int = {
+      val plan = t.read(spark, tracked.take(files), Some(meta), ids = true).queryExecution.analyzed
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(plan.flatMap(_.expressions).toVector)
+      out.close()
+      bytes.size
+    }
+    val (small, big) = (planBytes(1000), planBytes(N))
+    info(s"serialized plan expressions: $small B at 1000 files, $big B at $N files")
+    assert(big <= small + 1024, s"plan expressions grew from $small B to $big B with the file count")
   }
 
   test(s"stats pruning evaluates a predicate against $N files in bounded time, exact result") {

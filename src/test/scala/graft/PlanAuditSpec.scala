@@ -171,7 +171,7 @@ class PlanAuditSpec extends SparkFunSuite {
       "no partial aggregation stage")
   }
 
-  test("DV'd snapshot: only grazed files pay the filter; pushdown reaches both branches") {
+  test("DV'd snapshot: one vectorized scan; the mask reads each file's _metadata.dv_path") {
     val root = tmpDir("plan-dv")
     val t = TsTable.create(root, TableMeta("tokens",
       TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
@@ -185,18 +185,62 @@ class PlanAuditSpec extends SparkFunSuite {
 
     val q = t.scan(spark).where(col("n_tok") > 500).select("doc_id", "n_tok")
     val plan = executed(q)
-    assert(plan.contains("Union"), s"DV'd snapshot must plan a two-branch union:\n$plan")
-    // the user predicate pushes into BOTH parquet scans
-    assert("GreaterThan\\(n_tok,500\\)".r.findAllIn(plan).size >= 2,
-      s"pushdown did not reach both union branches:\n$plan")
-    // exactly one branch's SCAN evaluates the DV filter; the clean branch
-    // reads without _metadata columns or the lookup call
+    // DV'd and clean files share one relation: no union, one Parquet scan
+    assert(!plan.contains("Union"), s"DV'd snapshot planned a union:\n$plan")
     val scans = plan.linesIterator.filter(_.contains("FileScan parquet")).toSeq
-    assert(scans.size == 2, s"expected two parquet scans:\n$plan")
-    assert(scans.count(_.contains("dv_deleted")) == 1,
-      s"DV filter must reach exactly one branch's scan:\n$plan")
-    assert(scans.count(_.contains("_tmp_metadata_row_index")) == 1,
-      s"clean branch must not materialize _metadata:\n$plan")
+    assert(scans.size == 1, s"expected one parquet scan:\n$plan")
+    val scan = scans.head
+    assert(scan.contains("Batched: true"), s"the scan left the vectorized reader:\n$plan")
+    assert(scan.contains("GreaterThan(n_tok,500)"), s"the user predicate was not pushed:\n$plan")
+    // the scan reads the row position and the file's DV path constant, and
+    // the mask tests them: no per-file map rides in the plan
+    assert(scan.contains("_tmp_metadata_row_index") && scan.contains("dv_path"),
+      s"the scan does not request row_index and dv_path:\n$plan")
+    assert("dv_deleted\\(_metadata#\\d+\\.dv_path, _metadata#\\d+\\.row_index\\)".r
+      .findFirstIn(plan).isDefined, s"the mask does not read _metadata.dv_path:\n$plan")
+  }
+
+  test("DV'd snapshot: only grazed files pay the filter; pushdown reaches both branches") {
+    // the two branches are the two kinds of file the one relation reads:
+    // grazed (a DV sidecar) and clean (a NULL dv_path)
+    val root = tmpDir("plan-dv-branches")
+    val t = TsTable.create(root, TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("source", "n_tok", "doc_id"), "zorder")), None, None))
+    t.append(TokenGen.generate(spark, 500, numFiles = 2))
+    t.append(TokenGen.generate(spark, 500, idStart = 90000L, numFiles = 2))
+    val cond = col("doc_id") < "doc-000000000100"
+    graft.maintain.DeleteWhere.deleteMor(spark, t, cond)
+    val segs = t.state.liveSegments
+    val sidecars = segs.flatMap(_.dvPath).map(p => java.nio.file.Paths.get(root, p))
+    assert(sidecars.nonEmpty && segs.exists(_.dvPath.isEmpty))
+    val oracle = spark.read.parquet(segs.map(s => s"$root/${s.path}"): _*).where(!cond)
+
+    // only grazed files pay: with every sidecar moved away, a read the
+    // listing prunes to clean files succeeds (their rows never look one
+    // up), while a read reaching a grazed file fails on the missing sidecar
+    val cleanOnly = col("doc_id") >= "doc-000000090000"
+    val moved = sidecars.map(p => p -> p.resolveSibling(p.getFileName.toString + ".away"))
+    moved.foreach { case (p, away) => java.nio.file.Files.move(p, away) }
+    try {
+      assert(t.scan(spark).where(cleanOnly).count() == oracle.where(cleanOnly).count())
+      val e = intercept[Exception](t.scan(spark).where(!cleanOnly).count())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[java.nio.file.NoSuchFileException]),
+        s"a grazed file's read did not look up its sidecar: $e")
+    } finally moved.foreach { case (p, away) => java.nio.file.Files.move(away, p) }
+
+    // pushdown reaches both: the predicate is pushed into the one scan, and
+    // its survivors come from grazed and clean files, less the deleted rows
+    val q = t.scan(spark).where(col("n_tok") > 500)
+    val plan = executed(q.select("doc_id", "n_tok"))
+    val scans = plan.linesIterator.filter(_.contains("FileScan parquet")).toSeq
+    assert(scans.size == 1 && scans.head.contains("GreaterThan(n_tok,500)"),
+      s"the user predicate was not pushed into the scan:\n$plan")
+    val got = q.select(col("doc_id"), col("_metadata.dv_path").isNotNull.as("grazed")).collect()
+    assert(got.map(_.getString(0)).toSet ==
+      oracle.where(col("n_tok") > 500).collect().map(_.getAs[String]("doc_id")).toSet)
+    assert(got.map(_.getBoolean(1)).toSet == Set(true, false),
+      "the survivors do not come from both grazed and clean files")
   }
 
   test("snapshot diff: fast path plans no join; general path joins keyed (no NLJ)") {

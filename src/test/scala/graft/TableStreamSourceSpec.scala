@@ -385,4 +385,37 @@ class TableStreamSourceSpec extends SparkFunSuite {
     assert(starting.getMessage.contains("startingTimestamp") &&
       starting.getMessage.contains("'2026-13-01'"), starting.getMessage)
   }
+
+  test("the batch source rejects an option key it does not read, naming the key") {
+    val t = TsTable.create(tmpDir("optkeys-batch"), tokenMeta)
+    t.append(TokenGen.generate(spark, 10))
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("graft-table").option("versionAsof", 1L).option("versionAt", 1L).load(t.root))
+    // keys match case-insensitively: only the unread one is named
+    val named = e.getMessage.toLowerCase.takeWhile(_ != ';')
+    assert(named.contains("versionat") && !named.contains("versionasof"), e.getMessage)
+  }
+
+  test("the stream source rejects an option key it does not read, naming the key") {
+    val t = TsTable.create(tmpDir("optkeys-stream"), tokenMeta)
+    t.append(TokenGen.generate(spark, 10))
+    val e = intercept[IllegalArgumentException](
+      t.readStream(spark, Map("startingVersion" -> "1", "startVersion" -> "1")))
+    assert(e.getMessage.toLowerCase.contains("startversion"), e.getMessage)
+  }
+
+  test("the sink rejects an option key it does not read, naming the key") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmpDir("optkeys-sink")
+    TsTable.create(root, tokenMeta)
+    val mem = MemoryStream[Int]
+    val e = intercept[IllegalArgumentException](
+      mem.toDF().writeStream.format("graft-table")
+        .option("checkpointLocation", tmpDir("optkeys-sink-ckpt"))
+        .option("mergeSchema", "true")
+        .trigger(Trigger.AvailableNow()).start(root))
+    assert(e.getMessage.toLowerCase.contains("mergeschema"), e.getMessage)
+  }
 }

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Single-path check over src/main: eleven concerns each have one owner.
+# Single-path check over src/main: twelve concerns each have one owner.
 #  1. History: commit and checkpoint files are named and read only inside
 #     graft.log (`readCommit` / `commitPath` / `checkpointPath` outside
 #     src/main/scala/graft/log/), apart from the allow-list below:
@@ -10,7 +10,8 @@
 #  2. Errors: no code branches on an exception's message (`getMessage` and
 #     `contains` on one line); failures are typed.
 #  3. Reads: committed segments become rows only in `TsTable.read`
-#     (`RowTracking.attach`, `liveRowFilter`, `baseRelationToDataFrame`).
+#     (`RowTracking.attach`, `DeletionVectors.liveRowFilter`,
+#     `baseRelationToDataFrame`).
 #  4. Transform semantics: file pruning takes a transform's values only
 #     from Catalyst's own eval, so nothing under src/main/scala/graft/scan/
 #     refers to `java.time` or `TimeKernels` (no hand-ported calendar or
@@ -54,6 +55,13 @@
 #     `commitWithExpectedVersion(`, apart from the two v1 bootstrap
 #     commits on an empty log: `commitWithExpectedVersion(0L, ...)` inside
 #     `TsTable.create` and `TsTable.cloneTo`.
+# 12. Per-file facts: a read takes a file's base row id, default row
+#     commit version and deletion-vector path from the `_metadata`
+#     constants `TsFileIndex` lists with the file (`base_row_id`,
+#     `row_commit_version`, `dv_path`), so nothing under
+#     src/main/scala/graft/{table,scan}/ reads `_metadata.file_path` (a
+#     path-keyed map of those facts would ship in every plan, one entry
+#     per file of the snapshot).
 # Comment lines are ignored.
 # Usage: tools/single_path_check.sh [repo root]   (default: current directory)
 # Prints every offender as file:line:text; exits 1 if there is any, else 0.
@@ -85,8 +93,8 @@ outside() {
   awk -F: -v f="$1" -v s="${span% *}" -v e="${span#* }" '!($1 == f && $2 >= s && $2 <= e)'
 }
 
-reads=$(code '(RowTracking\.attach|liveRowFilter|baseRelationToDataFrame)\(' |
-  grep -vE ':[0-9]+:.*def (attach|liveRowFilter)\(' |
+reads=$(code '(RowTracking\.attach\(|liveRowFilter\b|baseRelationToDataFrame\()' |
+  grep -vE ':[0-9]+:.*def (attach\(|liveRowFilter\b)' |
   outside $src/graft/table/TsTable.scala \
     'private\[graft\] def read\(spark: SparkSession, segs' '^  }$' || true)
 
@@ -129,6 +137,8 @@ commits=$( { echo "$commits" | grep -vE "$bootstrap"
                outside $src/graft/table/TsTable.scala '^  def cloneTo\(' '^  }$'
            } | grep . || true)
 
+facts=$(code '_metadata\.file_path' | grep -E "^$src/graft/(table|scan)/" || true)
+
 status=0
 report() {
   if [ -n "$2" ]; then
@@ -148,5 +158,6 @@ report "directory tree deleted outside PathNorm.deleteTree" "$trees"
 report "a bloom probe outside the pruning tier" "$probes"
 report "a Parquet write outside Txn.writeStaged" "$writes"
 report "a commit outside Txn.commit" "$commits"
+report "per-file facts keyed by _metadata.file_path in graft.{table,scan}" "$facts"
 [ "$status" -eq 0 ] && echo "single-path check: ok"
 exit "$status"
